@@ -2950,7 +2950,7 @@ object SparkEntry {
 
   /** Fully-unrolled Bellman-Ford oracle for the CONVERGED lineitem-graph
     * SSSP (`SingleSourceSP.java:439-519`): `rounds` relaxation rounds of
-    * the exact per-round semantics of [[graft.operators.GraphOps.ssspDelta]]
+    * the exact per-round semantics of [[graft.operators.GraphOps.sssp]]
     * (frontier gate, min-combine, least-merge, reached tracking), each as
     * a MATERIALIZED CTE pair (b_k, s_k). The loop converges in 16 rounds
     * at sf0.01 (measured; extra rounds are no-ops because the frontier is

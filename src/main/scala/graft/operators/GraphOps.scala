@@ -23,11 +23,15 @@ import graft.model.INF
   *
   * Scale notes (100 TB): all aggregations here are hash-aggregatable with
   * map-side partial aggregation (the reference never wrote a combiner —
-  * `setCombinerClass` is absent — so Spark is strictly better); the SSSP
-  * loop's only per-round shuffles are the frontier⋈edges join and the
-  * min-agg, both on a single long key, skew-handled by AQE; the edge table
-  * is shuffled once (`repartition($"src")`) and that partitioning is reused
-  * by every round's join.
+  * `setCombinerClass` is absent — so Spark is strictly better). The
+  * iterate-until-converged loops run on RDDs under one `HashPartitioner`:
+  * the edge list is shuffled once, every round's join against it is
+  * co-partitioned (narrow), and a round's one shuffle is the min/OR
+  * combine of its messages on a single long key. SSSP keeps each
+  * partition's edges as one CSR index, so a round reads only the
+  * frontier's out-edges, never all of |E|. Each round's state is
+  * `localCheckpoint`ed, so the lineage stays the same length however
+  * many rounds a long-diameter graph needs.
   */
 object GraphOps {
 
@@ -122,7 +126,7 @@ object GraphOps {
           (coalesce(col("best"), lit(INF)) < col("dist")).as("updated")): _*)
   }
 
-  /** Seed state for [[sssp]]: EVERY vertex (src ∪ dst), source at 0.0,
+  /** Seed state for [[ssspRound]]: EVERY vertex (src ∪ dst), source at 0.0,
     * everyone flagged updated (SURVEY.md Q5; `SingleSourceSP.java:114-123`),
     * plus an `is_src` marker. The reference only materializes nodes with
     * out-edges and lets relaxation messages create sink rows on the fly
@@ -152,16 +156,28 @@ object GraphOps {
   /** Full iterative single-source shortest path.
     *
     * Reference: the driver loop at `SingleSourceSP.java:439-519` submits
-    * one full MR job per round, round-tripping the entire node state
-    * through HDFS (`:513-517`) and reading a Hadoop counter for
-    * convergence (`:473-479`). Here the loop is the incremental
-    * [[deltaLoop]]: per round only the small per-round delta (the
-    * frontier's out-neighborhood) is shuffled, checkpointed, and counted;
-    * the full |V|-row state is rewritten only at periodic fold points —
-    * the property that makes long-tail convergence (many rounds, tiny
-    * frontiers, exactly what a power-law graph produces at scale)
-    * affordable. Loop shuffle parallelism scales with the edge count
-    * ([[loopPartitions]]).
+    * one full MR job per round, re-reading the whole graph and
+    * round-tripping the entire node state through HDFS (`:513-517`), with
+    * a Hadoop counter for convergence (`:473-479`). Here the edge list is
+    * scanned ONCE into a per-partition CSR adjacency index
+    * ([[SsspAdjacency]]), and a round touches only the frontier:
+    *
+    *   prelude  = edges.count (sizes the partitioner) and ONE job that
+    *              builds the index, the vertex set (id, is_src) and reads
+    *              |V| and whether the source is present
+    *   relax    = frontier.zipPartitions(index) — binary search per
+    *              frontier id, never a scan of the partition's edges —
+    *              then reduceByKey(min), the round's one shuffle
+    *   merge    = patch ⟗ best, co-partitioned (narrow), persisted
+    *   readout  = the changed count, the round's ONE job
+    *
+    * The patch holds only relaxed/contacted rows (an untouched node's
+    * dist is INF by construction), so a round costs O(|frontier| +
+    * |msgs|), not O(|E|) or O(|V|). Frontiers below [[RddFuseBelowRows]]
+    * relax two hops per job. Each round's merged patch is
+    * `localCheckpoint`ed, so the lineage (and the task binary) stays
+    * constant however many rounds a long-diameter graph needs. Loop
+    * shuffle parallelism scales with the edge count ([[loopPartitions]]).
     *
     * `maxRounds` bounds the loop at |V|−1 (Bellman-Ford guarantee for
     * non-negative weights) as a safety net against pathological input.
@@ -173,51 +189,48 @@ object GraphOps {
       edges: DataFrame,
       source: Long,
       maxRounds: Int = Int.MaxValue): DataFrame = {
+    import org.apache.spark.rdd.RDD
     val session = edges.sparkSession
     // Parquet count() is metadata-only — no data pass even at 100 TB.
     val parts = loopPartitions(session, edges.count())
-    // RDD-core Bellman-Ford (the [[maskLoopRdd]] finding applied to the
-    // min-message loop): per round one co-partitioned frontier⋈edges
-    // join, one min-combine shuffle, one narrow merge against the full
-    // state, ONE job — zero Catalyst planning per round, where the
-    // DataFrame loop paid 0.3–0.45 s of driver work per round on
-    // KB-sized frontiers. Same relaxation semantics (SURVEY.md Q1–Q5):
-    // min over candidates, strictly-better wins, `reached` = ever
-    // received a message; the state rewrite per round is the |V|-row
-    // narrow merge the DF form also paid (its compare join scanned the
-    // full overlay state).
     withLoopConfs(session, parts) {
       val part = new org.apache.spark.HashPartitioner(parts)
-      val eRdd = edges
+      // the one scan: parallel edges and self-loops stay in the index —
+      // the min-combine absorbs them, as the reference's reducer does
+      val index = edges
         .select(col("src"), col("dst"), col("w"))
         .rdd
         .map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2))))
         .partitionBy(part)
+        .mapPartitions(it => Iterator.single(SsspAdjacency(it)), preservesPartitioning = true)
         .persist(StorageLevel.MEMORY_AND_DISK)
-      // base: (id, is_src) — written once at seed time, read once at the
-      // end; between, the loop touches ONLY the accumulating patch of
-      // relaxed/contacted rows (an untouched node's dist is INF by
-      // construction — the source, the only non-INF base row, seeds the
-      // patch), so a round costs O(|patch| + |msgs|), never O(|V|)
-      val base = seedState(edges, source)
-        .select(col("id"), col("is_src"))
-        .rdd
-        .map(r => (r.getLong(0), r.getBoolean(1)))
-        .partitionBy(part)
+      // base: (id, is_src) — every vertex, read again only by the final
+      // overlay; the loop itself touches only the patch
+      val base = index
+        .flatMap(a => a.ids.iterator.map(_ -> true) ++ a.dst.iterator.map(_ -> false))
+        .reduceByKey(part, _ || _)
         .persist(StorageLevel.MEMORY_AND_DISK)
-      val nV = base.count()
-      eRdd.count()
-      // patch value: (dist, reached, updated-last-round)
-      var patch: org.apache.spark.rdd.RDD[(Long, (Double, Boolean, Boolean))] =
-        base
-          .filter(_._1 == source)
-          .map { case (id, _) => (id, (0.0, false, true)) }
-          .partitionBy(part)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      var changedCount = patch.count()
+      val (nV, hasSource) = base
+        .mapPartitions { it =>
+          var n = 0L
+          var has = false
+          it.foreach { case (id, _) => n += 1; if (id == source) has = true }
+          Iterator.single((n, has))
+        }
+        .reduce((a, b) => (a._1 + b._1, a._2 || b._2))
+      // patch value: (dist, reached, updated-last-round); the seed is a
+      // narrow filter of base — no shuffle, no job
+      var patch: RDD[(Long, (Double, Boolean, Boolean))] = base.mapPartitions(
+        _.collect { case (id, _) if id == source => (id, (0.0, false, true)) },
+        preservesPartitioning = true)
+      var changedCount = if (hasSource) 1L else 0L
       val bound = math.min(maxRounds.toLong, math.max(1L, nV - 1L))
       val debug = sys.env.contains("GRAFT_LOOP_DEBUG")
-      var live: List[org.apache.spark.rdd.RDD[_]] = List(patch)
+      def relax(frontier: RDD[(Long, Double)]): RDD[(Long, Double)] =
+        frontier
+          .zipPartitions(index)((fIt, aIt) => aIt.next().relax(fIt))
+          .reduceByKey(part, (a, b) => math.min(a, b))
+      var live: List[RDD[_]] = Nil
       var rounds = 0L
       while (changedCount > 0 && rounds < bound) {
         // TINY-FRONTIER BATCHING (VERDICT r15 #1; guide §1/§2): below the
@@ -227,41 +240,30 @@ object GraphOps {
         // beat the state only generates dominated hop-2 candidates, which
         // the single merge-min discards; a node first reached at hop 1
         // improves by definition (INF before), so its hop-2 fan-out uses
-        // the improved value. The DF loop's fuse was a measured LOSS
-        // (3^depth Catalyst re-evaluation, see [[BatchBelowRows]]); here
-        // each hop is a shuffle boundary, so a fused pair costs two
-        // shuffles and ONE dispatch/merge/readout instead of two of each.
-        // 13 of sssp_lineitem's 21 rounds sit below 4096 changed rows.
+        // the improved value. Each hop is a shuffle boundary, so a fused
+        // pair costs two shuffles and ONE dispatch/merge/readout instead
+        // of two of each.
         val hops = if (changedCount < RddFuseBelowRows && bound - rounds >= 2) 2L else 1L
         rounds += hops
         val tRound = System.nanoTime()
-        val m1 = patch
-          .filter(_._2._3)
-          .mapValues(_._1)
-          .join(eRdd)
-          .map { case (_, (d, (dst, w))) => (dst, d + w) }
-          .reduceByKey(part, (a, b) => math.min(a, b))
+        val m1 = relax(patch.filter(_._2._3).mapValues(_._1))
         val msgs =
           if (hops == 2L)
             // co-partitioned union (PartitionerAwareUnionRDD) — the final
             // min-combine is narrow, the pair still shuffles only twice
-            m1.union(
-                m1.join(eRdd)
-                  .map { case (_, (d, (dst, w))) => (dst, d + w) }
-                  .reduceByKey(part, (a, b) => math.min(a, b)))
-              .reduceByKey(part, (a, b) => math.min(a, b))
+            m1.union(relax(m1)).reduceByKey(part, (a, b) => math.min(a, b))
           else m1
-        val merged = patch
-          .fullOuterJoin(msgs)
-          .mapValues {
-            case (Some((dist, rch, _)), Some(c)) =>
-              if (c < dist) (c, true, true) else (dist, true, false)
-            case (Some((dist, rch, _)), None) => (dist, rch, false)
-            case (None, Some(c)) =>
-              if (c < INF) (c, true, true) else (INF, true, false)
-            case (None, None) => (INF, false, false) // unreachable
-          }
-          .persist(StorageLevel.MEMORY_AND_DISK)
+        val merged = checkpointedRound(
+          patch
+            .fullOuterJoin(msgs)
+            .mapValues {
+              case (Some((dist, _, _)), Some(c)) =>
+                if (c < dist) (c, true, true) else (dist, true, false)
+              case (Some((dist, rch, _)), None) => (dist, rch, false)
+              case (None, Some(c)) =>
+                if (c < INF) (c, true, true) else (INF, true, false)
+              case (None, None) => (INF, false, false) // unreachable
+            })
         changedCount = merged
           .mapPartitions { it =>
             var c = 0L
@@ -277,7 +279,7 @@ object GraphOps {
             f"[ssspRdd] round=$rounds%3d hops=$hops changed=$changedCount%7d " +
               f"sec=${(System.nanoTime() - tRound) / 1e9}%5.2f")
       }
-      eRdd.unpersist(false)
+      index.unpersist(false)
       // one base overlay at the end — membership (Q4): nodes with
       // out-edges ∪ nodes ever relaxed
       import org.apache.spark.sql.types.{BooleanType, DoubleType, LongType, StructField, StructType}
@@ -298,33 +300,39 @@ object GraphOps {
     }
   }
 
-  /** One relaxation round in delta form: only the rows that RECEIVE a
-    * message this round, with their improved distance (null when the
-    * message does not improve — those rows still matter: first contact
-    * sets `reached`, SURVEY.md Q2/Q4). Same semantics as [[ssspRound]],
-    * proven by the shared oracle queries; the difference is purely
-    * physical — per-round cost is O(frontier out-neighborhood), not O(|V|).
-    *
-    * Exchange audit (the plan you want at 100 TB): the frontier comes
-    * from the small patch (hash-partitioned on id), edges are
-    * pre-partitioned on src → the relax join needs NO exchange; the
-    * min-combine shuffles only the candidate messages; the dist-compare
-    * join streams the state exactly once (no exchange — AQE broadcasts
-    * the small best side).
+  /** One partition's out-edges in CSR form for [[sssp]]: sorted distinct
+    * source `ids`, `offsets` into the parallel `dst`/`w` arrays (edges of
+    * `ids(k)` are `offsets(k) until offsets(k + 1)`, in input order). A
+    * frontier id is found by binary search, so relaxing a frontier reads
+    * only its own out-edges, never the partition's whole edge list.
     */
-  def ssspDelta(cur: DataFrame, frontier: DataFrame, edges: DataFrame): DataFrame = {
-    val f = frontier.filter(col("dist") =!= INF).alias("f")
-    val best = f
-      .join(edges.alias("e"), col("f.id") === col("e.src"))
-      .select(col("e.dst").as("id"), (col("f.dist") + col("e.w")).as("cand"))
-      .groupBy("id")
-      .agg(min(col("cand")).as("best"))
-    cur
-      .select(col("id"), col("dist"))
-      .alias("s")
-      .join(best.alias("b"), Seq("id"))
-      .select(col("id"), when(col("b.best") < col("s.dist"), col("b.best")).as("newval"))
-      .withColumn("improved", col("newval").isNotNull)
+  private final class SsspAdjacency(
+      val ids: Array[Long],
+      val offsets: Array[Int],
+      val dst: Array[Long],
+      val w: Array[Double])
+      extends Serializable {
+    def relax(frontier: Iterator[(Long, Double)]): Iterator[(Long, Double)] =
+      frontier.flatMap { case (id, d) =>
+        val k = java.util.Arrays.binarySearch(ids, id)
+        if (k < 0) Iterator.empty
+        else Iterator.range(offsets(k), offsets(k + 1)).map(j => (dst(j), d + w(j)))
+      }
+  }
+
+  private object SsspAdjacency {
+    def apply(edges: Iterator[(Long, (Long, Double))]): SsspAdjacency = {
+      val es = edges.toArray.sortBy(_._1) // stable: parallel edges keep input order
+      val ids = Array.newBuilder[Long]
+      val offsets = Array.newBuilder[Int]
+      var i = 0
+      while (i < es.length) {
+        if (i == 0 || es(i)._1 != es(i - 1)._1) { ids += es(i)._1; offsets += i }
+        i += 1
+      }
+      offsets += es.length
+      new SsspAdjacency(ids.result(), offsets.result(), es.map(_._2._1), es.map(_._2._2))
+    }
   }
 
   /** Final-result projection (the reference's `JobSeq=Last` pass,
@@ -360,10 +368,23 @@ object GraphOps {
     * re-evaluation), an RDD hop is a shuffle boundary, so fusing pays
     * only the second hop's extra candidate fan-out — bounded by the
     * fuse threshold times the frontier's 2-hop out-degree, KBs at the
-    * tail this targets. Env-overridable for cluster profiles.
+    * tail this targets.
     */
-  private val RddFuseBelowRows =
-    sys.env.get("GRAFT_RDD_FUSE_BELOW").map(_.toLong).getOrElse(4096L)
+  private val RddFuseBelowRows = 4096L
+
+  /** Persist one RDD-loop round's state and cut its lineage: the
+    * round's count job caches every partition, after which
+    * `localCheckpoint` swaps the lineage for those cached blocks — no
+    * extra job. Without the cut each round's state is a narrow child of
+    * the previous round's, so the lineage and the serialized task grow
+    * by one link per round until a long-diameter graph overflows the
+    * stack. A cut RDD cannot be recomputed: unpersist it only once
+    * nothing reads it any more (Spark throws "Checkpoint block not
+    * found" otherwise).
+    */
+  private def checkpointedRound[T](
+      rdd: org.apache.spark.rdd.RDD[T]): org.apache.spark.rdd.RDD[T] =
+    rdd.persist(StorageLevel.MEMORY_AND_DISK).localCheckpoint()
 
   /** Frontier sizes below this get an explicit broadcast hint in the
     * loop (see the note in [[patchLoop]]'s subRound) — ~a few MB of ids
@@ -674,14 +695,14 @@ object GraphOps {
           .join(eRdd)
           .map { case (_, (lab, dst)) => (dst, lab) }
           .reduceByKey(part, (a, b) => math.min(a, b))
-        val merged = state
-          .leftOuterJoin(msgs)
-          .mapValues {
-            case (lab, cOpt) =>
-              val nl = cOpt match { case Some(c) if c < lab => c; case _ => lab }
-              (lab, nl)
-          }
-          .persist(StorageLevel.MEMORY_AND_DISK)
+        val merged = checkpointedRound(
+          state
+            .leftOuterJoin(msgs)
+            .mapValues {
+              case (lab, cOpt) =>
+                val nl = cOpt match { case Some(c) if c < lab => c; case _ => lab }
+                (lab, nl)
+            })
         changedCount = merged
           .mapPartitions { it =>
             var c = 0L
@@ -1140,21 +1161,21 @@ object GraphOps {
           val r = new Array[Long](a.length); var i = 0
           while (i < a.length) { r(i) = a(i) | b(i); i += 1 }; r
         })
-      val merged = state
-        .leftOuterJoin(msgs)
-        .mapValues {
-          case ((m, ex), dOpt) =>
-            val n = dOpt match {
-              case Some(d) =>
-                val r = new Array[Long](m.length); var i = 0
-                var same = true
-                while (i < m.length) { r(i) = m(i) | d(i); if (r(i) != m(i)) same = false; i += 1 }
-                if (same) m else r
-              case None => m
-            }
-            (m, n, ex)
-        }
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val merged = checkpointedRound(
+        state
+          .leftOuterJoin(msgs)
+          .mapValues {
+            case ((m, ex), dOpt) =>
+              val n = dOpt match {
+                case Some(d) =>
+                  val r = new Array[Long](m.length); var i = 0
+                  var same = true
+                  while (i < m.length) { r(i) = m(i) | d(i); if (r(i) != m(i)) same = false; i += 1 }
+                  if (same) m else r
+                case None => m
+              }
+              (m, n, ex)
+          })
       // reference equality is only a fast path — a cached block that
       // spilled and was re-read deserializes old/new as distinct objects
       def diff(m: Array[Long], n: Array[Long]): Boolean =

@@ -9,6 +9,17 @@ import graft.operators.GraphOps
   */
 class GraphOpsSpec extends SparkSpec {
 
+  /** A path of `n` nodes numbered outward from its middle node, id 1
+    * (ids 1, 2, 3, … alternate left and right), so that a label or a
+    * mask spreading from id 1 needs n/2 rounds to reach both ends. */
+  private def pathFromMiddle(n: Int): Seq[(Long, Long)] = {
+    val ids = (0 until n).map { i =>
+      val d = i - n / 2
+      if (d >= 0) 2L * d + 1L else -2L * d
+    }
+    ids.zip(ids.tail)
+  }
+
   private def ssspMap(edges: Seq[(Long, Long, Double)], src: Long): Map[Long, Double] =
     GraphOps
       .sssp(edgesDf(edges), src)
@@ -73,8 +84,14 @@ class GraphOpsSpec extends SparkSpec {
   }
 
   test("sssp on a line graph") {
-    val d = ssspMap(Seq((1L, 2L, 1.0), (2L, 3L, 2.0), (3L, 4L, 3.0)), 1L)
-    assert(d === Map(1L -> 0.0, 2L -> 1.0, 3L -> 3.0, 4L -> 6.0))
+    // plus a heavier parallel edge listed before the light one, a
+    // self-loop, and sink-only nodes (4, 9) that the frontier looks up
+    // and finds no out-edges for
+    val d = ssspMap(
+      Seq((1L, 2L, 1.0), (2L, 3L, 5.0), (2L, 3L, 2.0), (3L, 3L, 1.0), (3L, 4L, 3.0),
+        (1L, 9L, 7.0)),
+      1L)
+    assert(d === Map(1L -> 0.0, 2L -> 1.0, 3L -> 3.0, 4L -> 6.0, 9L -> 7.0))
   }
 
   test("sssp picks shortest of multiple paths") {
@@ -141,9 +158,10 @@ class GraphOpsSpec extends SparkSpec {
   }
 
   test("sssp on a long path exercises many rounds and the loop bound") {
-    // 24-hop chain: one-node frontiers for 24 consecutive rounds — the
-    // long-tail regime the incremental patch loop exists for.
-    val n = 24
+    // 2000-hop chain: one-node frontiers for 2000 consecutive hops (1000
+    // fused round jobs), the long-diameter regime where an uncut
+    // lineage overflows the stack when a task is serialized
+    val n = 2000
     val chain = (0 until n).map(i => (i.toLong, i + 1L, 1.0))
     val d = ssspMap(chain, 0L)
     assert(d.size === n + 1)
@@ -151,15 +169,45 @@ class GraphOpsSpec extends SparkSpec {
   }
 
   test("connectedComponents on a long path folds and still labels one component") {
-    val n = 24
-    val chain = (0 until n).map(i => (i.toLong, i + 1L, 1.0))
+    // 2000 nodes: the min label 1 starts mid-path and moves one hop per
+    // round each way, 1000 rounds — far past the depth at which an uncut
+    // lineage overflows the stack when a task is serialized
+    val n = 2000
     val comps = GraphOps
-      .connectedComponents(edgesDf(chain))
+      .connectedComponents(edgesDf(pathFromMiddle(n).map { case (a, b) => (a, b, 1.0) }))
       .collect()
       .map(r => r.getLong(0) -> r.getLong(1))
       .toMap
-    assert(comps.size === n + 1)
-    assert(comps.values.toSet === Set(0L))
+    assert(comps === (1 to n).map(i => i.toLong -> 1L).toMap)
+  }
+
+  test("sssp round shape: three prelude jobs, then one job per fused round") {
+    // 12-hop chain from 0: one-node frontiers, so every round fuses two
+    // hops and the loop stops at the |V|-1 = 12 bound after 6 jobs. The
+    // prelude is edges.count (two jobs under AQE: its partial-count
+    // stage, then the result) plus ONE job building the index and the
+    // vertex set; the seed and the per-round checkpoints add no job.
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val chain = edgesDf((0 until 12).map(i => (i.toLong, i + 1L, 1.0)))
+    val tag = "graft.test.roundShape"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(tag) != null) jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(tag, "1")
+    val out =
+      try GraphOps.sssp(chain, 0L)
+      finally {
+        sc.setLocalProperty(tag, null)
+        org.apache.spark.sql.graftbridge.CheckpointBridge.drainListenerBus(sc)
+        sc.removeSparkListener(listener)
+      }
+    assert(jobs.get === 3 + 6)
+    val d = out.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(d === (0 to 12).map(i => i.toLong -> i.toDouble).toMap)
   }
 
   test("kCore: a path fully peels via a multi-round deletion cascade") {
@@ -286,6 +334,20 @@ class GraphOpsSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getLong(1))
       .toMap
     assert(got === Map(7L -> 64L, 8L -> 64L, 9L -> 64L))
+  }
+
+  test("multiSourceBfs on a 2000-node path: the single source reaches both ends") {
+    // source 1 (bit 0) sits mid-path on edges in both directions and
+    // advances one hop per round each way; rounds ≥ the path length, so
+    // the loop runs 1000 rounds and exits on an empty changed set
+    val n = 2000
+    val both = pathFromMiddle(n).flatMap { case (a, b) => Seq((a, b, 1.0), (b, a, 1.0)) }
+    val got = GraphOps
+      .multiSourceBfs(edgesDf(both), nSources = 1, rounds = n)
+      .collect()
+      .map(r => r.getLong(0) -> r.getLong(1))
+      .toMap
+    assert(got === (1 to n).map(i => i.toLong -> 1L).toMap)
   }
 
   test("hits: L1 mass is conserved up to per-node truncation on the harness graph") {

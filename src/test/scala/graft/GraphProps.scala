@@ -28,6 +28,25 @@ object GraphProps extends Properties("graph") {
       } yield (s.toLong, d.toLong, w.toDouble))
   } yield edges
 
+  /** A long weighted path 0→1→…→n (hundreds of Bellman-Ford rounds on
+    * one-node frontiers) plus a few forward chords and back edges, so
+    * that some shortest paths skip ahead and cycles exist. */
+  private val genLongPath: Gen[List[(Long, Long, Double)]] = for {
+    n <- Gen.choose(300, 400)
+    ws <- Gen.listOfN(n, Gen.choose(1, 9))
+    extra <- Gen.listOfN(
+      10,
+      for {
+        a <- Gen.choose(0, n - 1)
+        k <- Gen.choose(2, 40)
+        w <- Gen.choose(1, 200)
+        back <- Gen.oneOf(false, true)
+      } yield {
+        val b = math.min(n, a + k).toLong
+        if (back) (b, a.toLong, w.toDouble) else (a.toLong, b, w.toDouble)
+      })
+  } yield ws.zipWithIndex.map { case (w, i) => (i.toLong, i + 1L, w.toDouble) } ++ extra
+
   private def dijkstra(edges: Seq[(Long, Long, Double)], src: Long): Map[Long, Double] = {
     val adj = edges.groupBy(_._1).map { case (s, es) => s -> es.map(e => (e._2, e._3)) }
     val dist = collection.mutable.Map[Long, Double](src -> 0.0)
@@ -48,7 +67,14 @@ object GraphProps extends Properties("graph") {
     dist.toMap
   }
 
-  property("sssp equals Dijkstra; membership = sources ∪ reached") = forAll(genGraph) { edges =>
+  /** SSSP from node 0 against Dijkstra, with the reference membership
+    * (SURVEY.md Q4): nodes with out-edges ∪ nodes that receive a
+    * relaxation. The source itself appears only if it has out-edges —
+    * Dijkstra's trivial self-distance does not count as "reached" (the
+    * reference's format job never creates a row for an edgeless source,
+    * SingleSourceSP.java:101).
+    */
+  private def ssspMatchesDijkstra(edges: List[(Long, Long, Double)]): Prop =
     edges.isEmpty || {
       import spark.implicits._
       val got = GraphOps
@@ -57,16 +83,16 @@ object GraphProps extends Properties("graph") {
         .map(r => r.getLong(0) -> r.getDouble(1))
         .toMap
       val d = dijkstra(edges, 0L)
-      // Reference membership (SURVEY.md Q4): nodes with out-edges ∪ nodes
-      // that receive a relaxation. The source itself appears only if it
-      // has out-edges — Dijkstra's trivial self-distance does not count
-      // as "reached" (the reference's format job never creates a row for
-      // an edgeless source, SingleSourceSP.java:101).
       val members = edges.map(_._1).toSet ++ (d.keySet - 0L)
       val expected = members.map(id => id -> d.getOrElse(id, INF)).toMap
       Prop(got == expected) :| s"got=$got expected=$expected"
     }
-  }
+
+  property("sssp equals Dijkstra; membership = sources ∪ reached") =
+    forAll(genGraph)(ssspMatchesDijkstra)
+
+  property("sssp equals Dijkstra on a long path with chords and back edges") =
+    Prop.forAllNoShrink(genLongPath)(ssspMatchesDijkstra)
 
   property("reverse of reverse preserves the edge multiset") = forAll(genGraph) { edges =>
     edges.isEmpty || {
