@@ -943,10 +943,10 @@ object Dedup {
     * the corpus" (what a training-data pipeline actually runs).
     *
     * The pair list is treated as an undirected graph and resolved with
-    * [[GraphOps.connectedComponents]] (min-label propagation on the
-    * incremental patch loop — near-dup clusters can chain A~B~C where A
-    * and C share no bucket, so transitive closure, not per-pair grouping,
-    * is required). Every corpus doc appears in the output: docs with no
+    * [[GraphOps.connectedComponentsStars]] (large-star/small-star
+    * contraction — near-dup clusters can chain A~B~C where A and C
+    * share no bucket, so transitive closure, not per-pair grouping, is
+    * required). Every corpus doc appears in the output: docs with no
     * candidate pair are their own singleton cluster. `cluster` is the
     * minimum doc_id of the component — the canonical survivor; a
     * downstream keep-filter is `is_canonical`.

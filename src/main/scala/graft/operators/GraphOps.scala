@@ -1,5 +1,7 @@
 package graft.operators
 
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -171,6 +173,9 @@ object GraphOps {
     *   merge    = patch ⟗ best, co-partitioned (narrow), persisted
     *   readout  = the changed count, the round's ONE job
     *
+    * The rounds run on [[roundLoop]], the driver shared with the other
+    * fixpoint loops.
+    *
     * The patch holds only relaxed/contacted rows (an untouched node's
     * dist is INF by construction), so a round costs O(|frontier| +
     * |msgs|), not O(|E|) or O(|V|). Frontiers below [[RddFuseBelowRows]]
@@ -189,7 +194,6 @@ object GraphOps {
       edges: DataFrame,
       source: Long,
       maxRounds: Int = Int.MaxValue): DataFrame = {
-    import org.apache.spark.rdd.RDD
     val session = edges.sparkSession
     // Parquet count() is metadata-only — no data pass even at 100 TB.
     val parts = loopPartitions(session, edges.count())
@@ -220,64 +224,41 @@ object GraphOps {
         .reduce((a, b) => (a._1 + b._1, a._2 || b._2))
       // patch value: (dist, reached, updated-last-round); the seed is a
       // narrow filter of base — no shuffle, no job
-      var patch: RDD[(Long, (Double, Boolean, Boolean))] = base.mapPartitions(
+      val seed = base.mapPartitions(
         _.collect { case (id, _) if id == source => (id, (0.0, false, true)) },
         preservesPartitioning = true)
-      var changedCount = if (hasSource) 1L else 0L
-      val bound = math.min(maxRounds.toLong, math.max(1L, nV - 1L))
-      val debug = sys.env.contains("GRAFT_LOOP_DEBUG")
       def relax(frontier: RDD[(Long, Double)]): RDD[(Long, Double)] =
         frontier
           .zipPartitions(index)((fIt, aIt) => aIt.next().relax(fIt))
           .reduceByKey(part, (a, b) => math.min(a, b))
-      var live: List[RDD[_]] = Nil
-      var rounds = 0L
-      while (changedCount > 0 && rounds < bound) {
-        // TINY-FRONTIER BATCHING (VERDICT r15 #1; guide §1/§2): below the
-        // fuse bound, relax TWO Bellman-Ford hops in one job — hop 2
-        // propagates straight off hop 1's min-combined candidates. Exact
-        // because relaxation is monotone: a hop-1 candidate that does not
-        // beat the state only generates dominated hop-2 candidates, which
-        // the single merge-min discards; a node first reached at hop 1
-        // improves by definition (INF before), so its hop-2 fan-out uses
-        // the improved value. Each hop is a shuffle boundary, so a fused
-        // pair costs two shuffles and ONE dispatch/merge/readout instead
-        // of two of each.
-        val hops = if (changedCount < RddFuseBelowRows && bound - rounds >= 2) 2L else 1L
-        rounds += hops
-        val tRound = System.nanoTime()
-        val m1 = relax(patch.filter(_._2._3).mapValues(_._1))
-        val msgs =
-          if (hops == 2L)
-            // co-partitioned union (PartitionerAwareUnionRDD) — the final
-            // min-combine is narrow, the pair still shuffles only twice
-            m1.union(relax(m1)).reduceByKey(part, (a, b) => math.min(a, b))
-          else m1
-        val merged = checkpointedRound(
-          patch
-            .fullOuterJoin(msgs)
-            .mapValues {
-              case (Some((dist, _, _)), Some(c)) =>
-                if (c < dist) (c, true, true) else (dist, true, false)
-              case (Some((dist, rch, _)), None) => (dist, rch, false)
-              case (None, Some(c)) =>
-                if (c < INF) (c, true, true) else (INF, true, false)
-              case (None, None) => (INF, false, false) // unreachable
-            })
-        changedCount = merged
-          .mapPartitions { it =>
-            var c = 0L
-            it.foreach { case (_, (_, _, u)) => if (u) c += 1 }
-            Iterator.single(c)
-          }
-          .reduce(_ + _)
-        patch = merged
-        live.foreach(_.unpersist(false))
-        live = List(merged)
-        if (debug)
-          System.err.println(
-            f"[ssspRdd] round=$rounds%3d hops=$hops changed=$changedCount%7d " +
-              f"sec=${(System.nanoTime() - tRound) / 1e9}%5.2f")
+      val patch = roundLoop("sssp", seed, if (hasSource) 1L else 0L, maxRounds, nV)(_._3) {
+        (cur, at) =>
+          // TINY-FRONTIER BATCHING (VERDICT r15 #1; guide §1/§2): below the
+          // fuse bound, relax TWO Bellman-Ford hops in one job — hop 2
+          // propagates straight off hop 1's min-combined candidates. Exact
+          // because relaxation is monotone: a hop-1 candidate that does not
+          // beat the state only generates dominated hop-2 candidates, which
+          // the single merge-min discards; a node first reached at hop 1
+          // improves by definition (INF before), so its hop-2 fan-out uses
+          // the improved value. Each hop is a shuffle boundary, so a fused
+          // pair costs two shuffles and ONE dispatch/merge/readout instead
+          // of two of each.
+          val hops = if (at.changed < RddFuseBelowRows && at.left >= 2) 2L else 1L
+          val m1 = relax(cur.filter(_._2._3).mapValues(_._1))
+          val msgs =
+            if (hops == 2L)
+              // co-partitioned union (PartitionerAwareUnionRDD) — the final
+              // min-combine is narrow, the pair still shuffles only twice
+              m1.union(relax(m1)).reduceByKey(part, (a, b) => math.min(a, b))
+            else m1
+          (hops, cur.fullOuterJoin(msgs).mapValues {
+            case (Some((dist, _, _)), Some(c)) =>
+              if (c < dist) (c, true, true) else (dist, true, false)
+            case (Some((dist, rch, _)), None) => (dist, rch, false)
+            case (None, Some(c)) =>
+              if (c < INF) (c, true, true) else (INF, true, false)
+            case (None, None) => (INF, false, false) // unreachable
+          })
       }
       index.unpersist(false)
       // one base overlay at the end — membership (Q4): nodes with
@@ -342,33 +323,11 @@ object GraphOps {
   def finalResult(state: DataFrame, source: Long): DataFrame =
     state.select(lit(source).as("source"), col("id"), col("dist"))
 
-  /** Never broadcast a patch above this many rows, whatever the
-    * fold-fraction says — a driver is not sized for gigarow builds.
-    */
-  private val BroadcastRowCap = 4000000L
-
-  /** Frontier size below which two sub-rounds fuse into one
-    * materialization (see the batching note in [[patchLoop]]). DEFAULT 0
-    * = never fuse: measured per-round debug shows a fused round costs
-    * 1.9–5.4 s against 0.3–0.5 s unfused EVEN ON 14-ROW PATCHES
-    * (sssp_layered 11.1 s fused vs 4.3 s unfused end-to-end) — the
-    * doubled plan depth's planning/codegen plus the ~3× re-evaluation
-    * of the unmaterialized intermediate swamp the one job dispatch a
-    * fuse saves, because in local mode planning IS the per-round floor.
-    * The knob stays for cluster profiles where dispatch latency (queue
-    * waits, 1 s+ scheduling) dominates planning; set GRAFT_BATCH_BELOW
-    * to a small frontier bound to re-enable.
-    */
-  private val BatchBelowRows =
-    sys.env.get("GRAFT_BATCH_BELOW").map(_.toLong).getOrElse(0L)
-
   /** RDD-loop double-hop fuse bound (the [[sssp]] tiny-frontier batch):
-    * frontiers below this relax two hops per job. Unlike the DataFrame
-    * fuse (see [[BatchBelowRows]] — a measured loss from Catalyst
-    * re-evaluation), an RDD hop is a shuffle boundary, so fusing pays
-    * only the second hop's extra candidate fan-out — bounded by the
-    * fuse threshold times the frontier's 2-hop out-degree, KBs at the
-    * tail this targets.
+    * frontiers below this relax two hops per job. An RDD hop is a
+    * shuffle boundary, so fusing pays only the second hop's extra
+    * candidate fan-out — bounded by the fuse threshold times the
+    * frontier's 2-hop out-degree, KBs at the tail this targets.
     */
   private val RddFuseBelowRows = 4096L
 
@@ -382,16 +341,91 @@ object GraphOps {
     * nothing reads it any more (Spark throws "Checkpoint block not
     * found" otherwise).
     */
-  private def checkpointedRound[T](
-      rdd: org.apache.spark.rdd.RDD[T]): org.apache.spark.rdd.RDD[T] =
+  private def checkpointedRound[T](rdd: RDD[T]): RDD[T] =
     rdd.persist(StorageLevel.MEMORY_AND_DISK).localCheckpoint()
 
-  /** Frontier sizes below this get an explicit broadcast hint in the
-    * loop (see the note in [[patchLoop]]'s subRound) — ~a few MB of ids
-    * and values, unambiguously broadcast-right. Above it the frontier
-    * takes the shuffle path and AQE decides at runtime.
+  /** Where a [[roundLoop]] round starts: `done` rounds behind it, `left`
+    * before the bound, `changed` rows changed by the last one. */
+  private final case class RoundAt(done: Long, left: Long, changed: Long)
+
+  /** The one driver of the RDD fixpoint loops ([[sssp]],
+    * [[connectedComponents]], [[maskLoopRdd]] and the k-core [[peel]]),
+    * in the shape of the reference's driver loop
+    * (`SingleSourceSP.java:439-519`): a fixed job per round, stopped by
+    * a global counter. A loop state is an RDD keyed by node id under
+    * the loop's `HashPartitioner`. The caller passes only its
+    * algorithm:
+    *
+    *   round     = the next state, built LAZILY from the current one
+    *               (relax, combine, merge), and the rounds it covers (a
+    *               fused round covers two)
+    *   isChanged = the rows a round changed — the next frontier
+    *
+    * The driver owns the rest:
+    *
+    *   - the round counter, bounded by min(maxRounds, |V| − 1) (the
+    *     Bellman-Ford bound; a fixed-round loop passes
+    *     `nV = Long.MaxValue`) and, when `untilUnchanged`, stopped after
+    *     a round that changes nothing — the reference's Hadoop counter
+    *     (`:473-479`);
+    *   - [[checkpointedRound]] on every round's state;
+    *   - the round's ONE job: a pass over the new state counting its
+    *     changed rows and summing `weight` over all rows (exact 64-bit
+    *     sums, associative, so order-free and deterministic — unlike
+    *     accumulators, which can double-count on retry);
+    *   - freeing the superseded state once the new one is cut, and not
+    *     before (a cut RDD cannot be recomputed); without
+    *     `freeSuperseded` every state stays, for callers that read the
+    *     old ones later through `after`;
+    *   - the `GRAFT_LOOP_DEBUG` line per round.
+    *
+    * `seed` is the state before round 1 and `seedChanged` its changed
+    * rows; `after(rounds, changed, sum, state)` runs after each round's
+    * readout. Returns the last state, still persisted (the seed if no
+    * round ran).
     */
-  private val FrontierBroadcastRows = 100000L
+  private def roundLoop[V](
+      name: String,
+      seed: RDD[(Long, V)],
+      seedChanged: Long,
+      maxRounds: Long,
+      nV: Long,
+      untilUnchanged: Boolean = true,
+      freeSuperseded: Boolean = true)(
+      isChanged: V => Boolean,
+      weight: V => Long = (_: V) => 0L,
+      after: (Long, Long, Long, RDD[(Long, V)]) => Unit =
+        (_: Long, _: Long, _: Long, _: RDD[(Long, V)]) => ())(
+      round: (RDD[(Long, V)], RoundAt) => (Long, RDD[(Long, V)])): RDD[(Long, V)] = {
+    val bound = math.min(maxRounds, math.max(1L, nV - 1L))
+    val debug = sys.env.contains("GRAFT_LOOP_DEBUG")
+    var state = seed
+    var changed = seedChanged
+    var rounds = 0L
+    while (rounds < bound && (changed > 0 || !untilUnchanged)) {
+      val tRound = System.nanoTime()
+      val (hops, next) = round(state, RoundAt(rounds, bound - rounds, changed))
+      val superseded = state
+      state = checkpointedRound(next)
+      rounds += hops
+      val (c, sum) = state
+        .mapPartitions { it =>
+          var c = 0L
+          var s = 0L
+          it.foreach { case (_, v) => if (isChanged(v)) c += 1; s += weight(v) }
+          Iterator.single((c, s))
+        }
+        .reduce((a, b) => (a._1 + b._1, a._2 + b._2))
+      changed = c
+      after(rounds, changed, sum, state)
+      if (freeSuperseded) superseded.unpersist(false)
+      if (debug)
+        System.err.println(
+          f"[$name] round=$rounds%3d hops=$hops changed=$changed%7d " +
+            f"sec=${(System.nanoTime() - tRound) / 1e9}%5.2f")
+    }
+    state
+  }
 
   /** Loop shuffle parallelism: ≈100k edges per partition, floor 4,
     * capped at the session's configured shuffle partitions. At cluster
@@ -418,239 +452,24 @@ object GraphOps {
       body: => A): A = {
     val shuffleKey = "spark.sql.shuffle.partitions"
     val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
-    val aqeKey = "spark.sql.adaptive.enabled"
     val prevShuffle = session.conf.get(shuffleKey, "200")
     val prevCoalesce = session.conf.get(coalesceKey, "true")
-    val prevAqe = session.conf.get(aqeKey, "true")
     session.conf.set(shuffleKey, parts.toString)
     session.conf.set(coalesceKey, "false")
-    sys.env.get("GRAFT_LOOP_AQE").foreach(v => session.conf.set(aqeKey, v))
     try body
     finally {
       session.conf.set(shuffleKey, prevShuffle)
       session.conf.set(coalesceKey, prevCoalesce)
-      session.conf.set(aqeKey, prevAqe)
     }
-  }
-
-  /** Shared incremental driver loop for iterate-until-converged graph
-    * algorithms (C1/A4 of the reference, `SingleSourceSP.java:439-519`,
-    * re-engineered for scale).
-    *
-    * State is base ⟕ patch: `base` is the full |V|-row table, rewritten
-    * ONLY at fold points; `patch` is the small table of rows touched
-    * since the last fold (improved value, this-round `p_upd` frontier
-    * flag, optional `p_rch` first-contact mark). Per round:
-    *
-    *   frontier = patch.filter(p_upd)            — no |V| scan at all
-    *   delta    = mkDelta(current, frontier)     — algorithm step; rows
-    *              keyed by id with `newval` (null = no improvement) and
-    *              boolean `improved`
-    *   patch'   = patch ⟗ delta                  — small ⟗ small, then
-    *              checkpointed; ONE agg materializes it and reads both
-    *              the convergence counter (the reference's Hadoop
-    *              counter, `:473-479`) and the patch size
-    *
-    * The plan depth is CONSTANT per round (one broadcast probe over the
-    * base checkpoint — deep lazy merge chains make Catalyst's optimizer
-    * cost explode exponentially, measured 2.4×/round). Long-tail
-    * convergence (hundreds of rounds, tiny frontiers — what a power-law
-    * graph produces at scale) costs O(patch) per round, not O(|V|); the
-    * total fold cost is amortized O(touched rows × 8 / |V|) full
-    * rewrites for the whole run.
-    *
-    * Superseded base/patch checkpoint blocks are freed as soon as their
-    * replacement is materialized (the reference instead leaves every
-    * iteration's full state on HDFS, `SingleSourceSP.java:513-517`).
-    * The loop is bounded by min(maxRounds, |V|−1).
-    */
-  private def patchLoop(
-      base0: DataFrame,
-      seedPatch: DataFrame => DataFrame,
-      valCol: String,
-      trackReached: Boolean,
-      maxRounds: Long)(mkDelta: (DataFrame, DataFrame) => DataFrame): DataFrame = {
-    val sc = base0.sparkSession.sparkContext
-    def persistedIds = sc.getPersistentRDDs.keySet.toSet
-    def free(ids: Set[Int]): Unit = {
-      val persisted = sc.getPersistentRDDs
-      ids.foreach(id => persisted.get(id).foreach(_.unpersist(false)))
-    }
-    def ckptAfter[A](pre: Set[Int])(materialize: => A): (A, Set[Int]) = {
-      val a = materialize
-      (a, persistedIds -- pre)
-    }
-
-    // current full state view: base overlaid with the patch
-    def currentState(b: DataFrame, p: DataFrame, pRows: Long): DataFrame = {
-      val pSide = if (pRows < BroadcastRowCap) broadcast(p) else p
-      val passthrough = b.columns.filterNot(c => c == valCol || c == "reached").map(col)
-      val reached =
-        if (trackReached)
-          Seq((coalesce(col("reached"), lit(false)) || coalesce(col("p_rch"), lit(false)))
-            .as("reached"))
-        else Nil
-      b.join(pSide, Seq("id"), "left_outer")
-        .select(
-          passthrough ++ reached ++ Seq(
-            coalesce(col("p_val"), col(valCol)).as(valCol),
-            coalesce(col("p_upd"), lit(false)).as("updated")): _*)
-    }
-
-    // Eager checkpoints (the materialization doubles as the round's
-    // work-horse job; measured faster than lazy + counting action), and
-    // dropOriginStats after EVERY checkpoint: without it the size-only
-    // estimator's sizeInBytes doubles its bit-length per round (see
-    // CheckpointBridge) and the driver dies in BigInt math by round ~16.
-    def ckpt(df: DataFrame): DataFrame =
-      org.apache.spark.sql.graftbridge.CheckpointBridge.dropOriginStats(df.localCheckpoint(true))
-    var pre = persistedIds
-    var base = ckpt(base0)
-    val (nV, baseIds0) = ckptAfter(pre)(base.count())
-    var baseLive = baseIds0
-    pre = persistedIds
-    var patch = ckpt(seedPatch(base))
-    val (patchRows0, patchIds0) = ckptAfter(pre)(patch.count())
-    var patchLive = patchIds0
-    var patchRows = patchRows0
-
-    val bound = math.min(maxRounds, math.max(1L, nV - 1L))
-    val foldRows = math.max(1000L, nV / 8L)
-    var rounds = 0L
-    // the seed patch size doubles as the first round's frontier size:
-    // it sizes the first batch decision, and an empty seed patch (e.g.
-    // a source vertex absent from the graph) skips the loop outright —
-    // an empty-frontier round is a no-op by construction
-    var changed = patchRows0
-    // one-round frontier history for the batching decision below: a
-    // small frontier alone does NOT mean the round is cheap — every
-    // SSSP seeds with ONE row, and round 1–2 are the exponential
-    // expansion phase where a fused round re-evaluates the biggest
-    // delta of the run ~3× (measured: sssp_two_rounds 2.9→6.4 s when
-    // the seed round fused). Two consecutive small frontiers is the
-    // long-tail signature fusing was built for.
-    var prevChanged = Long.MaxValue
-    val debug = sys.env.contains("GRAFT_LOOP_DEBUG")
-    while (changed > 0 && rounds < bound) {
-      val tRound = System.nanoTime()
-      // one algorithm sub-round, composed lazily over `p`
-      def subRound(p: DataFrame): DataFrame = {
-        // the loop MEASURED the frontier size last round (`changed`), so
-        // hint the broadcast outright instead of waiting for AQE to
-        // rediscover it stage-by-stage (measured: the late-tail rounds'
-        // AQE re-planning cost 1.5 s/round on a 1-row frontier; hinted,
-        // 0.35 s). Gated well below the patch overlay's cap: a frontier
-        // this size is a few MB broadcast, while a fixed-iteration
-        // all-nodes "frontier" (pagerank) or a still-expanding 100 TB
-        // wave correctly stays on the shuffle path
-        val fr0 = p.filter(col("p_upd")).select(col("id"), col("p_val").as(valCol))
-        val frontier = if (changed < FrontierBroadcastRows) broadcast(fr0) else fr0
-        val delta = mkDelta(currentState(base, p, patchRows), frontier)
-        val reachedCols =
-          if (trackReached)
-            Seq((coalesce(col("p_rch"), lit(false)) || col("improved").isNotNull).as("p_rch"))
-          else Nil
-        p.join(delta, Seq("id"), "full_outer")
-          .select(
-            Seq(
-              col("id"),
-              coalesce(col("newval"), col("p_val")).as("p_val"),
-              coalesce(col("improved"), lit(false)).as("p_upd")) ++ reachedCols: _*)
-      }
-      // Adaptive batching (OFF by default — see [[BatchBelowRows]]):
-      // when enabled, a frontier small for TWO consecutive rounds (the
-      // converged long tail, not the small seed of a still-expanding
-      // run) fuses two sub-rounds into one materialization, trading ~3×
-      // re-evaluation of the unmaterialized intermediate for one fewer
-      // job dispatch. Measurement showed local planning/codegen — not
-      // dispatch — is the per-round floor, so the default stays 1
-      // sub-round per materialization. Deeper fusing compounds: cost
-      // grows 3^depth (measured: depth 4 tripled sssp_lineitem).
-      // Convergence stays exact either way — the final sub-round's
-      // `p_upd` flags gate the loop, and a fused no-op sub-round is
-      // idempotent.
-      val smallTail = changed < BatchBelowRows && prevChanged < BatchBelowRows
-      val batch = math.min(if (smallTail) 2L else 1L, bound - rounds)
-      prevChanged = changed
-      pre = persistedIds
-      // the round's two control scalars (patch size, convergence count)
-      // ride the checkpoint materialization itself as observed metrics —
-      // no separate count job per round (the reference instead reads a
-      // Hadoop counter after each full MR job, SingleSourceSP.java:473-479)
-      val obs = org.apache.spark.sql.Observation()
-      val pNew = ckpt(
-        (1L to batch)
-          .foldLeft(patch)((p, _) => subRound(p))
-          .observe(obs, count(lit(1)).as("rows"), count_if(col("p_upd")).as("changed")))
-      val pNewIds = persistedIds -- pre
-      // eager ckpt ran the observed plan; the listener bus posts async, so
-      // drain it first — otherwise getOrEmpty races the delivery and the
-      // explicit-count fallback fires nondeterministically, costing an
-      // extra aggregate job per round. getOrEmpty still guards API drift.
-      org.apache.spark.sql.graftbridge.CheckpointBridge.drainListenerBus(
-        base.sparkSession.sparkContext)
-      val m = org.apache.spark.sql.graftbridge.CheckpointBridge.observedMetrics(obs)
-      if (m.nonEmpty) {
-        patchRows = m("rows").asInstanceOf[Long]
-        changed = m("changed").asInstanceOf[Long]
-      } else {
-        val row = pNew.agg(count(lit(1)), count_if(col("p_upd"))).head()
-        patchRows = row.getLong(0)
-        changed = row.getLong(1)
-      }
-      rounds += batch
-      if (patchRows >= foldRows) {
-        // fold: rewrite base with the patch applied, shrink the patch to
-        // the still-updated frontier rows
-        // ckpt is EAGER: the blocks exist when it returns, so the live-id
-        // snapshot needs no extra count job
-        pre = persistedIds
-        val base2 = ckpt(currentState(base, pNew, patchRows).drop("updated"))
-        val base2Ids = persistedIds -- pre
-        pre = persistedIds
-        val patch2 = ckpt(pNew.filter(col("p_upd")))
-        val patch2Ids = persistedIds -- pre
-        free(baseLive ++ patchLive ++ pNewIds)
-        base = base2
-        baseLive = base2Ids
-        patch = patch2
-        patchLive = patch2Ids
-        patchRows = changed
-      } else {
-        free(patchLive)
-        patch = pNew
-        patchLive = pNewIds
-      }
-      if (debug)
-        System.err.println(
-          f"[patchLoop] round=$rounds%3d changed=$changed%7d patchRows=$patchRows%7d " +
-            f"sec=${(System.nanoTime() - tRound) / 1e9}%5.2f")
-    }
-    currentState(base, patch, patchRows)
-  }
-
-  /** One min-label propagation round for [[connectedComponents]], in
-    * delta form: only the rows whose label improves this round.
-    */
-  def ccDelta(cur: DataFrame, frontier: DataFrame, undirected: DataFrame): DataFrame = {
-    val f = frontier.alias("f")
-    val best = f
-      .join(undirected.alias("e"), col("f.id") === col("e.src"))
-      .select(col("e.dst").as("id"), col("f.lab").as("cand"))
-      .groupBy("id")
-      .agg(min(col("cand")).as("best"))
-    cur
-      .select(col("id"), col("lab"))
-      .alias("s")
-      .join(best.alias("b"), Seq("id"))
-      .filter(col("b.best") < col("s.lab"))
-      .select(col("id"), col("b.best").as("newval"), lit(true).as("improved"))
   }
 
   /** Connected components over the UNDIRECTED closure of the edge list:
-    * iterative min-label propagation on the shared incremental loop;
-    * converges in O(diameter) rounds. Labels are node ids; each node
-    * ends with the minimum id in its component.
+    * iterative min-label propagation on [[roundLoop]] — one
+    * co-partitioned join of last round's improved labels against the
+    * edges, one min-combine shuffle, one narrow merge and ONE job per
+    * round, zero Catalyst planning; converges in O(diameter) rounds.
+    * Labels are node ids; each node ends with the minimum id in its
+    * component.
     *
     * Not in the reference (its two programs are SSSP and transpose), but
     * the natural second consumer of the iterate-until-converged machinery.
@@ -658,11 +477,8 @@ object GraphOps {
   def connectedComponents(edges: DataFrame, maxRounds: Int = Int.MaxValue): DataFrame = {
     val session = edges.sparkSession
     val parts = loopPartitions(session, edges.count() * 2)
-    // RDD-core min-label propagation — see [[sssp]]'s loop note: one
-    // co-partitioned join + one min-combine shuffle + one narrow merge
-    // + ONE job per round, zero Catalyst planning.
     withLoopConfs(session, parts) {
-      val part = new org.apache.spark.HashPartitioner(parts)
+      val part = new HashPartitioner(parts)
       val eRdd = edges
         .select(col("src"), col("dst"))
         .rdd
@@ -672,52 +488,28 @@ object GraphOps {
         }
         .partitionBy(part)
         .persist(StorageLevel.MEMORY_AND_DISK)
-      // CC starts with EVERY node in the frontier (each proposes its own
-      // label to all neighbors)
-      var state = eRdd
+      // state value: (label, improved last round); CC starts with EVERY
+      // node in the frontier (each proposes its own label to all
+      // neighbors)
+      val seed = eRdd
         .map(_._1)
         .distinct(parts)
-        .map(id => (id, id))
+        .map(id => (id, (id, true)))
         .partitionBy(part)
         .persist(StorageLevel.MEMORY_AND_DISK)
-      val nV = state.count()
+      val nV = seed.count()
       eRdd.count()
-      var changed: org.apache.spark.rdd.RDD[(Long, Long)] = state
-      var changedCount = nV
-      val bound = math.min(maxRounds.toLong, math.max(1L, nV - 1L))
-      val debug = sys.env.contains("GRAFT_LOOP_DEBUG")
-      var live: List[org.apache.spark.rdd.RDD[_]] = List(state)
-      var rounds = 0L
-      while (changedCount > 0 && rounds < bound) {
-        rounds += 1
-        val tRound = System.nanoTime()
-        val msgs = changed
+      val state = roundLoop("connectedComponents", seed, nV, maxRounds, nV)(_._2) { (cur, _) =>
+        val msgs = cur
+          .filter(_._2._2)
+          .mapValues(_._1)
           .join(eRdd)
           .map { case (_, (lab, dst)) => (dst, lab) }
           .reduceByKey(part, (a, b) => math.min(a, b))
-        val merged = checkpointedRound(
-          state
-            .leftOuterJoin(msgs)
-            .mapValues {
-              case (lab, cOpt) =>
-                val nl = cOpt match { case Some(c) if c < lab => c; case _ => lab }
-                (lab, nl)
-            })
-        changedCount = merged
-          .mapPartitions { it =>
-            var c = 0L
-            it.foreach { case (_, (o, n)) => if (n < o) c += 1 }
-            Iterator.single(c)
-          }
-          .reduce(_ + _)
-        state = merged.mapValues(_._2)
-        changed = merged.filter { case (_, (o, n)) => n < o }.mapValues(_._2)
-        live.foreach(_.unpersist(false))
-        live = List(merged)
-        if (debug)
-          System.err.println(
-            f"[ccRdd] round=$rounds%3d changed=$changedCount%7d " +
-              f"sec=${(System.nanoTime() - tRound) / 1e9}%5.2f")
+        (1L, cur.leftOuterJoin(msgs).mapValues {
+          case ((lab, _), Some(c)) if c < lab => (c, true)
+          case ((lab, _), _) => (lab, false)
+        })
       }
       eRdd.unpersist(false)
       import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -725,7 +517,7 @@ object GraphOps {
         StructField("id", LongType, nullable = false),
         StructField("component", LongType, nullable = false)))
       session.createDataFrame(
-        state.map { case (id, lab) => org.apache.spark.sql.Row(id, lab) },
+        state.map { case (id, (lab, _)) => org.apache.spark.sql.Row(id, lab) },
         schema)
     }
   }
@@ -1084,25 +876,21 @@ object GraphOps {
     * DRIVER — analyzer/optimizer passes plus AQE stage re-planning on a
     * fresh ~40-node plan every round cost 0.35–0.45 s while the tasks
     * move KBs (measured on graph_bowtie: identical rounds at 0.16 s on
-    * raw RDDs, under 0.1 s with the one-action round below). The round
-    * here is three co-partitioned narrow ops plus ONE shuffle and ONE
-    * job:
+    * raw RDDs, under 0.1 s with the one-action round below). A round on
+    * [[roundLoop]] is three co-partitioned narrow ops plus ONE shuffle
+    * and ONE job:
     *
     *   msgs    = changed ⋈ edges (both hash(parts) — narrow), gated
     *             masks, reduceByKey(bit_or)         — the one exchange
     *   merged  = state ⟕ msgs (narrow), keeping (old, new, extras)
-    *   action  = one mapPartitions/reduce pass computing the changed
-    *             count AND the caller's estimator sum (exact 64-bit
-    *             sums, associative — so order-free and deterministic,
-    *             unlike accumulators which can double-count on retry;
-    *             this also materializes merged's persist)
+    *   action  = the driver's readout: the changed count AND the
+    *             caller's estimator sum `estOf` over the new masks
     *
     * `extras` are per-node Long accumulators folded once per round
-    * from (old masks, new masks, h) — the harmonic/closeness per-node
-    * readouts that the DataFrame loop paid a join-plus-checkpoint per
-    * round for. All arithmetic is the same exact integer math as the
-    * SQL mirrors; the fold is applied lazily over the persisted round
-    * (pure function, evaluated at most twice).
+    * from (extras, old masks, new masks, h) inside the merge — the
+    * harmonic/closeness per-node readouts that the DataFrame loop paid
+    * a join-plus-checkpoint per round for. All arithmetic is the same
+    * exact integer math as the SQL mirrors.
     *
     * At 100 TB the shapes are identical to the DataFrame loop's (the
     * partitioner is even stickier: every join in the loop is provably
@@ -1119,40 +907,49 @@ object GraphOps {
       gated: Boolean = false,
       extraInit: (Long, Array[Long]) => Array[Long] = null,
       extraFold: (Array[Long], Array[Long], Array[Long], Int) => Array[Long] = null,
-      estOf: Array[Long] => Long = null)(
-      onRound: (Int, Long, Long, org.apache.spark.rdd.RDD[(Long, Array[Long])]) => Unit =
-        (_, _, _, _) => ())
-      : org.apache.spark.rdd.RDD[(Long, (Array[Long], Array[Long]))] = {
-    import org.apache.spark.rdd.RDD
+      estOf: Array[Long] => Long = _ => 0L)(
+      onRound: (Int, Long, Long, RDD[(Long, Array[Long])]) => Unit = (_, _, _, _) => ())
+      : RDD[(Long, (Array[Long], Array[Long]))] = {
     val K = nMasks
-    val part = new org.apache.spark.HashPartitioner(parts)
+    val part = new HashPartitioner(parts)
     val eRdd = (if (gated) e.rdd.map(r => (r.getLong(0), (r.getLong(1), r.getLong(2))))
                 else e.rdd.map(r => (r.getLong(0), (r.getLong(1), -1L))))
       .partitionBy(part)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val init = extraInit
-    var state: RDD[(Long, (Array[Long], Array[Long]))] = seed.rdd
+    val fold = extraFold
+    // state value: (masks before the last round, masks after it,
+    // extras); the seed's "before" is all zero, so its changed rows are
+    // exactly the nodes holding a seed bit
+    val zero = new Array[Long](K)
+    val state0 = seed.rdd
       .map { r =>
         val id = r.getLong(0)
         val m = Array.tabulate(K)(s => r.getLong(s + 1))
-        (id, (m, if (init == null) Array.emptyLongArray else init(id, m)))
+        (id, (zero, m, if (init == null) Array.emptyLongArray else init(id, m)))
       }
       .partitionBy(part)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var changed: RDD[(Long, Array[Long])] =
-      state.filter(_._2._1.exists(_ != 0L)).mapValues(_._1)
-    var changedCount = changed.count() // materializes state too
+    // reference equality is only a fast path — a cached block that
+    // spilled and was re-read deserializes old/new as distinct objects
+    def changed(v: (Array[Long], Array[Long], Array[Long])): Boolean =
+      !((v._1 eq v._2) || java.util.Arrays.equals(v._1, v._2))
+    val changed0 = state0.filter(r => changed(r._2)).count() // materializes the seed
     eRdd.count()
-    val debug = sys.env.contains("GRAFT_LOOP_DEBUG")
-    var live: List[RDD[_]] = List(state)
-    var h = 0
-    while (h < maxRounds && (!earlyExit || changedCount > 0)) {
-      h += 1
-      val hh = h
-      val tRound = System.nanoTime()
-      val est0 = estOf
-      val fold = extraFold
-      val msgs = changed
+    val last = roundLoop("maskLoop", state0, changed0, maxRounds, Long.MaxValue,
+      untilUnchanged = earlyExit, freeSuperseded = freeSuperseded)(
+      changed,
+      weight = v => estOf(v._2),
+      after = (h, changedCount, est, merged) =>
+        onRound(h.toInt, changedCount, est, merged.filter(r => changed(r._2)).mapValues {
+          case (m, n, _) =>
+            val d = new Array[Long](n.length); var i = 0
+            while (i < n.length) { d(i) = n(i) & ~m(i); i += 1 }; d
+        })) { (cur, at) =>
+      val h = (at.done + 1).toInt
+      val msgs = cur
+        .filter(r => changed(r._2))
+        .mapValues(_._2)
         .join(eRdd)
         .map { case (_, (m, (dst, gate))) =>
           (dst, if (gate == -1L) m else { val g = new Array[Long](m.length); var i = 0; while (i < m.length) { g(i) = m(i) & gate; i += 1 }; g })
@@ -1161,57 +958,21 @@ object GraphOps {
           val r = new Array[Long](a.length); var i = 0
           while (i < a.length) { r(i) = a(i) | b(i); i += 1 }; r
         })
-      val merged = checkpointedRound(
-        state
-          .leftOuterJoin(msgs)
-          .mapValues {
-            case ((m, ex), dOpt) =>
-              val n = dOpt match {
-                case Some(d) =>
-                  val r = new Array[Long](m.length); var i = 0
-                  var same = true
-                  while (i < m.length) { r(i) = m(i) | d(i); if (r(i) != m(i)) same = false; i += 1 }
-                  if (same) m else r
-                case None => m
-              }
-              (m, n, ex)
-          })
-      // reference equality is only a fast path — a cached block that
-      // spilled and was re-read deserializes old/new as distinct objects
-      def diff(m: Array[Long], n: Array[Long]): Boolean =
-        !((m eq n) || java.util.Arrays.equals(m, n))
-      val (cnt, est) = merged
-        .mapPartitions { it =>
-          var c = 0L; var s = 0L
-          it.foreach { case (_, (m, n, _)) =>
-            if (diff(m, n)) c += 1
-            if (est0 != null) s += est0(n)
+      (1L, cur.leftOuterJoin(msgs).mapValues {
+        case ((_, m, ex), dOpt) =>
+          val n = dOpt match {
+            case Some(d) =>
+              val r = new Array[Long](m.length); var i = 0
+              var same = true
+              while (i < m.length) { r(i) = m(i) | d(i); if (r(i) != m(i)) same = false; i += 1 }
+              if (same) m else r
+            case None => m
           }
-          Iterator.single((c, s))
-        }
-        .reduce((a, b) => (a._1 + b._1, a._2 + b._2))
-      changedCount = cnt
-      state = merged.mapValues { case (m, n, ex) =>
-        (n, if (fold == null) ex else fold(ex, m, n, hh))
-      }
-      changed = merged.filter { case (_, (m, n, _)) => diff(m, n) }.mapValues(_._2)
-      val delta = merged.filter { case (_, (m, n, _)) => diff(m, n) }.mapValues {
-        case (m, n, _) =>
-          val d = new Array[Long](n.length); var i = 0
-          while (i < n.length) { d(i) = n(i) & ~m(i); i += 1 }; d
-      }
-      onRound(h, changedCount, est, delta)
-      if (freeSuperseded) {
-        live.foreach(_.unpersist(false))
-        live = List(merged)
-      } else live = merged :: live
-      if (debug)
-        System.err.println(
-          f"[maskLoopRdd] round=$h%3d changed=$changedCount%7d " +
-            f"sec=${(System.nanoTime() - tRound) / 1e9}%5.2f")
+          (m, n, if (fold == null) ex else fold(ex, m, n, h))
+      })
     }
     eRdd.unpersist(false)
-    state
+    last.mapValues { case (_, n, ex) => (n, ex) }
   }
 
   /** The final mask state of [[maskLoopRdd]] as a DataFrame
@@ -3347,73 +3108,86 @@ object GraphOps {
        |SELECT a, b, sup FROM fin ORDER BY a, b""".stripMargin
   }
 
-  /** One peeling round of [[kCore]], in delta form: dead frontier nodes
-    * send a decrement per incident edge; an ALIVE neighbor's degree drops
-    * by its dead-neighbor count, and it dies in turn (p_val −1) when the
-    * new degree falls below k. Decrement rows carry `improved = false` —
-    * the patch applies the new value but only DEATHS enter the next
-    * frontier, and the loop converges when a round kills nobody. Dead
-    * nodes are filtered from the compare side, so a death cascades
-    * exactly once.
+  /** The undirected simple graph of `edges` for the peel loops:
+    * parallel edges and self-loops dropped, both directions kept (so
+    * out-degree == undirected degree), hash-partitioned on the source
+    * by `part` and persisted.
     */
-  def kCoreDelta(cur: DataFrame, frontier: DataFrame, undirected: DataFrame, k: Int): DataFrame = {
-    val f = frontier.alias("f")
-    val decs = f
-      .join(undirected.alias("e"), col("f.id") === col("e.src"))
-      .groupBy(col("e.dst").as("id"))
-      .agg(count(lit(1)).as("dec"))
-    cur
-      .filter(col("deg") >= 0)
-      .select(col("id"), col("deg"))
-      .alias("s")
-      .join(decs.alias("d"), Seq("id"))
-      .select(
-        col("id"),
-        when(col("s.deg") - col("d.dec") < k, lit(-1L))
-          .otherwise(col("s.deg") - col("d.dec"))
-          .as("newval"))
-      .withColumn("improved", col("newval") === -1L)
+  private def undirectedSimple(edges: DataFrame, part: HashPartitioner): RDD[(Long, Long)] =
+    edges
+      .filter(col("src") =!= col("dst"))
+      .select(least(col("src"), col("dst")), greatest(col("src"), col("dst")))
+      .distinct()
+      .rdd
+      .flatMap { r =>
+        val a = r.getLong(0); val b = r.getLong(1)
+        Iterator((a, b), (b, a))
+      }
+      .partitionBy(part)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+
+  /** The k-core deletion cascade on [[roundLoop]], in the
+    * [[connectedComponents]] shape. State `id → (remaining degree,
+    * died last round)`, degree −1 = dead, over `und`
+    * ([[undirectedSimple]]). The seed kills every node of degree below
+    * k. A round's frontier is the nodes that died last round: each
+    * sends one decrement per edge (`frontier ⋈ und`, summed per
+    * neighbor — the round's one shuffle), and an alive node whose
+    * degree falls below k dies in turn. Only deaths count as changed,
+    * so a death cascades exactly once and the loop stops after a round
+    * that kills nobody. Returns the final state, still persisted.
+    */
+  private def peel(
+      und: RDD[(Long, Long)],
+      k: Int,
+      part: HashPartitioner): RDD[(Long, (Long, Boolean))] = {
+    val seed = und
+      .mapValues(_ => 1L)
+      .reduceByKey(part, _ + _) // narrow: und is already on `part`
+      .mapValues(deg => if (deg < k) (-1L, true) else (deg, false))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val nV = seed.count()
+    val dead = seed.filter(_._2._2).count()
+    roundLoop("kCore", seed, dead, Long.MaxValue, nV)(_._2) { (cur, _) =>
+      // frontier ⋈ und, co-partitioned: each partition's dead set probes
+      // its own edges in one pass, with no hash table over the edges
+      val decs = cur
+        .filter(_._2._2)
+        .zipPartitions(und) { (fIt, eIt) =>
+          val died = fIt.map(_._1).toSet
+          if (died.isEmpty) Iterator.empty
+          else eIt.collect { case (s, nbr) if died(s) => (nbr, 1L) }
+        }
+        .reduceByKey(part, _ + _)
+      (1L, cur.leftOuterJoin(decs).mapValues {
+        case ((deg, _), Some(dec)) if deg >= 0 =>
+          if (deg - dec < k) (-1L, true) else (deg - dec, false)
+        case ((deg, _), _) => (deg, false)
+      })
+    }
   }
 
   /** k-core decomposition: iteratively peel nodes whose degree in the
-    * surviving induced subgraph is below k, until a fixpoint. Runs on the
-    * same incremental [[patchLoop]] as SSSP/CC, but with DELETION-cascade
-    * semantics: the monotone value is the remaining degree (−1 = dead),
-    * messages are per-edge decrements, and only deaths re-enter the
-    * frontier. Returns every node of the undirected simple graph with its
-    * membership flag — the densest-region filter a graph pipeline runs
-    * before expensive per-node work.
+    * surviving induced subgraph is below k, until a fixpoint — the
+    * deletion cascade of [[peel]] on the round driver shared with
+    * SSSP/CC. Returns every node of the undirected simple graph with
+    * its membership flag — the densest-region filter a graph pipeline
+    * runs before expensive per-node work.
     */
   def kCore(edges: DataFrame, k: Int): DataFrame = {
     val session = edges.sparkSession
     val parts = loopPartitions(session, edges.count() * 2)
     withLoopConfs(session, parts) {
-      // undirected simple graph (dedup'd, self-loops dropped), both
-      // directions materialized so out-degree == undirected degree
-      val simple = Phys.materialized(
-        edges
-          .filter(col("src") =!= col("dst"))
-          .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
-          .distinct())
-      val und = simple
-        .select(col("a").as("src"), col("b").as("dst"))
-        .unionAll(simple.select(col("b").as("src"), col("a").as("dst")))
-        .repartition(parts, col("src"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      und.count()
-      val base0 = und
-        .groupBy(col("src").as("id"))
-        .agg(count(lit(1)).as("deg"))
-      val state = patchLoop(
-        base0,
-        b =>
-          b.filter(col("deg") < k)
-            .select(col("id"), lit(-1L).as("p_val"), lit(true).as("p_upd")),
-        valCol = "deg",
-        trackReached = false,
-        maxRounds = Long.MaxValue)(kCoreDelta(_, _, und, k))
+      val part = new HashPartitioner(parts)
+      val und = undirectedSimple(edges, part)
+      val state = peel(und, k, part)
       und.unpersist(false)
-      state.select(col("id"), (col("deg") >= 0).as("in_core"))
+      import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
+      session.createDataFrame(
+        state.map { case (id, (deg, _)) => org.apache.spark.sql.Row(id, deg >= 0) },
+        StructType(Seq(
+          StructField("id", LongType, nullable = false),
+          StructField("in_core", BooleanType, nullable = false))))
     }
   }
 
@@ -3812,10 +3586,10 @@ object GraphOps {
   /** Full k-core DECOMPOSITION: every node's core number (degeneracy
     * rank — the strongest cohesion measure cheaper than truss), not
     * just membership at one k ([[kCore]]). Uses the nesting property
-    * (the (k+1)-core ⊆ k-core): `coreness(v) = 1 + Σ_{k=2..K}
-    * [v ∈ k-core]`, so the table is a join of the [[kCore]] runs —
-    * each an independent deletion-cascade loop over the shared
-    * incremental patchLoop, integer-exact and engine-deterministic.
+    * (the (k+1)-core ⊆ k-core): a node that dies in the k-peel has
+    * core number k − 1, so the table is the union of the per-k death
+    * sets of K−1 [[peel]] runs — each a deletion cascade on the round
+    * driver, integer-exact and engine-deterministic.
     *
     * Scale shape: K−1 SEQUENTIAL peel loops over a SHRINKING graph —
     * the nesting property cuts both ways: the k-core of G is the
@@ -3823,64 +3597,55 @@ object GraphOps {
     * from the previous survivors' edges instead of the full graph,
     * and the undirected materialization is paid once, not K−1 times.
     * On the harness graph the k = 2 cascade dominates (its input is
-    * the full graph either way — measured ≈ flat at sf0.1 under
-    * ambient load), but on a graph whose cores shrink early the
-    * restart-from-survivors form is the one that survives 100×. The
-    * sequential bucket-peel (Matula–Beck) is O(E) on one machine but
-    * inherently serial; the per-k cascade form is what distributes.
+    * the full graph either way), but on a graph whose cores shrink
+    * early the restart-from-survivors form is the one that survives
+    * 100×. The sequential bucket-peel (Matula–Beck) is O(E) on one
+    * machine but inherently serial; the per-k cascade form is what
+    * distributes.
     *
     * Output: `(id, coreness)` for every node of the undirected simple
     * graph.
     */
   def corenessTable(edges: DataFrame, maxK: Int = CorenessMaxK): DataFrame = {
     val session = edges.sparkSession
-    def ckpt(df: DataFrame): DataFrame =
-      org.apache.spark.sql.graftbridge.CheckpointBridge.dropOriginStats(df.localCheckpoint(true))
     val parts = loopPartitions(session, edges.count() * 2)
     withLoopConfs(session, parts) {
-      val simple = Phys.materialized(
-        edges
-          .filter(col("src") =!= col("dst"))
-          .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
-          .distinct())
-      var und = ckpt(
-        simple
-          .select(col("a").as("src"), col("b").as("dst"))
-          .unionAll(simple.select(col("b").as("src"), col("a").as("dst")))
-          .repartition(parts, col("src")))
-      var result =
-        ckpt(und.select(col("src").as("id")).distinct().withColumn("coreness", lit(1L)))
+      val part = new HashPartitioner(parts)
+      var und = undirectedSimple(edges, part)
+      // a node dying in the k-peel has core number k − 1; the output
+      // reads the peel states, so they stay persisted
+      var coreness = session.sparkContext.emptyRDD[(Long, Long)]
       var k = 2
-      var survivors = -1L
-      while (k <= maxK && survivors != 0L) {
-        val base0 = und.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
-        val kk = k
-        val state = patchLoop(
-          base0,
-          b =>
-            b.filter(col("deg") < kk)
-              .select(col("id"), lit(-1L).as("p_val"), lit(true).as("p_upd")),
-          valCol = "deg",
-          trackReached = false,
-          maxRounds = Long.MaxValue)(kCoreDelta(_, _, und, kk))
-        val core = ckpt(state.filter(col("deg") >= 0).select(col("id")))
-        survivors = core.count()
-        if (survivors > 0L) {
-          result = ckpt(
-            result
-              .join(core.withColumn("inc", lit(1L)), Seq("id"), "left_outer")
-              .select(col("id"), (col("coreness") + coalesce(col("inc"), lit(0L))).as("coreness")))
-          und = ckpt(
-            und
-              .join(core.select(col("id").as("src")), Seq("src"), "left_semi")
-              .join(core.select(col("id").as("dst")), Seq("dst"), "left_semi"))
-        }
+      var coreEdges = -1L
+      while (k <= maxK && coreEdges != 0L) {
+        val state = peel(und, k, part)
+        val kk = k - 1L
+        coreness = coreness.union(state.collect { case (id, (deg, _)) if deg < 0 => (id, kk) })
+        // the k-core's induced subgraph — empty iff the k-core is, since
+        // every survivor keeps at least k ≥ 2 neighbors
+        val alive = state.filter(_._2._1 >= 0).mapValues(_ => ())
+        val sub = und
+          .join(alive)
+          .map { case (s, (d, _)) => (d, s) }
+          .join(alive)
+          .map { case (d, (s, _)) => (s, d) }
+          .partitionBy(part)
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        coreEdges = sub.count()
+        und.unpersist(false)
+        und = sub
         k += 1
       }
+      und.unpersist(false)
       require(
-        survivors == 0L,
+        coreEdges == 0L,
         s"non-empty $maxK-core: the graph's degeneracy outgrew CorenessMaxK — raise the cap")
-      result
+      import org.apache.spark.sql.types.{LongType, StructField, StructType}
+      session.createDataFrame(
+        coreness.map { case (id, c) => org.apache.spark.sql.Row(id, c) },
+        StructType(Seq(
+          StructField("id", LongType, nullable = false),
+          StructField("coreness", LongType, nullable = false))))
     }
   }
 
@@ -4503,9 +4268,9 @@ object GraphOps {
           // Contract: the chosen pseudo-forest has ≤ one edge per LIVE
           // component, so this CC input is bounded by the (halving)
           // component count, not by |E|. (Measured: min-label beats the
-          // star contraction here — patchLoop's shrinking frontier keeps
-          // the propagation rounds cheap, while stars pay two full
-          // groupBy/join/distinct passes per round.)
+          // star contraction here — propagating only last round's
+          // improved labels keeps its rounds cheap, while stars pay two
+          // full groupBy/join/distinct passes per round.)
           val comp =
             connectedComponents(chosen.select(col("u").as("src"), col("v").as("dst")))
           // Every label still in `work` is incident to a chosen edge (its

@@ -20,6 +20,28 @@ class GraphOpsSpec extends SparkSpec {
     ids.zip(ids.tail)
   }
 
+  /** Runs `body` and counts the Spark jobs it submits from this thread. */
+  private def jobsOf[A](body: => A): (A, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tag = "graft.test.roundShape"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(tag) != null) jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(tag, "1")
+    val out =
+      try body
+      finally {
+        sc.setLocalProperty(tag, null)
+        org.apache.spark.sql.graftbridge.CheckpointBridge.drainListenerBus(sc)
+        sc.removeSparkListener(listener)
+      }
+    (out, jobs.get)
+  }
+
   private def ssspMap(edges: Seq[(Long, Long, Double)], src: Long): Map[Long, Double] =
     GraphOps
       .sssp(edgesDf(edges), src)
@@ -187,25 +209,9 @@ class GraphOpsSpec extends SparkSpec {
     // prelude is edges.count (two jobs under AQE: its partial-count
     // stage, then the result) plus ONE job building the index and the
     // vertex set; the seed and the per-round checkpoints add no job.
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
     val chain = edgesDf((0 until 12).map(i => (i.toLong, i + 1L, 1.0)))
-    val tag = "graft.test.roundShape"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty(tag) != null) jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty(tag, "1")
-    val out =
-      try GraphOps.sssp(chain, 0L)
-      finally {
-        sc.setLocalProperty(tag, null)
-        org.apache.spark.sql.graftbridge.CheckpointBridge.drainListenerBus(sc)
-        sc.removeSparkListener(listener)
-      }
-    assert(jobs.get === 3 + 6)
+    val (out, jobs) = jobsOf(GraphOps.sssp(chain, 0L))
+    assert(jobs === 3 + 6)
     val d = out.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(d === (0 to 12).map(i => i.toLong -> i.toDouble).toMap)
   }
@@ -219,6 +225,33 @@ class GraphOpsSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
     assert(out.size === n + 1)
     assert(out.values.forall(_ == false))
+  }
+
+  test("kCore round shape: five prelude jobs, then one job per peel round") {
+    // 11-node path 0..10 at k = 2: the seed kills both ends, rounds 1-5
+    // kill the next pair inward (node 5 last), round 6 kills nobody and
+    // stops the loop. The prelude is edges.count (two jobs under AQE),
+    // the simple-graph dedup's shuffle stage (AQE runs it when the edge
+    // RDD is built), the |V| count that builds the undirected graph and
+    // the degree seed, and the count of the seed's dead nodes.
+    val path = edgesDf((0 until 10).map(i => (i.toLong, i + 1L, 1.0)))
+    val (out, jobs) = jobsOf(GraphOps.kCore(path, k = 2))
+    assert(jobs === 5 + 6)
+    assert(out.collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap ===
+      (0 to 10).map(i => i.toLong -> false).toMap)
+  }
+
+  test("kCore on a 2000-node path peels through a 1000-round cascade") {
+    // both ends die first and each death exposes the next node inward:
+    // 1000 rounds of two deaths each, far past the depth at which an
+    // uncut lineage overflows the stack when a task is serialized
+    val n = 2000
+    val out = GraphOps
+      .kCore(edgesDf(pathFromMiddle(n).map { case (a, b) => (a, b, 1.0) }), k = 2)
+      .collect()
+      .map(r => r.getLong(0) -> r.getBoolean(1))
+      .toMap
+    assert(out === (1 to n).map(i => i.toLong -> false).toMap)
   }
 
   test("kCore: a cycle with a pendant tail keeps exactly the cycle") {
@@ -276,6 +309,16 @@ class GraphOpsSpec extends SparkSpec {
     assert(byStars(30L) === 0L) // chain collapsed to its min
     assert(byStars(41L) === 41L && byStars(100L) === 41L)
     assert(byStars(60L) === 60L) // self-loop-only node is its own component
+  }
+
+  test("connectedComponentsStars on a 2000-node path labels one component") {
+    val n = 2000
+    val comps = GraphOps
+      .connectedComponentsStars(edgesDf(pathFromMiddle(n).map { case (a, b) => (a, b, 1.0) }))
+      .collect()
+      .map(r => r.getLong(0) -> r.getLong(1))
+      .toMap
+    assert(comps === (1 to n).map(i => i.toLong -> 1L).toMap)
   }
 
   test("labelPropagation: disjoint triangles settle on their min id; dups/self-loops ignored") {
