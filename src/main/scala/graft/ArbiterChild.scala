@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import scala.jdk.CollectionConverters._
 
 /** Fresh-JVM measurement child for [[Bench]]: a long bench session's
@@ -20,26 +19,6 @@ import scala.jdk.CollectionConverters._
   */
 object ArbiterChild {
 
-  /** Per-task spill/peak-memory accumulator (same readout as
-    * [[Explain]]'s): attached around every measured rep so the sweep
-    * artifact carries spill accounting for the whole inventory — the
-    * 10×-scale observable ("zero spill" is a claim; this is the
-    * instrument).
-    */
-  private class SpillListener extends org.apache.spark.scheduler.SparkListener {
-    val memSpilled = new java.util.concurrent.atomic.AtomicLong
-    val diskSpilled = new java.util.concurrent.atomic.AtomicLong
-    val peakExecMem = new java.util.concurrent.atomic.AtomicLong
-    override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        memSpilled.addAndGet(m.memoryBytesSpilled)
-        diskSpilled.addAndGet(m.diskBytesSpilled)
-        peakExecMem.getAndAccumulate(m.peakExecutionMemory, math.max(_, _))
-      }
-    }
-  }
-
   /** Child entry: `ArbiterChild <sfDir> <cpus> <mode> <query>...` —
     * prints one `[arbiter] <name> <sec>` line per query (`-1` for a
     * query that threw, so a broken query never looks fast), a
@@ -57,29 +36,9 @@ object ArbiterChild {
       java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
     var waited = 0
     while (loadAvg > 2.0 && waited < 180) { Thread.sleep(15000); waited += 15 }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // same untimed session warmup as the old in-process sweep (JIT,
-    // codegen compiler, parquet footers, checkpoint machinery)
-    spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1000)
-      .groupBy("l_returnflag").count().count()
-    try SparkEntry.queries("sssp_one_round")(spark, sfDir).count()
-    catch { case e: Throwable => System.err.println(s"[arbiter] warmup failed: $e") }
-    def freeAll(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      sources.Staging.cleanup(spark)
-      // let the ContextCleaner reap dead broadcasts (no unpersist-all
-      // API): loop queries broadcast per round, and the accumulated
-      // dead state otherwise stalls the next rep's first broadcast
-      System.gc()
-    }
-    freeAll()
+    val spark = Harness.session(cpus, logLevel = "ERROR")
+    Harness.warmup(spark, sfDir, "arbiter")
+    Harness.freeAll(spark)
     var loadMax = loadAvg
     names.foreach { name =>
       try {
@@ -90,7 +49,9 @@ object ArbiterChild {
         def rep(): (Double, Long, Long, (Long, Long, Long)) = {
           streaming.StreamOps.streamWorkMs.set(0L)
           streaming.StreamOps.streamTriggers.set(0L)
-          val sl = new SpillListener
+          // spill accounting around every measured rep, so the sweep
+          // artifact carries it for the whole inventory
+          val sl = new Harness.SpillListener
           spark.sparkContext.addSparkListener(sl)
           val t0 = System.nanoTime()
           SparkEntry.queries(name)(spark, sfDir).count()
@@ -98,7 +59,7 @@ object ArbiterChild {
           // listener events post async — drain before reading
           org.apache.spark.sql.graftbridge.CheckpointBridge.drainListenerBus(spark.sparkContext)
           spark.sparkContext.removeSparkListener(sl)
-          freeAll()
+          Harness.freeAll(spark)
           (dt, streaming.StreamOps.streamWorkMs.get(), streaming.StreamOps.streamTriggers.get(),
             (sl.memSpilled.get(), sl.diskSpilled.get(), sl.peakExecMem.get()))
         }
@@ -109,7 +70,7 @@ object ArbiterChild {
             // than one rep before the planner itself is JIT-warm —
             // measured 15 s → 5 s between rep 2 and rep 3 on ivfpq
             SparkEntry.queries(name)(spark, sfDir).count()
-            freeAll()
+            Harness.freeAll(spark)
             (1 to 2).map(_ => rep())
           case _ =>
             Seq(rep())

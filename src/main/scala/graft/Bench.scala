@@ -47,30 +47,10 @@ object Bench {
     // Lazy so the common all-children-succeed path never starts it.
     var sparkStarted = false
     lazy val spark: SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      // Untimed session warmup: JIT, codegen compiler, parquet footer
-      // cache, AND the checkpoint/loop machinery — the first loop query
-      // in a cold JVM otherwise pays ~9 s of process init, not query cost
-      s.read.parquet(s"$sfDir/lineitem.parquet").limit(1000)
-        .groupBy("l_returnflag").count().count()
-      try SparkEntry.queries("sssp_one_round")(s, sfDir).count()
-      catch { case e: Throwable => System.err.println(s"[bench] warmup failed: $e") }
+      val s = Harness.session(cpus)
+      Harness.warmup(s, sfDir, "bench")
       sparkStarted = true
       s
-    }
-    // ALL blocks freed between queries — clearCache() alone misses
-    // localCheckpoint RDD blocks, which otherwise accumulate across the
-    // session until the storage pool forces spill/eviction
-    def freeAll(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      sources.Staging.cleanup(spark)
     }
     def timed(name: String): (String, Double, Boolean) = {
       val t0 = System.nanoTime()
@@ -80,7 +60,7 @@ object Bench {
         try { SparkEntry.queries(name)(spark, sfDir).count(); true }
         catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e"); false }
       val dt = (System.nanoTime() - t0) / 1e9
-      freeAll()
+      Harness.freeAll(spark)
       loadMax = math.max(loadMax, loadAvg)
       (name, dt, ok)
     }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the formatted physical plan of one named query and time
   * its execution. Usage: runMain graft.Explain <queryName> [sfDir] [reps]
   *
@@ -13,61 +11,19 @@ import org.apache.spark.sql.SparkSession
   */
 object Explain {
 
-  /** Accumulates spill/peak-memory task metrics across a rep. */
-  private class SpillListener extends org.apache.spark.scheduler.SparkListener {
-    val memSpilled = new java.util.concurrent.atomic.AtomicLong
-    val diskSpilled = new java.util.concurrent.atomic.AtomicLong
-    val peakExecMem = new java.util.concurrent.atomic.AtomicLong
-    override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        memSpilled.addAndGet(m.memoryBytesSpilled)
-        diskSpilled.addAndGet(m.diskBytesSpilled)
-        peakExecMem.getAndAccumulate(m.peakExecutionMemory, math.max(_, _))
-      }
-    }
-    def readout(): String =
-      s"spill_mem_mb=${memSpilled.get() / (1024 * 1024)} " +
-        s"spill_disk_mb=${diskSpilled.get() / (1024 * 1024)} " +
-        s"peak_task_exec_mb=${peakExecMem.get() / (1024 * 1024)}"
-  }
-
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 1
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(cpus)
     val heapMb = Runtime.getRuntime.maxMemory() / (1024 * 1024)
     println(s"[explain] heap_mb=$heapMb cpus=$cpus")
     val fn = SparkEntry.queries(name)
-    // same inter-rep hygiene as Bench/ArbiterChild (clearCache misses
-    // localCheckpoint blocks): without it, a loop query's second
-    // execution runs against a storage pool full of the previous run's
-    // checkpoint blocks — measured 3–10× per-round inflation on the 10×
-    // coreness probe, which is the HARNESS leaking, not the operator
-    def freeAll(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      sources.Staging.cleanup(spark)
-      // broadcasts have no unpersist-all API — they are reaped by the
-      // ContextCleaner on GC. A loop query leaves GBs of dead broadcast
-      // state (one state broadcast per round); without the nudge the
-      // NEXT rep's first broadcast stalls behind the accumulated
-      // cleanup (measured: 35 s round-1 vs 7 s fresh)
-      System.gc()
-    }
     fn(spark, sfDir).explain("formatted")
-    freeAll()
+    Harness.freeAll(spark)
     (1 to reps).foreach { i =>
-      val l = new SpillListener
+      val l = new Harness.SpillListener
       spark.sparkContext.addSparkListener(l)
       val t0 = System.nanoTime()
       val n = fn(spark, sfDir).count()
@@ -76,7 +32,7 @@ object Explain {
       org.apache.spark.sql.graftbridge.CheckpointBridge.drainListenerBus(spark.sparkContext)
       spark.sparkContext.removeSparkListener(l)
       println(s"[explain] rep $i: $name rows=$n sec=$sec ${l.readout()}")
-      freeAll()
+      Harness.freeAll(spark)
     }
     spark.stop()
   }

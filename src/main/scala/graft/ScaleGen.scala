@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-probe corpus builder (VERDICT r15 #8 / r14 #4): replicate EVERY
@@ -35,14 +35,7 @@ object ScaleGen {
     val sfDir =
       if (args.length > 2) args(2)
       else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("32")
     def t(n: String): DataFrame = spark.read.parquet(s"$sfDir/$n.parquet")
     val g = Seq(
       t("lineitem").agg(greatest(max("l_orderkey"), max("l_partkey"), max("l_suppkey"))),

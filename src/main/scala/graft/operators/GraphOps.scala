@@ -5,6 +5,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import scala.reflect.ClassTag
 
 import graft.model.INF
 
@@ -370,9 +371,11 @@ object GraphOps {
     *     (`:473-479`);
     *   - [[checkpointedRound]] on every round's state;
     *   - the round's ONE job: a pass over the new state counting its
-    *     changed rows and summing `weight` over all rows (exact 64-bit
-    *     sums, associative, so order-free and deterministic — unlike
-    *     accumulators, which can double-count on retry);
+    *     changed rows and, for each of the caller's `sums`, summing it
+    *     over all rows (exact 64-bit sums, associative, so order-free
+    *     and deterministic — unlike accumulators, which can
+    *     double-count on retry; a caller with no sums pays nothing per
+    *     row beyond `isChanged`);
     *   - freeing the superseded state once the new one is cut, and not
     *     before (a cut RDD cannot be recomputed); without
     *     `freeSuperseded` every state stays, for callers that read the
@@ -380,7 +383,7 @@ object GraphOps {
     *   - the `GRAFT_LOOP_DEBUG` line per round.
     *
     * `seed` is the state before round 1 and `seedChanged` its changed
-    * rows; `after(rounds, changed, sum, state)` runs after each round's
+    * rows; `after(rounds, changed, sums, state)` runs after each round's
     * readout. Returns the last state, still persisted (the seed if no
     * round ran).
     */
@@ -393,12 +396,14 @@ object GraphOps {
       untilUnchanged: Boolean = true,
       freeSuperseded: Boolean = true)(
       isChanged: V => Boolean,
-      weight: V => Long = (_: V) => 0L,
-      after: (Long, Long, Long, RDD[(Long, V)]) => Unit =
-        (_: Long, _: Long, _: Long, _: RDD[(Long, V)]) => ())(
+      sums: Seq[V => Long] = Nil,
+      after: (Long, Long, Array[Long], RDD[(Long, V)]) => Unit =
+        (_: Long, _: Long, _: Array[Long], _: RDD[(Long, V)]) => ())(
       round: (RDD[(Long, V)], RoundAt) => (Long, RDD[(Long, V)])): RDD[(Long, V)] = {
     val bound = math.min(maxRounds, math.max(1L, nV - 1L))
     val debug = sys.env.contains("GRAFT_LOOP_DEBUG")
+    val fs = sums.toArray
+    val k = fs.length
     var state = seed
     var changed = seedChanged
     var rounds = 0L
@@ -408,16 +413,20 @@ object GraphOps {
       val superseded = state
       state = checkpointedRound(next)
       rounds += hops
-      val (c, sum) = state
+      val (c, tot) = state
         .mapPartitions { it =>
           var c = 0L
-          var s = 0L
-          it.foreach { case (_, v) => if (isChanged(v)) c += 1; s += weight(v) }
+          val s = new Array[Long](k)
+          it.foreach { case (_, v) =>
+            if (isChanged(v)) c += 1
+            var i = 0
+            while (i < k) { s(i) += fs(i)(v); i += 1 }
+          }
           Iterator.single((c, s))
         }
-        .reduce((a, b) => (a._1 + b._1, a._2 + b._2))
+        .reduce((a, b) => (a._1 + b._1, Array.tabulate(k)(i => a._2(i) + b._2(i))))
       changed = c
-      after(rounds, changed, sum, state)
+      after(rounds, changed, tot, state)
       if (freeSuperseded) superseded.unpersist(false)
       if (debug)
         System.err.println(
@@ -445,8 +454,9 @@ object GraphOps {
     * to `parts`, AQE partition coalescing off (a coalesced output
     * partitioning can't be reused by the next round's joins, which would
     * force a state re-exchange per round) — restoring the caller's confs
-    * on exit. AQE itself stays on: its runtime broadcast conversion is
-    * what keeps the per-round merge exchange-free.
+    * on exit. The confs act on the DataFrame steps only: the loops still
+    * planned by Catalyst and the edge and seed preparation of the RDD
+    * loops, whose rounds take `parts` from their `HashPartitioner`.
     */
   private def withLoopConfs[A](session: org.apache.spark.sql.SparkSession, parts: Int)(
       body: => A): A = {
@@ -633,6 +643,129 @@ object GraphOps {
       .select(col("id"), coalesce(col("c"), col("id")).as("component"))
   }
 
+  // ---- the rank rounds: PageRank, Katz, HITS -------------------------------
+  //
+  // Each centrality's round is written once, as a lazy step from one
+  // score vector to the next that merges onto a persisted base (the node
+  // set with its per-node constants), so a chain of rounds stays
+  // constant-depth. The fixed forms chain `iters` steps with no job per
+  // round (HITS adds its two normalization totals); the residual forms
+  // run the same step on [[roundLoop]] over (before, after) pairs, whose
+  // one readout job per round counts the changed nodes and sums the L1
+  // residuals.
+
+  /** A non-null BIGINT schema with the columns `names`. */
+  private def longSchema(names: String*): org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    StructType(names.map(StructField(_, LongType, nullable = false)))
+  }
+
+  /** Runs `body` under [[withLoopConfs]] with the loop partitioner sized
+    * from |E|. */
+  private def inLoop[A](edges: DataFrame)(body: HashPartitioner => A): A = {
+    val parts = loopPartitions(edges.sparkSession, edges.count())
+    withLoopConfs(edges.sparkSession, parts)(body(new HashPartitioner(parts)))
+  }
+
+  /** The edge list keyed on `src` under `part`, persisted, with `value`
+    * of the `dst` end. `value` is applied after the exchange: a shuffle
+    * of bare (Long, Long) pairs runs on Kryo, one of nested tuples on
+    * Java serialization. */
+  private def keyedEdges[E: ClassTag](edges: DataFrame, part: HashPartitioner)(
+      value: Long => E): RDD[(Long, E)] =
+    edges
+      .select(col("src"), col("dst"))
+      .rdd
+      .map(r => (r.getLong(0), r.getLong(1)))
+      .partitionBy(part)
+      .mapValues(value)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+
+  /** `iters` rounds of `step` from `seed` on [[roundLoop]], one row per
+    * round: `round`, then the nodes that `changed` and each of `sums`
+    * over all nodes, named `columns` — the A4 convergence readout of the
+    * fixed-round centralities. The loop state is a node's (score before
+    * the round, score after it): the new scores join the current state
+    * narrowly (both under the loop partitioner), and the driver's one
+    * readout job per round yields every figure. No early stop and no
+    * |V| bound: a round that changes nothing reports its zeros, and so
+    * does every round on an empty graph.
+    */
+  private def residualRounds[X: ClassTag](
+      session: org.apache.spark.sql.SparkSession,
+      name: String,
+      seed: RDD[(Long, X)],
+      iters: Int,
+      columns: String*)(
+      changed: (X, X) => Boolean,
+      sums: ((X, X) => Long)*)(step: RDD[(Long, X)] => RDD[(Long, X)]): DataFrame = {
+    val rows = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
+    roundLoop(name, seed.mapValues(x => (x, x)), 0L, iters, Long.MaxValue, untilUnchanged = false)(
+      v => changed(v._1, v._2),
+      sums.map(f => (v: (X, X)) => f(v._1, v._2)),
+      (r, c, s, _) => rows += org.apache.spark.sql.Row.fromSeq(r +: c +: s.toSeq)) { (cur, _) =>
+      (1L, cur.join(step(cur.mapValues(_._2))).mapValues { case ((_, x), y) => (x, y) })
+    }.unpersist(false)
+    session.createDataFrame(java.util.Arrays.asList(rows.toSeq: _*), longSchema("round" +: columns: _*))
+  }
+
+  /** Integer PageRank over the weighted edges `src → (dst, w)`, as a
+    * node's (out-weight, rank): the ranks before round 1 and the round.
+    *
+    * Seed: every source node with its out-weight Σw, the 10¹² rank mass
+    * split evenly over the nodes `isSeed` picks. One job — the seed
+    * count, which also materializes the edges and the out-weights. With
+    * no seed (an empty edge list, or a personalized run whose seed set
+    * is empty) every rank is 0: the oracle divides by the seed count
+    * only in its seed branch.
+    *
+    * Round, lazy: every node sends `pr·w div outWeight` along each
+    * out-edge (div before sum, so every engine adds the same integers),
+    * the contributions meet in ONE sum shuffle, and a narrow outer merge
+    * onto the persisted out-weights sets `teleport + 85·Σ div 100`, the
+    * teleport being 15% of a seed's share on the seeds and 0 elsewhere.
+    * Ranks and edges share one partitioner, so the probe join is narrow,
+    * and a chain of rounds stays constant-depth. Plain PageRank is
+    * `w = 1` (out-weight = out-degree); TextRank's `w` is the
+    * co-occurrence count.
+    */
+  private def pagerankOn[K: ClassTag](
+      edges: RDD[(K, (K, Long))],
+      part: HashPartitioner,
+      isSeed: K => Boolean): (RDD[(K, (Long, Long))], RDD[(K, (Long, Long))] => RDD[(K, (Long, Long))]) = {
+    val outW = edges.mapValues(_._2).reduceByKey(part, _ + _).persist(StorageLevel.MEMORY_AND_DISK)
+    val seeds = outW.filter(kv => isSeed(kv._1)).count()
+    val seedPr = if (seeds == 0L) 0L else 1000000000000L / seeds
+    val teleport = 15L * seedPr / 100L
+    def round(rank: RDD[(K, (Long, Long))]): RDD[(K, (Long, Long))] = {
+      val summed = rank
+        .join(edges)
+        .map { case (_, ((ow, pr), (dst, w))) => (dst, pr * w / ow) }
+        .reduceByKey(part, _ + _)
+      outW.leftOuterJoin(summed).mapPartitions(
+        _.map { case (id, (ow, s)) =>
+          (id, (ow, (if (isSeed(id)) teleport else 0L) + 85L * s.getOrElse(0L) / 100L))
+        },
+        preservesPartitioning = true)
+    }
+    val seed = outW.mapPartitions(
+      _.map { case (id, w) => (id, (w, if (isSeed(id)) seedPr else 0L)) },
+      preservesPartitioning = true)
+    (seed, round)
+  }
+
+  /** `iters` [[pagerankOn]] rounds as one lazy chain — no per-round
+    * scalar, so the rounds run as `iters` shuffle stages of the job
+    * that reads the result. Returns (node, rank). */
+  private[operators] def pagerankRdd[K: ClassTag](
+      edges: RDD[(K, (K, Long))],
+      part: HashPartitioner,
+      iters: Int,
+      isSeed: K => Boolean): RDD[(K, Long)] = {
+    val (seed, round) = pagerankOn(edges, part, isSeed)
+    (1 to iters).foldLeft(seed)((r, _) => round(r)).mapValues(_._2)
+  }
+
   /** Fixed-point (integer-scaled) PageRank, `iters` rounds, damping 0.85.
     *
     * Ranks are BIGINT micro-units (scale 10^12) and every operation is
@@ -644,55 +777,11 @@ object GraphOps {
     * ranking-relevant difference.
     *
     * Dangling-node mass is dropped (classic simplification); ranks are
-    * seeded uniformly over the SOURCE set (nodes with out-edges).
+    * seeded uniformly over the SOURCE set (nodes with out-edges): the
+    * personalized form with every source a seed.
     */
-  def pagerankFixed(edges: DataFrame, iters: Int): DataFrame = {
-    val session = edges.sparkSession
-    val parts = loopPartitions(session, edges.count())
-    withLoopConfs(session, parts) {
-      // RDD-core rounds (the [[maskLoopRdd]] finding applied to the
-      // fixed-iteration centralities): rank and edges share one
-      // HashPartitioner, so a round is a co-partitioned narrow probe
-      // join + ONE contribution-sum shuffle + a narrow outer merge —
-      // and because no per-round scalar is needed (n is a constant),
-      // the WHOLE chain stays lazy: the query runs as a single job with
-      // `iters` shuffle stages, zero Catalyst planning per round.
-      val part = new org.apache.spark.HashPartitioner(parts)
-      val eRdd = edges
-        .select(col("src"), col("dst"))
-        .rdd
-        .map(r => (r.getLong(0), r.getLong(1)))
-        .partitionBy(part)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val outdeg = eRdd
-        .mapValues(_ => 1L)
-        .reduceByKey(part, _ + _)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val n = outdeg.count() // one action: materializes eRdd + outdeg
-      // integer arithmetic identical to the SQL oracle: div = truncation
-      // on non-negative longs, sums associative (order-free on any engine)
-      val seedPr = 1000000000000L / n
-      var rank: org.apache.spark.rdd.RDD[(Long, (Long, Long))] =
-        outdeg.mapValues(deg => (deg, seedPr))
-      (1 to iters).foreach { _ =>
-        val summed = rank
-          .join(eRdd) // co-partitioned: narrow
-          .map { case (_, ((deg, pr), dst)) => (dst, pr / deg) }
-          .reduceByKey(part, _ + _)
-        rank = rank.leftOuterJoin(summed).mapValues { case ((deg, _), sOpt) =>
-          (deg, 15L * seedPr / 100L + 85L * sOpt.getOrElse(0L) / 100L)
-        }
-      }
-      import org.apache.spark.sql.types.{LongType, StructField, StructType}
-      val out = session.createDataFrame(
-        rank.map { case (id, (_, pr)) => org.apache.spark.sql.Row(id, pr) },
-        StructType(Seq(
-          StructField("id", LongType, nullable = false),
-          StructField("pr", LongType, nullable = false))))
-      eRdd.unpersist(false)
-      out
-    }
-  }
+  def pagerankFixed(edges: DataFrame, iters: Int): DataFrame =
+    pagerankPersonalized(edges, iters, seedMod = 1L)
 
   /** Convergence trace for [[pagerankFixed]] — the same A4 readout
     * [[katzResiduals]] gives Katz: one row per round with the number of
@@ -701,64 +790,19 @@ object GraphOps {
     * `iters` is verified against the fixed point instead of trusted
     * blind.
     *
-    * Scale shape: identical rounds to [[pagerankFixed]] plus, per
-    * round, one |V|-row id-keyed join (both sides carry the declared
-    * id layout — no exchange) and a 1-row aggregate to the driver:
-    * bounded by `iters` rows total, never data-scale.
+    * Scale shape: [[pagerankFixed]]'s rounds on [[roundLoop]], one job
+    * per round — the readout of both figures from the state's (before,
+    * after) pair; bounded by `iters` rows total, never data-scale.
     */
-  def pagerankResiduals(edges: DataFrame, iters: Int = 3): DataFrame = {
-    val session = edges.sparkSession
-    val parts = loopPartitions(session, edges.count())
-    withLoopConfs(session, parts) {
-      // same RDD rounds as [[pagerankFixed]]; the per-round (changed, L1)
-      // readout is ONE narrow co-partitioned self-join folded in a single
-      // action per round — exact 64-bit sums, order-free
-      val part = new org.apache.spark.HashPartitioner(parts)
-      val eRdd = edges
-        .select(col("src"), col("dst"))
-        .rdd
-        .map(r => (r.getLong(0), r.getLong(1)))
-        .partitionBy(part)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val outdeg = eRdd
-        .mapValues(_ => 1L)
-        .reduceByKey(part, _ + _)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val n = outdeg.count()
-      val seedPr = 1000000000000L / n
-      var rank: org.apache.spark.rdd.RDD[(Long, (Long, Long))] =
-        outdeg.mapValues(deg => (deg, seedPr)).persist(StorageLevel.MEMORY_AND_DISK)
-      val out = scala.collection.mutable.ArrayBuffer[(Long, Long, Long)]()
-      (1 to iters).foreach { r =>
-        val summed = rank
-          .join(eRdd)
-          .map { case (_, ((deg, pr), dst)) => (dst, pr / deg) }
-          .reduceByKey(part, _ + _)
-        val next = rank
-          .leftOuterJoin(summed)
-          .mapValues { case ((deg, _), sOpt) =>
-            (deg, 15L * seedPr / 100L + 85L * sOpt.getOrElse(0L) / 100L)
-          }
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val (ch, res) = next
-          .join(rank) // co-partitioned narrow
-          .mapPartitions { it =>
-            var c = 0L; var s = 0L
-            it.foreach { case (_, ((_, nw), (_, pv))) =>
-              if (nw != pv) c += 1
-              s += math.abs(nw - pv)
-            }
-            Iterator.single((c, s))
-          }
-          .reduce((a, b) => (a._1 + b._1, a._2 + b._2))
-        out += ((r.toLong, ch, res))
-        rank.unpersist(false)
-        rank = next
-      }
-      eRdd.unpersist(false)
-      import session.implicits._
-      out.toSeq.toDF("round", "n_changed", "resid_l1_pico")
-    }
+  def pagerankResiduals(edges: DataFrame, iters: Int = 3): DataFrame = inLoop(edges) { part =>
+    val eRdd = keyedEdges(edges, part)(dst => (dst, 1L))
+    val (seed, round) = pagerankOn(eRdd, part, (_: Long) => true)
+    val out = residualRounds(
+      edges.sparkSession, "pagerankResiduals", seed, iters, "n_changed", "resid_l1_pico")(
+      (p, c) => p._2 != c._2,
+      (p, c) => math.abs(c._2 - p._2))(round)
+    eRdd.unpersist(false)
+    out
   }
 
   /** The [[pagerankFixed]] CTE chain (r0..r`iters`), shared by the
@@ -806,68 +850,24 @@ object GraphOps {
     * curation pipeline). Seeds are restricted to the source-node set like
     * the uniform variant; membership is recomputed from the id each
     * round (pure expression, nothing extra carried through the state).
+    * With no seed every rank is 0.
     *
-    * Same scale shape as [[pagerankFixed]]: edges exchanged once and
-    * reused every round, one contribution aggregate per round, constant
-    * plan depth via per-round checkpoints, all-integer arithmetic so the
-    * result is bit-identical on any engine.
+    * Scale shape: edges exchanged once and reused every round, one
+    * contribution shuffle per round, the `iters` rounds one lazy chain
+    * read by a single job; all-integer arithmetic, so the result is
+    * bit-identical on any engine.
     */
-  def pagerankPersonalized(edges: DataFrame, iters: Int, seedMod: Long = 100L): DataFrame = {
-    val session = edges.sparkSession
-    val parts = loopPartitions(session, edges.count())
-    withLoopConfs(session, parts) {
-      // RDD rounds, the [[pagerankFixed]] shape; seed membership is a
-      // pure id predicate re-derived per round (floorMod ≡ SQL pmod on
-      // any sign), the teleport constant folds on the driver
-      val part = new org.apache.spark.HashPartitioner(parts)
-      def isSeed(id: Long): Boolean = java.lang.Math.floorMod(id, seedMod) == 0L
-      val eRdd = edges
-        .select(col("src"), col("dst"))
-        .rdd
-        .map(r => (r.getLong(0), r.getLong(1)))
-        .partitionBy(part)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val outdeg = eRdd
-        .mapValues(_ => 1L)
-        .reduceByKey(part, _ + _)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      // one action: node + seed counts together (exact sums, order-free)
-      val (_, ns) = outdeg
-        .mapPartitions { it =>
-          var n = 0L; var s = 0L
-          it.foreach { case (id, _) => n += 1; if (isSeed(id)) s += 1 }
-          Iterator.single((n, s))
-        }
-        .reduce((a, b) => (a._1 + b._1, a._2 + b._2))
-      val seedPr = 1000000000000L / ns
-      val teleport = 15L * seedPr / 100L
-      var rank: org.apache.spark.rdd.RDD[(Long, (Long, Long))] =
-        outdeg.mapPartitions(
-          _.map { case (id, deg) => (id, (deg, if (isSeed(id)) seedPr else 0L)) },
-          preservesPartitioning = true)
-      (1 to iters).foreach { _ =>
-        val summed = rank
-          .join(eRdd)
-          .map { case (_, ((deg, pr), dst)) => (dst, pr / deg) }
-          .reduceByKey(part, _ + _)
-        rank = rank
-          .leftOuterJoin(summed)
-          .mapPartitions(
-            _.map { case (id, ((deg, _), sOpt)) =>
-              (id, (deg, (if (isSeed(id)) teleport else 0L) + 85L * sOpt.getOrElse(0L) / 100L))
-            },
-            preservesPartitioning = true)
-      }
-      import org.apache.spark.sql.types.{LongType, StructField, StructType}
-      val out = session.createDataFrame(
-        rank.map { case (id, (_, pr)) => org.apache.spark.sql.Row(id, pr) },
-        StructType(Seq(
-          StructField("id", LongType, nullable = false),
-          StructField("pr", LongType, nullable = false))))
+  def pagerankPersonalized(edges: DataFrame, iters: Int, seedMod: Long = 100L): DataFrame =
+    inLoop(edges) { part =>
+      val eRdd = keyedEdges(edges, part)(dst => (dst, 1L))
+      // floorMod ≡ SQL pmod on any sign
+      val rank = pagerankRdd(eRdd, part, iters, (id: Long) => java.lang.Math.floorMod(id, seedMod) == 0L)
+      val out = edges.sparkSession.createDataFrame(
+        rank.map { case (id, pr) => org.apache.spark.sql.Row(id, pr) },
+        longSchema("id", "pr"))
       eRdd.unpersist(false)
       out
     }
-  }
 
   /** RDD core of the mask loop — same rounds, same integer math, zero
     * Catalyst work per round.
@@ -939,9 +939,9 @@ object GraphOps {
     val last = roundLoop("maskLoop", state0, changed0, maxRounds, Long.MaxValue,
       untilUnchanged = earlyExit, freeSuperseded = freeSuperseded)(
       changed,
-      weight = v => estOf(v._2),
+      sums = Seq(v => estOf(v._2)),
       after = (h, changedCount, est, merged) =>
-        onRound(h.toInt, changedCount, est, merged.filter(r => changed(r._2)).mapValues {
+        onRound(h.toInt, changedCount, est(0), merged.filter(r => changed(r._2)).mapValues {
           case (m, n, _) =>
             val d = new Array[Long](n.length); var i = 0
             while (i < n.length) { d(i) = n(i) & ~m(i); i += 1 }; d
@@ -1009,11 +1009,11 @@ object GraphOps {
     * with its mask and source count `(id, reach_mask, n_sources)`.
     *
     * Scale shape: edges are exchanged once and reused every round; the
-    * rounds are [[maskLoop]]'s adaptive form — single-aggregate full
-    * rounds while the wave expands, per-|changed| patch rounds once it
-    * passes, early exit on an empty changed set (result-identical:
-    * frozen masks). Constant plan depth via per-round checkpoints; the
-    * mask never exceeds 8 bytes no matter how many rounds run.
+    * rounds are [[maskLoopRdd]]'s — only the masks that changed last
+    * round are sent, one OR-combine shuffle and one job per round, early
+    * exit on an empty changed set (result-identical: frozen masks). The
+    * round state is checkpointed every round; the mask never exceeds 8
+    * bytes no matter how many rounds run.
     */
   def multiSourceBfs(edges: DataFrame, nSources: Int, rounds: Int): DataFrame = {
     require(nSources >= 1 && nSources <= 63, s"nSources must be in [1, 63], got $nSources")
@@ -1094,11 +1094,10 @@ object GraphOps {
     * monotone OR makes "first time a bit appears" well-defined — and
     * those bits join the output with the round number.
     *
-    * The loop is the shared adaptive [[maskLoop]]: single-aggregate
-    * full rounds while the wave is expanding (|changed| > |V|/2), patch
-    * rounds ∝ |changed| once it passes — the regime this operator
-    * exists for is rounds ≈ graph diameter, where trailing rounds cost
-    * ~zero. The changed set doubles as the arrival set: the per-round
+    * The loop is the shared [[maskLoopRdd]]: only the masks that
+    * changed last round are sent, so a round costs ∝ |changed| — the
+    * regime this operator exists for is rounds ≈ graph diameter, where
+    * trailing rounds cost ~zero. The changed set doubles as the arrival set: the per-round
     * first-arrival bits are `mask' & ~mask` of exactly the patched
     * rows.
     *
@@ -1478,8 +1477,9 @@ object GraphOps {
     * node v seeds bit `tz(hash_s(v))` (trailing zeros of an LCG hash mod
     * BigP, extracted via `bin()` string arithmetic — no libm); a round
     * ORs each node's masks into its out-neighbors' (the same monotone
-    * propagation as [[multiSourceBfs]], run through the shared adaptive
-    * [[maskLoop]] — only masks that grew re-send); after h rounds, node u's mask s holds
+    * propagation as [[multiSourceBfs]], run through the shared
+    * [[maskLoopRdd]] — only masks that grew re-send); after h rounds,
+    * node u's mask s holds
     * the FM sketch of Ball(u, h), its lowest zero bit read by the
     * `m XOR (m+1)` trick, and u's ball estimate `2^(mean_s R_s)/0.77351`
     * comes from a fixed-point lookup table on `Σ_s R_s` ([[anfLut]]) —
@@ -1509,8 +1509,6 @@ object GraphOps {
         .repartition(parts, col("src"))
         .persist(StorageLevel.MEMORY_AND_DISK)
       e.count()
-      def ckpt(df: DataFrame): DataFrame =
-        org.apache.spark.sql.graftbridge.CheckpointBridge.dropOriginStats(df.localCheckpoint(true))
       val nodes = e
         .select(col("src").as("id"))
         .unionAll(e.select(col("dst").as("id")))
@@ -1537,7 +1535,7 @@ object GraphOps {
       // eager checkpoint with the row count riding the materialization
       def ckptCounted(df: DataFrame): (DataFrame, Long) = {
         val obs = org.apache.spark.sql.Observation()
-        val d = ckpt(df.observe(obs, count(lit(1)).as("rows")))
+        val d = Phys.materialized(df.observe(obs, count(lit(1)).as("rows")))
         // drain the async listener bus so the observed count is reliably
         // there — the fallback count() is a whole extra job per call
         org.apache.spark.sql.graftbridge.CheckpointBridge.drainListenerBus(
@@ -1668,12 +1666,12 @@ object GraphOps {
     * anywhere (the Σ_u |B(u,h)| pair table that bounds [[anf]]'s
     * harness rounds is exactly what this entry point avoids — [[anf]]
     * keeps it as the spec-level verification column). The loop is the
-    * shared adaptive [[maskLoop]] with early exit: round h runs only
+    * shared [[maskLoopRdd]] with early exit: round h runs only
     * while the previous round changed some mask, so on a
     * small-diameter graph the table stops at saturation instead of
     * paying `maxRounds` no-op rounds. Per-round cost: one edge join +
-    * one hash aggregate, the estimator sum riding the round
-    * checkpoint as an observed metric (zero per-round actions).
+    * one OR-combine shuffle, the estimator sum riding the round's one
+    * readout job.
     */
   def anfEstimate(edges: DataFrame, nSketches: Int = 8, maxRounds: Int = 8): DataFrame = {
     require(nSketches >= 1 && nSketches <= 16, s"nSketches in [1,16], got $nSketches")
@@ -1783,15 +1781,15 @@ object GraphOps {
   /** Convergence trace for the FM/ANF sketch loop — the A4 readout for
     * [[anf]]/[[anfEstimate]], matching [[katzResiduals]]: one row per
     * hop with the number of nodes whose K-mask tuple grew that round
-    * (the [[maskLoop]] `changed` observation, surfaced instead of
+    * (the [[maskLoopRdd]] `changed` count, surfaced instead of
     * internal) and the round's N(h) estimate, so sketch saturation is
     * verified — n_changed hitting 0 IS the fixed point the early-exit
     * production loop keys on.
     *
     * Scale shape: identical rounds to [[anfEstimate]] (one edge join +
-    * one hash aggregate per hop); both readout scalars ride the round
-    * checkpoint as observed metrics — zero extra passes, `rounds`
-    * driver-side rows total. earlyExit=false so the output shape is a
+    * one OR-combine shuffle per hop); both readout scalars ride the
+    * round's one readout job — zero extra passes, `rounds` driver-side
+    * rows total. earlyExit=false so the output shape is a
     * fixed `rounds` rows, saturated rounds reading (0, est).
     */
   def anfResiduals(edges: DataFrame, nSketches: Int = 8, rounds: Int = 3): DataFrame = {
@@ -1941,8 +1939,6 @@ object GraphOps {
         .repartition(parts, col("src"))
         .persist(StorageLevel.MEMORY_AND_DISK)
       e.count()
-      def ckpt(df: DataFrame): DataFrame =
-        org.apache.spark.sql.graftbridge.CheckpointBridge.dropOriginStats(df.localCheckpoint(true))
       val nodes = e
         .select(col("src").as("id"))
         .unionAll(e.select(col("dst").as("id")))
@@ -1975,9 +1971,9 @@ object GraphOps {
       var frontier: DataFrame = null
       var harmEx: DataFrame = null
       if (exact) {
-        reach = ckpt(nodes.select(col("id").as("u"), col("id").as("v")))
+        reach = Phys.materialized(nodes.select(col("id").as("u"), col("id").as("v")))
         frontier = reach
-        harmEx = ckpt(nodes.select(col("id"), lit(0L).as("ex_u")))
+        harmEx = Phys.materialized(nodes.select(col("id"), lit(0L).as("ex_u")))
       }
       val state = maskLoopRdd(e, seed, nSketches, rounds, earlyExit = !exact,
         freeSuperseded = true, parts,
@@ -1989,14 +1985,14 @@ object GraphOps {
         (h, _, _, _) =>
           if (exact) {
             // exact side: nodes first reaching u this round contribute 1/h
-            val newPairs = ckpt(
+            val newPairs = Phys.materialized(
               frontier
                 .join(e, frontier("v") === e("src"))
                 .select(frontier("u"), e("dst").as("v"))
                 .distinct()
                 .join(reach, Seq("u", "v"), "left_anti"))
             val cnts = newPairs.groupBy(col("v").as("id")).agg(count(lit(1)).as("c"))
-            harmEx = ckpt(
+            harmEx = Phys.materialized(
               harmEx
                 .join(cnts, Seq("id"), "left_outer")
                 .select(
@@ -2271,9 +2267,9 @@ object GraphOps {
     * Runs on the UNDIRECTED closure (the standard effective-diameter
     * setting; the directed lineitem graph is bipartite with sinks, so
     * its directed balls saturate at h = 1). The loop is the shared
-    * adaptive [[maskLoop]]; once the wave passes, patch rounds cost
-    * ∝ |changed| and the loop EXITS early — convergence read from the
-    * same observed metrics that carry the per-round estimate, the
+    * [[maskLoopRdd]]; once the wave passes, rounds cost ∝ |changed| and
+    * the loop EXITS early — convergence read from the same readout job
+    * that carries the per-round estimate, the
     * [[anf]] analogue of SSSP's A4 counter. Early exit is
     * result-identical to running all `maxRounds`: an empty changed set
     * means every later N(h) equals N(h_c), so the min-h readout and
@@ -2437,11 +2433,10 @@ object GraphOps {
         .repartition(parts, col("src"))
         .persist(StorageLevel.MEMORY_AND_DISK)
       ud.count()
-      def ckpt(df: DataFrame): DataFrame =
-        org.apache.spark.sql.graftbridge.CheckpointBridge.dropOriginStats(df.localCheckpoint(true))
-      var labels = ckpt(ud.select(col("src").as("id")).distinct().select(col("id"), col("id").as("lbl")))
+      var labels = Phys.materialized(
+        ud.select(col("src").as("id")).distinct().select(col("id"), col("id").as("lbl")))
       (1 to rounds).foreach { _ =>
-        labels = ckpt(
+        labels = Phys.materialized(
           labels
             .join(ud, labels("id") === ud("src"))
             .select(ud("dst").as("id"), col("lbl"))
@@ -2768,6 +2763,49 @@ object GraphOps {
        |                        sqrt(CAST(m * syy - sy * sy AS DOUBLE))), 6) END AS r
        |FROM a""".stripMargin
 
+  /** HITS over the DISTINCT edges, as score vectors over every node:
+    * the hubs before round 1 (10⁶ each) and the round, which maps the
+    * hubs to (authorities, next hubs). One job materializes the edges
+    * and the node set. The distinct stays on the DataFrame (codegen'd
+    * UnsafeRow exchange): an RDD pair-keyed distinct Java-serializes
+    * every tuple — measured 2.8 s vs sub-second for the same 590 k rows.
+    *
+    * A round is two half-rounds: authority = Σ of the in-neighbors'
+    * hubs, then hub = Σ of the out-neighbors' new authorities. A
+    * half-round is a narrow probe join, ONE transpose-sum shuffle (it
+    * re-keys |E| rows to the other endpoint) and one job for the L1
+    * total; the normalized vector is a narrow outer merge onto the
+    * persisted node set, evaluated lazily by the next half-round. A
+    * zero total (an empty graph) normalizes to 0 instead of dividing by
+    * it.
+    */
+  private def hitsOn(edges: DataFrame, part: HashPartitioner)
+      : (RDD[(Long, Long)], RDD[(Long, Long)] => (RDD[(Long, Long)], RDD[(Long, Long)])) = {
+    val e0 = Phys
+      .materialized(edges.select(col("src"), col("dst")).distinct())
+      .rdd
+      .map(r => (r.getLong(0), r.getLong(1)))
+    val eS = e0.partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
+    val eD = e0.map(_.swap).partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
+    val nodes = e0
+      .flatMap { case (s, d) => Iterator((s, 0L), (d, 0L)) }
+      .reduceByKey(part, (a, _) => a)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    nodes.count()
+    def half(score: RDD[(Long, Long)], e: RDD[(Long, Long)]): RDD[(Long, Long)] = {
+      val raw = score
+        .join(e)
+        .map { case (_, (v, to)) => (to, v) }
+        .reduceByKey(part, _ + _)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val tot = raw.values.fold(0L)(_ + _) // exact 64-bit sum, order-free
+      nodes.leftOuterJoin(raw).mapValues { case (_, o) =>
+        if (tot == 0L) 0L else o.getOrElse(0L) * 1000000L / tot
+      }
+    }
+    (nodes.mapValues(_ => 1000000L), h => { val a = half(h, eS); (a, half(a, eD)) })
+  }
+
   /** HITS hubs & authorities (Kleinberg 1999), in exact micro-unit
     * integer arithmetic: per round, authority = Σ of in-neighbors'
     * hub scores and hub = Σ of out-neighbors' authorities, each
@@ -2777,65 +2815,22 @@ object GraphOps {
     * the two sides are genuinely different readings: hubs = diverse
     * orders, authorities = popular parts.
     *
-    * Scale shape: each half-round is ONE edge join + a hash aggregate
-    * keyed on a node id, plus a 1-row total broadcast back — the same
-    * class as a PageRank round; per-round checkpoint keeps plan depth
-    * constant.
+    * Scale shape: each half-round of [[hitsOn]] is ONE edge join + a
+    * sum shuffle keyed on a node id, plus one job for the 1-row
+    * normalization total — the same class as a PageRank round.
     *
     * Output: every node with `(id, hub_micro, auth_micro)` (0 where a
     * side never receives mass).
     */
-  def hits(edges: DataFrame, iters: Int = 3): DataFrame = {
-    val session = edges.sparkSession
-    val parts = loopPartitions(session, edges.count())
-    withLoopConfs(session, parts) {
-      // RDD half-rounds (the [[pagerankFixed]] shape, both directions):
-      // one distinct edge set, a src-keyed and a dst-keyed copy, scores
-      // co-partitioned on id. A half-round is a narrow probe join + ONE
-      // transpose-sum shuffle (unavoidable: it re-keys |E| rows to the
-      // other endpoint) + one action for the normalization total; the
-      // normalized vector itself is a narrow outer merge, evaluated
-      // lazily by the next half-round's shuffle.
-      // The distinct stays on the DataFrame (codegen'd UnsafeRow
-      // exchange): an RDD pair-keyed distinct Java-serializes every
-      // tuple — measured 2.8 s vs sub-second for the same 590 k rows.
-      val part = new org.apache.spark.HashPartitioner(parts)
-      val e0 = Phys
-        .materialized(edges.select(col("src"), col("dst")).distinct())
-        .rdd
-        .map(r => (r.getLong(0), r.getLong(1)))
-      val eS = e0.partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
-      val eD = e0
-        .map { case (s, d) => (d, s) }
-        .partitionBy(part)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val nodes = e0
-        .flatMap { case (s, d) => Iterator((s, 0L), (d, 0L)) }
-        .reduceByKey(part, (a, _) => a)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      nodes.count() // materializes e0 + nodes (eS/eD ride their first probe)
-      def normalized(
-          raw: org.apache.spark.rdd.RDD[(Long, Long)]): org.apache.spark.rdd.RDD[(Long, Long)] = {
-        val r = raw.persist(StorageLevel.MEMORY_AND_DISK)
-        val tot = r.map(_._2).reduce(_ + _) // exact 64-bit sum, order-free
-        nodes.leftOuterJoin(r).mapValues { case (_, o) => o.getOrElse(0L) * 1000000L / tot }
-      }
-      var h: org.apache.spark.rdd.RDD[(Long, Long)] = nodes.mapValues(_ => 1000000L)
-      var a: org.apache.spark.rdd.RDD[(Long, Long)] = null
-      (1 to iters).foreach { _ =>
-        a = normalized(
-          h.join(eS).map { case (_, (hv, dst)) => (dst, hv) }.reduceByKey(part, _ + _))
-        h = normalized(
-          a.join(eD).map { case (_, (av, src)) => (src, av) }.reduceByKey(part, _ + _))
-      }
-      import org.apache.spark.sql.types.{LongType, StructField, StructType}
-      session.createDataFrame(
-        h.join(a).map { case (id, (hv, av)) => org.apache.spark.sql.Row(id, hv, av) },
-        StructType(Seq(
-          StructField("id", LongType, nullable = false),
-          StructField("hub_micro", LongType, nullable = false),
-          StructField("auth_micro", LongType, nullable = false))))
+  def hits(edges: DataFrame, iters: Int = 3): DataFrame = inLoop(edges) { part =>
+    val (h0, round) = hitsOn(edges, part)
+    val (h, a) = (1 to iters).foldLeft((h0, h0.mapValues(_ => 0L))) { case ((h, _), _) =>
+      val (a, hn) = round(h)
+      (hn, a)
     }
+    edges.sparkSession.createDataFrame(
+      h.join(a).map { case (id, (hv, av)) => org.apache.spark.sql.Row(id, hv, av) },
+      longSchema("id", "hub_micro", "auth_micro"))
   }
 
   /** Convergence trace for [[hits]] — the A4 readout: one row per round
@@ -2843,69 +2838,21 @@ object GraphOps {
     * score vectors (`a_0 ≡ 0`, so round 1's authority residual is the
     * initial mass). A user reads the last row to confirm the shipped
     * `iters` reached (or how far it sits from) the fixed point. Same
-    * rounds as [[hits]] + per round two |V|-row joins and a 1-row
-    * driver-collected aggregate (bounded by `iters`).
+    * rounds as [[hits]] on [[roundLoop]]: per round its two
+    * normalization jobs plus the one readout job for all four figures
+    * (bounded by `iters` rows).
     */
-  def hitsResiduals(edges: DataFrame, iters: Int = 3): DataFrame = {
-    val session = edges.sparkSession
-    val parts = loopPartitions(session, edges.count())
-    withLoopConfs(session, parts) {
-      // [[hits]]'s RDD half-rounds; each round adds two narrow
-      // co-partitioned delta folds (one action each, exact 64-bit sums)
-      val part = new org.apache.spark.HashPartitioner(parts)
-      val e0 = Phys
-        .materialized(edges.select(col("src"), col("dst")).distinct())
-        .rdd
-        .map(r => (r.getLong(0), r.getLong(1)))
-      val eS = e0.partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
-      val eD = e0
-        .map { case (s, d) => (d, s) }
-        .partitionBy(part)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val nodes = e0
-        .flatMap { case (s, d) => Iterator((s, 0L), (d, 0L)) }
-        .reduceByKey(part, (a, _) => a)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      nodes.count()
-      def normalized(
-          raw: org.apache.spark.rdd.RDD[(Long, Long)]): org.apache.spark.rdd.RDD[(Long, Long)] = {
-        val r = raw.persist(StorageLevel.MEMORY_AND_DISK)
-        val tot = r.map(_._2).reduce(_ + _)
-        nodes
-          .leftOuterJoin(r)
-          .mapValues { case (_, o) => o.getOrElse(0L) * 1000000L / tot }
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      }
-      def delta(
-          nw: org.apache.spark.rdd.RDD[(Long, Long)],
-          pv: org.apache.spark.rdd.RDD[(Long, Long)]): (Long, Long) =
-        nw.join(pv) // co-partitioned narrow
-          .mapPartitions { it =>
-            var c = 0L; var s = 0L
-            it.foreach { case (_, (n, p)) =>
-              if (n != p) c += 1
-              s += math.abs(n - p)
-            }
-            Iterator.single((c, s))
-          }
-          .reduce((x, y) => (x._1 + y._1, x._2 + y._2))
-      var h: org.apache.spark.rdd.RDD[(Long, Long)] = nodes.mapValues(_ => 1000000L)
-      var a: org.apache.spark.rdd.RDD[(Long, Long)] = nodes.mapValues(_ => 0L)
-      val out = scala.collection.mutable.ArrayBuffer[(Long, Long, Long, Long, Long)]()
-      (1 to iters).foreach { r =>
-        val an = normalized(
-          h.join(eS).map { case (_, (hv, dst)) => (dst, hv) }.reduceByKey(part, _ + _))
-        val hn = normalized(
-          an.join(eD).map { case (_, (av, src)) => (src, av) }.reduceByKey(part, _ + _))
-        val (ca, ra) = delta(an, a)
-        val (chg, rh) = delta(hn, h)
-        out += ((r.toLong, chg, rh, ca, ra))
-        a = an
-        h = hn
-      }
-      import session.implicits._
-      out.toSeq
-        .toDF("round", "hub_changed", "hub_resid_micro", "auth_changed", "auth_resid_micro")
+  def hitsResiduals(edges: DataFrame, iters: Int = 3): DataFrame = inLoop(edges) { part =>
+    val (h0, round) = hitsOn(edges, part)
+    // a node's score is (hub, authority)
+    residualRounds(edges.sparkSession, "hitsResiduals", h0.mapValues(h => (h, 0L)), iters,
+      "hub_changed", "hub_resid_micro", "auth_changed", "auth_resid_micro")(
+      (p, c) => p._1 != c._1,
+      (p, c) => math.abs(c._1 - p._1),
+      (p, c) => if (p._2 != c._2) 1L else 0L,
+      (p, c) => math.abs(c._2 - p._2)) { x =>
+      val (a, h) = round(x.mapValues(_._1))
+      h.join(a)
     }
   }
 
@@ -3043,11 +2990,9 @@ object GraphOps {
     */
   def kTruss(edges: DataFrame, k: Int = 3, maxRounds: Int = 30): DataFrame = {
     val session = edges.sparkSession
-    def ckpt(df: DataFrame): DataFrame =
-      org.apache.spark.sql.graftbridge.CheckpointBridge.dropOriginStats(df.localCheckpoint(true))
     val parts = loopPartitions(session, edges.count())
     withLoopConfs(session, parts) {
-      var cur = ckpt(
+      var cur = Phys.materialized(
         edges
           .filter(col("src") =!= col("dst"))
           .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
@@ -3057,12 +3002,12 @@ object GraphOps {
       var round = 0
       while (out == null && round < maxRounds) {
         round += 1
-        val sup = ckpt(triangleSupport(cur))
-        val kept = ckpt(sup.filter(col("sup") >= (k - 2).toLong))
+        val sup = Phys.materialized(triangleSupport(cur))
+        val kept = Phys.materialized(sup.filter(col("sup") >= (k - 2).toLong))
         val nKept = kept.count()
         if (nKept == nCur) out = kept // converged: sup was computed on the final set
         else {
-          cur = ckpt(kept.select(col("a"), col("b")))
+          cur = Phys.materialized(kept.select(col("a"), col("b")))
           nCur = nKept
         }
       }
@@ -3191,6 +3136,30 @@ object GraphOps {
     }
   }
 
+  /** Katz over the edges `src → dst`, as scores over every vertex
+    * (src ∪ dst), milli-units: the scores before round 1 (1000 each) and
+    * the round. One job materializes the edges and the vertex set.
+    * Round, lazy: each vertex sends its score along every out-edge
+    * (co-partitioned probe join, narrow), the scores meet in ONE sum
+    * shuffle, and a narrow outer merge onto the persisted vertex set
+    * sets `1000 + Σ div 8`. */
+  private def katzOn(edges: RDD[(Long, Long)], part: HashPartitioner)
+      : (RDD[(Long, Long)], RDD[(Long, Long)] => RDD[(Long, Long)]) = {
+    val verts = edges
+      .flatMap { case (s, d) => Iterator((s, 0L), (d, 0L)) }
+      .reduceByKey(part, (a, _) => a)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    verts.count()
+    def round(x: RDD[(Long, Long)]): RDD[(Long, Long)] = {
+      val summed = x
+        .join(edges)
+        .map { case (_, (kz, dst)) => (dst, kz) }
+        .reduceByKey(part, _ + _)
+      verts.leftOuterJoin(summed).mapValues { case (_, s) => 1000L + s.getOrElse(0L) / 8L }
+    }
+    (verts.mapValues(_ => 1000L), round)
+  }
+
   /** Katz centrality (Katz 1953) in exact integer milli-units: the
     * path-counting centrality `x ← β + α·Aᵀx` — every incoming walk of
     * length k contributes α^k, so unlike PageRank there is no
@@ -3208,44 +3177,17 @@ object GraphOps {
     * (src ∪ dst): Katz is defined on sinks too, where PageRank's
     * out-degree normalization keeps them source-only.
     */
-  def katzFixed(edges: DataFrame, iters: Int = 3): DataFrame = {
-    val session = edges.sparkSession
-    val parts = loopPartitions(session, edges.count())
-    withLoopConfs(session, parts) {
-      // RDD rounds, the [[pagerankFixed]] shape — but over ALL vertices
-      // (src ∪ dst): Katz is defined on sinks too. No per-round scalar
-      // ⇒ the whole chain is lazy: one job, `iters` shuffle stages.
-      val part = new org.apache.spark.HashPartitioner(parts)
-      val eRdd = edges
-        .select(col("src"), col("dst"))
-        .rdd
-        .map(r => (r.getLong(0), r.getLong(1)))
-        .partitionBy(part)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val verts = eRdd
-        .flatMap { case (s, d) => Iterator((s, 0L), (d, 0L)) }
-        .reduceByKey(part, (a, _) => a)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      verts.count() // one action: materializes eRdd + verts
-      var x: org.apache.spark.rdd.RDD[(Long, Long)] = verts.mapValues(_ => 1000L)
-      (1 to iters).foreach { _ =>
-        val summed = x
-          .join(eRdd) // co-partitioned: narrow
-          .map { case (_, (kz, dst)) => (dst, kz) }
-          .reduceByKey(part, _ + _)
-        x = verts
-          .leftOuterJoin(summed)
-          .mapValues { case (_, sOpt) => 1000L + sOpt.getOrElse(0L) / 8L }
-      }
-      import org.apache.spark.sql.types.{LongType, StructField, StructType}
-      val out = session.createDataFrame(
-        x.map { case (id, kz) => org.apache.spark.sql.Row(id, kz) },
-        StructType(Seq(
-          StructField("id", LongType, nullable = false),
-          StructField("kz", LongType, nullable = false))))
-      eRdd.unpersist(false)
-      out
-    }
+  def katzFixed(edges: DataFrame, iters: Int = 3): DataFrame = inLoop(edges) { part =>
+    // no per-round scalar ⇒ the whole chain is lazy: one job, `iters`
+    // shuffle stages
+    val eRdd = keyedEdges(edges, part)(identity)
+    val (x0, round) = katzOn(eRdd, part)
+    val x = (1 to iters).foldLeft(x0)((x, _) => round(x))
+    val out = edges.sparkSession.createDataFrame(
+      x.map { case (id, kz) => org.apache.spark.sql.Row(id, kz) },
+      longSchema("id", "kz"))
+    eRdd.unpersist(false)
+    out
   }
 
   /** The shared x0..x`iters` Katz round CTE prologue (no final SELECT). */
@@ -3278,60 +3220,20 @@ object GraphOps {
     * shipped round count sits at the fixed point (resid 0) or how far
     * off it is, instead of trusting `iters` blind.
     *
-    * Scale shape: identical rounds to [[katzFixed]] plus, per round,
-    * one |V|-row id-keyed join and a 1-row aggregate collected to the
-    * driver (the maskLoop/A4 global-counter discipline — bounded by
-    * `iters` rows total, never data-scale).
+    * Scale shape: [[katzFixed]]'s rounds on [[roundLoop]], one job per
+    * round — the readout of both figures from the state's (before,
+    * after) pair, collected to the driver (the global-counter
+    * discipline — bounded by `iters` rows total, never data-scale).
     */
-  def katzResiduals(edges: DataFrame, iters: Int = 3): DataFrame = {
-    val session = edges.sparkSession
-    val parts = loopPartitions(session, edges.count())
-    withLoopConfs(session, parts) {
-      // [[katzFixed]]'s RDD rounds; per-round (changed, L1) is one narrow
-      // co-partitioned self-join folded in a single action per round
-      val part = new org.apache.spark.HashPartitioner(parts)
-      val eRdd = edges
-        .select(col("src"), col("dst"))
-        .rdd
-        .map(r => (r.getLong(0), r.getLong(1)))
-        .partitionBy(part)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val verts = eRdd
-        .flatMap { case (s, d) => Iterator((s, 0L), (d, 0L)) }
-        .reduceByKey(part, (a, _) => a)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      verts.count()
-      var x: org.apache.spark.rdd.RDD[(Long, Long)] =
-        verts.mapValues(_ => 1000L).persist(StorageLevel.MEMORY_AND_DISK)
-      val out = scala.collection.mutable.ArrayBuffer[(Long, Long, Long)]()
-      (1 to iters).foreach { r =>
-        val summed = x
-          .join(eRdd)
-          .map { case (_, (kz, dst)) => (dst, kz) }
-          .reduceByKey(part, _ + _)
-        val xn = verts
-          .leftOuterJoin(summed)
-          .mapValues { case (_, sOpt) => 1000L + sOpt.getOrElse(0L) / 8L }
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val (ch, res) = xn
-          .join(x) // co-partitioned narrow
-          .mapPartitions { it =>
-            var c = 0L; var s = 0L
-            it.foreach { case (_, (nw, pv)) =>
-              if (nw != pv) c += 1
-              s += math.abs(nw - pv)
-            }
-            Iterator.single((c, s))
-          }
-          .reduce((a, b) => (a._1 + b._1, a._2 + b._2))
-        out += ((r.toLong, ch, res))
-        x.unpersist(false)
-        x = xn
-      }
-      eRdd.unpersist(false)
-      import session.implicits._
-      out.toSeq.toDF("round", "n_changed", "resid_l1_milli")
-    }
+  def katzResiduals(edges: DataFrame, iters: Int = 3): DataFrame = inLoop(edges) { part =>
+    val eRdd = keyedEdges(edges, part)(identity)
+    val (x0, round) = katzOn(eRdd, part)
+    val out = residualRounds(
+      edges.sparkSession, "katzResiduals", x0, iters, "n_changed", "resid_l1_milli")(
+      (p, c) => p != c,
+      (p, c) => math.abs(c - p))(round)
+    eRdd.unpersist(false)
+    out
   }
 
   /** [[katzResiduals]] mirrored: the same chain, per-round diffs. */
@@ -3944,8 +3846,6 @@ object GraphOps {
 
   def corenessHIndex(edges: DataFrame, maxRounds: Int = 64): DataFrame = {
     val session = edges.sparkSession
-    def ckpt(df: DataFrame): DataFrame =
-      org.apache.spark.sql.graftbridge.CheckpointBridge.dropOriginStats(df.localCheckpoint(true))
     val parts = loopPartitions(session, edges.count() * 2)
     withLoopConfs(session, parts) {
       val simple = Phys.materialized(
@@ -3965,12 +3865,12 @@ object GraphOps {
           undAll.repartition(parts, col("src")).localCheckpoint(true),
           Seq("src"),
           parts)
-      var state = ckpt(undSrc.groupBy(col("src").as("id")).agg(count(lit(1)).as("c")))
+      var state = Phys.materialized(undSrc.groupBy(col("src").as("id")).agg(count(lit(1)).as("c")))
       val nNodes = state.count()
       val broadcastMode = nNodes <= CorenessBroadcastNodes
       // the shuffle fallback fetches state through a dst-layout copy
       // (the r14 shape: dst-co-located fetch, |E|→src window shuffle)
-      lazy val undDst = ckpt(undSrc.repartition(parts, col("dst")))
+      lazy val undDst = Phys.materialized(undSrc.repartition(parts, col("dst")))
       // null = full round; else the previous round's CHANGED node ids.
       // An h-index can only move when some neighbor's value moved last
       // round, so a frontier round recomputes exactly the frontier's
@@ -4036,7 +3936,7 @@ object GraphOps {
         val obs = org.apache.spark.sql.Observation()
         // full round: every node has a next value (inner); frontier
         // round: untouched nodes keep their value (left_outer, n null)
-        val merged = ckpt(
+        val merged = Phys.materialized(
           state
             .join(next, Seq("id"), if (frontier == null) "inner" else "left_outer")
             .observe(obs, count_if(col("n") =!= col("c")).as("changed")))
@@ -4192,8 +4092,6 @@ object GraphOps {
 
   def msf(edges: DataFrame, maxRounds: Int = 20, tailCap: Int = MsfTailCap): DataFrame = {
     val session = edges.sparkSession
-    def ckpt(df: DataFrame): DataFrame =
-      org.apache.spark.sql.graftbridge.CheckpointBridge.dropOriginStats(df.localCheckpoint(true))
     val parts = loopPartitions(session, edges.count())
     withLoopConfs(session, parts) {
       // The working set CARRIES its own component labels: (u, v) are the
@@ -4206,7 +4104,7 @@ object GraphOps {
       // which is the only row the per-component argmin can ever pick.
       // Round N thus pays join input proportional to the surviving
       // crossing set (geometric in the component count), ~2|E| total.
-      var work = ckpt(
+      var work = Phys.materialized(
         edges
           .filter(col("src") =!= col("dst"))
           .select(
@@ -4247,7 +4145,7 @@ object GraphOps {
             }
           import session.implicits._
           val tail = picked.toSeq.toDF("a", "b", "wn")
-          forest = if (forest == null) ckpt(tail) else ckpt(forest.unionAll(tail))
+          forest = Phys.materialized(if (forest == null) tail else forest.unionAll(tail))
           done = true
         } else {
           val cand = work
@@ -4257,14 +4155,14 @@ object GraphOps {
           val w = org.apache.spark.sql.expressions.Window
             .partitionBy(col("c"))
             .orderBy(col("wn"), col("a"), col("b"))
-          val chosen = ckpt(
+          val chosen = Phys.materialized(
             cand
               .withColumn("rn", row_number().over(w))
               .filter(col("rn") === 1)
               .select(col("a"), col("b"), col("wn"), col("u"), col("v"))
               .distinct())
           val picked = chosen.select(col("a"), col("b"), col("wn"))
-          forest = if (forest == null) ckpt(picked) else ckpt(forest.unionAll(picked))
+          forest = Phys.materialized(if (forest == null) picked else forest.unionAll(picked))
           // Contract: the chosen pseudo-forest has ≤ one edge per LIVE
           // component, so this CC input is bounded by the (halving)
           // component count, not by |E|. (Measured: min-label beats the
@@ -4284,7 +4182,7 @@ object GraphOps {
               coalesce(col("nv"), col("v")).as("v"),
               col("wn"), col("a"), col("b"))
             .filter(col("u") =!= col("v"))
-          work = ckpt(
+          work = Phys.materialized(
             relabeled
               .select(
                 least(col("u"), col("v")).as("u"),
@@ -4370,8 +4268,6 @@ object GraphOps {
     */
   def stressCentrality(edges: DataFrame, nSources: Int = 4, rounds: Int = 3): DataFrame = {
     val session = edges.sparkSession
-    def ckpt(df: DataFrame): DataFrame =
-      org.apache.spark.sql.graftbridge.CheckpointBridge.dropOriginStats(df.localCheckpoint(true))
     val parts = loopPartitions(session, edges.count())
     withLoopConfs(session, parts) {
       val e = edges
@@ -4382,7 +4278,7 @@ object GraphOps {
         .persist(StorageLevel.MEMORY_AND_DISK)
       e.count()
       val nodes = e.select(col("src").as("id")).unionAll(e.select(col("dst").as("id"))).distinct()
-      val f0 = ckpt(
+      val f0 = Phys.materialized(
         nodes
           .filter(col("id").between(1L, nSources.toLong))
           .select(col("id").as("s"), col("id"), lit(1L).as("sigma")))
@@ -4396,14 +4292,14 @@ object GraphOps {
           .groupBy(col("s"), col("dst"))
           .agg(sum(col("sigma")).as("sigma"))
           .withColumnRenamed("dst", "id")
-        levels(h) = ckpt(cand.join(cum, Seq("s", "id"), "left_anti"))
-        cum = ckpt(cum.unionAll(levels(h).select(col("s"), col("id"))))
+        levels(h) = Phys.materialized(cand.join(cum, Seq("s", "id"), "left_anti"))
+        cum = Phys.materialized(cum.unionAll(levels(h).select(col("s"), col("id"))))
       }
       val gs = new Array[DataFrame](rounds + 1)
-      gs(rounds) = ckpt(levels(rounds).select(col("s"), col("id"), lit(0L).as("g")))
+      gs(rounds) = Phys.materialized(levels(rounds).select(col("s"), col("id"), lit(0L).as("g")))
       ((rounds - 1) to 1 by -1).foreach { h =>
         val gnext = gs(h + 1).select(col("s"), col("id").as("w"), col("g"))
-        gs(h) = ckpt(
+        gs(h) = Phys.materialized(
           levels(h)
             .select(col("s"), col("id"))
             .join(e.select(col("src").as("id"), col("dst").as("w")), Seq("id"), "left_outer")
@@ -4503,7 +4399,7 @@ object GraphOps {
           .otherwise(lit("upstream"))
           .as("cls"))
 
-  /** The fused FW-BW state: ONE gated [[maskLoop]] over the
+  /** The fused FW-BW state: ONE gated [[maskLoopRdd]] over the
     * direction-tagged union edge list (bit 0 flows along forward edges,
     * bit 1 along transposed ones — per-bit OR-propagation is
     * independent, so this equals the two separate sweeps row for row),

@@ -2614,10 +2614,10 @@ object TextOps {
     * Scale shape: one corpus explode; the co-occurrence self-join is
     * per-document position-banded (fan-out ≤ `window` per token, never
     * all-pairs); the graph is vocab-keyed (edges ≤ vocab·avg-degree,
-    * independent of corpus row count once counts saturate); each of the
-    * `iters` rounds is one vocab-keyed join + one aggregate over a
-    * checkpointed constant-depth plan. The word graph is exchanged once
-    * and reused every round.
+    * independent of corpus row count once counts saturate); the `iters`
+    * rounds are GraphOps' PageRank round (one vocab-keyed narrow join +
+    * one sum shuffle each), chained lazily. The word graph is exchanged
+    * once and reused every round.
     *
     * Output: top `k` rows `(term, pr)` by (pr desc, term asc).
     */
@@ -2638,37 +2638,18 @@ object TextOps {
       .select(col("ta"), col("tb"))
     val sym = co.unionAll(co.select(col("tb").as("ta"), col("ta").as("tb")))
     val e0 = sym.groupBy(col("ta").as("src"), col("tb").as("dst")).agg(count(lit(1)).as("w"))
-    val ws = e0.groupBy(col("src")).agg(sum(col("w")).as("wsum"))
-    // weight + out-mass on one materialized edge table; the rank rounds
-    // run on RDDs (the GraphOps.pagerankFixed shape): terms and edges
-    // share one hash partitioner, a round is a narrow probe join plus
-    // one contribution-sum shuffle, and with no per-round scalar the
-    // whole chain is lazy — one job, `iters` shuffle stages, zero
-    // Catalyst planning per round. Integer math identical to the SQL.
-    val e = Phys.materialized(e0.join(ws, Seq("src")))
+    // the rank rounds are GraphOps' PageRank round with `w` the
+    // co-occurrence count (out-weight = wsum): terms and edges share one
+    // hash partitioner, and with no per-round scalar the whole chain is
+    // lazy — `iters` shuffle stages, zero Catalyst planning per round
     val session = docs.sparkSession
     val parts = math.max(4, session.conf.get("spark.sql.shuffle.partitions", "200").toInt)
     val part = new org.apache.spark.HashPartitioner(parts)
-    val eRdd = e.rdd
-      .map(r => (r.getString(0), (r.getString(1), r.getLong(2), r.getLong(3))))
+    val eRdd = e0.rdd
+      .map(r => (r.getString(0), (r.getString(1), r.getLong(2))))
       .partitionBy(part)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val terms = eRdd
-      .mapValues(_ => 0L)
-      .reduceByKey(part, (a, _) => a)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = terms.count() // = |ws|: one action materializes eRdd + terms
-    val seedPr = 1000000000000L / n
-    var rank: org.apache.spark.rdd.RDD[(String, Long)] = terms.mapValues(_ => seedPr)
-    (1 to iters).foreach { _ =>
-      val summed = rank
-        .join(eRdd) // co-partitioned: narrow
-        .map { case (_, (pr, (dst, w, wsum))) => (dst, pr * w / wsum) }
-        .reduceByKey(part, _ + _)
-      rank = rank.leftOuterJoin(summed).mapValues { case (_, sOpt) =>
-        15L * seedPr / 100L + 85L * sOpt.getOrElse(0L) / 100L
-      }
-    }
+    val rank = GraphOps.pagerankRdd(eRdd, part, iters, (_: String) => true)
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     session
       .createDataFrame(

@@ -987,9 +987,7 @@ object Training {
     */
   def gbmStumps(lineitem: DataFrame, rounds: Int = GbmRounds): DataFrame = {
     val spark = lineitem.sparkSession
-    def ckpt(df: DataFrame): DataFrame =
-      org.apache.spark.sql.graftbridge.CheckpointBridge.dropOriginStats(df.localCheckpoint(true))
-    var resid = ckpt(
+    var resid = Phys.materialized(
       lineitem.select(
         col("l_quantity").cast("long").as("q"),
         expr("CAST(round(l_extendedprice * 1000) AS BIGINT)").as("y")))
@@ -1027,7 +1025,7 @@ object Training {
         case Some((_, t, bls, bln, brs, brn)) =>
           val (lm, rm) = (bls / bln, brs / brn) // trunc toward zero ≡ SQL div
           out += ((r.toLong, t, bln, brn, lm, rm))
-          resid = ckpt(
+          resid = Phys.materialized(
             resid.select(
               col("q"),
               (col("y") - when(col("q") <= t, lit(lm)).otherwise(lit(rm))).as("y")))

@@ -778,6 +778,73 @@ class GraphOpsSpec extends SparkSpec {
       (3L, 0L, 0L, 0L, 0L)))
   }
 
+  /** A 3-cycle 1→2→3→1 with a sink (3→4) and a feeder (5→1). */
+  private lazy val cycleSinkFeeder =
+    edgesDf(Seq((1L, 2L, 1.0), (2L, 3L, 1.0), (3L, 1L, 1.0), (3L, 4L, 1.0), (5L, 1L, 1.0)))
+
+  private def longRows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Long]] =
+    df.collect().map(r => (0 until r.length).map(r.getLong)).toSeq.sortBy(_.head)
+
+  test("rank residuals: row k is the change between the fixed forms at k-1 and k rounds") {
+    // (k, then per score column: nodes changed, L1 residual), recomputed
+    // from two runs of the fixed form
+    def fromFixed(fixed: Int => org.apache.spark.sql.DataFrame): Seq[Seq[Long]] =
+      (1 to 3).map { k =>
+        val Seq(p, n) = Seq(k - 1, k).map(i => longRows(fixed(i)).map(r => r.head -> r.tail).toMap)
+        k.toLong +: n.head._2.indices.flatMap { c =>
+          val d = n.keys.toSeq.map(id => n(id)(c) - p(id)(c))
+          Seq(d.count(_ != 0L).toLong, d.map(math.abs).sum)
+        }
+      }
+    val e = cycleSinkFeeder
+    assert(longRows(GraphOps.pagerankResiduals(e, 3)) === fromFixed(GraphOps.pagerankFixed(e, _)))
+    assert(longRows(GraphOps.katzResiduals(e, 3)) === fromFixed(GraphOps.katzFixed(e, _)))
+    assert(longRows(GraphOps.hitsResiduals(e, 3)) === fromFixed(GraphOps.hits(e, _)))
+  }
+
+  test("pagerankFixed is the personalized form with every source a seed") {
+    val e = cycleSinkFeeder
+    assert(longRows(GraphOps.pagerankFixed(e, 3)) ===
+      longRows(GraphOps.pagerankPersonalized(e, 3, seedMod = 1L)))
+  }
+
+  test("rank forms on an empty edge list: empty frames and all-zero residual rows") {
+    val empty = edgesDf(Seq.empty)
+    assert(GraphOps.pagerankFixed(empty, 3).collect().isEmpty)
+    assert(GraphOps.katzFixed(empty, 3).collect().isEmpty)
+    assert(GraphOps.hits(empty, 3).collect().isEmpty)
+    val zeros = (1L to 3L).map(r => Seq(r, 0L, 0L))
+    assert(longRows(GraphOps.pagerankResiduals(empty, 3)) === zeros)
+    assert(longRows(GraphOps.katzResiduals(empty, 3)) === zeros)
+    assert(longRows(GraphOps.hitsResiduals(empty, 3)) === (1L to 3L).map(r => Seq(r, 0L, 0L, 0L, 0L)))
+  }
+
+  test("personalized pagerank with an empty seed set ranks every node 0") {
+    // no id of the graph is a multiple of the default seedMod 100
+    assert(longRows(GraphOps.pagerankPersonalized(cycleSinkFeeder, iters = 3)) ===
+      Seq(1L, 2L, 3L, 5L).map(id => Seq(id, 0L)))
+  }
+
+  test("rank round shape: lazy fixed chains, one readout job per residual round") {
+    val e = cycleSinkFeeder
+    e.count()
+    def jobs(df: => org.apache.spark.sql.DataFrame): Int = jobsOf(df.collect())._2
+    // edges.count (two jobs under AQE) and the node count, then ONE job
+    // reads the result, however many rounds it chains
+    assert(jobs(GraphOps.pagerankFixed(e, 3)) === 4)
+    assert(jobs(GraphOps.katzFixed(e, 3)) === 4)
+    assert(jobs(GraphOps.pagerankFixed(e, 5)) === 4)
+    // HITS adds one normalization total per half-round
+    assert(jobs(GraphOps.hits(e, 3)) === 12)
+    // the residual forms: the same prelude, then one readout job per round
+    assert(jobs(GraphOps.pagerankResiduals(e, 3)) === 6)
+    assert(jobs(GraphOps.katzResiduals(e, 3)) === 6)
+    // HITS: two normalization totals plus the one readout of all four
+    // figures per round (a per-vector join-and-reduce made it four)
+    assert(jobs(GraphOps.hitsResiduals(e, 3)) === 14)
+    assert(jobs(GraphOps.hitsResiduals(e, 5)) === 20)
+  }
+
   test("landmarkEstimate: fused 2n-bit sweep equals the two separate sweeps") {
     // r15 optimization: contiguous seed ranges (1..n landmarks,
     // n+1..2n sample sources) ride ONE maskLoop. Equivalence vs the

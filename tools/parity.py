@@ -6,7 +6,9 @@ Usage: python3 tools/parity.py <sfDir> <verifyOutDir>
 Reads each <verifyOutDir>/<name>/ parquet (written by graft.Verify), runs
 the matching SQL from <verifyOutDir>/oracle_sql.json in DuckDB over the
 sfDir parquet tables, sorts columns by name, sorts rows, and compares
-values exactly. Prints per-query PASS/FAIL with a diff sample.
+values exactly. Prints per-query PASS/FAIL with a diff sample. Every query
+Verify's manifest.json lists as `missing` (it threw, so no output dir was
+written) counts as a FAIL too.
 """
 import sys, os, json, glob
 import duckdb
@@ -56,6 +58,11 @@ def main(sf_dir, out_dir):
             print(f"PASS {name} ({len(g)} rows, {list(g.columns)})")
         else:
             n_fail += 1
+    manifest = f"{out_dir}/manifest.json"
+    missing = json.load(open(manifest))["missing"] if os.path.exists(manifest) else []
+    for name in missing:
+        n_fail += 1
+        print(f"FAIL {name}: never dumped (listed missing in manifest.json)")
     print(f"== {n_pass} pass, {n_fail} fail ==")
     return 1 if n_fail else 0
 
