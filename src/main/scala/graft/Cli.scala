@@ -17,8 +17,11 @@ import graft.sources.TextEdgeIO
   *
   * Same text record shapes in and out (SURVEY.md §1.1); the reference's
   * single-reducer final jobs (`SingleSourceSP.java:502`,
-  * `ReverseGraph.java:225`) become a `coalesce(1)` at the sink only —
-  * everything before it runs at full parallelism.
+  * `ReverseGraph.java:225`) become `repartition(1).sortWithinPartitions`
+  * at the sink only — everything before it runs at full parallelism, and
+  * the one sink task does the sort. (`orderBy(...).coalesce(1)` would
+  * add a range-sampling job that computes the whole upstream once more
+  * before the sort.)
   */
 private object CliSession {
   def apply(app: String): SparkSession = {
@@ -43,7 +46,7 @@ object SsspMain {
     */
   def run(spark: SparkSession, in: String, out: String, source: Long): Unit =
     TextEdgeIO.writeResult(
-      TextEdgeIO.ssspFromFile(spark, in, source).orderBy(col("id")).coalesce(1),
+      TextEdgeIO.ssspFromFile(spark, in, source).repartition(1).sortWithinPartitions(col("id")),
       out)
 
   def main(args: Array[String]): Unit = {
@@ -60,8 +63,8 @@ object ReverseGraphMain {
   def run(spark: SparkSession, in: String, out: String): Unit =
     TextEdgeIO.writeAdjacency(
       GraphOps.reverseGraph(TextEdgeIO.readUnweightedEdges(spark, in))
-        .orderBy(col("node"))
-        .coalesce(1),
+        .repartition(1)
+        .sortWithinPartitions(col("node")),
       out)
 
   def main(args: Array[String]): Unit = {

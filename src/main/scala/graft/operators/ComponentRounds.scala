@@ -1,0 +1,380 @@
+package graft.operators
+
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.{coalesce, col, greatest, least}
+import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
+
+import Rounds.{countRows, loopPartitions, longSchema, perPartition, roundLoop, withLoopConfs}
+
+/** The RDD bodies of the component and peel loops:
+  * [[GraphOps.connectedComponents]], [[GraphOps.connectedComponentsStars]],
+  * the k-core [[peel]] behind [[GraphOps.kCore]] and
+  * [[GraphOps.corenessTable]], and the bulk peel of
+  * [[GraphOps.densestSubgraph]]. */
+private[operators] object ComponentRounds {
+
+  /** Min-label propagation on [[Rounds.roundLoop]]: one co-partitioned join of
+    * last round's improved labels against the edges, one min-combine
+    * shuffle, one narrow merge and ONE job per round. The prelude is
+    * edges.count (two jobs under AQE) and the |V| count, which also
+    * caches the edges.
+    */
+  def connectedComponents(edges: DataFrame, maxRounds: Int): DataFrame = {
+    val session = edges.sparkSession
+    val parts = loopPartitions(session, edges.count() * 2)
+    withLoopConfs(session, parts) {
+      val part = new HashPartitioner(parts)
+      val eRdd = edges
+        .select(col("src"), col("dst"))
+        .rdd
+        .flatMap { r =>
+          val s = r.getLong(0); val d = r.getLong(1)
+          Iterator((s, d), (d, s))
+        }
+        .partitionBy(part)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      // state value: (label, improved last round); CC starts with EVERY
+      // node in the frontier (each proposes its own label to all
+      // neighbors). Both directions are keyed under `part`, so every
+      // node is a key of exactly one partition: a per-partition distinct
+      // is the global one, with no shuffle.
+      val seed = eRdd
+        .mapPartitions(
+          { it =>
+            val ids = it.map(_._1).toArray
+            java.util.Arrays.sort(ids)
+            Iterator
+              .range(0, ids.length)
+              .collect { case i if i == 0 || ids(i) != ids(i - 1) => (ids(i), (ids(i), true)) }
+          },
+          preservesPartitioning = true)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val nV = countRows(seed)
+      val state = roundLoop("connectedComponents", seed, nV, maxRounds, nV)(_._2) { (cur, _) =>
+        val msgs = cur
+          .filter(_._2._2)
+          .mapValues(_._1)
+          .join(eRdd)
+          .map { case (_, (lab, dst)) => (dst, lab) }
+          .reduceByKey(part, (a, b) => math.min(a, b))
+        (1L, cur.leftOuterJoin(msgs).mapValues {
+          case ((lab, _), Some(c)) if c < lab => (c, true)
+          case ((lab, _), _) => (lab, false)
+        })
+      }
+      eRdd.unpersist(false)
+      session.createDataFrame(
+        state.map { case (id, (lab, _)) => Row(id, lab) },
+        longSchema("id", "component"))
+    }
+  }
+
+  /** Alternating large-star / small-star rounds (Kiveris et al.) on
+    * RDDs: a star round's Catalyst cost (two window exchanges + two
+    * distincts planned fresh every round, plus the checkpoint) was
+    * ~0.7 s while the pair set is KBs. One star here = one min-combine
+    * shuffle (the m(u) table), one co-partitioned join back, one
+    * pair-keyed distinct — all under ONE job per round, the (count, Σa,
+    * Σb) stability signature riding that job's action. The math is
+    * verbatim Kiveris et al.: m(u) = min(Γ(u) ∪ {u}), large-star hooks
+    * strictly-greater neighbors onto m(u), small-star hooks ≤-neighbors
+    * and u itself; canonical (a < b) distinct set between stars.
+    */
+  def connectedComponentsStars(edges: DataFrame, maxRounds: Int): DataFrame = {
+    val session = edges.sparkSession
+    val parts = loopPartitions(session, edges.count() * 2)
+    val part = new HashPartitioner(parts)
+
+    // canonical undirected pair set (a < b), self-loops dropped,
+    // hash-partitioned on the pair for the distinct
+    def canon(pairs: RDD[(Long, Long)]): RDD[(Long, Long)] =
+      pairs
+        .filter { case (u, v) => u != v }
+        .map { case (u, v) => if (u < v) (u, v) else (v, u) }
+        .distinct(parts)
+    def directed(e: RDD[(Long, Long)]): RDD[(Long, Long)] =
+      e.flatMap { case (a, b) => Iterator((a, b), (b, a)) }
+
+    def star(e: RDD[(Long, Long)], large: Boolean): RDD[(Long, Long)] = {
+      val d = directed(e).partitionBy(part)
+      val m = d
+        .reduceByKey(part, (a, b) => math.min(a, b))
+        .map { case (u, mn) => (u, math.min(mn, u)) }
+      val withM = d.join(m) // co-partitioned — narrow
+      val hooked = withM.collect {
+        case (u, (v, mu)) if (large && v > u) || (!large && v <= u) => (v, mu)
+      }
+      canon(if (large) hooked else hooked.union(m))
+    }
+
+    // every vertex of the undirected closure (self-loop-only nodes
+    // included), to re-attach singleton components at the end
+    val verts =
+      edges.select(col("src").as("id")).unionAll(edges.select(col("dst").as("id"))).distinct()
+
+    // Cheap stability signature as a PREFILTER only: (count, sum a, sum b)
+    // can collide across distinct edge sets (e.g. {(1,4),(2,3)} vs
+    // {(1,3),(2,4)}), so a signature match is CONFIRMED by exact set
+    // equality before the loop stops — both sides are canonical distinct
+    // sets, so equal counts + empty next∖prev ⇒ equal sets.
+    def persistSig(rdd: RDD[(Long, Long)]): (RDD[(Long, Long)], (Long, Long, Long)) = {
+      val p = rdd.persist(StorageLevel.MEMORY_AND_DISK)
+      val s = perPartition(p) { it =>
+        var c = 0L; var sa = 0L; var sb = 0L
+        it.foreach { case (a, b) => c += 1; sa += a; sb += b }
+        (c, sa, sb)
+      }
+      (p, (s.iterator.map(_._1).sum, s.iterator.map(_._2).sum, s.iterator.map(_._3).sum))
+    }
+    var (e, prev) = persistSig(
+      canon(edges.select(col("src"), col("dst")).rdd.map(r => (r.getLong(0), r.getLong(1)))))
+    var rounds = 0
+    var stable = false
+    val debug = sys.env.contains("GRAFT_LOOP_DEBUG")
+    while (!stable && rounds < maxRounds) {
+      val tRound = System.nanoTime()
+      val (next, s) = persistSig(star(star(e, large = true), large = false))
+      stable = s == prev && next.subtract(e).isEmpty()
+      prev = s
+      if (!stable) e.unpersist(false)
+      e = next
+      rounds += 1
+      if (debug)
+        System.err.println(
+          f"[starCcRdd] round=$rounds%3d pairs=${s._1}%7d " +
+            f"sec=${(System.nanoTime() - tRound) / 1e9}%5.2f")
+    }
+    if (!stable)
+      throw new IllegalStateException(
+        s"connectedComponentsStars did not converge in $maxRounds rounds")
+    val comp = session.createDataFrame(
+      directed(e)
+        .reduceByKey(part, (a, b) => math.min(a, b))
+        .map { case (u, mn) => Row(u, math.min(mn, u)) },
+      longSchema("id", "c"))
+    verts
+      .join(comp, Seq("id"), "left_outer")
+      .select(col("id"), coalesce(col("c"), col("id")).as("component"))
+  }
+
+  /** The undirected simple graph of `edges` for the peel loops:
+    * parallel edges and self-loops dropped, both directions kept (so
+    * out-degree == undirected degree), hash-partitioned on the source
+    * by `part` and persisted.
+    */
+  def undirectedSimple(edges: DataFrame, part: HashPartitioner): RDD[(Long, Long)] =
+    edges
+      .filter(col("src") =!= col("dst"))
+      .select(least(col("src"), col("dst")), greatest(col("src"), col("dst")))
+      .distinct()
+      .rdd
+      .flatMap { r =>
+        val a = r.getLong(0); val b = r.getLong(1)
+        Iterator((a, b), (b, a))
+      }
+      .partitionBy(part)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+
+  /** The k-core deletion cascade on [[Rounds.roundLoop]], in the
+    * [[connectedComponents]] shape. State `id → (remaining degree,
+    * died last round)`, degree −1 = dead, over `und`
+    * ([[undirectedSimple]]). The seed kills every node of degree below
+    * k. A round's frontier is the nodes that died last round: each
+    * sends one decrement per edge (`frontier ⋈ und`, summed per
+    * neighbor — the round's one shuffle), and an alive node whose
+    * degree falls below k dies in turn. Only deaths count as changed,
+    * so a death cascades exactly once and the loop stops after a round
+    * that kills nobody. Returns the final state, still persisted.
+    */
+  def peel(
+      und: RDD[(Long, Long)],
+      k: Int,
+      part: HashPartitioner): RDD[(Long, (Long, Boolean))] = {
+    val seed = und
+      .mapValues(_ => 1L)
+      .reduceByKey(part, _ + _) // narrow: und is already on `part`
+      .mapValues(deg => if (deg < k) (-1L, true) else (deg, false))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val nV = countRows(seed)
+    val dead = countRows(seed.filter(_._2._2))
+    roundLoop("kCore", seed, dead, Long.MaxValue, nV)(_._2) { (cur, _) =>
+      // frontier ⋈ und, co-partitioned: each partition's dead set probes
+      // its own edges in one pass, with no hash table over the edges
+      val decs = cur
+        .filter(_._2._2)
+        .zipPartitions(und) { (fIt, eIt) =>
+          val died = fIt.map(_._1).toSet
+          if (died.isEmpty) Iterator.empty
+          else eIt.collect { case (s, nbr) if died(s) => (nbr, 1L) }
+        }
+        .reduceByKey(part, _ + _)
+      (1L, cur.leftOuterJoin(decs).mapValues {
+        case ((deg, _), Some(dec)) if deg >= 0 =>
+          if (deg - dec < k) (-1L, true) else (deg - dec, false)
+        case ((deg, _), _) => (deg, false)
+      })
+    }
+  }
+
+  /** [[GraphOps.kCore]]: one [[peel]] of the undirected simple graph. */
+  def kCore(edges: DataFrame, k: Int): DataFrame = {
+    val session = edges.sparkSession
+    val parts = loopPartitions(session, edges.count() * 2)
+    withLoopConfs(session, parts) {
+      val part = new HashPartitioner(parts)
+      val und = undirectedSimple(edges, part)
+      val state = peel(und, k, part)
+      und.unpersist(false)
+      session.createDataFrame(
+        state.map { case (id, (deg, _)) => Row(id, deg >= 0) },
+        StructType(Seq(
+          StructField("id", LongType, nullable = false),
+          StructField("in_core", BooleanType, nullable = false))))
+    }
+  }
+
+  /** [[GraphOps.corenessTable]]: K−1 [[peel]] runs, each on the previous
+    * core's induced subgraph; a node dying in the k-peel has core
+    * number k − 1. */
+  def corenessTable(edges: DataFrame, maxK: Int): DataFrame = {
+    val session = edges.sparkSession
+    val parts = loopPartitions(session, edges.count() * 2)
+    withLoopConfs(session, parts) {
+      val part = new HashPartitioner(parts)
+      var und = undirectedSimple(edges, part)
+      // the output reads the peel states, so they stay persisted
+      var coreness = session.sparkContext.emptyRDD[(Long, Long)]
+      var k = 2
+      var coreEdges = -1L
+      while (k <= maxK && coreEdges != 0L) {
+        val state = peel(und, k, part)
+        val kk = k - 1L
+        coreness = coreness.union(state.collect { case (id, (deg, _)) if deg < 0 => (id, kk) })
+        // the k-core's induced subgraph — empty iff the k-core is, since
+        // every survivor keeps at least k ≥ 2 neighbors
+        val alive = state.filter(_._2._1 >= 0).mapValues(_ => ())
+        val sub = und
+          .join(alive)
+          .map { case (s, (d, _)) => (d, s) }
+          .join(alive)
+          .map { case (d, (s, _)) => (s, d) }
+          .partitionBy(part)
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        coreEdges = countRows(sub)
+        und.unpersist(false)
+        und = sub
+        k += 1
+      }
+      und.unpersist(false)
+      require(
+        coreEdges == 0L,
+        s"non-empty $maxK-core: the graph's degeneracy outgrew CorenessMaxK — raise the cap")
+      session.createDataFrame(
+        coreness.map { case (id, c) => Row(id, c) },
+        longSchema("id", "coreness"))
+    }
+  }
+
+  /** [[GraphOps.densestSubgraph]]'s bulk-peel rounds on RDDs: per round
+    * ONE alive-filter shuffle (the dst-side membership re-key) + one
+    * degree-sum shuffle + one (|V|, Σdeg) job — the per-round profile
+    * row and the peel threshold are driver scalars off that job's exact
+    * sums. The alive set shrinks ≥ 1.5× per round, and an emptied graph
+    * exits early (the remaining rounds would emit no rows).
+    */
+  def densestSubgraph(edges: DataFrame, maxRounds: Int): DataFrame = {
+    val session = edges.sparkSession
+    val parts = loopPartitions(session, edges.count() * 2)
+    withLoopConfs(session, parts) {
+      val simple = Phys.materialized(
+        edges
+          .filter(col("src") =!= col("dst"))
+          .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
+          .distinct())
+      val part = new HashPartitioner(parts)
+      val und = simple.rdd
+        .flatMap { r =>
+          val a = r.getLong(0); val b = r.getLong(1)
+          Iterator((a, b), (b, a))
+        }
+        .partitionBy(part)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      var alive: RDD[(Long, Long)] = und
+        .mapValues(_ => 0L)
+        .reduceByKey(part, (a, _) => a)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      var aliveCount = countRows(alive) // materializes und + alive
+      val profile = scala.collection.mutable.ArrayBuffer[(Long, Long, Long, Long, Long)]()
+      var live: List[RDD[_]] = List(alive)
+      var i = 0
+      var drained = false
+      while (i < maxRounds && !drained) {
+        // deg over the alive-induced subgraph. Fast path (the
+        // corenessHIndex broadcast-state gate): while the alive set fits
+        // comfortably in an executor (≤ 8 M ids = 64 MB sorted array),
+        // broadcast it and the round is ONE narrow membership pass over
+        // the src-partitioned edges with map-side combine — the shuffle
+        // carries ≤ |alive| degree rows, never |E_i|. Above the gate,
+        // the general shape: dst-side membership re-keys |E_i| rows.
+        val deg =
+          if (aliveCount <= GraphOps.DensestBroadcastMaxNodes) {
+            val ids = perPartition(alive)(_.map(_._1).toArray).flatten
+            java.util.Arrays.sort(ids)
+            aliveCount = ids.length
+            val bc = und.sparkContext.broadcast(ids)
+            und
+              .mapPartitions(
+                { it =>
+                  val a = bc.value
+                  it.collect {
+                    case (s, dd)
+                        if java.util.Arrays.binarySearch(a, s) >= 0 &&
+                          java.util.Arrays.binarySearch(a, dd) >= 0 =>
+                      (s, 1L)
+                  }
+                },
+                preservesPartitioning = true)
+              .reduceByKey(part, _ + _)
+          } else
+            und
+              .join(alive)
+              .map { case (s, (d, _)) => (d, s) }
+              .join(alive)
+              .map { case (_, (s, _)) => (s, 1L) }
+              .reduceByKey(part, _ + _)
+        val degAll = alive
+          .leftOuterJoin(deg)
+          .mapValues { case (_, o) => o.getOrElse(0L) }
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        val sums = perPartition(degAll) { it =>
+          var n = 0L; var s = 0L
+          it.foreach { case (_, d) => n += 1; s += d }
+          (n, s)
+        }
+        val v = sums.iterator.map(_._1).sum
+        val m2 = sums.iterator.map(_._2).sum
+        if (v > 0 && m2 > 0)
+          profile += ((i.toLong, v, m2 / 2, m2 * 500000L / v, m2 * 1000000L / v))
+        // every remaining round would aggregate an empty alive set and
+        // emit nothing — the profile is already complete
+        drained = v == 0 || m2 == 0
+        // v counts the round's alive set — an upper bound on the peeled
+        // set, so a shrinking big graph eventually enters the gate
+        aliveCount = v
+        alive = degAll.filter { case (_, d) => 2L * d * v > 3L * m2 }.mapValues(_ => 0L)
+        live.foreach(_.unpersist(false))
+        live = List(degAll)
+        i += 1
+      }
+      und.unpersist(false)
+      session.createDataFrame(
+        session.sparkContext.parallelize(
+          profile.toSeq.map(t => Row(t._1, t._2, t._3, t._4, t._5)),
+          1),
+        longSchema("round", "n_nodes", "n_edges", "density_ppm", "avg_deg_ppm"))
+    }
+  }
+}

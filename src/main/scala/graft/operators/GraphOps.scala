@@ -1,13 +1,12 @@
 package graft.operators
 
-import org.apache.spark.HashPartitioner
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import scala.reflect.ClassTag
 
 import graft.model.INF
+import MaskRounds.{maskLoopRdd, maskStateDf}
+import Rounds.{loopPartitions, withLoopConfs}
 
 /** Spark-native rebuild of the reference's graph operators.
   *
@@ -35,6 +34,13 @@ import graft.model.INF
   * frontier's out-edges, never all of |E|. Each round's state is
   * `localCheckpoint`ed, so the lineage stays the same length however
   * many rounds a long-diameter graph needs.
+  *
+  * The loops' RDD bodies live in small objects, and the public methods
+  * here delegate to them: [[Rounds]] (the round driver), [[SsspRounds]],
+  * [[ComponentRounds]], [[MaskRounds]] and [[RankRounds]]. Spark's
+  * closure cleaner parses the whole class file that declares a closure,
+  * every time one is handed to an RDD op, so a closure on a per-round
+  * path must not be declared in this object's large class.
   */
 object GraphOps {
 
@@ -163,27 +169,14 @@ object GraphOps {
     * round-tripping the entire node state through HDFS (`:513-517`), with
     * a Hadoop counter for convergence (`:473-479`). Here the edge list is
     * scanned ONCE into a per-partition CSR adjacency index
-    * ([[SsspAdjacency]]), and a round touches only the frontier:
-    *
-    *   prelude  = edges.count (sizes the partitioner) and ONE job that
-    *              builds the index, the vertex set (id, is_src) and reads
-    *              |V| and whether the source is present
-    *   relax    = frontier.zipPartitions(index) — binary search per
-    *              frontier id, never a scan of the partition's edges —
-    *              then reduceByKey(min), the round's one shuffle
-    *   merge    = patch ⟗ best, co-partitioned (narrow), persisted
-    *   readout  = the changed count, the round's ONE job
-    *
-    * The rounds run on [[roundLoop]], the driver shared with the other
-    * fixpoint loops.
-    *
-    * The patch holds only relaxed/contacted rows (an untouched node's
-    * dist is INF by construction), so a round costs O(|frontier| +
-    * |msgs|), not O(|E|) or O(|V|). Frontiers below [[RddFuseBelowRows]]
-    * relax two hops per job. Each round's merged patch is
-    * `localCheckpoint`ed, so the lineage (and the task binary) stays
-    * constant however many rounds a long-diameter graph needs. Loop
-    * shuffle parallelism scales with the edge count ([[loopPartitions]]).
+    * ([[SsspAdjacency]]), and a round touches only the frontier: one
+    * relax shuffle and ONE job on [[Rounds.roundLoop]] (the round shape
+    * is on [[SsspRounds.sssp]]). Frontiers below
+    * [[SsspRounds.FuseBelowRows]] relax two hops per job. Each round's
+    * merged patch is `localCheckpoint`ed, so the lineage (and the task
+    * binary) stays constant however many rounds a long-diameter graph
+    * needs. Loop shuffle parallelism scales with the edge count
+    * ([[Rounds.loopPartitions]]).
     *
     * `maxRounds` bounds the loop at |V|−1 (Bellman-Ford guarantee for
     * non-negative weights) as a safety net against pathological input.
@@ -191,131 +184,8 @@ object GraphOps {
     * Output = nodes with out-edges ∪ nodes ever reached; unreachable
     * nodes with out-edges keep dist 65535.0 (SURVEY.md Q1/Q4).
     */
-  def sssp(
-      edges: DataFrame,
-      source: Long,
-      maxRounds: Int = Int.MaxValue): DataFrame = {
-    val session = edges.sparkSession
-    // Parquet count() is metadata-only — no data pass even at 100 TB.
-    val parts = loopPartitions(session, edges.count())
-    withLoopConfs(session, parts) {
-      val part = new org.apache.spark.HashPartitioner(parts)
-      // the one scan: parallel edges and self-loops stay in the index —
-      // the min-combine absorbs them, as the reference's reducer does
-      val index = edges
-        .select(col("src"), col("dst"), col("w"))
-        .rdd
-        .map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2))))
-        .partitionBy(part)
-        .mapPartitions(it => Iterator.single(SsspAdjacency(it)), preservesPartitioning = true)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      // base: (id, is_src) — every vertex, read again only by the final
-      // overlay; the loop itself touches only the patch
-      val base = index
-        .flatMap(a => a.ids.iterator.map(_ -> true) ++ a.dst.iterator.map(_ -> false))
-        .reduceByKey(part, _ || _)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val (nV, hasSource) = base
-        .mapPartitions { it =>
-          var n = 0L
-          var has = false
-          it.foreach { case (id, _) => n += 1; if (id == source) has = true }
-          Iterator.single((n, has))
-        }
-        .reduce((a, b) => (a._1 + b._1, a._2 || b._2))
-      // patch value: (dist, reached, updated-last-round); the seed is a
-      // narrow filter of base — no shuffle, no job
-      val seed = base.mapPartitions(
-        _.collect { case (id, _) if id == source => (id, (0.0, false, true)) },
-        preservesPartitioning = true)
-      def relax(frontier: RDD[(Long, Double)]): RDD[(Long, Double)] =
-        frontier
-          .zipPartitions(index)((fIt, aIt) => aIt.next().relax(fIt))
-          .reduceByKey(part, (a, b) => math.min(a, b))
-      val patch = roundLoop("sssp", seed, if (hasSource) 1L else 0L, maxRounds, nV)(_._3) {
-        (cur, at) =>
-          // TINY-FRONTIER BATCHING (VERDICT r15 #1; guide §1/§2): below the
-          // fuse bound, relax TWO Bellman-Ford hops in one job — hop 2
-          // propagates straight off hop 1's min-combined candidates. Exact
-          // because relaxation is monotone: a hop-1 candidate that does not
-          // beat the state only generates dominated hop-2 candidates, which
-          // the single merge-min discards; a node first reached at hop 1
-          // improves by definition (INF before), so its hop-2 fan-out uses
-          // the improved value. Each hop is a shuffle boundary, so a fused
-          // pair costs two shuffles and ONE dispatch/merge/readout instead
-          // of two of each.
-          val hops = if (at.changed < RddFuseBelowRows && at.left >= 2) 2L else 1L
-          val m1 = relax(cur.filter(_._2._3).mapValues(_._1))
-          val msgs =
-            if (hops == 2L)
-              // co-partitioned union (PartitionerAwareUnionRDD) — the final
-              // min-combine is narrow, the pair still shuffles only twice
-              m1.union(relax(m1)).reduceByKey(part, (a, b) => math.min(a, b))
-            else m1
-          (hops, cur.fullOuterJoin(msgs).mapValues {
-            case (Some((dist, _, _)), Some(c)) =>
-              if (c < dist) (c, true, true) else (dist, true, false)
-            case (Some((dist, rch, _)), None) => (dist, rch, false)
-            case (None, Some(c)) =>
-              if (c < INF) (c, true, true) else (INF, true, false)
-            case (None, None) => (INF, false, false) // unreachable
-          })
-      }
-      index.unpersist(false)
-      // one base overlay at the end — membership (Q4): nodes with
-      // out-edges ∪ nodes ever relaxed
-      import org.apache.spark.sql.types.{BooleanType, DoubleType, LongType, StructField, StructType}
-      val schema = StructType(Seq(
-        StructField("id", LongType, nullable = false),
-        StructField("dist", DoubleType, nullable = false),
-        StructField("updated", BooleanType, nullable = false)))
-      session.createDataFrame(
-        base
-          .leftOuterJoin(patch)
-          .filter { case (_, (isSrc, pOpt)) => isSrc || pOpt.exists(_._2) }
-          .map {
-            case (id, (_, pOpt)) =>
-              val (d, _, u) = pOpt.getOrElse((INF, false, false))
-              org.apache.spark.sql.Row(id, d, u)
-          },
-        schema)
-    }
-  }
-
-  /** One partition's out-edges in CSR form for [[sssp]]: sorted distinct
-    * source `ids`, `offsets` into the parallel `dst`/`w` arrays (edges of
-    * `ids(k)` are `offsets(k) until offsets(k + 1)`, in input order). A
-    * frontier id is found by binary search, so relaxing a frontier reads
-    * only its own out-edges, never the partition's whole edge list.
-    */
-  private final class SsspAdjacency(
-      val ids: Array[Long],
-      val offsets: Array[Int],
-      val dst: Array[Long],
-      val w: Array[Double])
-      extends Serializable {
-    def relax(frontier: Iterator[(Long, Double)]): Iterator[(Long, Double)] =
-      frontier.flatMap { case (id, d) =>
-        val k = java.util.Arrays.binarySearch(ids, id)
-        if (k < 0) Iterator.empty
-        else Iterator.range(offsets(k), offsets(k + 1)).map(j => (dst(j), d + w(j)))
-      }
-  }
-
-  private object SsspAdjacency {
-    def apply(edges: Iterator[(Long, (Long, Double))]): SsspAdjacency = {
-      val es = edges.toArray.sortBy(_._1) // stable: parallel edges keep input order
-      val ids = Array.newBuilder[Long]
-      val offsets = Array.newBuilder[Int]
-      var i = 0
-      while (i < es.length) {
-        if (i == 0 || es(i)._1 != es(i - 1)._1) { ids += es(i)._1; offsets += i }
-        i += 1
-      }
-      offsets += es.length
-      new SsspAdjacency(ids.result(), offsets.result(), es.map(_._2._1), es.map(_._2._2))
-    }
-  }
+  def sssp(edges: DataFrame, source: Long, maxRounds: Int = Int.MaxValue): DataFrame =
+    SsspRounds.sssp(edges, source, maxRounds)
 
   /** Final-result projection (the reference's `JobSeq=Last` pass,
     * `SingleSourceSP.java:285-288,484-508`): `(source, id, dist)`,
@@ -324,157 +194,8 @@ object GraphOps {
   def finalResult(state: DataFrame, source: Long): DataFrame =
     state.select(lit(source).as("source"), col("id"), col("dist"))
 
-  /** RDD-loop double-hop fuse bound (the [[sssp]] tiny-frontier batch):
-    * frontiers below this relax two hops per job. An RDD hop is a
-    * shuffle boundary, so fusing pays only the second hop's extra
-    * candidate fan-out — bounded by the fuse threshold times the
-    * frontier's 2-hop out-degree, KBs at the tail this targets.
-    */
-  private val RddFuseBelowRows = 4096L
-
-  /** Persist one RDD-loop round's state and cut its lineage: the
-    * round's count job caches every partition, after which
-    * `localCheckpoint` swaps the lineage for those cached blocks — no
-    * extra job. Without the cut each round's state is a narrow child of
-    * the previous round's, so the lineage and the serialized task grow
-    * by one link per round until a long-diameter graph overflows the
-    * stack. A cut RDD cannot be recomputed: unpersist it only once
-    * nothing reads it any more (Spark throws "Checkpoint block not
-    * found" otherwise).
-    */
-  private def checkpointedRound[T](rdd: RDD[T]): RDD[T] =
-    rdd.persist(StorageLevel.MEMORY_AND_DISK).localCheckpoint()
-
-  /** Where a [[roundLoop]] round starts: `done` rounds behind it, `left`
-    * before the bound, `changed` rows changed by the last one. */
-  private final case class RoundAt(done: Long, left: Long, changed: Long)
-
-  /** The one driver of the RDD fixpoint loops ([[sssp]],
-    * [[connectedComponents]], [[maskLoopRdd]] and the k-core [[peel]]),
-    * in the shape of the reference's driver loop
-    * (`SingleSourceSP.java:439-519`): a fixed job per round, stopped by
-    * a global counter. A loop state is an RDD keyed by node id under
-    * the loop's `HashPartitioner`. The caller passes only its
-    * algorithm:
-    *
-    *   round     = the next state, built LAZILY from the current one
-    *               (relax, combine, merge), and the rounds it covers (a
-    *               fused round covers two)
-    *   isChanged = the rows a round changed — the next frontier
-    *
-    * The driver owns the rest:
-    *
-    *   - the round counter, bounded by min(maxRounds, |V| − 1) (the
-    *     Bellman-Ford bound; a fixed-round loop passes
-    *     `nV = Long.MaxValue`) and, when `untilUnchanged`, stopped after
-    *     a round that changes nothing — the reference's Hadoop counter
-    *     (`:473-479`);
-    *   - [[checkpointedRound]] on every round's state;
-    *   - the round's ONE job: a pass over the new state counting its
-    *     changed rows and, for each of the caller's `sums`, summing it
-    *     over all rows (exact 64-bit sums, associative, so order-free
-    *     and deterministic — unlike accumulators, which can
-    *     double-count on retry; a caller with no sums pays nothing per
-    *     row beyond `isChanged`);
-    *   - freeing the superseded state once the new one is cut, and not
-    *     before (a cut RDD cannot be recomputed); without
-    *     `freeSuperseded` every state stays, for callers that read the
-    *     old ones later through `after`;
-    *   - the `GRAFT_LOOP_DEBUG` line per round.
-    *
-    * `seed` is the state before round 1 and `seedChanged` its changed
-    * rows; `after(rounds, changed, sums, state)` runs after each round's
-    * readout. Returns the last state, still persisted (the seed if no
-    * round ran).
-    */
-  private def roundLoop[V](
-      name: String,
-      seed: RDD[(Long, V)],
-      seedChanged: Long,
-      maxRounds: Long,
-      nV: Long,
-      untilUnchanged: Boolean = true,
-      freeSuperseded: Boolean = true)(
-      isChanged: V => Boolean,
-      sums: Seq[V => Long] = Nil,
-      after: (Long, Long, Array[Long], RDD[(Long, V)]) => Unit =
-        (_: Long, _: Long, _: Array[Long], _: RDD[(Long, V)]) => ())(
-      round: (RDD[(Long, V)], RoundAt) => (Long, RDD[(Long, V)])): RDD[(Long, V)] = {
-    val bound = math.min(maxRounds, math.max(1L, nV - 1L))
-    val debug = sys.env.contains("GRAFT_LOOP_DEBUG")
-    val fs = sums.toArray
-    val k = fs.length
-    var state = seed
-    var changed = seedChanged
-    var rounds = 0L
-    while (rounds < bound && (changed > 0 || !untilUnchanged)) {
-      val tRound = System.nanoTime()
-      val (hops, next) = round(state, RoundAt(rounds, bound - rounds, changed))
-      val superseded = state
-      state = checkpointedRound(next)
-      rounds += hops
-      val (c, tot) = state
-        .mapPartitions { it =>
-          var c = 0L
-          val s = new Array[Long](k)
-          it.foreach { case (_, v) =>
-            if (isChanged(v)) c += 1
-            var i = 0
-            while (i < k) { s(i) += fs(i)(v); i += 1 }
-          }
-          Iterator.single((c, s))
-        }
-        .reduce((a, b) => (a._1 + b._1, Array.tabulate(k)(i => a._2(i) + b._2(i))))
-      changed = c
-      after(rounds, changed, tot, state)
-      if (freeSuperseded) superseded.unpersist(false)
-      if (debug)
-        System.err.println(
-          f"[$name] round=$rounds%3d hops=$hops changed=$changed%7d " +
-            f"sec=${(System.nanoTime() - tRound) / 1e9}%5.2f")
-    }
-    state
-  }
-
-  /** Loop shuffle parallelism: ≈100k edges per partition, floor 4,
-    * capped at the session's configured shuffle partitions. At cluster
-    * scale the cap always wins (the configured parallelism is sized to
-    * the data); locally this stops a 15k-row state from paying 32-task
-    * scheduling overhead per round — the dominant cost of small
-    * iterative graphs.
-    */
-  private def loopPartitions(
-      session: org.apache.spark.sql.SparkSession,
-      nEdges: Long): Int = {
-    val configured = session.conf.get("spark.sql.shuffle.partitions", "200").toInt
-    math.max(4, math.min(configured, (nEdges / 100000L + 1L).toInt))
-  }
-
-  /** Run `body` with loop-tuned session confs — shuffle parallelism set
-    * to `parts`, AQE partition coalescing off (a coalesced output
-    * partitioning can't be reused by the next round's joins, which would
-    * force a state re-exchange per round) — restoring the caller's confs
-    * on exit. The confs act on the DataFrame steps only: the loops still
-    * planned by Catalyst and the edge and seed preparation of the RDD
-    * loops, whose rounds take `parts` from their `HashPartitioner`.
-    */
-  private def withLoopConfs[A](session: org.apache.spark.sql.SparkSession, parts: Int)(
-      body: => A): A = {
-    val shuffleKey = "spark.sql.shuffle.partitions"
-    val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
-    val prevShuffle = session.conf.get(shuffleKey, "200")
-    val prevCoalesce = session.conf.get(coalesceKey, "true")
-    session.conf.set(shuffleKey, parts.toString)
-    session.conf.set(coalesceKey, "false")
-    try body
-    finally {
-      session.conf.set(shuffleKey, prevShuffle)
-      session.conf.set(coalesceKey, prevCoalesce)
-    }
-  }
-
   /** Connected components over the UNDIRECTED closure of the edge list:
-    * iterative min-label propagation on [[roundLoop]] — one
+    * iterative min-label propagation on [[Rounds.roundLoop]] — one
     * co-partitioned join of last round's improved labels against the
     * edges, one min-combine shuffle, one narrow merge and ONE job per
     * round, zero Catalyst planning; converges in O(diameter) rounds.
@@ -484,53 +205,8 @@ object GraphOps {
     * Not in the reference (its two programs are SSSP and transpose), but
     * the natural second consumer of the iterate-until-converged machinery.
     */
-  def connectedComponents(edges: DataFrame, maxRounds: Int = Int.MaxValue): DataFrame = {
-    val session = edges.sparkSession
-    val parts = loopPartitions(session, edges.count() * 2)
-    withLoopConfs(session, parts) {
-      val part = new HashPartitioner(parts)
-      val eRdd = edges
-        .select(col("src"), col("dst"))
-        .rdd
-        .flatMap { r =>
-          val s = r.getLong(0); val d = r.getLong(1)
-          Iterator((s, d), (d, s))
-        }
-        .partitionBy(part)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      // state value: (label, improved last round); CC starts with EVERY
-      // node in the frontier (each proposes its own label to all
-      // neighbors)
-      val seed = eRdd
-        .map(_._1)
-        .distinct(parts)
-        .map(id => (id, (id, true)))
-        .partitionBy(part)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val nV = seed.count()
-      eRdd.count()
-      val state = roundLoop("connectedComponents", seed, nV, maxRounds, nV)(_._2) { (cur, _) =>
-        val msgs = cur
-          .filter(_._2._2)
-          .mapValues(_._1)
-          .join(eRdd)
-          .map { case (_, (lab, dst)) => (dst, lab) }
-          .reduceByKey(part, (a, b) => math.min(a, b))
-        (1L, cur.leftOuterJoin(msgs).mapValues {
-          case ((lab, _), Some(c)) if c < lab => (c, true)
-          case ((lab, _), _) => (lab, false)
-        })
-      }
-      eRdd.unpersist(false)
-      import org.apache.spark.sql.types.{LongType, StructField, StructType}
-      val schema = StructType(Seq(
-        StructField("id", LongType, nullable = false),
-        StructField("component", LongType, nullable = false)))
-      session.createDataFrame(
-        state.map { case (id, (lab, _)) => org.apache.spark.sql.Row(id, lab) },
-        schema)
-    }
-  }
+  def connectedComponents(edges: DataFrame, maxRounds: Int = Int.MaxValue): DataFrame =
+    ComponentRounds.connectedComponents(edges, maxRounds)
 
   /** Connected components by alternating large-star / small-star
     * contraction (Kiveris et al., "Connected Components in MapReduce and
@@ -547,224 +223,8 @@ object GraphOps {
     * Returns (id, component-min) for every node of the undirected
     * closure, like [[connectedComponents]] (shared oracle).
     */
-  def connectedComponentsStars(edges: DataFrame, maxRounds: Int = 64): DataFrame = {
-    // r16: the rounds run on RDDs — the same driver-floor finding as
-    // [[maskLoopRdd]]: a star round's Catalyst cost (two window
-    // exchanges + two distincts planned fresh every round, plus the
-    // checkpoint) was ~0.7 s while the pair set is KBs. One star here =
-    // one min-combine shuffle (the m(u) table), one co-partitioned join
-    // back, one pair-keyed distinct — all under ONE job per round, the
-    // (count, Σa, Σb) stability signature riding that job's action
-    // exactly like the DataFrame form's observed metrics. The math is
-    // verbatim Kiveris et al.: m(u) = min(Γ(u) ∪ {u}), large-star hooks
-    // strictly-greater neighbors onto m(u), small-star hooks ≤-neighbors
-    // and u itself; canonical (a < b) distinct set between stars.
-    val session = edges.sparkSession
-    val parts = loopPartitions(session, edges.count() * 2)
-    val part = new org.apache.spark.HashPartitioner(parts)
-    import org.apache.spark.rdd.RDD
-
-    // canonical undirected pair set (a < b), self-loops dropped,
-    // hash-partitioned on the pair for the distinct
-    def canon(pairs: RDD[(Long, Long)]): RDD[(Long, Long)] =
-      pairs
-        .filter { case (u, v) => u != v }
-        .map { case (u, v) => if (u < v) (u, v) else (v, u) }
-        .distinct(parts)
-    def directed(e: RDD[(Long, Long)]): RDD[(Long, Long)] =
-      e.flatMap { case (a, b) => Iterator((a, b), (b, a)) }
-
-    def star(e: RDD[(Long, Long)], large: Boolean): RDD[(Long, Long)] = {
-      val d = directed(e).partitionBy(part)
-      val m = d
-        .reduceByKey(part, (a, b) => math.min(a, b))
-        .map { case (u, mn) => (u, math.min(mn, u)) }
-      val withM = d.join(m) // co-partitioned — narrow
-      val hooked = withM.collect {
-        case (u, (v, mu)) if (large && v > u) || (!large && v <= u) => (v, mu)
-      }
-      canon(if (large) hooked else hooked.union(m))
-    }
-
-    // every vertex of the undirected closure (self-loop-only nodes
-    // included), to re-attach singleton components at the end
-    val verts =
-      edges.select(col("src").as("id")).unionAll(edges.select(col("dst").as("id"))).distinct()
-
-    // Cheap stability signature as a PREFILTER only: (count, sum a, sum b)
-    // can collide across distinct edge sets (e.g. {(1,4),(2,3)} vs
-    // {(1,3),(2,4)}), so a signature match is CONFIRMED by exact set
-    // equality before the loop stops — both sides are canonical distinct
-    // sets, so equal counts + empty next∖prev ⇒ equal sets.
-    def persistSig(rdd: RDD[(Long, Long)]): (RDD[(Long, Long)], (Long, Long, Long)) = {
-      val p = rdd.persist(StorageLevel.MEMORY_AND_DISK)
-      val s = p
-        .mapPartitions { it =>
-          var c = 0L; var sa = 0L; var sb = 0L
-          it.foreach { case (a, b) => c += 1; sa += a; sb += b }
-          Iterator.single((c, sa, sb))
-        }
-        .reduce((x, y) => (x._1 + y._1, x._2 + y._2, x._3 + y._3))
-      (p, s)
-    }
-    var (e, prev) = persistSig(
-      canon(edges.select(col("src"), col("dst")).rdd.map(r => (r.getLong(0), r.getLong(1)))))
-    var live: List[RDD[_]] = List(e)
-    var rounds = 0
-    var stable = false
-    val debug = sys.env.contains("GRAFT_LOOP_DEBUG")
-    while (!stable && rounds < maxRounds) {
-      val tRound = System.nanoTime()
-      val (next, s) = persistSig(star(star(e, large = true), large = false))
-      stable = s == prev && next.subtract(e).isEmpty()
-      prev = s
-      if (!stable) { live.foreach(_.unpersist(false)); live = List(next) }
-      e = next
-      rounds += 1
-      if (debug)
-        System.err.println(
-          f"[starCcRdd] round=$rounds%3d pairs=${s._1}%7d " +
-            f"sec=${(System.nanoTime() - tRound) / 1e9}%5.2f")
-    }
-    if (!stable)
-      throw new IllegalStateException(
-        s"connectedComponentsStars did not converge in $maxRounds rounds")
-    val compRdd = directed(e)
-      .reduceByKey(part, (a, b) => math.min(a, b))
-      .map { case (u, mn) => org.apache.spark.sql.Row(u, math.min(mn, u)) }
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val comp = session.createDataFrame(
-      compRdd,
-      StructType(Seq(
-        StructField("id", LongType, nullable = false),
-        StructField("c", LongType, nullable = false))))
-    verts
-      .join(comp, Seq("id"), "left_outer")
-      .select(col("id"), coalesce(col("c"), col("id")).as("component"))
-  }
-
-  // ---- the rank rounds: PageRank, Katz, HITS -------------------------------
-  //
-  // Each centrality's round is written once, as a lazy step from one
-  // score vector to the next that merges onto a persisted base (the node
-  // set with its per-node constants), so a chain of rounds stays
-  // constant-depth. The fixed forms chain `iters` steps with no job per
-  // round (HITS adds its two normalization totals); the residual forms
-  // run the same step on [[roundLoop]] over (before, after) pairs, whose
-  // one readout job per round counts the changed nodes and sums the L1
-  // residuals.
-
-  /** A non-null BIGINT schema with the columns `names`. */
-  private def longSchema(names: String*): org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    StructType(names.map(StructField(_, LongType, nullable = false)))
-  }
-
-  /** Runs `body` under [[withLoopConfs]] with the loop partitioner sized
-    * from |E|. */
-  private def inLoop[A](edges: DataFrame)(body: HashPartitioner => A): A = {
-    val parts = loopPartitions(edges.sparkSession, edges.count())
-    withLoopConfs(edges.sparkSession, parts)(body(new HashPartitioner(parts)))
-  }
-
-  /** The edge list keyed on `src` under `part`, persisted, with `value`
-    * of the `dst` end. `value` is applied after the exchange: a shuffle
-    * of bare (Long, Long) pairs runs on Kryo, one of nested tuples on
-    * Java serialization. */
-  private def keyedEdges[E: ClassTag](edges: DataFrame, part: HashPartitioner)(
-      value: Long => E): RDD[(Long, E)] =
-    edges
-      .select(col("src"), col("dst"))
-      .rdd
-      .map(r => (r.getLong(0), r.getLong(1)))
-      .partitionBy(part)
-      .mapValues(value)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-  /** `iters` rounds of `step` from `seed` on [[roundLoop]], one row per
-    * round: `round`, then the nodes that `changed` and each of `sums`
-    * over all nodes, named `columns` — the A4 convergence readout of the
-    * fixed-round centralities. The loop state is a node's (score before
-    * the round, score after it): the new scores join the current state
-    * narrowly (both under the loop partitioner), and the driver's one
-    * readout job per round yields every figure. No early stop and no
-    * |V| bound: a round that changes nothing reports its zeros, and so
-    * does every round on an empty graph.
-    */
-  private def residualRounds[X: ClassTag](
-      session: org.apache.spark.sql.SparkSession,
-      name: String,
-      seed: RDD[(Long, X)],
-      iters: Int,
-      columns: String*)(
-      changed: (X, X) => Boolean,
-      sums: ((X, X) => Long)*)(step: RDD[(Long, X)] => RDD[(Long, X)]): DataFrame = {
-    val rows = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-    roundLoop(name, seed.mapValues(x => (x, x)), 0L, iters, Long.MaxValue, untilUnchanged = false)(
-      v => changed(v._1, v._2),
-      sums.map(f => (v: (X, X)) => f(v._1, v._2)),
-      (r, c, s, _) => rows += org.apache.spark.sql.Row.fromSeq(r +: c +: s.toSeq)) { (cur, _) =>
-      (1L, cur.join(step(cur.mapValues(_._2))).mapValues { case ((_, x), y) => (x, y) })
-    }.unpersist(false)
-    session.createDataFrame(java.util.Arrays.asList(rows.toSeq: _*), longSchema("round" +: columns: _*))
-  }
-
-  /** Integer PageRank over the weighted edges `src → (dst, w)`, as a
-    * node's (out-weight, rank): the ranks before round 1 and the round.
-    *
-    * Seed: every source node with its out-weight Σw, the 10¹² rank mass
-    * split evenly over the nodes `isSeed` picks. One job — the seed
-    * count, which also materializes the edges and the out-weights. With
-    * no seed (an empty edge list, or a personalized run whose seed set
-    * is empty) every rank is 0: the oracle divides by the seed count
-    * only in its seed branch.
-    *
-    * Round, lazy: every node sends `pr·w div outWeight` along each
-    * out-edge (div before sum, so every engine adds the same integers),
-    * the contributions meet in ONE sum shuffle, and a narrow outer merge
-    * onto the persisted out-weights sets `teleport + 85·Σ div 100`, the
-    * teleport being 15% of a seed's share on the seeds and 0 elsewhere.
-    * Ranks and edges share one partitioner, so the probe join is narrow,
-    * and a chain of rounds stays constant-depth. Plain PageRank is
-    * `w = 1` (out-weight = out-degree); TextRank's `w` is the
-    * co-occurrence count.
-    */
-  private def pagerankOn[K: ClassTag](
-      edges: RDD[(K, (K, Long))],
-      part: HashPartitioner,
-      isSeed: K => Boolean): (RDD[(K, (Long, Long))], RDD[(K, (Long, Long))] => RDD[(K, (Long, Long))]) = {
-    val outW = edges.mapValues(_._2).reduceByKey(part, _ + _).persist(StorageLevel.MEMORY_AND_DISK)
-    val seeds = outW.filter(kv => isSeed(kv._1)).count()
-    val seedPr = if (seeds == 0L) 0L else 1000000000000L / seeds
-    val teleport = 15L * seedPr / 100L
-    def round(rank: RDD[(K, (Long, Long))]): RDD[(K, (Long, Long))] = {
-      val summed = rank
-        .join(edges)
-        .map { case (_, ((ow, pr), (dst, w))) => (dst, pr * w / ow) }
-        .reduceByKey(part, _ + _)
-      outW.leftOuterJoin(summed).mapPartitions(
-        _.map { case (id, (ow, s)) =>
-          (id, (ow, (if (isSeed(id)) teleport else 0L) + 85L * s.getOrElse(0L) / 100L))
-        },
-        preservesPartitioning = true)
-    }
-    val seed = outW.mapPartitions(
-      _.map { case (id, w) => (id, (w, if (isSeed(id)) seedPr else 0L)) },
-      preservesPartitioning = true)
-    (seed, round)
-  }
-
-  /** `iters` [[pagerankOn]] rounds as one lazy chain — no per-round
-    * scalar, so the rounds run as `iters` shuffle stages of the job
-    * that reads the result. Returns (node, rank). */
-  private[operators] def pagerankRdd[K: ClassTag](
-      edges: RDD[(K, (K, Long))],
-      part: HashPartitioner,
-      iters: Int,
-      isSeed: K => Boolean): RDD[(K, Long)] = {
-    val (seed, round) = pagerankOn(edges, part, isSeed)
-    (1 to iters).foldLeft(seed)((r, _) => round(r)).mapValues(_._2)
-  }
+  def connectedComponentsStars(edges: DataFrame, maxRounds: Int = 64): DataFrame =
+    ComponentRounds.connectedComponentsStars(edges, maxRounds)
 
   /** Fixed-point (integer-scaled) PageRank, `iters` rounds, damping 0.85.
     *
@@ -790,20 +250,12 @@ object GraphOps {
     * `iters` is verified against the fixed point instead of trusted
     * blind.
     *
-    * Scale shape: [[pagerankFixed]]'s rounds on [[roundLoop]], one job
+    * Scale shape: [[pagerankFixed]]'s rounds on [[Rounds.roundLoop]], one job
     * per round — the readout of both figures from the state's (before,
     * after) pair; bounded by `iters` rows total, never data-scale.
     */
-  def pagerankResiduals(edges: DataFrame, iters: Int = 3): DataFrame = inLoop(edges) { part =>
-    val eRdd = keyedEdges(edges, part)(dst => (dst, 1L))
-    val (seed, round) = pagerankOn(eRdd, part, (_: Long) => true)
-    val out = residualRounds(
-      edges.sparkSession, "pagerankResiduals", seed, iters, "n_changed", "resid_l1_pico")(
-      (p, c) => p._2 != c._2,
-      (p, c) => math.abs(c._2 - p._2))(round)
-    eRdd.unpersist(false)
-    out
-  }
+  def pagerankResiduals(edges: DataFrame, iters: Int = 3): DataFrame =
+    RankRounds.pagerankResiduals(edges, iters)
 
   /** The [[pagerankFixed]] CTE chain (r0..r`iters`), shared by the
     * residual oracle — textually the same iteration as the
@@ -858,140 +310,7 @@ object GraphOps {
     * bit-identical on any engine.
     */
   def pagerankPersonalized(edges: DataFrame, iters: Int, seedMod: Long = 100L): DataFrame =
-    inLoop(edges) { part =>
-      val eRdd = keyedEdges(edges, part)(dst => (dst, 1L))
-      // floorMod ≡ SQL pmod on any sign
-      val rank = pagerankRdd(eRdd, part, iters, (id: Long) => java.lang.Math.floorMod(id, seedMod) == 0L)
-      val out = edges.sparkSession.createDataFrame(
-        rank.map { case (id, pr) => org.apache.spark.sql.Row(id, pr) },
-        longSchema("id", "pr"))
-      eRdd.unpersist(false)
-      out
-    }
-
-  /** RDD core of the mask loop — same rounds, same integer math, zero
-    * Catalyst work per round.
-    *
-    * The r16 finding: at the loop regime the per-round floor is the
-    * DRIVER — analyzer/optimizer passes plus AQE stage re-planning on a
-    * fresh ~40-node plan every round cost 0.35–0.45 s while the tasks
-    * move KBs (measured on graph_bowtie: identical rounds at 0.16 s on
-    * raw RDDs, under 0.1 s with the one-action round below). A round on
-    * [[roundLoop]] is three co-partitioned narrow ops plus ONE shuffle
-    * and ONE job:
-    *
-    *   msgs    = changed ⋈ edges (both hash(parts) — narrow), gated
-    *             masks, reduceByKey(bit_or)         — the one exchange
-    *   merged  = state ⟕ msgs (narrow), keeping (old, new, extras)
-    *   action  = the driver's readout: the changed count AND the
-    *             caller's estimator sum `estOf` over the new masks
-    *
-    * `extras` are per-node Long accumulators folded once per round
-    * from (extras, old masks, new masks, h) inside the merge — the
-    * harmonic/closeness per-node readouts that the DataFrame loop paid
-    * a join-plus-checkpoint per round for. All arithmetic is the same
-    * exact integer math as the SQL mirrors.
-    *
-    * At 100 TB the shapes are identical to the DataFrame loop's (the
-    * partitioner is even stickier: every join in the loop is provably
-    * co-partitioned), only the per-round constant changes.
-    */
-  private def maskLoopRdd(
-      e: DataFrame,
-      seed: DataFrame,
-      nMasks: Int,
-      maxRounds: Int,
-      earlyExit: Boolean,
-      freeSuperseded: Boolean,
-      parts: Int,
-      gated: Boolean = false,
-      extraInit: (Long, Array[Long]) => Array[Long] = null,
-      extraFold: (Array[Long], Array[Long], Array[Long], Int) => Array[Long] = null,
-      estOf: Array[Long] => Long = _ => 0L)(
-      onRound: (Int, Long, Long, RDD[(Long, Array[Long])]) => Unit = (_, _, _, _) => ())
-      : RDD[(Long, (Array[Long], Array[Long]))] = {
-    val K = nMasks
-    val part = new HashPartitioner(parts)
-    val eRdd = (if (gated) e.rdd.map(r => (r.getLong(0), (r.getLong(1), r.getLong(2))))
-                else e.rdd.map(r => (r.getLong(0), (r.getLong(1), -1L))))
-      .partitionBy(part)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val init = extraInit
-    val fold = extraFold
-    // state value: (masks before the last round, masks after it,
-    // extras); the seed's "before" is all zero, so its changed rows are
-    // exactly the nodes holding a seed bit
-    val zero = new Array[Long](K)
-    val state0 = seed.rdd
-      .map { r =>
-        val id = r.getLong(0)
-        val m = Array.tabulate(K)(s => r.getLong(s + 1))
-        (id, (zero, m, if (init == null) Array.emptyLongArray else init(id, m)))
-      }
-      .partitionBy(part)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // reference equality is only a fast path — a cached block that
-    // spilled and was re-read deserializes old/new as distinct objects
-    def changed(v: (Array[Long], Array[Long], Array[Long])): Boolean =
-      !((v._1 eq v._2) || java.util.Arrays.equals(v._1, v._2))
-    val changed0 = state0.filter(r => changed(r._2)).count() // materializes the seed
-    eRdd.count()
-    val last = roundLoop("maskLoop", state0, changed0, maxRounds, Long.MaxValue,
-      untilUnchanged = earlyExit, freeSuperseded = freeSuperseded)(
-      changed,
-      sums = Seq(v => estOf(v._2)),
-      after = (h, changedCount, est, merged) =>
-        onRound(h.toInt, changedCount, est(0), merged.filter(r => changed(r._2)).mapValues {
-          case (m, n, _) =>
-            val d = new Array[Long](n.length); var i = 0
-            while (i < n.length) { d(i) = n(i) & ~m(i); i += 1 }; d
-        })) { (cur, at) =>
-      val h = (at.done + 1).toInt
-      val msgs = cur
-        .filter(r => changed(r._2))
-        .mapValues(_._2)
-        .join(eRdd)
-        .map { case (_, (m, (dst, gate))) =>
-          (dst, if (gate == -1L) m else { val g = new Array[Long](m.length); var i = 0; while (i < m.length) { g(i) = m(i) & gate; i += 1 }; g })
-        }
-        .reduceByKey(part, (a, b) => {
-          val r = new Array[Long](a.length); var i = 0
-          while (i < a.length) { r(i) = a(i) | b(i); i += 1 }; r
-        })
-      (1L, cur.leftOuterJoin(msgs).mapValues {
-        case ((_, m, ex), dOpt) =>
-          val n = dOpt match {
-            case Some(d) =>
-              val r = new Array[Long](m.length); var i = 0
-              var same = true
-              while (i < m.length) { r(i) = m(i) | d(i); if (r(i) != m(i)) same = false; i += 1 }
-              if (same) m else r
-            case None => m
-          }
-          (m, n, if (fold == null) ex else fold(ex, m, n, h))
-      })
-    }
-    eRdd.unpersist(false)
-    last.mapValues { case (_, n, ex) => (n, ex) }
-  }
-
-  /** The final mask state of [[maskLoopRdd]] as a DataFrame
-    * `(id, m0..m{K-1}[, x0..x{E-1}])`. */
-  private def maskStateDf(
-      session: org.apache.spark.sql.SparkSession,
-      state: org.apache.spark.rdd.RDD[(Long, (Array[Long], Array[Long]))],
-      nMasks: Int,
-      nExtras: Int = 0): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val schema = StructType(
-      StructField("id", LongType, nullable = false) +:
-        ((0 until nMasks).map(s => StructField(s"m$s", LongType, nullable = false)) ++
-          (0 until nExtras).map(x => StructField(s"x$x", LongType, nullable = false))))
-    val rows = state.map { case (id, (m, ex)) =>
-      org.apache.spark.sql.Row.fromSeq(id +: (m.toSeq ++ ex.toSeq))
-    }
-    session.createDataFrame(rows, schema)
-  }
+    RankRounds.pagerankPersonalized(edges, iters, seedMod)
 
   /** Multi-source BFS: all `nSources` traversals advance in ONE loop
     * via a per-node reachability BITMASK (Then et al., VLDB 2015, "The
@@ -1009,7 +328,7 @@ object GraphOps {
     * with its mask and source count `(id, reach_mask, n_sources)`.
     *
     * Scale shape: edges are exchanged once and reused every round; the
-    * rounds are [[maskLoopRdd]]'s — only the masks that changed last
+    * rounds are [[MaskRounds.maskLoopRdd]]'s — only the masks that changed last
     * round are sent, one OR-combine shuffle and one job per round, early
     * exit on an empty changed set (result-identical: frozen masks). The
     * round state is checkpointed every round; the mask never exceeds 8
@@ -1094,7 +413,7 @@ object GraphOps {
     * monotone OR makes "first time a bit appears" well-defined — and
     * those bits join the output with the round number.
     *
-    * The loop is the shared [[maskLoopRdd]]: only the masks that
+    * The loop is the shared [[MaskRounds.maskLoopRdd]]: only the masks that
     * changed last round are sent, so a round costs ∝ |changed| — the
     * regime this operator exists for is rounds ≈ graph diameter, where
     * trailing rounds cost ~zero. The changed set doubles as the arrival set: the per-round
@@ -1143,14 +462,7 @@ object GraphOps {
       var arr: org.apache.spark.rdd.RDD[(Long, Long, Long)] =
         session.sparkContext.emptyRDD[(Long, Long, Long)]
       maskLoopRdd(e, seed, 1, rounds, earlyExit = true, freeSuperseded = false, parts)(
-        (h, _, _, delta) => {
-          val hL = h.toLong
-          arr = arr.union(delta.flatMap { case (id, d) =>
-            (0 until nL).iterator
-              .filter(b => ((d(0) >> b) & 1L) == 1L)
-              .map(b => (id, b + 1L, hL))
-          })
-        })
+        (h, _, _, delta) => arr = arr.union(MaskRounds.bitArrivals(delta, nL, h.toLong)))
       import org.apache.spark.sql.types.{LongType, StructField, StructType}
       val schema = StructType(Seq(
         StructField("id", LongType, nullable = false),
@@ -1456,7 +768,7 @@ object GraphOps {
   /** The FM readout as a Scala function over a mask row — the exact twin
     * of the SQL `LUT[Σ_s (length(bin(m_s ^ (m_s + 1))) − 1) + 1]`:
     * `numberOfTrailingZeros(~m)` IS the lowest zero bit. Used by the
-    * [[maskLoopRdd]] per-round estimator sum (exact integer, order-free).
+    * [[MaskRounds.maskLoopRdd]] per-round estimator sum (exact integer, order-free).
     */
   private def anfEstOf(nSketches: Int): Array[Long] => Long = {
     val lut = anfLut(nSketches).toArray
@@ -1478,7 +790,7 @@ object GraphOps {
     * BigP, extracted via `bin()` string arithmetic — no libm); a round
     * ORs each node's masks into its out-neighbors' (the same monotone
     * propagation as [[multiSourceBfs]], run through the shared
-    * [[maskLoopRdd]] — only masks that grew re-send); after h rounds,
+    * [[MaskRounds.maskLoopRdd]] — only masks that grew re-send); after h rounds,
     * node u's mask s holds
     * the FM sketch of Ball(u, h), its lowest zero bit read by the
     * `m XOR (m+1)` trick, and u's ball estimate `2^(mean_s R_s)/0.77351`
@@ -1561,7 +873,7 @@ object GraphOps {
       // h = 0 is deliberately NOT emitted: N(0) = |V| exactly, and a
       // 1-node ball sits below the FM estimator's asymptotic regime.
       // Per-h rows are ≤ `rounds` scalars — the estimator sum rides the
-      // round action of [[maskLoopRdd]], in the same exact 64-bit
+      // round action of [[MaskRounds.maskLoopRdd]], in the same exact 64-bit
       // integer arithmetic as the SQL (nonneg operands: Scala / ≡ SQL div)
       val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
       // earlyExit=false: one output row per h ∈ [1, rounds] is the
@@ -1666,7 +978,7 @@ object GraphOps {
     * anywhere (the Σ_u |B(u,h)| pair table that bounds [[anf]]'s
     * harness rounds is exactly what this entry point avoids — [[anf]]
     * keeps it as the spec-level verification column). The loop is the
-    * shared [[maskLoopRdd]] with early exit: round h runs only
+    * shared [[MaskRounds.maskLoopRdd]] with early exit: round h runs only
     * while the previous round changed some mask, so on a
     * small-diameter graph the table stops at saturation instead of
     * paying `maxRounds` no-op rounds. Per-round cost: one edge join +
@@ -1781,7 +1093,7 @@ object GraphOps {
   /** Convergence trace for the FM/ANF sketch loop — the A4 readout for
     * [[anf]]/[[anfEstimate]], matching [[katzResiduals]]: one row per
     * hop with the number of nodes whose K-mask tuple grew that round
-    * (the [[maskLoopRdd]] `changed` count, surfaced instead of
+    * (the [[MaskRounds.maskLoopRdd]] `changed` count, surfaced instead of
     * internal) and the round's N(h) estimate, so sketch saturation is
     * verified — n_changed hitting 0 IS the fixed point the early-exit
     * production loop keys on.
@@ -2267,7 +1579,7 @@ object GraphOps {
     * Runs on the UNDIRECTED closure (the standard effective-diameter
     * setting; the directed lineitem graph is bipartite with sinks, so
     * its directed balls saturate at h = 1). The loop is the shared
-    * [[maskLoopRdd]]; once the wave passes, rounds cost ∝ |changed| and
+    * [[MaskRounds.maskLoopRdd]]; once the wave passes, rounds cost ∝ |changed| and
     * the loop EXITS early — convergence read from the same readout job
     * that carries the per-round estimate, the
     * [[anf]] analogue of SSSP's A4 counter. Early exit is
@@ -2318,7 +1630,7 @@ object GraphOps {
         .select(col("id") +: rhoCols: _*)
         .select(col("id") +: maskInit: _*)
       // the per-h estimate is ONE scalar: Σ_u LUT[Σ_s ρ_s(u)] over the
-      // round's NEW masks, riding the round action of [[maskLoopRdd]] —
+      // round's NEW masks, riding the round action of [[MaskRounds.maskLoopRdd]] —
       // no per-round readout aggregate, no per-round isEmpty action
       // (the r8 finding: those cost 3–4× the loop itself). Convergence
       // reads the same round action (the changed count).
@@ -2763,49 +2075,6 @@ object GraphOps {
        |                        sqrt(CAST(m * syy - sy * sy AS DOUBLE))), 6) END AS r
        |FROM a""".stripMargin
 
-  /** HITS over the DISTINCT edges, as score vectors over every node:
-    * the hubs before round 1 (10⁶ each) and the round, which maps the
-    * hubs to (authorities, next hubs). One job materializes the edges
-    * and the node set. The distinct stays on the DataFrame (codegen'd
-    * UnsafeRow exchange): an RDD pair-keyed distinct Java-serializes
-    * every tuple — measured 2.8 s vs sub-second for the same 590 k rows.
-    *
-    * A round is two half-rounds: authority = Σ of the in-neighbors'
-    * hubs, then hub = Σ of the out-neighbors' new authorities. A
-    * half-round is a narrow probe join, ONE transpose-sum shuffle (it
-    * re-keys |E| rows to the other endpoint) and one job for the L1
-    * total; the normalized vector is a narrow outer merge onto the
-    * persisted node set, evaluated lazily by the next half-round. A
-    * zero total (an empty graph) normalizes to 0 instead of dividing by
-    * it.
-    */
-  private def hitsOn(edges: DataFrame, part: HashPartitioner)
-      : (RDD[(Long, Long)], RDD[(Long, Long)] => (RDD[(Long, Long)], RDD[(Long, Long)])) = {
-    val e0 = Phys
-      .materialized(edges.select(col("src"), col("dst")).distinct())
-      .rdd
-      .map(r => (r.getLong(0), r.getLong(1)))
-    val eS = e0.partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
-    val eD = e0.map(_.swap).partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = e0
-      .flatMap { case (s, d) => Iterator((s, 0L), (d, 0L)) }
-      .reduceByKey(part, (a, _) => a)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    nodes.count()
-    def half(score: RDD[(Long, Long)], e: RDD[(Long, Long)]): RDD[(Long, Long)] = {
-      val raw = score
-        .join(e)
-        .map { case (_, (v, to)) => (to, v) }
-        .reduceByKey(part, _ + _)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val tot = raw.values.fold(0L)(_ + _) // exact 64-bit sum, order-free
-      nodes.leftOuterJoin(raw).mapValues { case (_, o) =>
-        if (tot == 0L) 0L else o.getOrElse(0L) * 1000000L / tot
-      }
-    }
-    (nodes.mapValues(_ => 1000000L), h => { val a = half(h, eS); (a, half(a, eD)) })
-  }
-
   /** HITS hubs & authorities (Kleinberg 1999), in exact micro-unit
     * integer arithmetic: per round, authority = Σ of in-neighbors'
     * hub scores and hub = Σ of out-neighbors' authorities, each
@@ -2815,46 +2084,26 @@ object GraphOps {
     * the two sides are genuinely different readings: hubs = diverse
     * orders, authorities = popular parts.
     *
-    * Scale shape: each half-round of [[hitsOn]] is ONE edge join + a
+    * Scale shape: each half-round of [[RankRounds.hitsOn]] is ONE edge join + a
     * sum shuffle keyed on a node id, plus one job for the 1-row
     * normalization total — the same class as a PageRank round.
     *
     * Output: every node with `(id, hub_micro, auth_micro)` (0 where a
     * side never receives mass).
     */
-  def hits(edges: DataFrame, iters: Int = 3): DataFrame = inLoop(edges) { part =>
-    val (h0, round) = hitsOn(edges, part)
-    val (h, a) = (1 to iters).foldLeft((h0, h0.mapValues(_ => 0L))) { case ((h, _), _) =>
-      val (a, hn) = round(h)
-      (hn, a)
-    }
-    edges.sparkSession.createDataFrame(
-      h.join(a).map { case (id, (hv, av)) => org.apache.spark.sql.Row(id, hv, av) },
-      longSchema("id", "hub_micro", "auth_micro"))
-  }
+  def hits(edges: DataFrame, iters: Int = 3): DataFrame = RankRounds.hits(edges, iters)
 
   /** Convergence trace for [[hits]] — the A4 readout: one row per round
     * with changed-vertex counts and L1 residuals (micro-units) for BOTH
     * score vectors (`a_0 ≡ 0`, so round 1's authority residual is the
     * initial mass). A user reads the last row to confirm the shipped
     * `iters` reached (or how far it sits from) the fixed point. Same
-    * rounds as [[hits]] on [[roundLoop]]: per round its two
+    * rounds as [[hits]] on [[Rounds.roundLoop]]: per round its two
     * normalization jobs plus the one readout job for all four figures
     * (bounded by `iters` rows).
     */
-  def hitsResiduals(edges: DataFrame, iters: Int = 3): DataFrame = inLoop(edges) { part =>
-    val (h0, round) = hitsOn(edges, part)
-    // a node's score is (hub, authority)
-    residualRounds(edges.sparkSession, "hitsResiduals", h0.mapValues(h => (h, 0L)), iters,
-      "hub_changed", "hub_resid_micro", "auth_changed", "auth_resid_micro")(
-      (p, c) => p._1 != c._1,
-      (p, c) => math.abs(c._1 - p._1),
-      (p, c) => if (p._2 != c._2) 1L else 0L,
-      (p, c) => math.abs(c._2 - p._2)) { x =>
-      val (a, h) = round(x.mapValues(_._1))
-      h.join(a)
-    }
-  }
+  def hitsResiduals(edges: DataFrame, iters: Int = 3): DataFrame =
+    RankRounds.hitsResiduals(edges, iters)
 
   /** [[hitsResiduals]] mirrored: the [[hitsSql]] chain + an all-zero
     * a0 and per-round diffs. */
@@ -3053,112 +2302,14 @@ object GraphOps {
        |SELECT a, b, sup FROM fin ORDER BY a, b""".stripMargin
   }
 
-  /** The undirected simple graph of `edges` for the peel loops:
-    * parallel edges and self-loops dropped, both directions kept (so
-    * out-degree == undirected degree), hash-partitioned on the source
-    * by `part` and persisted.
-    */
-  private def undirectedSimple(edges: DataFrame, part: HashPartitioner): RDD[(Long, Long)] =
-    edges
-      .filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")), greatest(col("src"), col("dst")))
-      .distinct()
-      .rdd
-      .flatMap { r =>
-        val a = r.getLong(0); val b = r.getLong(1)
-        Iterator((a, b), (b, a))
-      }
-      .partitionBy(part)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-  /** The k-core deletion cascade on [[roundLoop]], in the
-    * [[connectedComponents]] shape. State `id → (remaining degree,
-    * died last round)`, degree −1 = dead, over `und`
-    * ([[undirectedSimple]]). The seed kills every node of degree below
-    * k. A round's frontier is the nodes that died last round: each
-    * sends one decrement per edge (`frontier ⋈ und`, summed per
-    * neighbor — the round's one shuffle), and an alive node whose
-    * degree falls below k dies in turn. Only deaths count as changed,
-    * so a death cascades exactly once and the loop stops after a round
-    * that kills nobody. Returns the final state, still persisted.
-    */
-  private def peel(
-      und: RDD[(Long, Long)],
-      k: Int,
-      part: HashPartitioner): RDD[(Long, (Long, Boolean))] = {
-    val seed = und
-      .mapValues(_ => 1L)
-      .reduceByKey(part, _ + _) // narrow: und is already on `part`
-      .mapValues(deg => if (deg < k) (-1L, true) else (deg, false))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nV = seed.count()
-    val dead = seed.filter(_._2._2).count()
-    roundLoop("kCore", seed, dead, Long.MaxValue, nV)(_._2) { (cur, _) =>
-      // frontier ⋈ und, co-partitioned: each partition's dead set probes
-      // its own edges in one pass, with no hash table over the edges
-      val decs = cur
-        .filter(_._2._2)
-        .zipPartitions(und) { (fIt, eIt) =>
-          val died = fIt.map(_._1).toSet
-          if (died.isEmpty) Iterator.empty
-          else eIt.collect { case (s, nbr) if died(s) => (nbr, 1L) }
-        }
-        .reduceByKey(part, _ + _)
-      (1L, cur.leftOuterJoin(decs).mapValues {
-        case ((deg, _), Some(dec)) if deg >= 0 =>
-          if (deg - dec < k) (-1L, true) else (deg - dec, false)
-        case ((deg, _), _) => (deg, false)
-      })
-    }
-  }
-
   /** k-core decomposition: iteratively peel nodes whose degree in the
     * surviving induced subgraph is below k, until a fixpoint — the
-    * deletion cascade of [[peel]] on the round driver shared with
+    * deletion cascade of [[ComponentRounds.peel]] on the round driver shared with
     * SSSP/CC. Returns every node of the undirected simple graph with
     * its membership flag — the densest-region filter a graph pipeline
     * runs before expensive per-node work.
     */
-  def kCore(edges: DataFrame, k: Int): DataFrame = {
-    val session = edges.sparkSession
-    val parts = loopPartitions(session, edges.count() * 2)
-    withLoopConfs(session, parts) {
-      val part = new HashPartitioner(parts)
-      val und = undirectedSimple(edges, part)
-      val state = peel(und, k, part)
-      und.unpersist(false)
-      import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
-      session.createDataFrame(
-        state.map { case (id, (deg, _)) => org.apache.spark.sql.Row(id, deg >= 0) },
-        StructType(Seq(
-          StructField("id", LongType, nullable = false),
-          StructField("in_core", BooleanType, nullable = false))))
-    }
-  }
-
-  /** Katz over the edges `src → dst`, as scores over every vertex
-    * (src ∪ dst), milli-units: the scores before round 1 (1000 each) and
-    * the round. One job materializes the edges and the vertex set.
-    * Round, lazy: each vertex sends its score along every out-edge
-    * (co-partitioned probe join, narrow), the scores meet in ONE sum
-    * shuffle, and a narrow outer merge onto the persisted vertex set
-    * sets `1000 + Σ div 8`. */
-  private def katzOn(edges: RDD[(Long, Long)], part: HashPartitioner)
-      : (RDD[(Long, Long)], RDD[(Long, Long)] => RDD[(Long, Long)]) = {
-    val verts = edges
-      .flatMap { case (s, d) => Iterator((s, 0L), (d, 0L)) }
-      .reduceByKey(part, (a, _) => a)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    verts.count()
-    def round(x: RDD[(Long, Long)]): RDD[(Long, Long)] = {
-      val summed = x
-        .join(edges)
-        .map { case (_, (kz, dst)) => (dst, kz) }
-        .reduceByKey(part, _ + _)
-      verts.leftOuterJoin(summed).mapValues { case (_, s) => 1000L + s.getOrElse(0L) / 8L }
-    }
-    (verts.mapValues(_ => 1000L), round)
-  }
+  def kCore(edges: DataFrame, k: Int): DataFrame = ComponentRounds.kCore(edges, k)
 
   /** Katz centrality (Katz 1953) in exact integer milli-units: the
     * path-counting centrality `x ← β + α·Aᵀx` — every incoming walk of
@@ -3177,18 +2328,7 @@ object GraphOps {
     * (src ∪ dst): Katz is defined on sinks too, where PageRank's
     * out-degree normalization keeps them source-only.
     */
-  def katzFixed(edges: DataFrame, iters: Int = 3): DataFrame = inLoop(edges) { part =>
-    // no per-round scalar ⇒ the whole chain is lazy: one job, `iters`
-    // shuffle stages
-    val eRdd = keyedEdges(edges, part)(identity)
-    val (x0, round) = katzOn(eRdd, part)
-    val x = (1 to iters).foldLeft(x0)((x, _) => round(x))
-    val out = edges.sparkSession.createDataFrame(
-      x.map { case (id, kz) => org.apache.spark.sql.Row(id, kz) },
-      longSchema("id", "kz"))
-    eRdd.unpersist(false)
-    out
-  }
+  def katzFixed(edges: DataFrame, iters: Int = 3): DataFrame = RankRounds.katzFixed(edges, iters)
 
   /** The shared x0..x`iters` Katz round CTE prologue (no final SELECT). */
   private def katzChainCtes(edgesSql: String, iters: Int): String = {
@@ -3220,21 +2360,13 @@ object GraphOps {
     * shipped round count sits at the fixed point (resid 0) or how far
     * off it is, instead of trusting `iters` blind.
     *
-    * Scale shape: [[katzFixed]]'s rounds on [[roundLoop]], one job per
+    * Scale shape: [[katzFixed]]'s rounds on [[Rounds.roundLoop]], one job per
     * round — the readout of both figures from the state's (before,
     * after) pair, collected to the driver (the global-counter
     * discipline — bounded by `iters` rows total, never data-scale).
     */
-  def katzResiduals(edges: DataFrame, iters: Int = 3): DataFrame = inLoop(edges) { part =>
-    val eRdd = keyedEdges(edges, part)(identity)
-    val (x0, round) = katzOn(eRdd, part)
-    val out = residualRounds(
-      edges.sparkSession, "katzResiduals", x0, iters, "n_changed", "resid_l1_milli")(
-      (p, c) => p != c,
-      (p, c) => math.abs(c - p))(round)
-    eRdd.unpersist(false)
-    out
-  }
+  def katzResiduals(edges: DataFrame, iters: Int = 3): DataFrame =
+    RankRounds.katzResiduals(edges, iters)
 
   /** [[katzResiduals]] mirrored: the same chain, per-round diffs. */
   def katzResidualsSql(edgesSql: String, iters: Int = 3): String = {
@@ -3248,6 +2380,14 @@ object GraphOps {
     s"""WITH ${katzChainCtes(edgesSql, iters)}
        |SELECT * FROM ($diffs) ORDER BY round""".stripMargin
   }
+
+  /** Broadcast-membership gate for [[densestSubgraph]]'s peel rounds:
+    * alive sets up to this many ids ride the round as a sorted long
+    * array (8 B/id ⇒ 64 MB at the cap — the corenessHIndex
+    * broadcast-state budget); larger sets fall back to the shuffled
+    * membership join.
+    */
+  val DensestBroadcastMaxNodes = 8000000L
 
   /** Parallel densest-subgraph peel (Bahmani, Kumar & Vassilvitskii,
     * VLDB 2012, ε = 1/2): per round, ALL nodes whose degree in the
@@ -3267,127 +2407,16 @@ object GraphOps {
     * densest region and how fast does the graph thin toward it" — the
     * community/fraud-mining read.
     *
-    * Scale shape: each round is two alive-set semi-joins + one degree
-    * aggregate + one 1-row total (cross-joined in-plan, never a driver
-    * action); the alive set geometrically shrinks, so total work is
-    * O(|E| · log |V|) with NO pair tables and no global sort. Output:
-    * one row per non-empty round `(round, n_nodes, n_edges,
-    * density_ppm, avg_deg_ppm)`.
+    * Scale shape: each round is one alive-set membership pass (a
+    * broadcast sorted id array up to [[DensestBroadcastMaxNodes]], two
+    * semi-joins above it) + one degree aggregate + one job for the
+    * round's (|V|, Σdeg) totals; the alive set geometrically shrinks,
+    * so total work is O(|E| · log |V|) with NO pair tables and no
+    * global sort. Output: one row per non-empty round `(round, n_nodes,
+    * n_edges, density_ppm, avg_deg_ppm)`.
     */
-  /** Broadcast-membership gate for [[densestSubgraph]]'s peel rounds:
-    * alive sets up to this many ids ride the round as a sorted long
-    * array (8 B/id ⇒ 64 MB at the cap — the corenessHIndex
-    * broadcast-state budget); larger sets fall back to the shuffled
-    * membership join.
-    */
-  val DensestBroadcastMaxNodes = 8000000L
-
-  def densestSubgraph(edges: DataFrame, maxRounds: Int = 12): DataFrame = {
-    val session = edges.sparkSession
-    val parts = loopPartitions(session, edges.count() * 2)
-    withLoopConfs(session, parts) {
-      // RDD bulk-peel rounds: per round ONE alive-filter shuffle (the
-      // dst-side membership re-key) + one degree-sum shuffle + one
-      // (|V|, Σdeg) action — the per-round profile row and the peel
-      // threshold are driver scalars off that action's exact sums. The
-      // alive set shrinks ≥ 1.5× per round, and an emptied graph exits
-      // early (the DataFrame form ran the remaining rounds on empty
-      // aggregates; they emit no rows either way).
-      val simple = Phys.materialized(
-        edges
-          .filter(col("src") =!= col("dst"))
-          .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
-          .distinct())
-      val part = new org.apache.spark.HashPartitioner(parts)
-      val und = simple.rdd
-        .flatMap { r =>
-          val a = r.getLong(0); val b = r.getLong(1)
-          Iterator((a, b), (b, a))
-        }
-        .partitionBy(part)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      var alive: org.apache.spark.rdd.RDD[(Long, Long)] = und
-        .mapValues(_ => 0L)
-        .reduceByKey(part, (a, _) => a)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      var aliveCount = alive.count() // materializes und + alive
-      val profile = scala.collection.mutable.ArrayBuffer[(Long, Long, Long, Long, Long)]()
-      var live: List[org.apache.spark.rdd.RDD[_]] = List(alive)
-      var i = 0
-      var drained = false
-      while (i < maxRounds && !drained) {
-        // deg over the alive-induced subgraph. Fast path (the
-        // corenessHIndex broadcast-state gate): while the alive set fits
-        // comfortably in an executor (≤ 8 M ids = 64 MB sorted array),
-        // broadcast it and the round is ONE narrow membership pass over
-        // the src-partitioned edges with map-side combine — the shuffle
-        // carries ≤ |alive| degree rows, never |E_i|. Above the gate,
-        // the general shape: dst-side membership re-keys |E_i| rows.
-        val deg =
-          if (aliveCount <= DensestBroadcastMaxNodes) {
-            val ids = alive.keys.collect()
-            java.util.Arrays.sort(ids)
-            aliveCount = ids.length
-            val bc = und.sparkContext.broadcast(ids)
-            und
-              .mapPartitions(
-                { it =>
-                  val a = bc.value
-                  it.collect {
-                    case (s, dd)
-                        if java.util.Arrays.binarySearch(a, s) >= 0 &&
-                          java.util.Arrays.binarySearch(a, dd) >= 0 =>
-                      (s, 1L)
-                  }
-                },
-                preservesPartitioning = true)
-              .reduceByKey(part, _ + _)
-          } else
-            und
-              .join(alive)
-              .map { case (s, (d, _)) => (d, s) }
-              .join(alive)
-              .map { case (_, (s, _)) => (s, 1L) }
-              .reduceByKey(part, _ + _)
-        val degAll = alive
-          .leftOuterJoin(deg)
-          .mapValues { case (_, o) => o.getOrElse(0L) }
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val (v, m2) = degAll
-          .mapPartitions { it =>
-            var n = 0L; var s = 0L
-            it.foreach { case (_, d) => n += 1; s += d }
-            Iterator.single((n, s))
-          }
-          .reduce((a, b) => (a._1 + b._1, a._2 + b._2))
-        if (v > 0 && m2 > 0)
-          profile += ((i.toLong, v, m2 / 2, m2 * 500000L / v, m2 * 1000000L / v))
-        // every remaining round would aggregate an empty alive set and
-        // emit nothing — the profile is already complete
-        drained = v == 0 || m2 == 0
-        // v counts the round's alive set — an upper bound on the peeled
-        // set, so a shrinking big graph eventually enters the gate
-        aliveCount = v
-        alive = degAll.filter { case (_, d) => 2L * d * v > 3L * m2 }.mapValues(_ => 0L)
-        live.foreach(_.unpersist(false))
-        live = List(degAll)
-        i += 1
-      }
-      und.unpersist(false)
-      import org.apache.spark.sql.types.{LongType, StructField, StructType}
-      val schema = StructType(Seq(
-        StructField("round", LongType, nullable = false),
-        StructField("n_nodes", LongType, nullable = false),
-        StructField("n_edges", LongType, nullable = false),
-        StructField("density_ppm", LongType, nullable = false),
-        StructField("avg_deg_ppm", LongType, nullable = false)))
-      session.createDataFrame(
-        session.sparkContext.parallelize(
-          profile.toSeq.map(t => org.apache.spark.sql.Row(t._1, t._2, t._3, t._4, t._5)),
-          1),
-        schema)
-    }
-  }
+  def densestSubgraph(edges: DataFrame, maxRounds: Int = 12): DataFrame =
+    ComponentRounds.densestSubgraph(edges, maxRounds)
 
   /** [[densestSubgraph]] mirrored: the same 12 bulk-peel rounds as a
     * materialized CTE chain (the Borůvka-oracle discipline — without
@@ -3490,7 +2519,7 @@ object GraphOps {
     * just membership at one k ([[kCore]]). Uses the nesting property
     * (the (k+1)-core ⊆ k-core): a node that dies in the k-peel has
     * core number k − 1, so the table is the union of the per-k death
-    * sets of K−1 [[peel]] runs — each a deletion cascade on the round
+    * sets of K−1 [[ComponentRounds.peel]] runs — each a deletion cascade on the round
     * driver, integer-exact and engine-deterministic.
     *
     * Scale shape: K−1 SEQUENTIAL peel loops over a SHRINKING graph —
@@ -3508,48 +2537,8 @@ object GraphOps {
     * Output: `(id, coreness)` for every node of the undirected simple
     * graph.
     */
-  def corenessTable(edges: DataFrame, maxK: Int = CorenessMaxK): DataFrame = {
-    val session = edges.sparkSession
-    val parts = loopPartitions(session, edges.count() * 2)
-    withLoopConfs(session, parts) {
-      val part = new HashPartitioner(parts)
-      var und = undirectedSimple(edges, part)
-      // a node dying in the k-peel has core number k − 1; the output
-      // reads the peel states, so they stay persisted
-      var coreness = session.sparkContext.emptyRDD[(Long, Long)]
-      var k = 2
-      var coreEdges = -1L
-      while (k <= maxK && coreEdges != 0L) {
-        val state = peel(und, k, part)
-        val kk = k - 1L
-        coreness = coreness.union(state.collect { case (id, (deg, _)) if deg < 0 => (id, kk) })
-        // the k-core's induced subgraph — empty iff the k-core is, since
-        // every survivor keeps at least k ≥ 2 neighbors
-        val alive = state.filter(_._2._1 >= 0).mapValues(_ => ())
-        val sub = und
-          .join(alive)
-          .map { case (s, (d, _)) => (d, s) }
-          .join(alive)
-          .map { case (d, (s, _)) => (s, d) }
-          .partitionBy(part)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        coreEdges = sub.count()
-        und.unpersist(false)
-        und = sub
-        k += 1
-      }
-      und.unpersist(false)
-      require(
-        coreEdges == 0L,
-        s"non-empty $maxK-core: the graph's degeneracy outgrew CorenessMaxK — raise the cap")
-      import org.apache.spark.sql.types.{LongType, StructField, StructType}
-      session.createDataFrame(
-        coreness.map { case (id, c) => org.apache.spark.sql.Row(id, c) },
-        StructType(Seq(
-          StructField("id", LongType, nullable = false),
-          StructField("coreness", LongType, nullable = false))))
-    }
-  }
+  def corenessTable(edges: DataFrame, maxK: Int = CorenessMaxK): DataFrame =
+    ComponentRounds.corenessTable(edges, maxK)
 
   /** Deterministic RANDOM WALKS — the DeepWalk/node2vec sampling shape
     * (Perozzi et al. 2014): one walk per source node, `nSteps` steps;
@@ -4399,7 +3388,7 @@ object GraphOps {
           .otherwise(lit("upstream"))
           .as("cls"))
 
-  /** The fused FW-BW state: ONE gated [[maskLoopRdd]] over the
+  /** The fused FW-BW state: ONE gated [[MaskRounds.maskLoopRdd]] over the
     * direction-tagged union edge list (bit 0 flows along forward edges,
     * bit 1 along transposed ones — per-bit OR-propagation is
     * independent, so this equals the two separate sweeps row for row),

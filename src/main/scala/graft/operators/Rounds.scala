@@ -1,0 +1,230 @@
+package graft.operators
+
+import org.apache.spark.{HashPartitioner, TaskContext}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
+import scala.reflect.ClassTag
+
+/** The round driver of the RDD fixpoint loops, and the loop set-up they
+  * share (partition count, session confs, keyed edges).
+  *
+  * Design rule: an RDD closure on a per-round path is declared in a
+  * small object — this one, [[SsspRounds]], [[ComponentRounds]],
+  * [[MaskRounds]] or [[RankRounds]] — never in `GraphOps`. Spark's
+  * closure cleaner re-reads and ASM-walks the whole class file that
+  * declares a lambda, on every closure handed to an RDD op, and caches
+  * nothing: one parse of the 271 KB `GraphOps$` cost ~2.8 ms, and a
+  * fused SSSP round hands Spark about a dozen closures, so the parses
+  * were half of a small round's driver time. `RoundsSpec` keeps each of
+  * these class files under 64 KB.
+  */
+private[operators] object Rounds {
+
+  /** Persist one RDD-loop round's state and cut its lineage: the
+    * round's count job caches every partition, after which
+    * `localCheckpoint` swaps the lineage for those cached blocks — no
+    * extra job. Without the cut each round's state is a narrow child of
+    * the previous round's, so the lineage and the serialized task grow
+    * by one link per round until a long-diameter graph overflows the
+    * stack. A cut RDD cannot be recomputed: unpersist it only once
+    * nothing reads it any more (Spark throws "Checkpoint block not
+    * found" otherwise).
+    */
+  def checkpointedRound[T](rdd: RDD[T]): RDD[T] =
+    rdd.persist(StorageLevel.MEMORY_AND_DISK).localCheckpoint()
+
+  /** One job over every partition of `rdd`, `f` reducing each partition
+    * on its executor; the per-partition results in partition order.
+    * `SparkContext.runJob` is called with the task function itself:
+    * `count`, `reduce` and `fold` wrap theirs in lambdas declared in
+    * `RDD` (185 KB) and `SparkContext` (204 KB), two more class-file
+    * parses by the closure cleaner per job.
+    */
+  def perPartition[T, U: ClassTag](rdd: RDD[T])(f: Iterator[T] => U): Array[U] =
+    rdd.sparkContext.runJob(
+      rdd, (_: TaskContext, it: Iterator[T]) => f(it), 0 until rdd.partitions.length)
+
+  /** `rdd.count()` as one [[perPartition]] job. */
+  def countRows(rdd: RDD[_]): Long =
+    perPartition(rdd)(_.foldLeft(0L)((n, _) => n + 1L)).sum
+
+  /** Where a [[roundLoop]] round starts: `done` rounds behind it, `left`
+    * before the bound, `changed` rows changed by the last one. */
+  final case class RoundAt(done: Long, left: Long, changed: Long)
+
+  /** The one driver of the RDD fixpoint loops ([[SsspRounds.sssp]],
+    * [[ComponentRounds.connectedComponents]], [[MaskRounds.maskLoopRdd]],
+    * the k-core [[ComponentRounds.peel]] and the residual rank forms),
+    * in the shape of the reference's driver loop
+    * (`SingleSourceSP.java:439-519`): a fixed job per round, stopped by
+    * a global counter. A loop state is an RDD keyed by node id under
+    * the loop's `HashPartitioner`. The caller passes only its
+    * algorithm:
+    *
+    *   round     = the next state, built LAZILY from the current one
+    *               (relax, combine, merge), and the rounds it covers (a
+    *               fused round covers two)
+    *   isChanged = the rows a round changed — the next frontier
+    *
+    * The driver owns the rest:
+    *
+    *   - the round counter, bounded by min(maxRounds, |V| − 1) (the
+    *     Bellman-Ford bound; a fixed-round loop passes
+    *     `nV = Long.MaxValue`) and, when `untilUnchanged`, stopped after
+    *     a round that changes nothing — the reference's Hadoop counter
+    *     (`:473-479`);
+    *   - [[checkpointedRound]] on every round's state;
+    *   - the round's ONE job ([[perPartition]]): a pass over the new
+    *     state counting its changed rows and, for each of the caller's
+    *     `sums`, summing it over all rows (exact 64-bit sums,
+    *     associative, so order-free and deterministic — unlike
+    *     accumulators, which can double-count on retry; a caller with no
+    *     sums pays nothing per row beyond `isChanged`);
+    *   - freeing the superseded state once the new one is cut, and not
+    *     before (a cut RDD cannot be recomputed); without
+    *     `freeSuperseded` every state stays, for callers that read the
+    *     old ones later through `after`;
+    *   - the `GRAFT_LOOP_DEBUG` line per round.
+    *
+    * `seed` is the state before round 1 and `seedChanged` its changed
+    * rows; `after(rounds, changed, sums, state)` runs after each round's
+    * readout. Returns the last state, still persisted (the seed if no
+    * round ran).
+    */
+  def roundLoop[V](
+      name: String,
+      seed: RDD[(Long, V)],
+      seedChanged: Long,
+      maxRounds: Long,
+      nV: Long,
+      untilUnchanged: Boolean = true,
+      freeSuperseded: Boolean = true)(
+      isChanged: V => Boolean,
+      sums: Seq[V => Long] = Nil,
+      after: (Long, Long, Array[Long], RDD[(Long, V)]) => Unit =
+        (_: Long, _: Long, _: Array[Long], _: RDD[(Long, V)]) => ())(
+      round: (RDD[(Long, V)], RoundAt) => (Long, RDD[(Long, V)])): RDD[(Long, V)] = {
+    val bound = math.min(maxRounds, math.max(1L, nV - 1L))
+    val debug = sys.env.contains("GRAFT_LOOP_DEBUG")
+    val fs = sums.toArray
+    val k = fs.length
+    var state = seed
+    var changed = seedChanged
+    var rounds = 0L
+    while (rounds < bound && (changed > 0 || !untilUnchanged)) {
+      val tRound = System.nanoTime()
+      val (hops, next) = round(state, RoundAt(rounds, bound - rounds, changed))
+      val superseded = state
+      state = checkpointedRound(next)
+      rounds += hops
+      val counts = perPartition(state) { it =>
+        var c = 0L
+        val s = new Array[Long](k)
+        it.foreach { case (_, v) =>
+          if (isChanged(v)) c += 1
+          var i = 0
+          while (i < k) { s(i) += fs(i)(v); i += 1 }
+        }
+        (c, s)
+      }
+      changed = counts.iterator.map(_._1).sum
+      after(rounds, changed, Array.tabulate(k)(i => counts.iterator.map(_._2(i)).sum), state)
+      if (freeSuperseded) superseded.unpersist(false)
+      if (debug)
+        System.err.println(
+          f"[$name] round=$rounds%3d hops=$hops changed=$changed%7d " +
+            f"sec=${(System.nanoTime() - tRound) / 1e9}%5.2f")
+    }
+    state
+  }
+
+  /** Loop shuffle parallelism: ≈100k edges per partition, floor 4,
+    * capped at the session's configured shuffle partitions. At cluster
+    * scale the cap always wins (the configured parallelism is sized to
+    * the data); locally this stops a 15k-row state from paying 32-task
+    * scheduling overhead per round — the dominant cost of small
+    * iterative graphs.
+    */
+  def loopPartitions(session: SparkSession, nEdges: Long): Int = {
+    val configured = session.conf.get("spark.sql.shuffle.partitions", "200").toInt
+    math.max(4, math.min(configured, (nEdges / 100000L + 1L).toInt))
+  }
+
+  /** Run `body` with loop-tuned session confs — shuffle parallelism set
+    * to `parts`, AQE partition coalescing off (a coalesced output
+    * partitioning can't be reused by the next round's joins, which would
+    * force a state re-exchange per round) — restoring the caller's confs
+    * on exit. The confs act on the DataFrame steps only: the loops still
+    * planned by Catalyst and the edge and seed preparation of the RDD
+    * loops, whose rounds take `parts` from their `HashPartitioner`.
+    */
+  def withLoopConfs[A](session: SparkSession, parts: Int)(body: => A): A = {
+    val shuffleKey = "spark.sql.shuffle.partitions"
+    val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
+    val prevShuffle = session.conf.get(shuffleKey, "200")
+    val prevCoalesce = session.conf.get(coalesceKey, "true")
+    session.conf.set(shuffleKey, parts.toString)
+    session.conf.set(coalesceKey, "false")
+    try body
+    finally {
+      session.conf.set(shuffleKey, prevShuffle)
+      session.conf.set(coalesceKey, prevCoalesce)
+    }
+  }
+
+  /** Runs `body` under [[withLoopConfs]] with the loop partitioner sized
+    * from |E|. */
+  def inLoop[A](edges: DataFrame)(body: HashPartitioner => A): A = {
+    val parts = loopPartitions(edges.sparkSession, edges.count())
+    withLoopConfs(edges.sparkSession, parts)(body(new HashPartitioner(parts)))
+  }
+
+  /** The edge list keyed on `src` under `part`, persisted, with `value`
+    * of the `dst` end. `value` is applied after the exchange: a shuffle
+    * of bare (Long, Long) pairs runs on Kryo, one of nested tuples on
+    * Java serialization. */
+  def keyedEdges[E: ClassTag](edges: DataFrame, part: HashPartitioner)(
+      value: Long => E): RDD[(Long, E)] =
+    edges
+      .select(col("src"), col("dst"))
+      .rdd
+      .map(r => (r.getLong(0), r.getLong(1)))
+      .partitionBy(part)
+      .mapValues(value)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+
+  /** A non-null BIGINT schema with the columns `names`. */
+  def longSchema(names: String*): StructType =
+    StructType(names.map(StructField(_, LongType, nullable = false)))
+
+  /** `iters` rounds of `step` from `seed` on [[roundLoop]], one row per
+    * round: `round`, then the nodes that `changed` and each of `sums`
+    * over all nodes, named `columns` — the A4 convergence readout of the
+    * fixed-round centralities. The loop state is a node's (score before
+    * the round, score after it): the new scores join the current state
+    * narrowly (both under the loop partitioner), and the driver's one
+    * readout job per round yields every figure. No early stop and no
+    * |V| bound: a round that changes nothing reports its zeros, and so
+    * does every round on an empty graph.
+    */
+  def residualRounds[X: ClassTag](
+      session: SparkSession,
+      name: String,
+      seed: RDD[(Long, X)],
+      iters: Int,
+      columns: String*)(
+      changed: (X, X) => Boolean,
+      sums: ((X, X) => Long)*)(step: RDD[(Long, X)] => RDD[(Long, X)]): DataFrame = {
+    val rows = scala.collection.mutable.ArrayBuffer.empty[Row]
+    roundLoop(name, seed.mapValues(x => (x, x)), 0L, iters, Long.MaxValue, untilUnchanged = false)(
+      v => changed(v._1, v._2),
+      sums.map(f => (v: (X, X)) => f(v._1, v._2)),
+      (r, c, s, _) => rows += Row.fromSeq(r +: c +: s.toSeq)) { (cur, _) =>
+      (1L, cur.join(step(cur.mapValues(_._2))).mapValues { case ((_, x), y) => (x, y) })
+    }.unpersist(false)
+    session.createDataFrame(java.util.Arrays.asList(rows.toSeq: _*), longSchema("round" +: columns: _*))
+  }
+}

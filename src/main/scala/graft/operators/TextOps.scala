@@ -2615,7 +2615,7 @@ object TextOps {
     * per-document position-banded (fan-out ≤ `window` per token, never
     * all-pairs); the graph is vocab-keyed (edges ≤ vocab·avg-degree,
     * independent of corpus row count once counts saturate); the `iters`
-    * rounds are GraphOps' PageRank round (one vocab-keyed narrow join +
+    * rounds are RankRounds' PageRank round (one vocab-keyed narrow join +
     * one sum shuffle each), chained lazily. The word graph is exchanged
     * once and reused every round.
     *
@@ -2638,7 +2638,7 @@ object TextOps {
       .select(col("ta"), col("tb"))
     val sym = co.unionAll(co.select(col("tb").as("ta"), col("ta").as("tb")))
     val e0 = sym.groupBy(col("ta").as("src"), col("tb").as("dst")).agg(count(lit(1)).as("w"))
-    // the rank rounds are GraphOps' PageRank round with `w` the
+    // the rank rounds are RankRounds' PageRank round with `w` the
     // co-occurrence count (out-weight = wsum): terms and edges share one
     // hash partitioner, and with no per-round scalar the whole chain is
     // lazy — `iters` shuffle stages, zero Catalyst planning per round
@@ -2649,7 +2649,7 @@ object TextOps {
       .map(r => (r.getString(0), (r.getString(1), r.getLong(2))))
       .partitionBy(part)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val rank = GraphOps.pagerankRdd(eRdd, part, iters, (_: String) => true)
+    val rank = RankRounds.pagerankRdd(eRdd, part, iters, (_: String) => true)
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     session
       .createDataFrame(

@@ -216,6 +216,18 @@ class GraphOpsSpec extends SparkSpec {
     assert(d === (0 to 12).map(i => i.toLong -> i.toDouble).toMap)
   }
 
+  test("connectedComponents round shape: three prelude jobs, then one job per round") {
+    // a 4-node path and one extra edge: label 0 reaches node 3 in round
+    // 3 and round 4 changes nothing, so the loop stops before its |V|-1
+    // = 5 bound. The prelude is edges.count (two jobs under AQE) and the
+    // |V| count, whose job also caches the edges.
+    val edges = edgesDf(Seq((0L, 1L, 1.0), (1L, 2L, 1.0), (2L, 3L, 1.0), (10L, 11L, 1.0)))
+    val (out, jobs) = jobsOf(GraphOps.connectedComponents(edges))
+    assert(jobs === 3 + 4)
+    assert(out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ===
+      Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 0L, 10L -> 10L, 11L -> 10L))
+  }
+
   test("kCore: a path fully peels via a multi-round deletion cascade") {
     // path of 11 nodes: endpoints die first (deg 1), each death exposes
     // the next node — the cascade the delta formulation must propagate

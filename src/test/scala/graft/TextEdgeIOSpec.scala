@@ -61,18 +61,27 @@ class TextEdgeIOSpec extends SparkSpec {
     assert(asSet(decoded) === asSet(edges))
   }
 
+  /** The lines of the one part file a single-reducer sink wrote to `dir`. */
+  private def onePartLines(dir: String): Seq[String] = {
+    val parts = new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-"))
+    assert(parts.length === 1, s"expected one part file in $dir")
+    val src = scala.io.Source.fromFile(parts.head)
+    try src.getLines().toList
+    finally src.close()
+  }
+
   test("CLI entry points reproduce the reference's program outputs") {
-    // SingleSourceSP.main(in, out, queryNode) equivalent
+    // SingleSourceSP.main(in, out, queryNode) equivalent: one part file,
+    // ids ascending, like the reference's single final reducer
     val ssspOut = Files.createTempDirectory("cli-sssp").toString + "/out"
     SsspMain.run(spark, fixture("micrograph.txt"), ssspOut, source = 0L)
-    val ssspLines = spark.read.text(ssspOut).collect().map(_.getString(0)).sorted
-    assert(ssspLines.length === 5)
-    assert(ssspLines.contains("0\t3 5.0")) // same shape as writeResult
-    // ReverseGraph.main(in, out) equivalent on the tab fixture
+    assert(onePartLines(ssspOut) === Seq("0\t0 0.0", "0\t1 8.0", "0\t2 9.0", "0\t3 5.0", "0\t4 7.0"))
+    // ReverseGraph.main(in, out) equivalent on the tab fixture: one part
+    // file, nodes ascending
     val revOut = Files.createTempDirectory("cli-rev").toString + "/out"
     ReverseGraphMain.run(spark, fixture("micrograph_unweighted.tsv"), revOut)
-    val revLines = spark.read.text(revOut).collect().map(_.getString(0))
-    assert(revLines.contains("1\t0,3")) // node\tsortedCsv (ReverseGraph.java:200)
+    // node\tsortedCsv (ReverseGraph.java:200)
+    assert(onePartLines(revOut) === Seq("0\t4", "1\t0,3", "2\t1", "3\t0"))
   }
 
   test("result sink writes the reference's src\\tid dist lines") {
