@@ -1239,11 +1239,11 @@ object SparkEntry {
         .phashStoredProbe(s, all.filter(col("doc_id") >= 400L), index)
         .orderBy(col("doc_id"))
     }),
-    // pairs -> transitive near-dup clusters -> canonical keep list (the
-    // dedup_clusters step for the media column; shares the min-label CC)
     // pHash threshold-tuning histogram: within-bucket Hamming spectrum
     "multimodal_phash_hist" -> ((s, d) =>
       operators.Multimodal.phashHammingHist(docs(s, d)).orderBy(col("hamming"))),
+    // pairs -> transitive near-dup clusters -> canonical keep list (the
+    // dedup_clusters step for the media column; shares its star-CC)
     "multimodal_phash_clusters" -> ((s, d) =>
       Dedup
         .clusters(

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions.{coalesce, col, greatest, least}
+import org.apache.spark.sql.functions.{col, greatest, least}
 import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
@@ -73,92 +73,97 @@ private[operators] object ComponentRounds {
   }
 
   /** Alternating large-star / small-star rounds (Kiveris et al.) on
-    * RDDs: a star round's Catalyst cost (two window exchanges + two
-    * distincts planned fresh every round, plus the checkpoint) was
-    * ~0.7 s while the pair set is KBs. One star here = one min-combine
-    * shuffle (the m(u) table), one co-partitioned join back, one
-    * pair-keyed distinct — all under ONE job per round, the (count, Σa,
-    * Σb) stability signature riding that job's action. The math is
-    * verbatim Kiveris et al.: m(u) = min(Γ(u) ∪ {u}), large-star hooks
-    * strictly-greater neighbors onto m(u), small-star hooks ≤-neighbors
-    * and u itself; canonical (a < b) distinct set between stars.
+    * [[Rounds.roundLoop]]. The state is keyed by node: `u → (sorted
+    * distinct neighbour array, changed)`, the undirected edge set as a
+    * symmetric adjacency under `part`. A star reads each node's array,
+    * takes m(u) = min(adj ∪ {u}) and emits both directions of its output
+    * edges — large-star links every neighbour v > u to m, small-star
+    * every v ≤ u and u itself — which [[adjacency]] groups back into
+    * arrays: ONE shuffle per star, two per round. The round's one job is
+    * the driver's readout over a co-partitioned `zipPartitions` of the
+    * new arrays against the current state, which marks a node changed
+    * exactly when its array did; the loop stops after a round that
+    * changes nothing. The prelude is edges.count (two jobs under AQE);
+    * the seed (both directions of every edge, a self-loop kept as its
+    * node's key) is built inside round 1's job.
     */
   def connectedComponentsStars(edges: DataFrame, maxRounds: Int): DataFrame = {
     val session = edges.sparkSession
-    val parts = loopPartitions(session, edges.count() * 2)
-    val part = new HashPartitioner(parts)
-
-    // canonical undirected pair set (a < b), self-loops dropped,
-    // hash-partitioned on the pair for the distinct
-    def canon(pairs: RDD[(Long, Long)]): RDD[(Long, Long)] =
-      pairs
-        .filter { case (u, v) => u != v }
-        .map { case (u, v) => if (u < v) (u, v) else (v, u) }
-        .distinct(parts)
-    def directed(e: RDD[(Long, Long)]): RDD[(Long, Long)] =
-      e.flatMap { case (a, b) => Iterator((a, b), (b, a)) }
-
-    def star(e: RDD[(Long, Long)], large: Boolean): RDD[(Long, Long)] = {
-      val d = directed(e).partitionBy(part)
-      val m = d
-        .reduceByKey(part, (a, b) => math.min(a, b))
-        .map { case (u, mn) => (u, math.min(mn, u)) }
-      val withM = d.join(m) // co-partitioned — narrow
-      val hooked = withM.collect {
-        case (u, (v, mu)) if (large && v > u) || (!large && v <= u) => (v, mu)
-      }
-      canon(if (large) hooked else hooked.union(m))
+    val part = new HashPartitioner(loopPartitions(session, edges.count() * 2))
+    val seed = adjacency(
+      edges.select(col("src"), col("dst")).rdd.flatMap { r =>
+        val s = r.getLong(0); val d = r.getLong(1)
+        if (s == d) Iterator.single((s, s)) else Iterator((s, d), (d, s))
+      },
+      part).mapValues(a => (a, true)).persist(StorageLevel.MEMORY_AND_DISK)
+    var left = 1L
+    val state = roundLoop("connectedComponentsStars", seed, 1L, maxRounds, Long.MaxValue)(
+      _._2,
+      after = (_, changed, _, _) => left = changed) { (cur, _) =>
+      val large = adjacency(star(cur.mapValues(_._1), large = true), part)
+      val next = adjacency(star(large, large = false), part)
+      (1L, next.zipPartitions(cur, preservesPartitioning = true) { (nIt, cIt) =>
+        val old = cIt.buffered
+        nIt.map { case (u, a) =>
+          while (old.hasNext && old.head._1 < u) old.next()
+          val same = old.hasNext && old.head._1 == u && java.util.Arrays.equals(old.head._2._1, a)
+          (u, (a, !same))
+        }
+      })
     }
-
-    // every vertex of the undirected closure (self-loop-only nodes
-    // included), to re-attach singleton components at the end
-    val verts =
-      edges.select(col("src").as("id")).unionAll(edges.select(col("dst").as("id"))).distinct()
-
-    // Cheap stability signature as a PREFILTER only: (count, sum a, sum b)
-    // can collide across distinct edge sets (e.g. {(1,4),(2,3)} vs
-    // {(1,3),(2,4)}), so a signature match is CONFIRMED by exact set
-    // equality before the loop stops — both sides are canonical distinct
-    // sets, so equal counts + empty next∖prev ⇒ equal sets.
-    def persistSig(rdd: RDD[(Long, Long)]): (RDD[(Long, Long)], (Long, Long, Long)) = {
-      val p = rdd.persist(StorageLevel.MEMORY_AND_DISK)
-      val s = perPartition(p) { it =>
-        var c = 0L; var sa = 0L; var sb = 0L
-        it.foreach { case (a, b) => c += 1; sa += a; sb += b }
-        (c, sa, sb)
-      }
-      (p, (s.iterator.map(_._1).sum, s.iterator.map(_._2).sum, s.iterator.map(_._3).sum))
-    }
-    var (e, prev) = persistSig(
-      canon(edges.select(col("src"), col("dst")).rdd.map(r => (r.getLong(0), r.getLong(1)))))
-    var rounds = 0
-    var stable = false
-    val debug = sys.env.contains("GRAFT_LOOP_DEBUG")
-    while (!stable && rounds < maxRounds) {
-      val tRound = System.nanoTime()
-      val (next, s) = persistSig(star(star(e, large = true), large = false))
-      stable = s == prev && next.subtract(e).isEmpty()
-      prev = s
-      if (!stable) e.unpersist(false)
-      e = next
-      rounds += 1
-      if (debug)
-        System.err.println(
-          f"[starCcRdd] round=$rounds%3d pairs=${s._1}%7d " +
-            f"sec=${(System.nanoTime() - tRound) / 1e9}%5.2f")
-    }
-    if (!stable)
+    if (left > 0) {
+      state.unpersist(false)
       throw new IllegalStateException(
         s"connectedComponentsStars did not converge in $maxRounds rounds")
-    val comp = session.createDataFrame(
-      directed(e)
-        .reduceByKey(part, (a, b) => math.min(a, b))
-        .map { case (u, mn) => Row(u, math.min(mn, u)) },
-      longSchema("id", "c"))
-    verts
-      .join(comp, Seq("id"), "left_outer")
-      .select(col("id"), coalesce(col("c"), col("id")).as("component"))
+    }
+    session.createDataFrame(
+      state.map { case (u, (a, _)) => Row(u, if (a.isEmpty) u else math.min(a(0), u)) },
+      longSchema("id", "component"))
   }
+
+  /** One large-star (`large`) or small-star step of Kiveris et al. over
+    * a node-keyed adjacency, as the directed pairs of its output edge
+    * set: with m = min(adj ∪ {u}), large-star links every neighbour
+    * v > u to m, small-star every v ≤ u and u itself. A node that emits
+    * no pair emits its self-pair, so it keeps its key. */
+  private def star(adj: RDD[(Long, Array[Long])], large: Boolean): RDD[(Long, Long)] =
+    adj.mapPartitions(_.flatMap { case (u, a) =>
+      val m = if (a.isEmpty) u else math.min(a(0), u)
+      val hooked =
+        if (large) a.iterator.filter(_ > u) else a.iterator.filter(_ < u) ++ Iterator.single(u)
+      val pairs = hooked.filter(_ != m).flatMap(v => Iterator((v, m), (m, v)))
+      if (pairs.hasNext) pairs else Iterator.single((u, u))
+    })
+
+  /** `pairs` grouped per node under `part`: the node's sorted distinct
+    * neighbour array, self-pairs dropped (a node with only self-pairs
+    * keeps its key with an empty array). The shuffle carries bare
+    * (Long, Long) pairs (Kryo) and sorts them by node, spilling if it
+    * must, so a node's pairs arrive as one run and the grouping holds
+    * one node's neighbours at a time; the output is sorted by node
+    * within each partition.
+    */
+  private def adjacency(pairs: RDD[(Long, Long)], part: HashPartitioner): RDD[(Long, Array[Long])] =
+    pairs
+      .repartitionAndSortWithinPartitions(part)
+      .mapPartitions(
+        { it =>
+          val in = it.buffered
+          Iterator.continually(in).takeWhile(_.hasNext).map { _ =>
+            val u = in.head._1
+            val b = new scala.collection.mutable.ArrayBuilder.ofLong
+            while (in.hasNext && in.head._1 == u) {
+              val v = in.next()._2
+              if (v != u) b += v
+            }
+            val a = b.result()
+            java.util.Arrays.sort(a)
+            var n = 0
+            for (v <- a) if (n == 0 || v != a(n - 1)) { a(n) = v; n += 1 }
+            (u, java.util.Arrays.copyOf(a, n))
+          }
+        },
+        preservesPartitioning = true)
 
   /** The undirected simple graph of `edges` for the peel loops:
     * parallel edges and self-loops dropped, both directions kept (so

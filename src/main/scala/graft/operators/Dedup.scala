@@ -952,9 +952,10 @@ object Dedup {
     * downstream keep-filter is `is_canonical`.
     */
   def clusters(docs: DataFrame, pairs: DataFrame): DataFrame = {
-    // materialize the pair list ONCE: connectedComponents counts its edge
-    // input (parallelism sizing) and then builds the undirected closure —
-    // an unmaterialized candidate pipeline would be re-evaluated per use
+    // materialize the pair list ONCE: star-CC counts its edge input
+    // (parallelism sizing) and then reads it again into its seed
+    // adjacency — an unmaterialized candidate pipeline would be
+    // re-evaluated per use
     val e = Phys.materialized(
       pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"), lit(1.0).as("w")))
     val cc = GraphOps.connectedComponentsStars(e)
@@ -1230,8 +1231,8 @@ object Dedup {
     *
     * Scale shape: each family keeps its bucketed/cell-blocked
     * candidate generation; the union is a narrow distinct on the pair
-    * key; the closure is [[GraphOps.connectedComponentsStars]]' s
-    * incremental min-label loop.
+    * key; the closure is [[GraphOps.connectedComponentsStars]]'
+    * O(log d)-round large-star/small-star contraction.
     */
   def clustersMultimodal(
       docs: DataFrame,

@@ -214,11 +214,13 @@ object GraphOps {
     * its neighbors onto its minimum neighbor, halving tree heights, so
     * the edge set converges to a star per component in O(log d) rounds —
     * vs the O(d) rounds of min-label propagation
-    * ([[connectedComponents]]). The per-round work is two
-    * groupBy/join/distinct passes over the CURRENT edge set (which only
-    * shrinks toward |V| stars), all on single node-id keys — the variant
-    * to reach for when the graph's diameter, not its size, is the
-    * bottleneck.
+    * ([[connectedComponents]]). A round runs on the round driver over a
+    * node-keyed adjacency of the CURRENT edge set (which only shrinks
+    * toward |V| stars): one shuffle per star and ONE job, the exact
+    * stop test (did any node's neighbour array change?) — the variant to
+    * reach for when the graph's diameter, not its size, is the
+    * bottleneck. Throws `IllegalStateException` if `maxRounds` rounds
+    * end with changed nodes left.
     *
     * Returns (id, component-min) for every node of the undirected
     * closure, like [[connectedComponents]] (shared oracle).

@@ -56,8 +56,10 @@ private[operators] object Rounds {
   final case class RoundAt(done: Long, left: Long, changed: Long)
 
   /** The one driver of the RDD fixpoint loops ([[SsspRounds.sssp]],
-    * [[ComponentRounds.connectedComponents]], [[MaskRounds.maskLoopRdd]],
-    * the k-core [[ComponentRounds.peel]] and the residual rank forms),
+    * [[ComponentRounds.connectedComponents]],
+    * [[ComponentRounds.connectedComponentsStars]],
+    * [[MaskRounds.maskLoopRdd]], the k-core [[ComponentRounds.peel]] and
+    * the residual rank forms),
     * in the shape of the reference's driver loop
     * (`SingleSourceSP.java:439-519`): a fixed job per round, stopped by
     * a global counter. A loop state is an RDD keyed by node id under

@@ -20,15 +20,18 @@ class GraphOpsSpec extends SparkSpec {
     ids.zip(ids.tail)
   }
 
-  /** Runs `body` and counts the Spark jobs it submits from this thread. */
-  private def jobsOf[A](body: => A): (A, Int) = {
+  /** Runs `body` and lists, in submission order, the stage count of each
+    * Spark job it submits from this thread (skipped stages included, so
+    * the count grows with an uncut lineage). */
+  private def jobStages[A](body: => A): (A, Seq[Int]) = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sc = spark.sparkContext
     val tag = "graft.test.roundShape"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val jobs = scala.collection.mutable.ArrayBuffer.empty[Int]
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty(tag) != null) jobs.incrementAndGet()
+        if (e.properties != null && e.properties.getProperty(tag) != null)
+          jobs.synchronized(jobs += e.stageInfos.size)
     }
     sc.addSparkListener(listener)
     sc.setLocalProperty(tag, "1")
@@ -39,7 +42,13 @@ class GraphOpsSpec extends SparkSpec {
         org.apache.spark.sql.graftbridge.CheckpointBridge.drainListenerBus(sc)
         sc.removeSparkListener(listener)
       }
-    (out, jobs.get)
+    (out, jobs.synchronized(jobs.toList))
+  }
+
+  /** Runs `body` and counts the Spark jobs it submits from this thread. */
+  private def jobsOf[A](body: => A): (A, Int) = {
+    val (out, stages) = jobStages(body)
+    (out, stages.size)
   }
 
   private def ssspMap(edges: Seq[(Long, Long, Double)], src: Long): Map[Long, Double] =
@@ -331,6 +340,39 @@ class GraphOpsSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getLong(1))
       .toMap
     assert(comps === (1 to n).map(i => i.toLong -> 1L).toMap)
+  }
+
+  test("connectedComponentsStars round shape: prelude jobs, then one job per round") {
+    // a 4-node path and one extra edge: the path needs 3 large/small-star
+    // rounds, the third changing nothing. The prelude is edges.count (two
+    // jobs under AQE); the seed is built inside round 1's job, and each
+    // round's stop test is its one readout job: a shuffle per star plus
+    // the readout stage (round 1 also shuffles the seed), flat because
+    // every round's state is cut from its lineage.
+    val edges = edgesDf(Seq((0L, 1L, 1.0), (1L, 2L, 1.0), (2L, 3L, 1.0), (10L, 11L, 1.0)))
+    val (out, stages) = jobStages(GraphOps.connectedComponentsStars(edges))
+    assert(stages.size === 2 + 3)
+    assert(stages.drop(2) === Seq(4, 3, 3))
+    assert(out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ===
+      Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 0L, 10L -> 10L, 11L -> 10L))
+  }
+
+  test("connectedComponentsStars on degenerate inputs") {
+    val empty = GraphOps.connectedComponentsStars(edgesDf(Seq.empty))
+    assert(empty.columns.toSeq === Seq("id", "component"))
+    assert(empty.count() === 0)
+    val loops = GraphOps
+      .connectedComponentsStars(edgesDf(Seq((3L, 3L, 1.0), (7L, 7L, 1.0), (7L, 7L, 2.0))))
+      .collect()
+      .map(r => r.getLong(0) -> r.getLong(1))
+      .toMap
+    assert(loops === Map(3L -> 3L, 7L -> 7L))
+    // the 31-node chain needs 6 rounds: a bound of 1 leaves changed rows
+    val chain = edgesDf((0 until 30).map(i => (i.toLong, i + 1L, 1.0)))
+    val e = intercept[IllegalStateException] {
+      GraphOps.connectedComponentsStars(chain, maxRounds = 1)
+    }
+    assert(e.getMessage.contains("did not converge"))
   }
 
   test("labelPropagation: disjoint triangles settle on their min id; dups/self-loops ignored") {
