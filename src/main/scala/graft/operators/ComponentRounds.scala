@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions.{col, greatest, least}
 import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
-import Rounds.{countRows, loopPartitions, longSchema, perPartition, roundLoop, withLoopConfs}
+import Rounds.{countRows, inLoop, longSchema, loopPartitioner, perPartition, roundLoop}
 
 /** The RDD bodies of the component and peel loops:
   * [[GraphOps.connectedComponents]], [[GraphOps.connectedComponentsStars]],
@@ -22,11 +22,8 @@ private[operators] object ComponentRounds {
     * edges.count (two jobs under AQE) and the |V| count, which also
     * caches the edges.
     */
-  def connectedComponents(edges: DataFrame, maxRounds: Int): DataFrame = {
-    val session = edges.sparkSession
-    val parts = loopPartitions(session, edges.count() * 2)
-    withLoopConfs(session, parts) {
-      val part = new HashPartitioner(parts)
+  def connectedComponents(edges: DataFrame, maxRounds: Int): DataFrame =
+    inLoop(edges, copies = 2) { part =>
       val eRdd = edges
         .select(col("src"), col("dst"))
         .rdd
@@ -66,11 +63,10 @@ private[operators] object ComponentRounds {
         })
       }
       eRdd.unpersist(false)
-      session.createDataFrame(
+      edges.sparkSession.createDataFrame(
         state.map { case (id, (lab, _)) => Row(id, lab) },
         longSchema("id", "component"))
     }
-  }
 
   /** Alternating large-star / small-star rounds (Kiveris et al.) on
     * [[Rounds.roundLoop]]. The state is keyed by node: `u → (sorted
@@ -89,7 +85,7 @@ private[operators] object ComponentRounds {
     */
   def connectedComponentsStars(edges: DataFrame, maxRounds: Int): DataFrame = {
     val session = edges.sparkSession
-    val part = new HashPartitioner(loopPartitions(session, edges.count() * 2))
+    val part = loopPartitioner(edges, copies = 2)
     val seed = adjacency(
       edges.select(col("src"), col("dst")).rdd.flatMap { r =>
         val s = r.getLong(0); val d = r.getLong(1)
@@ -225,30 +221,24 @@ private[operators] object ComponentRounds {
   }
 
   /** [[GraphOps.kCore]]: one [[peel]] of the undirected simple graph. */
-  def kCore(edges: DataFrame, k: Int): DataFrame = {
-    val session = edges.sparkSession
-    val parts = loopPartitions(session, edges.count() * 2)
-    withLoopConfs(session, parts) {
-      val part = new HashPartitioner(parts)
+  def kCore(edges: DataFrame, k: Int): DataFrame =
+    inLoop(edges, copies = 2) { part =>
       val und = undirectedSimple(edges, part)
       val state = peel(und, k, part)
       und.unpersist(false)
-      session.createDataFrame(
+      edges.sparkSession.createDataFrame(
         state.map { case (id, (deg, _)) => Row(id, deg >= 0) },
         StructType(Seq(
           StructField("id", LongType, nullable = false),
           StructField("in_core", BooleanType, nullable = false))))
     }
-  }
 
   /** [[GraphOps.corenessTable]]: K−1 [[peel]] runs, each on the previous
     * core's induced subgraph; a node dying in the k-peel has core
     * number k − 1. */
   def corenessTable(edges: DataFrame, maxK: Int): DataFrame = {
     val session = edges.sparkSession
-    val parts = loopPartitions(session, edges.count() * 2)
-    withLoopConfs(session, parts) {
-      val part = new HashPartitioner(parts)
+    inLoop(edges, copies = 2) { part =>
       var und = undirectedSimple(edges, part)
       // the output reads the peel states, so they stay persisted
       var coreness = session.sparkContext.emptyRDD[(Long, Long)]
@@ -292,21 +282,8 @@ private[operators] object ComponentRounds {
     */
   def densestSubgraph(edges: DataFrame, maxRounds: Int): DataFrame = {
     val session = edges.sparkSession
-    val parts = loopPartitions(session, edges.count() * 2)
-    withLoopConfs(session, parts) {
-      val simple = Phys.materialized(
-        edges
-          .filter(col("src") =!= col("dst"))
-          .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
-          .distinct())
-      val part = new HashPartitioner(parts)
-      val und = simple.rdd
-        .flatMap { r =>
-          val a = r.getLong(0); val b = r.getLong(1)
-          Iterator((a, b), (b, a))
-        }
-        .partitionBy(part)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    inLoop(edges, copies = 2) { part =>
+      val und = undirectedSimple(edges, part)
       var alive: RDD[(Long, Long)] = und
         .mapValues(_ => 0L)
         .reduceByKey(part, (a, _) => a)

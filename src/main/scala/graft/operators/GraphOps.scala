@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.model.INF
-import MaskRounds.{maskLoopRdd, maskStateDf}
-import Rounds.{loopPartitions, withLoopConfs}
+import MaskRounds.{bitSeed, fmSeed, maskLoopRdd, maskStateDf, onDistinctEdges}
+import Rounds.inLoop
 
 /** Spark-native rebuild of the reference's graph operators.
   *
@@ -176,7 +176,7 @@ object GraphOps {
     * merged patch is `localCheckpoint`ed, so the lineage (and the task
     * binary) stays constant however many rounds a long-diameter graph
     * needs. Loop shuffle parallelism scales with the edge count
-    * ([[Rounds.loopPartitions]]).
+    * ([[Rounds.inLoop]]).
     *
     * `maxRounds` bounds the loop at |V|−1 (Bellman-Ford guarantee for
     * non-negative weights) as a safety net against pathological input.
@@ -338,31 +338,10 @@ object GraphOps {
     */
   def multiSourceBfs(edges: DataFrame, nSources: Int, rounds: Int): DataFrame = {
     require(nSources >= 1 && nSources <= 63, s"nSources must be in [1, 63], got $nSources")
-    val session = edges.sparkSession
-    val parts = loopPartitions(session, edges.count())
-    withLoopConfs(session, parts) {
-      val e = edges
-        .select(col("src"), col("dst"))
-        .distinct() // OR is idempotent: parallel edges add shuffle rows, never information
-        .repartition(parts, col("src"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      e.count()
-      // pow stays exact here (2^62 < 2^53 is false, but nSources ≤ 63 bits
-      // built from ids ≤ 63 → exponents ≤ 62; doubles are exact at every
-      // power of two, so the cast is exact) — and DuckDB computes the
-      // identical literal power
-      val seedMask = when(
-        col("id") >= 1 && col("id") <= nSources,
-        expr("CAST(pow(2, id - 1) AS BIGINT)")).otherwise(lit(0L))
-      val seed = e
-        .select(col("src").as("id"))
-        .unionAll(e.select(col("dst").as("id")))
-        .distinct()
-        .select(col("id"), seedMask.as("m0"))
-      val state = maskLoopRdd(e, seed, 1, rounds, earlyExit = true,
-        freeSuperseded = true, parts)()
-      e.unpersist()
-      maskStateDf(session, state, 1)
+    onDistinctEdges(edges, undirected = false) { (part, e, nodes) =>
+      val state = maskLoopRdd(e, bitSeed(nodes, 1L, nSources), 1, rounds, earlyExit = true,
+        freeSuperseded = true, part)()
+      maskStateDf(edges.sparkSession, state, 1)
         .filter(col("m0") =!= 0L)
         .select(
           col("id"),
@@ -436,23 +415,8 @@ object GraphOps {
       seedLo: Long = 1L): DataFrame = {
     require(nLandmarks >= 1 && nLandmarks <= 63, s"nLandmarks in [1,63], got $nLandmarks")
     val session = edges.sparkSession
-    val parts = loopPartitions(session, edges.count())
-    withLoopConfs(session, parts) {
-      val e = edges
-        .select(col("src"), col("dst"))
-        .distinct()
-        .repartition(parts, col("src"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      e.count()
-      val seedHi = seedLo + nLandmarks - 1
-      val seedMask = when(
-        col("id") >= seedLo && col("id") <= seedHi,
-        expr(s"CAST(pow(2, id - $seedLo) AS BIGINT)")).otherwise(lit(0L))
-      val seed = e
-        .select(col("src").as("id"))
-        .unionAll(e.select(col("dst").as("id")))
-        .distinct()
-        .select(col("id"), seedMask.as("m0"))
+    onDistinctEdges(edges, undirected = false) { (part, e, nodes) =>
+      val seed = bitSeed(nodes, seedLo, nLandmarks)
       // explode the set bits of a delta mask into (id, landmark, dist)
       def arrivals(df: DataFrame, h: Int): DataFrame =
         df.select(col("id"), explode(expr(s"sequence(0, ${nLandmarks - 1})")).as("b"), col("delta"))
@@ -463,7 +427,7 @@ object GraphOps {
       val nL = nLandmarks
       var arr: org.apache.spark.rdd.RDD[(Long, Long, Long)] =
         session.sparkContext.emptyRDD[(Long, Long, Long)]
-      maskLoopRdd(e, seed, 1, rounds, earlyExit = true, freeSuperseded = false, parts)(
+      maskLoopRdd(e, seed, 1, rounds, earlyExit = true, freeSuperseded = false, part)(
         (h, _, _, delta) => arr = arr.union(MaskRounds.bitArrivals(delta, nL, h.toLong)))
       import org.apache.spark.sql.types.{LongType, StructField, StructType}
       val schema = StructType(Seq(
@@ -477,10 +441,8 @@ object GraphOps {
       // columns, the serving joins) read the arrival table several
       // times — unmaterialized, each read would replay the seed
       // distinct and every round's flatMap
-      val out = Phys.materialized(
+      Phys.materialized(
         arrivals(seed.select(col("id"), col("m0").as("delta")), 0).unionByName(later))
-      e.unpersist()
-      out
     }
   }
 
@@ -754,7 +716,7 @@ object GraphOps {
     * LCG family — a slice disjoint from the MinHash/CMS/LSH usages so the
     * node hashes are independent of every other sketch in the engine.
     */
-  private val AnfPermOff = 101
+  private[operators] val AnfPermOff = 101
 
   /** Fixed-point table of `2^(i/K) · 1000` for the ANF readout: node u's
     * individual ball estimate is `2^(mean_s R_s) / 0.77351` (the
@@ -815,37 +777,8 @@ object GraphOps {
   def anf(edges: DataFrame, nSketches: Int = 8, rounds: Int = 2): DataFrame = {
     require(nSketches >= 1 && nSketches <= 16, s"nSketches in [1,16], got $nSketches")
     val session = edges.sparkSession
-    val parts = loopPartitions(session, edges.count())
-    withLoopConfs(session, parts) {
-      val e = edges
-        .select(col("src"), col("dst"))
-        .distinct() // OR is idempotent — parallel edges add no information
-        .repartition(parts, col("src"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      e.count()
-      val nodes = e
-        .select(col("src").as("id"))
-        .unionAll(e.select(col("dst").as("id")))
-        .distinct()
-      import graft.functions.Parity
-      // per-sketch seed masks: bit tz(hash_s(id)), hash reduced mod BigP
-      // FIRST (the engine's 64-bit overflow discipline)
-      val hashCols = (0 until nSketches).map { s =>
-        ((lit(Parity.permA(AnfPermOff + s)) * (col("id") % lit(Parity.BigP)) +
-          lit(Parity.permB(AnfPermOff + s))) % lit(Parity.BigP)).as(s"h$s")
-      }
-      val rhoCols = (0 until nSketches).map { s =>
-        when(col(s"h$s") === 0L, lit(31L))
-          .otherwise(length(bin(col(s"h$s"))) - length(rtrim(bin(col(s"h$s")), "0")))
-          .cast("long")
-          .as(s"rho$s")
-      }
-      val maskInit = (0 until nSketches).map(s =>
-        expr(s"shiftleft(CAST(1 AS BIGINT), CAST(rho$s AS INT))").as(s"m$s"))
-      val seed = nodes
-        .select(col("id") +: hashCols: _*)
-        .select(col("id") +: rhoCols: _*)
-        .select(col("id") +: maskInit: _*)
+    onDistinctEdges(edges, undirected = false) { (part, e, nodes) =>
+      val seed = fmSeed(nodes, nSketches)
       // eager checkpoint with the row count riding the materialization
       def ckptCounted(df: DataFrame): (DataFrame, Long) = {
         val obs = org.apache.spark.sql.Observation()
@@ -883,7 +816,7 @@ object GraphOps {
       // has saturated (FM collisions) — a converged-mask round still
       // expands `reach`
       maskLoopRdd(e, seed, nSketches, rounds, earlyExit = false, freeSuperseded = true,
-        parts, estOf = anfEstOf(nSketches))(
+        part, estOf = anfEstOf(nSketches))(
         (h, _, s, _) => {
           val (newPairs, nNew) = ckptCounted(
             frontier
@@ -899,7 +832,6 @@ object GraphOps {
           val est = (s / 77351L) * 100L + ((s % 77351L) * 100L) / 77351L
           rows += ((h.toLong, nPairsExact, est, math.abs(est - nPairsExact) * 1000L / nPairsExact))
         })
-      e.unpersist()
       import session.implicits._
       rows.toSeq
         .toDF("h", "n_pairs_exact", "n_pairs_est", "err_permille")
@@ -990,41 +922,13 @@ object GraphOps {
   def anfEstimate(edges: DataFrame, nSketches: Int = 8, maxRounds: Int = 8): DataFrame = {
     require(nSketches >= 1 && nSketches <= 16, s"nSketches in [1,16], got $nSketches")
     val session = edges.sparkSession
-    val parts = loopPartitions(session, edges.count())
-    withLoopConfs(session, parts) {
-      val e = edges
-        .select(col("src"), col("dst"))
-        .distinct()
-        .repartition(parts, col("src"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      e.count()
-      val nodes = e
-        .select(col("src").as("id"))
-        .unionAll(e.select(col("dst").as("id")))
-        .distinct()
-      import graft.functions.Parity
-      val hashCols = (0 until nSketches).map { s =>
-        ((lit(Parity.permA(AnfPermOff + s)) * (col("id") % lit(Parity.BigP)) +
-          lit(Parity.permB(AnfPermOff + s))) % lit(Parity.BigP)).as(s"h$s")
-      }
-      val rhoCols = (0 until nSketches).map { s =>
-        when(col(s"h$s") === 0L, lit(31L))
-          .otherwise(length(bin(col(s"h$s"))) - length(rtrim(bin(col(s"h$s")), "0")))
-          .cast("long")
-          .as(s"rho$s")
-      }
-      val maskInit = (0 until nSketches).map(s =>
-        expr(s"shiftleft(CAST(1 AS BIGINT), CAST(rho$s AS INT))").as(s"m$s"))
-      val seed = nodes
-        .select(col("id") +: hashCols: _*)
-        .select(col("id") +: rhoCols: _*)
-        .select(col("id") +: maskInit: _*)
+    onDistinctEdges(edges, undirected = false) { (part, e, nodes) =>
+      val seed = fmSeed(nodes, nSketches)
       val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
       maskLoopRdd(e, seed, nSketches, maxRounds, earlyExit = true, freeSuperseded = true,
-        parts, estOf = anfEstOf(nSketches))(
+        part, estOf = anfEstOf(nSketches))(
         (h, _, s, _) =>
           rows += ((h.toLong, (s / 77351L) * 100L + ((s % 77351L) * 100L) / 77351L)))
-      e.unpersist()
       import session.implicits._
       rows.toSeq.toDF("h", "n_pairs_est").orderBy(col("h"))
     }
@@ -1109,43 +1013,15 @@ object GraphOps {
   def anfResiduals(edges: DataFrame, nSketches: Int = 8, rounds: Int = 3): DataFrame = {
     require(nSketches >= 1 && nSketches <= 16, s"nSketches in [1,16], got $nSketches")
     val session = edges.sparkSession
-    val parts = loopPartitions(session, edges.count())
-    withLoopConfs(session, parts) {
-      val e = edges
-        .select(col("src"), col("dst"))
-        .distinct()
-        .repartition(parts, col("src"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      e.count()
-      val nodes = e
-        .select(col("src").as("id"))
-        .unionAll(e.select(col("dst").as("id")))
-        .distinct()
-      import graft.functions.Parity
-      val hashCols = (0 until nSketches).map { s =>
-        ((lit(Parity.permA(AnfPermOff + s)) * (col("id") % lit(Parity.BigP)) +
-          lit(Parity.permB(AnfPermOff + s))) % lit(Parity.BigP)).as(s"h$s")
-      }
-      val rhoCols = (0 until nSketches).map { s =>
-        when(col(s"h$s") === 0L, lit(31L))
-          .otherwise(length(bin(col(s"h$s"))) - length(rtrim(bin(col(s"h$s")), "0")))
-          .cast("long")
-          .as(s"rho$s")
-      }
-      val maskInit = (0 until nSketches).map(s =>
-        expr(s"shiftleft(CAST(1 AS BIGINT), CAST(rho$s AS INT))").as(s"m$s"))
-      val seed = nodes
-        .select(col("id") +: hashCols: _*)
-        .select(col("id") +: rhoCols: _*)
-        .select(col("id") +: maskInit: _*)
+    onDistinctEdges(edges, undirected = false) { (part, e, nodes) =>
+      val seed = fmSeed(nodes, nSketches)
       val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
       maskLoopRdd(e, seed, nSketches, rounds, earlyExit = false, freeSuperseded = true,
-        parts, estOf = anfEstOf(nSketches))(
+        part, estOf = anfEstOf(nSketches))(
         (h, changed, s, _) => {
           val est = (s / 77351L) * 100L + ((s % 77351L) * 100L) / 77351L
           rows += ((h.toLong, changed, est))
         })
-      e.unpersist()
       import session.implicits._
       rows.toSeq.toDF("round", "n_changed", "n_pairs_est").orderBy(col("round"))
     }
@@ -1245,36 +1121,8 @@ object GraphOps {
       exact: Boolean = false): DataFrame = {
     require(nSketches >= 1 && nSketches <= 16, s"nSketches in [1,16], got $nSketches")
     val session = edges.sparkSession
-    val parts = loopPartitions(session, edges.count())
-    withLoopConfs(session, parts) {
-      val e = edges
-        .select(col("src"), col("dst"))
-        .distinct()
-        .repartition(parts, col("src"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      e.count()
-      val nodes = e
-        .select(col("src").as("id"))
-        .unionAll(e.select(col("dst").as("id")))
-        .distinct()
-      import graft.functions.Parity
-      val ss = 0 until nSketches
-      val hashCols = ss.map { s =>
-        ((lit(Parity.permA(AnfPermOff + s)) * (col("id") % lit(Parity.BigP)) +
-          lit(Parity.permB(AnfPermOff + s))) % lit(Parity.BigP)).as(s"h$s")
-      }
-      val rhoCols = ss.map { s =>
-        when(col(s"h$s") === 0L, lit(31L))
-          .otherwise(length(bin(col(s"h$s"))) - length(rtrim(bin(col(s"h$s")), "0")))
-          .cast("long")
-          .as(s"rho$s")
-      }
-      val maskInit = ss.map(s =>
-        expr(s"shiftleft(CAST(1 AS BIGINT), CAST(rho$s AS INT))").as(s"m$s"))
-      val seed = nodes
-        .select(col("id") +: hashCols: _*)
-        .select(col("id") +: rhoCols: _*)
-        .select(col("id") +: maskInit: _*)
+    onDistinctEdges(edges, undirected = false) { (part, e, nodes) =>
+      val seed = fmSeed(nodes, nSketches)
       // per-node accumulators RIDE THE LOOP STATE as extras — (prev ball
       // estimate, running 1/h-weighted sum), folded once per round in
       // the same exact integer micro arithmetic as the SQL (nonneg
@@ -1290,7 +1138,7 @@ object GraphOps {
         harmEx = Phys.materialized(nodes.select(col("id"), lit(0L).as("ex_u")))
       }
       val state = maskLoopRdd(e, seed, nSketches, rounds, earlyExit = !exact,
-        freeSuperseded = true, parts,
+        freeSuperseded = true, part,
         extraInit = (_, m) => Array(estF(m), 0L),
         extraFold = (ex, _, n, h) => {
           val cur = estF(n)
@@ -1315,7 +1163,6 @@ object GraphOps {
             reach = reach.unionByName(newPairs)
             frontier = newPairs
           })
-      e.unpersist()
       val harm = maskStateDf(session, state, nSketches, nExtras = 2)
         .select(col("id"), col("x1").as("harm_est_micro"))
       val base =
@@ -1453,48 +1300,19 @@ object GraphOps {
       topK: Int = 100): DataFrame = {
     require(nSketches >= 1 && nSketches <= 16, s"nSketches in [1,16], got $nSketches")
     val session = edges.sparkSession
-    val parts = loopPartitions(session, edges.count())
-    withLoopConfs(session, parts) {
-      val e = edges
-        .select(col("src"), col("dst"))
-        .distinct()
-        .repartition(parts, col("src"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      e.count()
-      val nodes = e
-        .select(col("src").as("id"))
-        .unionAll(e.select(col("dst").as("id")))
-        .distinct()
-      import graft.functions.Parity
-      val ss = 0 until nSketches
-      val hashCols = ss.map { s =>
-        ((lit(Parity.permA(AnfPermOff + s)) * (col("id") % lit(Parity.BigP)) +
-          lit(Parity.permB(AnfPermOff + s))) % lit(Parity.BigP)).as(s"h$s")
-      }
-      val rhoCols = ss.map { s =>
-        when(col(s"h$s") === 0L, lit(31L))
-          .otherwise(length(bin(col(s"h$s"))) - length(rtrim(bin(col(s"h$s")), "0")))
-          .cast("long")
-          .as(s"rho$s")
-      }
-      val maskInit = ss.map(s =>
-        expr(s"shiftleft(CAST(1 AS BIGINT), CAST(rho$s AS INT))").as(s"m$s"))
-      val seed = nodes
-        .select(col("id") +: hashCols: _*)
-        .select(col("id") +: rhoCols: _*)
-        .select(col("id") +: maskInit: _*)
+    onDistinctEdges(edges, undirected = false) { (part, e, nodes) =>
+      val seed = fmSeed(nodes, nSketches)
       // per-node (prev ball estimate, h-weighted distance sum) ride the
       // loop state as extras — one integer fold per round, replacing the
       // DataFrame form's per-round accumulation join + checkpoint
       val estF = anfEstOf(nSketches)
       val state = maskLoopRdd(e, seed, nSketches, rounds, earlyExit = true,
-        freeSuperseded = true, parts,
+        freeSuperseded = true, part,
         extraInit = (_, m) => Array(estF(m), 0L),
         extraFold = (ex, _, n, h) => {
           val cur = estF(n)
           Array(cur, ex(1) + (cur - ex(0)) * h.toLong)
         })()
-      e.unpersist()
       maskStateDf(session, state, nSketches, nExtras = 2)
         .select(
           col("id"),
@@ -1601,36 +1419,8 @@ object GraphOps {
       permille: Int = 900): DataFrame = {
     require(nSketches >= 1 && nSketches <= 16, s"nSketches in [1,16], got $nSketches")
     val session = edges.sparkSession
-    val parts = loopPartitions(session, edges.count())
-    withLoopConfs(session, parts) {
-      val e = edges
-        .select(col("src"), col("dst"))
-        .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct()
-        .repartition(parts, col("src"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      e.count()
-      val nodes = e
-        .select(col("src").as("id"))
-        .unionAll(e.select(col("dst").as("id")))
-        .distinct()
-      import graft.functions.Parity
-      val hashCols = (0 until nSketches).map { s =>
-        ((lit(Parity.permA(AnfPermOff + s)) * (col("id") % lit(Parity.BigP)) +
-          lit(Parity.permB(AnfPermOff + s))) % lit(Parity.BigP)).as(s"h$s")
-      }
-      val rhoCols = (0 until nSketches).map { s =>
-        when(col(s"h$s") === 0L, lit(31L))
-          .otherwise(length(bin(col(s"h$s"))) - length(rtrim(bin(col(s"h$s")), "0")))
-          .cast("long")
-          .as(s"rho$s")
-      }
-      val maskInit = (0 until nSketches).map(s =>
-        expr(s"shiftleft(CAST(1 AS BIGINT), CAST(rho$s AS INT))").as(s"m$s"))
-      val seed = nodes
-        .select(col("id") +: hashCols: _*)
-        .select(col("id") +: rhoCols: _*)
-        .select(col("id") +: maskInit: _*)
+    onDistinctEdges(edges, undirected = true) { (part, e, nodes) =>
+      val seed = fmSeed(nodes, nSketches)
       // the per-h estimate is ONE scalar: Σ_u LUT[Σ_s ρ_s(u)] over the
       // round's NEW masks, riding the round action of [[MaskRounds.maskLoopRdd]] —
       // no per-round readout aggregate, no per-round isEmpty action
@@ -1638,10 +1428,9 @@ object GraphOps {
       // reads the same round action (the changed count).
       val ests = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
       maskLoopRdd(e, seed, nSketches, maxRounds, earlyExit = true, freeSuperseded = true,
-        parts, estOf = anfEstOf(nSketches))(
+        part, estOf = anfEstOf(nSketches))(
         (h, _, s, _) =>
           ests += ((h.toLong, (s / 77351L) * 100L + ((s % 77351L) * 100L) / 77351L)))
-      e.unpersist()
       // ≤ maxRounds scalars: the permille readout runs driver-side, in
       // the same exact 64-bit arithmetic as the SQL. N(∞) = the last
       // recorded estimate (monotone masks → monotone N).
@@ -1733,10 +1522,8 @@ object GraphOps {
     * node via max(struct(cnt, -label)) — only one row per node crosses
     * the exchange), with constant plan depth via per-round checkpoints.
     */
-  def labelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
-    val session = edges.sparkSession
-    val parts = loopPartitions(session, edges.count())
-    withLoopConfs(session, parts) {
+  def labelPropagation(edges: DataFrame, rounds: Int): DataFrame =
+    inLoop(edges) { part =>
       val und = edges
         .filter(col("src") =!= col("dst"))
         .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
@@ -1744,7 +1531,7 @@ object GraphOps {
       val ud = und
         .select(col("a").as("src"), col("b").as("dst"))
         .unionAll(und.select(col("b").as("src"), col("a").as("dst")))
-        .repartition(parts, col("src"))
+        .repartition(part.numPartitions, col("src"))
         .persist(StorageLevel.MEMORY_AND_DISK)
       ud.count()
       var labels = Phys.materialized(
@@ -1763,7 +1550,6 @@ object GraphOps {
       ud.unpersist()
       labels.select(col("id"), col("lbl").as("community"))
     }
-  }
 
   /** Orient the undirected simple graph (rows `(a, b)` with a<b,
     * dedup'd) by DEGREE: each edge points from its lower-degree endpoint
@@ -2239,10 +2025,8 @@ object GraphOps {
     * Output: the surviving edges with their in-truss support
     * `(a, b, sup)`.
     */
-  def kTruss(edges: DataFrame, k: Int = 3, maxRounds: Int = 30): DataFrame = {
-    val session = edges.sparkSession
-    val parts = loopPartitions(session, edges.count())
-    withLoopConfs(session, parts) {
+  def kTruss(edges: DataFrame, k: Int = 3, maxRounds: Int = 30): DataFrame =
+    inLoop(edges) { _ =>
       var cur = Phys.materialized(
         edges
           .filter(col("src") =!= col("dst"))
@@ -2265,7 +2049,6 @@ object GraphOps {
       require(out != null, s"k-truss did not converge within $maxRounds rounds")
       out
     }
-  }
 
   /** [[kTruss]] mirrored: `rounds` unrolled peel CTEs (sorted-id
     * triangle enumeration — support is orientation-independent), final
@@ -2835,10 +2618,8 @@ object GraphOps {
     */
   val CorenessBroadcastNodes = 8000000L
 
-  def corenessHIndex(edges: DataFrame, maxRounds: Int = 64): DataFrame = {
-    val session = edges.sparkSession
-    val parts = loopPartitions(session, edges.count() * 2)
-    withLoopConfs(session, parts) {
+  def corenessHIndex(edges: DataFrame, maxRounds: Int = 64): DataFrame =
+    inLoop(edges, copies = 2) { part =>
       val simple = Phys.materialized(
         edges
           .filter(col("src") =!= col("dst"))
@@ -2853,15 +2634,15 @@ object GraphOps {
       // inside this partitioning: ZERO per-round exchanges.
       val undSrc = org.apache.spark.sql.graftbridge.CheckpointBridge
         .withDeclaredHashPartitioning(
-          undAll.repartition(parts, col("src")).localCheckpoint(true),
+          undAll.repartition(part.numPartitions, col("src")).localCheckpoint(true),
           Seq("src"),
-          parts)
+          part.numPartitions)
       var state = Phys.materialized(undSrc.groupBy(col("src").as("id")).agg(count(lit(1)).as("c")))
       val nNodes = state.count()
       val broadcastMode = nNodes <= CorenessBroadcastNodes
       // the shuffle fallback fetches state through a dst-layout copy
       // (the r14 shape: dst-co-located fetch, |E|→src window shuffle)
-      lazy val undDst = Phys.materialized(undSrc.repartition(parts, col("dst")))
+      lazy val undDst = Phys.materialized(undSrc.repartition(part.numPartitions, col("dst")))
       // null = full round; else the previous round's CHANGED node ids.
       // An h-index can only move when some neighbor's value moved last
       // round, so a frontier round recomputes exactly the frontier's
@@ -2939,7 +2720,7 @@ object GraphOps {
         changed =
           if (m.nonEmpty) m("changed").asInstanceOf[Long]
           else merged.agg(count_if(col("n") =!= col("c"))).head().getLong(0)
-        if (sys.env.contains("GRAFT_CORENESS_DEBUG"))
+        if (sys.env.contains("GRAFT_LOOP_DEBUG"))
           System.err.println(f"[coreness] round=$h changed=$changed mode=${if (frontier == null) "full" else "frontier"} sec=${(System.nanoTime() - tRound) / 1e9}%.2f")
         frontier =
           if (changed == 0L || changed > CorenessFrontierCap ||
@@ -2950,7 +2731,6 @@ object GraphOps {
       require(changed == 0L, s"h-index coreness did not converge within $maxRounds rounds")
       state.select(col("id"), col("c").as("coreness"))
     }
-  }
 
   /** Continuous-approximation power-law MLE over the undirected degree
     * sequence (Clauset, Shalizi & Newman 2009, eq. 3.1 with
@@ -3083,8 +2863,7 @@ object GraphOps {
 
   def msf(edges: DataFrame, maxRounds: Int = 20, tailCap: Int = MsfTailCap): DataFrame = {
     val session = edges.sparkSession
-    val parts = loopPartitions(session, edges.count())
-    withLoopConfs(session, parts) {
+    inLoop(edges) { _ =>
       // The working set CARRIES its own component labels: (u, v) are the
       // current super-node endpoints, (a, b, wn) the original edge payload
       // the forest is read from. Initially u=a, v=b (every node its own
@@ -3257,20 +3036,17 @@ object GraphOps {
     * Output: `(id, n_paths, stress)` for nodes with positive stress —
     * n_paths = Σ_s σ_sv over the same horizon.
     */
-  def stressCentrality(edges: DataFrame, nSources: Int = 4, rounds: Int = 3): DataFrame = {
-    val session = edges.sparkSession
-    val parts = loopPartitions(session, edges.count())
-    withLoopConfs(session, parts) {
+  def stressCentrality(edges: DataFrame, nSources: Int = 4, rounds: Int = 3): DataFrame =
+    inLoop(edges) { part =>
       val e = edges
         .select(col("src"), col("dst"))
         .filter(col("src") =!= col("dst"))
         .distinct()
-        .repartition(parts, col("src"))
+        .repartition(part.numPartitions, col("src"))
         .persist(StorageLevel.MEMORY_AND_DISK)
       e.count()
-      val nodes = e.select(col("src").as("id")).unionAll(e.select(col("dst").as("id"))).distinct()
       val f0 = Phys.materialized(
-        nodes
+        MaskRounds.nodeSet(e)
           .filter(col("id").between(1L, nSources.toLong))
           .select(col("id").as("s"), col("id"), lit(1L).as("sigma")))
       val levels = new Array[DataFrame](rounds + 1)
@@ -3312,7 +3088,6 @@ object GraphOps {
       e.unpersist()
       out
     }
-  }
 
   /** [[stressCentrality]] mirrored: forward σ levels f1..fR with a
     * NOT-EXISTS visited guard, backward DAG-path counts gR..g1, readout
@@ -3401,10 +3176,8 @@ object GraphOps {
     * exactly the state [[bowtieCensus]] needs, with no extra
     * nodes-distinct or join.
     */
-  private[operators] def sccPivotState(edges: DataFrame, rounds: Int): DataFrame = {
-    val session = edges.sparkSession
-    val parts = loopPartitions(session, edges.count() * 2)
-    withLoopConfs(session, parts) {
+  private[operators] def sccPivotState(edges: DataFrame, rounds: Int): DataFrame =
+    inLoop(edges, copies = 2) { part =>
       val fwd = edges.select(col("src"), col("dst")).withColumn("gate", lit(1L))
       val bwd = edges.select(col("dst").as("src"), col("src").as("dst"), lit(2L).as("gate"))
       // bit_or folds a reciprocal pair into one gate-3 row; doubles as
@@ -3413,20 +3186,16 @@ object GraphOps {
         .unionAll(bwd)
         .groupBy(col("src"), col("dst"))
         .agg(expr("bit_or(gate)").as("gate"))
-        .repartition(parts, col("src"))
+        .repartition(part.numPartitions, col("src"))
         .persist(StorageLevel.MEMORY_AND_DISK)
       e.count()
-      val seed = e
-        .select(col("src").as("id"))
-        .unionAll(e.select(col("dst").as("id")))
-        .distinct()
+      val seed = MaskRounds.nodeSet(e)
         .select(col("id"), when(col("id") === 1L, lit(3L)).otherwise(lit(0L)).as("m0"))
       val state = maskLoopRdd(e, seed, 1, rounds, earlyExit = true,
-        freeSuperseded = true, parts, gated = true)()
+        freeSuperseded = true, part, gated = true)()
       e.unpersist()
-      maskStateDf(session, state, 1)
+      maskStateDf(edges.sparkSession, state, 1)
     }
-  }
 
   /** Bow-tie census over [[sccPivotState]]: scc / downstream / upstream
     * node counts plus the never-reached remainder as 'disconnected' —

@@ -2,16 +2,80 @@ package graft.operators
 
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{bin, col, expr, length, lit, rtrim, when}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
-import Rounds.{countRows, roundLoop}
+import Rounds.{countRows, inLoop, roundLoop}
 
-/** The RDD body of the bitmask loops (multi-source BFS, landmark
-  * sweeps, ANF sketches, harmonic/closeness, effective diameter, the
-  * SCC pivot sweep): [[maskLoopRdd]] and its readouts. */
+/** The bitmask loops (multi-source BFS, landmark sweeps, ANF sketches,
+  * harmonic/closeness, effective diameter, the SCC pivot sweep): their
+  * prelude ([[onDistinctEdges]], [[nodeSet]]), their seeds ([[bitSeed]],
+  * [[fmSeed]]), the RDD body [[maskLoopRdd]] and its readouts. */
 private[operators] object MaskRounds {
+
+  /** The bitmask loops' prelude, opened through [[Rounds.inLoop]] (sized
+    * from |E|): the distinct (src, dst) pairs of `edges` — or, when
+    * `undirected`, of their union with the reversed edges — laid out on
+    * `src` in the loop's partition count, persisted and counted, then
+    * `body(part, e, nodes)` with [[nodeSet]] of that edge list. The
+    * edges are unpersisted when `body` returns. Distinct because OR is
+    * idempotent: parallel edges add shuffle rows, never information.
+    */
+  def onDistinctEdges[A](edges: DataFrame, undirected: Boolean)(
+      body: (HashPartitioner, DataFrame, DataFrame) => A): A =
+    inLoop(edges) { part =>
+      val directed = edges.select(col("src"), col("dst"))
+      val pairs =
+        if (undirected) directed.unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
+        else directed
+      val e = pairs
+        .distinct()
+        .repartition(part.numPartitions, col("src"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      e.count()
+      try body(part, e, nodeSet(e))
+      finally e.unpersist()
+    }
+
+  /** Every endpoint of the edge list `e`, once, as `id`. */
+  def nodeSet(e: DataFrame): DataFrame =
+    e.select(col("src").as("id")).unionAll(e.select(col("dst").as("id"))).distinct()
+
+  /** A one-mask seed `(id, m0)`: node `lo + k` holds bit k for
+    * k < `nBits`, every other node 0. The power of two is exact as a
+    * double (exponents ≤ 62), and DuckDB computes the identical literal
+    * power. */
+  def bitSeed(nodes: DataFrame, lo: Long, nBits: Int): DataFrame =
+    nodes.select(
+      col("id"),
+      when(
+        col("id") >= lo && col("id") <= lo + nBits - 1,
+        expr(s"CAST(pow(2, id - $lo) AS BIGINT)")).otherwise(lit(0L)).as("m0"))
+
+  /** The Flajolet–Martin seed `(id, m0..m{K-1})` of the ANF-family
+    * sketches: sketch s of node v holds the single bit `tz(hash_s(v))`,
+    * the trailing zeros of an LCG hash reduced mod BigP FIRST (the
+    * engine's 64-bit overflow discipline), read off `bin()` — no libm. */
+  def fmSeed(nodes: DataFrame, nSketches: Int): DataFrame = {
+    import graft.functions.Parity
+    val ss = 0 until nSketches
+    def h(s: Int): Column =
+      (lit(Parity.permA(GraphOps.AnfPermOff + s)) * (col("id") % lit(Parity.BigP)) +
+        lit(Parity.permB(GraphOps.AnfPermOff + s))) % lit(Parity.BigP)
+    val rho = ss.map { s =>
+      when(col(s"h$s") === 0L, lit(31L))
+        .otherwise(length(bin(col(s"h$s"))) - length(rtrim(bin(col(s"h$s")), "0")))
+        .cast("long")
+        .as(s"rho$s")
+    }
+    val mask = ss.map(s => expr(s"shiftleft(CAST(1 AS BIGINT), CAST(rho$s AS INT))").as(s"m$s"))
+    nodes
+      .select(col("id") +: ss.map(s => h(s).as(s"h$s")): _*)
+      .select(col("id") +: rho: _*)
+      .select(col("id") +: mask: _*)
+  }
 
   /** RDD core of the mask loop — same rounds, same integer math, zero
     * Catalyst work per round.
@@ -48,7 +112,7 @@ private[operators] object MaskRounds {
       maxRounds: Int,
       earlyExit: Boolean,
       freeSuperseded: Boolean,
-      parts: Int,
+      part: HashPartitioner,
       gated: Boolean = false,
       extraInit: (Long, Array[Long]) => Array[Long] = null,
       extraFold: (Array[Long], Array[Long], Array[Long], Int) => Array[Long] = null,
@@ -56,7 +120,6 @@ private[operators] object MaskRounds {
       onRound: (Int, Long, Long, RDD[(Long, Array[Long])]) => Unit = (_, _, _, _) => ())
       : RDD[(Long, (Array[Long], Array[Long]))] = {
     val K = nMasks
-    val part = new HashPartitioner(parts)
     val eRdd = (if (gated) e.rdd.map(r => (r.getLong(0), (r.getLong(1), r.getLong(2))))
                 else e.rdd.map(r => (r.getLong(0), (r.getLong(1), -1L))))
       .partitionBy(part)

@@ -150,7 +150,7 @@ private[operators] object Rounds {
     * scheduling overhead per round — the dominant cost of small
     * iterative graphs.
     */
-  def loopPartitions(session: SparkSession, nEdges: Long): Int = {
+  private def loopPartitions(session: SparkSession, nEdges: Long): Int = {
     val configured = session.conf.get("spark.sql.shuffle.partitions", "200").toInt
     math.max(4, math.min(configured, (nEdges / 100000L + 1L).toInt))
   }
@@ -163,7 +163,7 @@ private[operators] object Rounds {
     * planned by Catalyst and the edge and seed preparation of the RDD
     * loops, whose rounds take `parts` from their `HashPartitioner`.
     */
-  def withLoopConfs[A](session: SparkSession, parts: Int)(body: => A): A = {
+  private def withLoopConfs[A](session: SparkSession, parts: Int)(body: => A): A = {
     val shuffleKey = "spark.sql.shuffle.partitions"
     val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
     val prevShuffle = session.conf.get(shuffleKey, "200")
@@ -177,11 +177,18 @@ private[operators] object Rounds {
     }
   }
 
-  /** Runs `body` under [[withLoopConfs]] with the loop partitioner sized
-    * from |E|. */
-  def inLoop[A](edges: DataFrame)(body: HashPartitioner => A): A = {
-    val parts = loopPartitions(edges.sparkSession, edges.count())
-    withLoopConfs(edges.sparkSession, parts)(body(new HashPartitioner(parts)))
+  /** The loop partitioner of `edges`: [[loopPartitions]] sized from
+    * |E| × `copies` (2 for a loop over both directions of every edge).
+    * Costs the edges.count job. */
+  def loopPartitioner(edges: DataFrame, copies: Long): HashPartitioner =
+    new HashPartitioner(loopPartitions(edges.sparkSession, edges.count() * copies))
+
+  /** Every loop's prelude: runs `body` under [[withLoopConfs]] with the
+    * [[loopPartitioner]] of `edges`, whose `numPartitions` is also the
+    * loop's DataFrame shuffle parallelism. */
+  def inLoop[A](edges: DataFrame, copies: Long = 1L)(body: HashPartitioner => A): A = {
+    val part = loopPartitioner(edges, copies)
+    withLoopConfs(edges.sparkSession, part.numPartitions)(body(part))
   }
 
   /** The edge list keyed on `src` under `part`, persisted, with `value`

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
@@ -8,7 +7,7 @@ import org.apache.spark.sql.types.{BooleanType, DoubleType, LongType, StructFiel
 import org.apache.spark.storage.StorageLevel
 
 import graft.model.INF
-import Rounds.{loopPartitions, perPartition, roundLoop, withLoopConfs}
+import Rounds.{inLoop, perPartition, roundLoop}
 
 /** The RDD body of [[GraphOps.sssp]]: the adjacency index, the frontier
   * relax, the two-hop fuse, the merge and the final overlay. */
@@ -39,11 +38,9 @@ private[operators] object SsspRounds {
     */
   def sssp(edges: DataFrame, source: Long, maxRounds: Int): DataFrame = {
     val session = edges.sparkSession
-    // A full pass over the input: on the text entry path
-    // (TextEdgeIO.ssspFromFile) this count is 2 of the 3 prelude jobs.
-    val parts = loopPartitions(session, edges.count())
-    withLoopConfs(session, parts) {
-      val part = new HashPartitioner(parts)
+    // inLoop's edges.count is a full pass over the input: on the text
+    // entry path (TextEdgeIO.ssspFromFile) it is 2 of the 3 prelude jobs.
+    inLoop(edges) { part =>
       // the one scan: parallel edges and self-loops stay in the index —
       // the min-combine absorbs them, as the reference's reducer does
       val index = edges

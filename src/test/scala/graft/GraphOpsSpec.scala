@@ -553,6 +553,62 @@ class GraphOpsSpec extends SparkSpec {
     }
   }
 
+  test("mask-loop round shape: prelude jobs, then one job per round") {
+    // chain 1→2→3→4→5, source 1: rounds 1–4 each reach one node and
+    // round 5 changes nothing, so the loop exits after 5 rounds. The
+    // prelude is 10 jobs: edges.count, the distinct edge layout's count,
+    // the seed's node distinct, the seed's changed count and the edge
+    // RDD's count (AQE submits each exchange as a job of its own).
+    val preludeJobs = 10
+    val chain = edgesDf((1 until 5).map(i => (i.toLong, i + 1L, 1.0)))
+    val (bfs, bfsJobs) = jobsOf(GraphOps.multiSourceBfs(chain, nSources = 1, rounds = 10))
+    assert(bfsJobs === preludeJobs + 5)
+    assert(bfs.collect().map(_.getLong(0)).sorted.toSeq === (1L to 5L))
+    // anfEstimate's estimator sum rides each round's readout job: one
+    // row per round run, no extra job per round
+    val (est, estJobs) = jobsOf(GraphOps.anfEstimate(chain, nSketches = 8, maxRounds = 8))
+    val rows = est.count()
+    assert(rows === 5L)
+    assert(estJobs === preludeJobs + rows)
+  }
+
+  test("anfResiduals: per-round estimates equal anfEstimate's rows; no change after them") {
+    // diameter 3 and a second source into the middle: the masks settle
+    // after 3 rounds, and the residual table runs 6 fixed rounds
+    val edges = edgesDf(Seq((1L, 2L, 1.0), (2L, 3L, 1.0), (3L, 4L, 1.0), (6L, 3L, 1.0)))
+    val est = GraphOps.anfEstimate(edges, nSketches = 8, maxRounds = 8)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val res = GraphOps.anfResiduals(edges, nSketches = 8, rounds = 6)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    assert(res.map(_._1).toSeq === (1L to 6L))
+    val last = est.keys.max
+    assert(last < 6L, s"anfEstimate did not exit early: $est")
+    res.foreach { case (h, changed, n) =>
+      assert(n === est(math.min(h, last)), s"round $h: est=$est res=${res.toSeq}")
+      if (h < last) assert(changed > 0L, s"round $h changed nothing: ${res.toSeq}")
+      else assert(changed === 0L, s"round $h changed after the fixed point: ${res.toSeq}")
+    }
+  }
+
+  test("effectiveDiameter: N(inf) and eff_h read anfEstimate on the symmetrized edges") {
+    // directed, the chain's balls differ from the undirected ones, so a
+    // prelude that lays out the directed edges reads other estimates
+    val edges = edgesDf(Seq((1L, 2L, 1.0), (2L, 3L, 1.0), (3L, 4L, 1.0), (4L, 5L, 1.0), (6L, 3L, 1.0)))
+    import org.apache.spark.sql.functions.col
+    val und = edges
+      .select(col("src"), col("dst"))
+      .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
+    val est = GraphOps.anfEstimate(und, nSketches = 8, maxRounds = 16)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1)
+    Seq(500, 900, 1000).foreach { permille =>
+      val row = GraphOps.effectiveDiameter(edges, nSketches = 8, maxRounds = 16, permille = permille)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      val nInf = est.last._2
+      val (effH, nAtH) = est.find { case (_, n) => n * 1000L >= nInf * permille }.get
+      assert(row.toSeq === Seq((effH, nAtH, nInf)), s"permille=$permille est=${est.toSeq}")
+    }
+  }
+
   test("triangleCount counts each triangle once, ignores dups and self-loops") {
     // K4 on {1,2,3,4} = 4 triangles; plus a self-loop and a parallel edge
     val k4 = for { a <- 1L to 4L; b <- 1L to 4L if a < b } yield (a, b, 1.0)
