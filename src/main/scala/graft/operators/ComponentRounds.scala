@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions.{col, greatest, least}
 import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
-import Rounds.{countRows, inLoop, longSchema, loopPartitioner, perPartition, roundLoop}
+import Rounds.{changedRows, countRows, inLoop, longSchema, loopPartitioner, perPartition, roundLoop}
 
 /** The RDD bodies of the component and peel loops:
   * [[GraphOps.connectedComponents]], [[GraphOps.connectedComponentsStars]],
@@ -50,7 +50,7 @@ private[operators] object ComponentRounds {
           preservesPartitioning = true)
         .persist(StorageLevel.MEMORY_AND_DISK)
       val nV = countRows(seed)
-      val state = roundLoop("connectedComponents", seed, nV, maxRounds, nV)(_._2) { (cur, _) =>
+      val state = roundLoop("connectedComponents", seed, nV, maxRounds, nV)(changedRows(_._2)) { (cur, _) =>
         val msgs = cur
           .filter(_._2._2)
           .mapValues(_._1)
@@ -94,7 +94,7 @@ private[operators] object ComponentRounds {
       part).mapValues(a => (a, true)).persist(StorageLevel.MEMORY_AND_DISK)
     var left = 1L
     val state = roundLoop("connectedComponentsStars", seed, 1L, maxRounds, Long.MaxValue)(
-      _._2,
+      changedRows(_._2),
       after = (_, changed, _, _) => left = changed) { (cur, _) =>
       val large = adjacency(star(cur.mapValues(_._1), large = true), part)
       val next = adjacency(star(large, large = false), part)
@@ -201,7 +201,7 @@ private[operators] object ComponentRounds {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val nV = countRows(seed)
     val dead = countRows(seed.filter(_._2._2))
-    roundLoop("kCore", seed, dead, Long.MaxValue, nV)(_._2) { (cur, _) =>
+    roundLoop("kCore", seed, dead, Long.MaxValue, nV)(changedRows(_._2)) { (cur, _) =>
       // frontier ⋈ und, co-partitioned: each partition's dead set probes
       // its own edges in one pass, with no hash table over the edges
       val decs = cur

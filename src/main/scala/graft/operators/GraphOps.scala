@@ -169,9 +169,12 @@ object GraphOps {
     * round-tripping the entire node state through HDFS (`:513-517`), with
     * a Hadoop counter for convergence (`:473-479`). Here the edge list is
     * scanned ONCE into a per-partition CSR adjacency index
-    * ([[SsspAdjacency]]), and a round touches only the frontier: one
-    * relax shuffle and ONE job on [[Rounds.roundLoop]] (the round shape
-    * is on [[SsspRounds.sssp]]). Frontiers below
+    * ([[SsspAdjacency]]), and a round touches only the frontier and the
+    * rows reached so far, kept as one sorted array block per partition
+    * ([[SsspPatch]]): one relax shuffle of bare (id, candidate) pairs
+    * and ONE job on [[Rounds.roundLoop]], so a round costs O(touched
+    * rows + frontier out-edges) (the round shape is on
+    * [[SsspRounds.sssp]]). Frontiers below
     * [[SsspRounds.FuseBelowRows]] relax two hops per job. Each round's
     * merged patch is `localCheckpoint`ed, so the lineage (and the task
     * binary) stays constant however many rounds a long-diameter graph

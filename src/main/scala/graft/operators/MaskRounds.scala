@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions.{bin, col, expr, length, lit, rtrim, when}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
-import Rounds.{countRows, inLoop, roundLoop}
+import Rounds.{changedRows, countRows, inLoop, roundLoop}
 
 /** The bitmask loops (multi-source BFS, landmark sweeps, ANF sketches,
   * harmonic/closeness, effective diameter, the SCC pivot sweep): their
@@ -146,8 +146,8 @@ private[operators] object MaskRounds {
     countRows(eRdd)
     val last = roundLoop("maskLoop", state0, changed0, maxRounds, Long.MaxValue,
       untilUnchanged = earlyExit, freeSuperseded = freeSuperseded)(
-      changed,
-      sums = Seq(v => estOf(v._2)),
+      changedRows(changed),
+      sums = Seq(r => estOf(r._2._2)),
       after = (h, changedCount, est, merged) =>
         onRound(h.toInt, changedCount, est(0), merged.filter(r => changed(r._2)).mapValues {
           case (m, n, _) =>

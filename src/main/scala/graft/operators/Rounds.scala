@@ -62,14 +62,18 @@ private[operators] object Rounds {
     * the residual rank forms),
     * in the shape of the reference's driver loop
     * (`SingleSourceSP.java:439-519`): a fixed job per round, stopped by
-    * a global counter. A loop state is an RDD keyed by node id under
-    * the loop's `HashPartitioner`. The caller passes only its
-    * algorithm:
+    * a global counter. A loop state is an RDD under the loop's
+    * `HashPartitioner` layout: either one row per node, keyed by node id
+    * (CC, star-CC, k-core, the mask loop, the rank forms), or one
+    * array-backed block per partition (SSSP's patch). The caller passes
+    * only its algorithm:
     *
     *   round     = the next state, built LAZILY from the current one
     *               (relax, combine, merge), and the rounds it covers (a
     *               fused round covers two)
-    *   isChanged = the rows a round changed — the next frontier
+    *   changedIn = how many rows an element of the state holds that the
+    *               round changed — the next frontier: 0 or 1 for a row
+    *               ([[changedRows]]), a block's own count for a block
     *
     * The driver owns the rest:
     *
@@ -80,11 +84,11 @@ private[operators] object Rounds {
     *     (`:473-479`);
     *   - [[checkpointedRound]] on every round's state;
     *   - the round's ONE job ([[perPartition]]): a pass over the new
-    *     state counting its changed rows and, for each of the caller's
-    *     `sums`, summing it over all rows (exact 64-bit sums,
+    *     state summing its changed rows and, for each of the caller's
+    *     `sums`, summing it over all elements (exact 64-bit sums,
     *     associative, so order-free and deterministic — unlike
     *     accumulators, which can double-count on retry; a caller with no
-    *     sums pays nothing per row beyond `isChanged`);
+    *     sums pays nothing per element beyond `changedIn`);
     *   - freeing the superseded state once the new one is cut, and not
     *     before (a cut RDD cannot be recomputed); without
     *     `freeSuperseded` every state stays, for callers that read the
@@ -96,19 +100,19 @@ private[operators] object Rounds {
     * readout. Returns the last state, still persisted (the seed if no
     * round ran).
     */
-  def roundLoop[V](
+  def roundLoop[T](
       name: String,
-      seed: RDD[(Long, V)],
+      seed: RDD[T],
       seedChanged: Long,
       maxRounds: Long,
       nV: Long,
       untilUnchanged: Boolean = true,
       freeSuperseded: Boolean = true)(
-      isChanged: V => Boolean,
-      sums: Seq[V => Long] = Nil,
-      after: (Long, Long, Array[Long], RDD[(Long, V)]) => Unit =
-        (_: Long, _: Long, _: Array[Long], _: RDD[(Long, V)]) => ())(
-      round: (RDD[(Long, V)], RoundAt) => (Long, RDD[(Long, V)])): RDD[(Long, V)] = {
+      changedIn: T => Long,
+      sums: Seq[T => Long] = Nil,
+      after: (Long, Long, Array[Long], RDD[T]) => Unit =
+        (_: Long, _: Long, _: Array[Long], _: RDD[T]) => ())(
+      round: (RDD[T], RoundAt) => (Long, RDD[T])): RDD[T] = {
     val bound = math.min(maxRounds, math.max(1L, nV - 1L))
     val debug = sys.env.contains("GRAFT_LOOP_DEBUG")
     val fs = sums.toArray
@@ -125,10 +129,10 @@ private[operators] object Rounds {
       val counts = perPartition(state) { it =>
         var c = 0L
         val s = new Array[Long](k)
-        it.foreach { case (_, v) =>
-          if (isChanged(v)) c += 1
+        it.foreach { e =>
+          c += changedIn(e)
           var i = 0
-          while (i < k) { s(i) += fs(i)(v); i += 1 }
+          while (i < k) { s(i) += fs(i)(e); i += 1 }
         }
         (c, s)
       }
@@ -142,6 +146,11 @@ private[operators] object Rounds {
     }
     state
   }
+
+  /** [[roundLoop]]'s `changedIn` for a state of one row per node: 1 for
+    * a row whose value `isChanged`. */
+  def changedRows[V](isChanged: V => Boolean): ((Long, V)) => Long =
+    r => if (isChanged(r._2)) 1L else 0L
 
   /** Loop shuffle parallelism: ≈100k edges per partition, floor 4,
     * capped at the session's configured shuffle partitions. At cluster
@@ -229,8 +238,8 @@ private[operators] object Rounds {
       sums: ((X, X) => Long)*)(step: RDD[(Long, X)] => RDD[(Long, X)]): DataFrame = {
     val rows = scala.collection.mutable.ArrayBuffer.empty[Row]
     roundLoop(name, seed.mapValues(x => (x, x)), 0L, iters, Long.MaxValue, untilUnchanged = false)(
-      v => changed(v._1, v._2),
-      sums.map(f => (v: (X, X)) => f(v._1, v._2)),
+      changedRows((v: (X, X)) => changed(v._1, v._2)),
+      sums.map(f => (r: (Long, (X, X))) => f(r._2._1, r._2._2)),
       (r, c, s, _) => rows += Row.fromSeq(r +: c +: s.toSeq)) { (cur, _) =>
       (1L, cur.join(step(cur.mapValues(_._2))).mapValues { case ((_, x), y) => (x, y) })
     }.unpersist(false)

@@ -225,6 +225,83 @@ class GraphOpsSpec extends SparkSpec {
     assert(d === (0 to 12).map(i => i.toLong -> i.toDouble).toMap)
   }
 
+  test("sssp: maxRounds cuts the rounds, updated marks the last round's improvements") {
+    // 0→3 reaches 3 at hop 1 (dist 10); the path 0→1→2→3 improves it to
+    // 3 at hop 3, and 4 improves in step from 11 to 4. 7→8 is a second
+    // component: 7 is a source kept at INF, 8 is never reached (Q1, Q4).
+    // |V| = 7, so the |V|-1 bound is 6 hops. A round fuses two hops
+    // while at least two are left, so maxRounds = 2 runs one fused round
+    // and 3 runs a fused round then a single hop; `updated` is measured
+    // against the state before the last round, fused or not.
+    val edges = edgesDf(Seq((0L, 1L, 1.0), (1L, 2L, 1.0), (2L, 3L, 1.0), (0L, 3L, 10.0),
+      (3L, 4L, 1.0), (7L, 8L, 1.0)))
+    def run(maxRounds: Int): Map[Long, (Double, Boolean)] =
+      GraphOps
+        .sssp(edges, 0L, maxRounds)
+        .collect()
+        .map(r => r.getLong(0) -> (r.getDouble(1), r.getBoolean(2)))
+        .toMap
+    val T = true
+    val F = false
+    assert(run(1) === Map(0L -> (0.0, F), 1L -> (1.0, T), 2L -> (INF, F), 3L -> (10.0, T),
+      7L -> (INF, F)))
+    assert(run(2) === Map(0L -> (0.0, F), 1L -> (1.0, T), 2L -> (2.0, T), 3L -> (10.0, T),
+      4L -> (11.0, T), 7L -> (INF, F)))
+    assert(run(3) === Map(0L -> (0.0, F), 1L -> (1.0, F), 2L -> (2.0, F), 3L -> (3.0, T),
+      4L -> (11.0, F), 7L -> (INF, F)))
+    assert(run(4) === Map(0L -> (0.0, F), 1L -> (1.0, F), 2L -> (2.0, F), 3L -> (3.0, T),
+      4L -> (4.0, T), 7L -> (INF, F)))
+    assert(run(Int.MaxValue) === Map(0L -> (0.0, F), 1L -> (1.0, F), 2L -> (2.0, F),
+      3L -> (3.0, F), 4L -> (4.0, F), 7L -> (INF, F)))
+  }
+
+  test("sssp rounds run without execution memory: no combine map, cogroup or sort") {
+    // every task of every round job reports peakExecutionMemory = 0, so
+    // no round step goes through a Spark Aggregator, a cogroup or a
+    // sorting shuffle writer (each charges its map's estimated size)
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+    def roundTaskPeaks(edges: Seq[(Long, Long, Double)]): (Map[Long, Double], Seq[Long]) = {
+      val sc = spark.sparkContext
+      val tag = "graft.test.roundMemory"
+      val jobs = scala.collection.mutable.ArrayBuffer.empty[Seq[Int]]
+      val peaks = scala.collection.mutable.ArrayBuffer.empty[(Int, Long)]
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (e.properties != null && e.properties.getProperty(tag) != null)
+            jobs.synchronized(jobs += e.stageIds)
+        override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+          if (e.taskMetrics != null)
+            peaks.synchronized(peaks += e.stageId -> e.taskMetrics.peakExecutionMemory)
+      }
+      val df = edgesDf(edges)
+      sc.addSparkListener(listener)
+      sc.setLocalProperty(tag, "1")
+      val out =
+        try GraphOps.sssp(df, 0L)
+        finally {
+          sc.setLocalProperty(tag, null)
+          org.apache.spark.sql.graftbridge.CheckpointBridge.drainListenerBus(sc)
+          sc.removeSparkListener(listener)
+        }
+      // a stage belongs to the first job that lists it; the first three
+      // jobs are the prelude (edges.count and the index build)
+      val prelude = jobs.take(3).flatten.toSet
+      val rounds = jobs.drop(3).flatten.toSet -- prelude
+      assert(rounds.nonEmpty)
+      val d = out.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      (d, peaks.collect { case (s, p) if rounds(s) => p }.toSeq)
+    }
+    val (chain, chainPeaks) = roundTaskPeaks((0 until 12).map(i => (i.toLong, i + 1L, 1.0)))
+    assert(chain === (0 to 12).map(i => i.toLong -> i.toDouble).toMap)
+    assert(chainPeaks.nonEmpty && chainPeaks.forall(_ == 0L), chainPeaks)
+    val rnd = new scala.util.Random(42)
+    val random = Seq.fill(300) {
+      (rnd.nextInt(60).toLong, rnd.nextInt(60).toLong, (rnd.nextInt(9) + 1).toDouble)
+    }
+    val (_, randomPeaks) = roundTaskPeaks(random)
+    assert(randomPeaks.nonEmpty && randomPeaks.forall(_ == 0L), randomPeaks)
+  }
+
   test("connectedComponents round shape: three prelude jobs, then one job per round") {
     // a 4-node path and one extra edge: label 0 reaches node 3 in round
     // 3 and round 4 changes nothing, so the loop stops before its |V|-1
