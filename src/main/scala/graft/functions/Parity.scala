@@ -33,9 +33,20 @@ object Parity {
 
   // ---- tokenization --------------------------------------------------------
 
+  /** The word separator of every text tokenizer: the class of RE2's
+    * `\s`, which the oracles' `regexp_split_to_array(text, '\s+')`
+    * splits on. Java's `\s` also matches U+000B (vertical tab), so
+    * `split(text, "\\s+")` would cut a word that the oracle keeps whole.
+    */
+  val WordSep = "[\\t\\n\\f\\r ]+"
+
+  /** `text` split on [[WordSep]], empties kept: the raw array the
+    * split-array kernels ([[ShingleKernel]]) read. */
+  def splitWords(text: Column): Column = split(text, WordSep)
+
   /** Whitespace tokens, empties dropped. */
   def tokens(text: Column): Column =
-    filter(split(text, "\\s+"), t => length(t) > lit(0))
+    filter(splitWords(text), t => length(t) > lit(0))
 
   def tokensSql(text: String): String =
     s"list_filter(regexp_split_to_array($text, '\\s+'), t -> len(t) > 0)"

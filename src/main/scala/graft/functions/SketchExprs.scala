@@ -145,7 +145,7 @@ object MinHashSig {
 
 /** Shared single-pass tokenize → shingle loops for the kernels below.
   *
-  * Input is the RAW `split(text, "\\s+")` array (split is codegen'd, so
+  * Input is the RAW [[Parity.splitWords]] array (split is codegen'd, so
   * tokenization semantics — including boundary empty strings — stay
   * byte-identical with the `filter(split(...), len > 0)` Column form the
   * oracles mirror); the kernel skips the empties itself. These exist

@@ -66,7 +66,7 @@ object Dedup {
       // BigP), as the explode_outer aggregate form produced
       graft.functions.MinHashSig(
         coalesce(
-          graft.functions.TokenCodes(split(col("text"), "\\s+")),
+          graft.functions.TokenCodes(Parity.splitWords(col("text"))),
           array().cast("array<long>")),
         MinhashK).as("sig"))
 
@@ -675,7 +675,7 @@ object Dedup {
       col("doc_id"),
       graft.functions.SimHash40(
         coalesce(
-          graft.functions.ShingleH40s(split(col("text"), "\\s+"), distinct = true),
+          graft.functions.ShingleH40s(Parity.splitWords(col("text")), distinct = true),
           array().cast("array<long>")))
         .as("simhash"))
 
@@ -710,8 +710,8 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
   }
 
-  private def shingles(text: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    graft.functions.ShingleStrings(split(text, "\\s+"), distinct = true)
+  private[operators] def shingles(text: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    graft.functions.ShingleStrings(Parity.splitWords(text), distinct = true)
 
   /** Document-frequency cap for the inverted shingle index: shingles
     * contained in more than this many documents (within a lang block)
@@ -837,8 +837,8 @@ object Dedup {
     * ubiquitous shingles for bounded buckets.
     *
     * The theorem: order every document's shingles by one global order
-    * (ascending document frequency, rarest first — ties on the shingle
-    * string); if `J(A,B) ≥ t` then A and B must share a shingle among
+    * (ascending document frequency, rarest first, ties on any fixed
+    * key); if `J(A,B) ≥ t` then A and B must share a shingle among
     * each one's first `|d| − ⌈t·|d|⌉ + 1` shingles (skipping all of
     * A's prefix means the overlap fits in the suffix, which is too
     * small). So only PREFIX shingles enter the inverted index: a
@@ -848,62 +848,29 @@ object Dedup {
     * `2·min(|A|,|B|) ≥ max(|A|,|B|)` (t rational → integer-exact)
     * prunes cross-size candidates before verification.
     *
-    * Verification is exact: candidates re-join the FULL shingle index,
-    * the acceptance test is the grid-free integer compare
-    * `2·inter ≥ uni`, and `jaccard_ppm` is exact integer ppm. Cost is
-    * Σ_cand |A| — proportional to the (prefix-pruned) candidate count,
-    * never to a hot bucket's square.
+    * Plan ([[PrefixJoin.pairs]]): the shingle strings cross ONE
+    * exchange, sorted on (lang, shingle), where each shingle gets a
+    * `Long` id and its df; from then on a document is a sorted id array
+    * in one block per partition. Candidates come from an exchange of the
+    * prefix ids only; the pairs are deduplicated by a sort-based
+    * exchange on `doc_a`, and each carries doc_a's ids to doc_b's
+    * partition, where `inter` is one sorted merge. Ties in the df order
+    * break on the id, not the string: any global order keeps the
+    * filter complete, and verification is exact, so the pairs are the
+    * same. The acceptance test is the integer compare `2·inter ≥ uni`
+    * and `jaccard_ppm` is exact integer ppm. Two jobs: a count that
+    * sizes the partitioner, and the output. Cost is one shuffle of the
+    * shingle rows, then Σ_doc |prefix| ids for the candidate index and
+    * Σ_cand |A| ids for verification — proportional to the
+    * (prefix-pruned) candidate count, never to a hot bucket's square.
     */
-  def prefixFilterPairs(docs: DataFrame): DataFrame = {
-    val inv = Phys.materialized(
-      docs.select(col("doc_id"), col("lang"), explode(shingles(col("text"))).as("g")))
-    val dfs = inv.groupBy(col("lang"), col("g")).agg(count(lit(1)).as("df"))
-    val wDoc = org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id"))
-    val ranked = inv
-      .join(dfs, Seq("lang", "g"))
-      .withColumn("n_sh", count(lit(1)).over(wDoc))
-      .withColumn(
-        "rk",
-        row_number().over(wDoc.orderBy(col("df"), col("g"))).cast("long"))
-    // prefix length for t = 1/2: n − ⌈n/2⌉ + 1, all integer
-    val prefix = Phys.materialized(
-      ranked
-        .filter(col("rk") <= col("n_sh") - expr("(n_sh + 1) div 2") + 1L)
-        .select(col("doc_id"), col("lang"), col("g"), col("n_sh")))
-    val cand = prefix
-      .alias("a")
-      .join(
-        prefix.alias("b"),
-        col("a.lang") === col("b.lang") && col("a.g") === col("b.g") &&
-          col("a.doc_id") < col("b.doc_id") &&
-          lit(2L) * least(col("a.n_sh"), col("b.n_sh")) >=
-            greatest(col("a.n_sh"), col("b.n_sh")))
-      .select(
-        col("a.doc_id").as("doc_a"),
-        col("b.doc_id").as("doc_b"),
-        col("a.n_sh").as("na"),
-        col("b.n_sh").as("nb"))
-      .distinct()
-    val full = inv.select(col("doc_id"), col("g"))
-    cand
-      .join(full.alias("va"), col("va.doc_id") === col("doc_a"))
-      .join(
-        full.alias("vb"),
-        col("vb.doc_id") === col("doc_b") && col("vb.g") === col("va.g"))
-      .groupBy(col("doc_a"), col("doc_b"), col("na"), col("nb"))
-      .agg(count(lit(1)).as("inter"))
-      .withColumn("uni", col("na") + col("nb") - col("inter"))
-      .filter(lit(2L) * col("inter") >= col("uni"))
-      .select(
-        col("doc_a"),
-        col("doc_b"),
-        col("inter"),
-        col("uni"),
-        expr("inter * 1000000 div uni").as("jaccard_ppm"))
-  }
+  def prefixFilterPairs(docs: DataFrame): DataFrame = PrefixJoin.pairs(docs)
 
-  /** [[prefixFilterPairs]] mirrored: same df order, same prefix length,
-    * same size filter, same integer acceptance.
+  /** [[prefixFilterPairs]] mirrored: the same output rows. The df order
+    * breaks ties on the shingle string here and on a shingle id there, so
+    * the two may pick different prefixes for a doc, but the filter is
+    * complete under any order and verification is exact; the prefix
+    * length, size filter and integer acceptance are the same.
     */
   def prefixFilterPairsSql(): String = {
     val toks = graft.functions.Parity.tokensSql("text")
@@ -1612,7 +1579,7 @@ object Dedup {
     */
   def minhashPrecision(docs: DataFrame): DataFrame = {
     val codes = coalesce(
-      graft.functions.TokenCodes(split(col("text"), "\\s+")),
+      graft.functions.TokenCodes(Parity.splitWords(col("text"))),
       array().cast("array<long>"))
     val cand = Phys.materialized(minhashCandidates(docs))
     val toks = Phys.materialized(

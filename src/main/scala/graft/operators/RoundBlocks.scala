@@ -142,4 +142,32 @@ private[operators] object SortedIds {
     }
     java.util.Arrays.copyOf(s, n)
   }
+
+  /** The indices `0 until n` in the order of `before`, a strict order
+    * on indices: a stable bottom-up merge sort on `Int` arrays, so a
+    * caller sorts parallel primitive arrays without a tuple per row. */
+  def order(n: Int)(before: (Int, Int) => Boolean): Array[Int] = {
+    var a = Array.range(0, n)
+    var b = new Array[Int](n)
+    var w = 1
+    while (w < n) {
+      var lo = 0
+      while (lo < n) {
+        val mid = math.min(lo + w, n)
+        val hi = math.min(lo + 2 * w, n)
+        var i = lo
+        var j = mid
+        var k = lo
+        while (k < hi) {
+          if (j < hi && (i == mid || before(a(j), a(i)))) { b(k) = a(j); j += 1 }
+          else { b(k) = a(i); i += 1 }
+          k += 1
+        }
+        lo = hi
+      }
+      val t = a; a = b; b = t
+      w *= 2
+    }
+    a
+  }
 }

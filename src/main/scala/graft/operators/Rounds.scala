@@ -157,9 +157,10 @@ private[operators] object Rounds {
     * scale the cap always wins (the configured parallelism is sized to
     * the data); locally this stops a 15k-row state from paying 32-task
     * scheduling overhead per round — the dominant cost of small
-    * iterative graphs.
+    * iterative graphs. [[PrefixJoin]] sizes its partitioner by the same
+    * rule, per document.
     */
-  private def loopPartitions(session: SparkSession, nEdges: Long): Int = {
+  def loopPartitions(session: SparkSession, nEdges: Long): Int = {
     val configured = session.conf.get("spark.sql.shuffle.partitions", "200").toInt
     math.max(4, math.min(configured, (nEdges / 100000L + 1L).toInt))
   }

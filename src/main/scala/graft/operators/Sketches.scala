@@ -39,7 +39,7 @@ object Sketches {
     val space = Parity.TokP * Parity.TokP2
     val distinctShingles = docs
       .select(
-        explode(graft.functions.ShingleStrings(split(col("text"), "\\s+"), distinct = true))
+        explode(graft.functions.ShingleStrings(Parity.splitWords(col("text")), distinct = true))
           .as("g"))
       .distinct()
     val hashes = distinctShingles.select(Parity.tokenH40(col("g")).as("h")).distinct()
@@ -581,7 +581,7 @@ object Sketches {
     val num = HllAlpha1e4 * m * m * (1L << rMax)
     val hashes = docs.select(
       col("source"),
-      explode(graft.functions.ShingleH40s(split(col("text"), "\\s+"), distinct = true)).as("h"))
+      explode(graft.functions.ShingleH40s(Parity.splitWords(col("text")), distinct = true)).as("h"))
     // max-merge registers: map-side partial max, at most m rows/source
     val regs = hashes
       .select(

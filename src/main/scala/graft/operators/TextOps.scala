@@ -1419,7 +1419,7 @@ object TextOps {
   def decontaminate(docs: DataFrame, maxDf: Long = DecontamMaxDf): DataFrame = {
     val sh = docs.select(
       col("doc_id"),
-      explode(graft.functions.ShingleStrings(split(col("text"), "\\s+"), distinct = true))
+      explode(graft.functions.ShingleStrings(Parity.splitWords(col("text")), distinct = true))
         .as("g"))
     val benchShingles =
       sh.filter(pmod(col("doc_id"), lit(BenchmarkMod)) === 0).select(col("g")).distinct()
@@ -1558,7 +1558,7 @@ object TextOps {
   def repetition(docs: DataFrame): DataFrame = {
     val grams = docs.select(
       col("doc_id"),
-      explode(graft.functions.ShingleStrings(split(col("text"), "\\s+"), distinct = false))
+      explode(graft.functions.ShingleStrings(Parity.splitWords(col("text")), distinct = false))
         .as("g"))
     val per = grams.groupBy(col("doc_id"), col("g")).agg(count(lit(1)).as("c"))
     val agg = per

@@ -148,7 +148,7 @@ object Training {
       col("doc_id"),
       expr(s"CASE WHEN n_chars > $LogregLenThreshold THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END")
         .as("y"),
-      expr("CAST(size(filter(split(text, '\\\\s+'), t -> length(t) > 0)) AS BIGINT)").as("x1r"),
+      size(graft.functions.Parity.tokens(col("text"))).cast("long").as("x1r"),
       expr("CAST(length(text) - length(replace(text, 'e', '')) AS BIGINT)").as("x2r"))
 
   /** Integer feature means (one 1-row aggregate, collected — the same

@@ -935,7 +935,7 @@ object StreamOps {
   def decontamShingles(d: DataFrame): DataFrame = d.select(
     col("doc_id"),
     col("source"),
-    explode(graft.functions.ShingleStrings(split(col("text"), "\\s+"), distinct = true))
+    explode(graft.functions.ShingleStrings(graft.functions.Parity.splitWords(col("text")), distinct = true))
       .as("g"))
 
   /** The ARRIVAL side of the decontamination gate, input-agnostic

@@ -45,4 +45,14 @@ class RoundBlocksSpec extends AnyFunSuite {
       (i, j) => seen += s"B${a(i)}=${b(j)}")
     assert(seen.result() === Seq("L-4", "L1", "R2", "B3=3", "B9=9", "R12"))
   }
+
+  test("SortedIds.order sorts indices stably, at every length across the merge widths") {
+    val rnd = new scala.util.Random(7)
+    (0 to 70).foreach { n =>
+      val key = Array.fill(n)(rnd.nextInt(5).toLong)
+      val o = SortedIds.order(n)((x, y) => key(x) < key(y))
+      // stable: equal keys keep their index order
+      assert(o.toSeq === (0 until n).sortBy(i => (key(i), i)), s"n=$n")
+    }
+  }
 }

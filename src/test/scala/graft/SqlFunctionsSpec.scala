@@ -59,7 +59,7 @@ class SqlFunctionsSpec extends SparkSpec {
     import spark.implicits._
     val docs = kernelEdgeTexts.toDF("text").unionAll(
       spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(col("text")))
-    val arr = split(col("text"), "\\s+")
+    val arr = Parity.splitWords(col("text"))
     val legacyShingles = Parity.shingles(Parity.tokens(col("text")))
     // null text: the kernels propagate null, the legacy shingle forms
     // yield an empty array (the `when`'s otherwise) — every call site
@@ -139,5 +139,20 @@ class SqlFunctionsSpec extends SparkSpec {
       row.getSeq[Long](2) === Seq(
         functions.PolyHash.hash("a", 31L, Parity.TokP),
         functions.PolyHash.hash("b", 31L, Parity.TokP)))
+  }
+
+  test("word tokens split on DuckDB's \\s: a vertical tab stays inside its token") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    // RE2's \s (the oracles' regexp_split_to_array) is [\t\n\f\r ];
+    // Java's also matches U+000B, which split "a\u000Bb" into two words
+    val vt = "a\u000Bb c d e"
+    val toks = Seq(vt).toDF("text").select(Parity.tokens(col("text"))).head().getSeq[String](0)
+    assert(toks === Seq("a\u000Bb", "c", "d", "e"))
+    val docs = Seq((1L, vt, "en"), (2L, "a b c d e", "en")).toDF("doc_id", "text", "lang")
+    // {"a\u000Bb c d", "c d e"} against {"a b c", "b c d", "c d e"}: J = 1/4
+    assert(graft.operators.Dedup.prefixFilterPairs(docs).count() === 0L)
+    val sigs = graft.operators.Dedup.minhashSignatures(docs).orderBy("doc_id").collect()
+    assert(sigs(0).get(1) != sigs(1).get(1))
   }
 }
