@@ -3025,14 +3025,19 @@ object SparkEntry {
          |FROM a0 n LEFT JOIN a$rounds c ON c.id = n.id ORDER BY n.id""".stripMargin
   }
 
+  /** Core-number cap of [[corenessOracleSql]]: one past the harness
+    * graph's max coreness (7 at every tested sf). */
+  private val CorenessMaxK = 8
+
   /** Coreness oracle: per k ∈ [2, CorenessMaxK], `rounds` unrolled
     * peels (12 — the measured deepest cascade is 8, at k = max+1);
-    * coreness = 1 + Σ survive-flags via left joins, the same nesting
-    * identity the engine uses. The engine's empty-cap guard plus this
-    * parity gate make a silent truncation impossible.
+    * coreness = 1 + Σ survive-flags via left joins, by the nesting
+    * property of the cores. The engine has no cap: on data whose
+    * degeneracy outgrows it the oracle saturates at CorenessMaxK, and
+    * the parity gate fails instead of passing a truncated column.
     */
   private def corenessOracleSql(rounds: Int = 12): String = {
-    val maxK = GraphOps.CorenessMaxK
+    val maxK = CorenessMaxK
     val head = Seq(
       s"e AS MATERIALIZED (${GraphSource.lineitemEdgesSql})",
       """s AS MATERIALIZED (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b

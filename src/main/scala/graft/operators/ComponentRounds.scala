@@ -11,8 +11,7 @@ import Rounds.{changedRows, countRows, inLoop, longSchema, loopPartitioner, perP
 
 /** The RDD bodies of the component and peel loops:
   * [[GraphOps.connectedComponents]], [[GraphOps.connectedComponentsStars]],
-  * the k-core [[peel]] behind [[GraphOps.kCore]] and
-  * [[GraphOps.corenessTable]], and the bulk peel of
+  * the k-core [[peel]] behind [[GraphOps.kCore]], and the bulk peel of
   * [[GraphOps.densestSubgraph]]. */
 private[operators] object ComponentRounds {
 
@@ -233,46 +232,6 @@ private[operators] object ComponentRounds {
           StructField("in_core", BooleanType, nullable = false))))
     }
 
-  /** [[GraphOps.corenessTable]]: K−1 [[peel]] runs, each on the previous
-    * core's induced subgraph; a node dying in the k-peel has core
-    * number k − 1. */
-  def corenessTable(edges: DataFrame, maxK: Int): DataFrame = {
-    val session = edges.sparkSession
-    inLoop(edges, copies = 2) { part =>
-      var und = undirectedSimple(edges, part)
-      // the output reads the peel states, so they stay persisted
-      var coreness = session.sparkContext.emptyRDD[(Long, Long)]
-      var k = 2
-      var coreEdges = -1L
-      while (k <= maxK && coreEdges != 0L) {
-        val state = peel(und, k, part)
-        val kk = k - 1L
-        coreness = coreness.union(state.collect { case (id, (deg, _)) if deg < 0 => (id, kk) })
-        // the k-core's induced subgraph — empty iff the k-core is, since
-        // every survivor keeps at least k ≥ 2 neighbors
-        val alive = state.filter(_._2._1 >= 0).mapValues(_ => ())
-        val sub = und
-          .join(alive)
-          .map { case (s, (d, _)) => (d, s) }
-          .join(alive)
-          .map { case (d, (s, _)) => (s, d) }
-          .partitionBy(part)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        coreEdges = countRows(sub)
-        und.unpersist(false)
-        und = sub
-        k += 1
-      }
-      und.unpersist(false)
-      require(
-        coreEdges == 0L,
-        s"non-empty $maxK-core: the graph's degeneracy outgrew CorenessMaxK — raise the cap")
-      session.createDataFrame(
-        coreness.map { case (id, c) => Row(id, c) },
-        longSchema("id", "coreness"))
-    }
-  }
-
   /** [[GraphOps.densestSubgraph]]'s bulk-peel rounds on RDDs: per round
     * ONE alive-filter shuffle (the dst-side membership re-key) + one
     * degree-sum shuffle + one (|V|, Σdeg) job — the per-round profile
@@ -294,13 +253,13 @@ private[operators] object ComponentRounds {
       var i = 0
       var drained = false
       while (i < maxRounds && !drained) {
-        // deg over the alive-induced subgraph. Fast path (the
-        // corenessHIndex broadcast-state gate): while the alive set fits
-        // comfortably in an executor (≤ 8 M ids = 64 MB sorted array),
-        // broadcast it and the round is ONE narrow membership pass over
-        // the src-partitioned edges with map-side combine — the shuffle
-        // carries ≤ |alive| degree rows, never |E_i|. Above the gate,
-        // the general shape: dst-side membership re-keys |E_i| rows.
+        // deg over the alive-induced subgraph. Fast path: while the
+        // alive set fits comfortably in an executor (≤ 8 M ids = 64 MB
+        // sorted array), broadcast it and the round is ONE narrow
+        // membership pass over the src-partitioned edges with map-side
+        // combine — the shuffle carries ≤ |alive| degree rows, never
+        // |E_i|. Above the gate, the general shape: dst-side membership
+        // re-keys |E_i| rows.
         val deg =
           if (aliveCount <= GraphOps.DensestBroadcastMaxNodes) {
             val ids = perPartition(alive)(_.map(_._1).toArray).flatten

@@ -37,10 +37,11 @@ import Rounds.inLoop
   *
   * The loops' RDD bodies live in small objects, and the public methods
   * here delegate to them: [[Rounds]] (the round driver), [[SsspRounds]],
-  * [[ComponentRounds]], [[MaskRounds]] and [[RankRounds]]. Spark's
-  * closure cleaner parses the whole class file that declares a closure,
-  * every time one is handed to an RDD op, so a closure on a per-round
-  * path must not be declared in this object's large class.
+  * [[ComponentRounds]], [[CorenessRounds]], [[MaskRounds]] and
+  * [[RankRounds]]. Spark's closure cleaner parses the whole class file
+  * that declares a closure, every time one is handed to an RDD op, so a
+  * closure on a per-round path must not be declared in this object's
+  * large class.
   */
 object GraphOps {
 
@@ -2171,9 +2172,8 @@ object GraphOps {
 
   /** Broadcast-membership gate for [[densestSubgraph]]'s peel rounds:
     * alive sets up to this many ids ride the round as a sorted long
-    * array (8 B/id ⇒ 64 MB at the cap — the corenessHIndex
-    * broadcast-state budget); larger sets fall back to the shuffled
-    * membership join.
+    * array (8 B/id ⇒ 64 MB at the cap); larger sets fall back to the
+    * shuffled membership join.
     */
   val DensestBroadcastMaxNodes = 8000000L
 
@@ -2295,38 +2295,6 @@ object GraphOps {
        |SELECT t.n_edges, r.n_reciprocal,
        |       r.n_reciprocal * 1000000 // t.n_edges AS reciprocity_ppm
        |FROM t CROSS JOIN r""".stripMargin
-
-  /** Core-number cap for [[corenessTable]] — one past the harness
-    * graph's max coreness (7 at every tested sf). The operator
-    * REQUIRES the cap-core to be empty, so data whose degeneracy
-    * outgrows the cap fails loudly instead of silently truncating. */
-  val CorenessMaxK = 8
-
-  /** Full k-core DECOMPOSITION: every node's core number (degeneracy
-    * rank — the strongest cohesion measure cheaper than truss), not
-    * just membership at one k ([[kCore]]). Uses the nesting property
-    * (the (k+1)-core ⊆ k-core): a node that dies in the k-peel has
-    * core number k − 1, so the table is the union of the per-k death
-    * sets of K−1 [[ComponentRounds.peel]] runs — each a deletion cascade on the round
-    * driver, integer-exact and engine-deterministic.
-    *
-    * Scale shape: K−1 SEQUENTIAL peel loops over a SHRINKING graph —
-    * the nesting property cuts both ways: the k-core of G is the
-    * k-core of the (k−1)-core's induced subgraph, so each peel starts
-    * from the previous survivors' edges instead of the full graph,
-    * and the undirected materialization is paid once, not K−1 times.
-    * On the harness graph the k = 2 cascade dominates (its input is
-    * the full graph either way), but on a graph whose cores shrink
-    * early the restart-from-survivors form is the one that survives
-    * 100×. The sequential bucket-peel (Matula–Beck) is O(E) on one
-    * machine but inherently serial; the per-k cascade form is what
-    * distributes.
-    *
-    * Output: `(id, coreness)` for every node of the undirected simple
-    * graph.
-    */
-  def corenessTable(edges: DataFrame, maxK: Int = CorenessMaxK): DataFrame =
-    ComponentRounds.corenessTable(edges, maxK)
 
   /** Deterministic RANDOM WALKS — the DeepWalk/node2vec sampling shape
     * (Perozzi et al. 2014): one walk per source node, `nSteps` steps;
@@ -2577,163 +2545,26 @@ object GraphOps {
     * degree and repeatedly replace `c(v)` with the H-index of its
     * neighbors' current values (the largest `h` with ≥ h neighbors at
     * ≥ h). The sequence is pointwise non-increasing and converges
-    * EXACTLY to `coreness(v)` — the same table [[corenessTable]] peels
-    * out, produced by ONE loop whose round is a message exchange plus a
-    * rank aggregate, instead of K−1 sequential deletion cascades each
-    * with its own inner fixpoint.
+    * EXACTLY to the core number `coreness(v)` (degeneracy rank — the
+    * strongest cohesion measure cheaper than truss; [[kCore]] is
+    * membership at one k).
     *
-    * Physical round: `und` is checkpointed dst-partitioned once, the
-    * state rides id-partitioned checkpoints, so the neighbor-value join
-    * is exchange-free; the only per-round shuffle is the |E| message
-    * rows moving to their `src` for the H-index window
-    * (`max(least(row_number, c))` over neighbors sorted by `c` desc —
-    * tie-order-invariant, since the sorted value sequence is unique).
-    * The changed count rides the round checkpoint as an observed metric
-    * (the A4 pattern — no per-round count action). Round count is the
-    * graph's h-relaxation depth — never more than the longest peel
-    * cascade, and ONE loop pays it, not K−1.
+    * Physical rounds ([[CorenessRounds]]): message-driven on the round
+    * driver — only the nodes whose value fell last round send it to
+    * their neighbors, one `partitionBy` of primitive arrays, and only
+    * the nodes that hear a message recompute, so a round costs the
+    * changed nodes' edges, not |E|. The round count is the graph's
+    * h-relaxation depth (one hop per round, so a long path needs half
+    * its length); the loop is bounded by the degree sum.
     *
-    * The DuckDB oracle for `graph_coreness` keeps running the PEEL
-    * unroll ([[corenessOracleSql]]), so the correctness gate is an
-    * independent-algorithm cross-check; [[corenessTable]] stays as the
-    * in-suite exact reference ([[GraphOpsSpec]] asserts table equality).
+    * The DuckDB oracle for `graph_coreness` runs the PEEL unroll
+    * (`corenessOracleSql`), so the correctness gate is an
+    * independent-algorithm cross-check.
     *
     * Output: `(id, coreness)` for every node of the undirected simple
     * graph.
     */
-  /** Frontier-round guards for [[corenessHIndex]]: a round recomputes
-    * only the changed-frontier's neighborhood when the previous round's
-    * changed count is at most 1/[[CorenessFrontierFrac]] of the nodes
-    * AND at most [[CorenessFrontierCap]] (the broadcast-size bound —
-    * the frontier and its neighbor-id set ride broadcast semi-joins).
-    * Above either bound the round runs full, which is never worse than
-    * the pre-frontier loop.
-    */
-  val CorenessFrontierFrac = 64L
-  val CorenessFrontierCap = 2000000L
-
-  /** Node-count gate for the BROADCAST-STATE round mode: below this the
-    * per-round state table rides a broadcast (tens of MB) and the whole
-    * round is exchange-free; above it the loop falls back to the
-    * shuffle form (state fetch join + |E|→src exchange), whose cost per
-    * round is the designed large-cluster behavior. The same
-    * small-side-broadcast judgment call as any dimension join.
-    */
-  val CorenessBroadcastNodes = 8000000L
-
-  def corenessHIndex(edges: DataFrame, maxRounds: Int = 64): DataFrame =
-    inLoop(edges, copies = 2) { part =>
-      val simple = Phys.materialized(
-        edges
-          .filter(col("src") =!= col("dst"))
-          .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
-          .distinct())
-      val undAll = simple
-        .select(col("a").as("src"), col("b").as("dst"))
-        .unionAll(simple.select(col("b").as("src"), col("a").as("dst")))
-      // SRC layout, declared: the h-index grouping side. In broadcast
-      // mode every round's plan — state fetch (broadcast join), level
-      // counts, per-src window, final agg, state merge — runs entirely
-      // inside this partitioning: ZERO per-round exchanges.
-      val undSrc = org.apache.spark.sql.graftbridge.CheckpointBridge
-        .withDeclaredHashPartitioning(
-          undAll.repartition(part.numPartitions, col("src")).localCheckpoint(true),
-          Seq("src"),
-          part.numPartitions)
-      var state = Phys.materialized(undSrc.groupBy(col("src").as("id")).agg(count(lit(1)).as("c")))
-      val nNodes = state.count()
-      val broadcastMode = nNodes <= CorenessBroadcastNodes
-      // the shuffle fallback fetches state through a dst-layout copy
-      // (the r14 shape: dst-co-located fetch, |E|→src window shuffle)
-      lazy val undDst = Phys.materialized(undSrc.repartition(part.numPartitions, col("dst")))
-      // null = full round; else the previous round's CHANGED node ids.
-      // An h-index can only move when some neighbor's value moved last
-      // round, so a frontier round recomputes exactly the frontier's
-      // neighborhood (tiny once the relaxation settles).
-      var frontier: DataFrame = null
-      var changed = -1L
-      var h = 0
-      while (h < maxRounds && changed != 0L) {
-        h += 1
-        val tRound = System.nanoTime()
-        val stateAsDst = state.select(col("id").as("dst"), col("c"))
-        val msgs =
-          if (frontier == null) {
-            if (broadcastMode)
-              undSrc.join(broadcast(stateAsDst), Seq("dst")).select(col("src"), col("c"))
-            else
-              undDst.join(stateAsDst, Seq("dst")).select(col("src"), col("c"))
-          } else {
-            // EDGES restricted before any state fetch: neighbors-of-
-            // frontier via broadcast semi-join, then only the affected
-            // nodes' edges fetch state — a tail round never pays the
-            // full-|E| state probe, let alone its shuffle; both
-            // broadcast sets are count-bounded by the frontier guards
-            val affected = undSrc
-              .join(broadcast(frontier.select(col("id").as("dst"))), Seq("dst"))
-              .select(col("src"))
-              .distinct()
-            val subEdges = undSrc.join(broadcast(affected), Seq("src"))
-            if (broadcastMode)
-              subEdges.join(broadcast(stateAsDst), Seq("dst")).select(col("src"), col("c"))
-            else
-              subEdges.join(stateAsDst, Seq("dst")).select(col("src"), col("c"))
-          }
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("src"))
-          .orderBy(col("c").desc)
-        val next =
-          if (broadcastMode) {
-            // H-index from LEVEL COUNTS: h(v) = max over present
-            // neighbor-values L of min(L, #{neighbors ≥ L}) — identical
-            // to the sorted row_number formulation (for h* the h-index
-            // and L the smallest present level ≥ h*, min(L, cnt≥L) =
-            // h*, and no level exceeds it). msgs is src-partitioned, so
-            // the hash-agg, the cumulative window (over the few
-            // distinct levels per src — values live in the small
-            // coreness range once settled) and the final agg all run
-            // partition-local.
-            val wcum = w.rowsBetween(
-              org.apache.spark.sql.expressions.Window.unboundedPreceding,
-              org.apache.spark.sql.expressions.Window.currentRow)
-            msgs
-              .groupBy(col("src"), col("c"))
-              .agg(count(lit(1)).as("k"))
-              .withColumn("cc", sum(col("k")).over(wcum))
-              .groupBy(col("src").as("id"))
-              .agg(max(least(col("c"), col("cc"))).as("n"))
-          } else
-            // shuffle form: one |E|→src exchange + per-src sort
-            msgs
-              .withColumn("rn", row_number().over(w).cast("long"))
-              .groupBy(col("src").as("id"))
-              .agg(max(least(col("rn"), col("c"))).as("n"))
-        val obs = org.apache.spark.sql.Observation()
-        // full round: every node has a next value (inner); frontier
-        // round: untouched nodes keep their value (left_outer, n null)
-        val merged = Phys.materialized(
-          state
-            .join(next, Seq("id"), if (frontier == null) "inner" else "left_outer")
-            .observe(obs, count_if(col("n") =!= col("c")).as("changed")))
-        // drain the async listener bus before reading, else the explicit
-        // aggregate fallback fires nondeterministically (one extra job/round)
-        org.apache.spark.sql.graftbridge.CheckpointBridge.drainListenerBus(
-          state.sparkSession.sparkContext)
-        val m = org.apache.spark.sql.graftbridge.CheckpointBridge.observedMetrics(obs)
-        changed =
-          if (m.nonEmpty) m("changed").asInstanceOf[Long]
-          else merged.agg(count_if(col("n") =!= col("c"))).head().getLong(0)
-        if (sys.env.contains("GRAFT_LOOP_DEBUG"))
-          System.err.println(f"[coreness] round=$h changed=$changed mode=${if (frontier == null) "full" else "frontier"} sec=${(System.nanoTime() - tRound) / 1e9}%.2f")
-        frontier =
-          if (changed == 0L || changed > CorenessFrontierCap ||
-            changed * CorenessFrontierFrac > nNodes) null
-          else merged.filter(col("n") =!= col("c")).select(col("id"))
-        state = merged.select(col("id"), coalesce(col("n"), col("c")).as("c"))
-      }
-      require(changed == 0L, s"h-index coreness did not converge within $maxRounds rounds")
-      state.select(col("id"), col("c").as("coreness"))
-    }
+  def corenessHIndex(edges: DataFrame): DataFrame = CorenessRounds.coreness(edges)
 
   /** Continuous-approximation power-law MLE over the undirected degree
     * sequence (Clauset, Shalizi & Newman 2009, eq. 3.1 with

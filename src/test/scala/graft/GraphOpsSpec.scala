@@ -51,6 +51,41 @@ class GraphOpsSpec extends SparkSpec {
     (out, stages.size)
   }
 
+  /** Runs `body` and lists the peak execution memory of every task in
+    * the stages of the jobs it submits from this thread after its first
+    * `prelude` jobs (a stage belongs to the first job that lists it).
+    * Every round task of a loop that reports 0 runs no step through a
+    * Spark Aggregator, a cogroup or a sorting shuffle writer (each
+    * charges its map's estimated size). */
+  private def roundTaskPeaks[A](prelude: Int)(body: => A): (A, Seq[Long]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+    val sc = spark.sparkContext
+    val tag = "graft.test.roundMemory"
+    val jobs = scala.collection.mutable.ArrayBuffer.empty[Seq[Int]]
+    val peaks = scala.collection.mutable.ArrayBuffer.empty[(Int, Long)]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(tag) != null)
+          jobs.synchronized(jobs += e.stageIds)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null)
+          peaks.synchronized(peaks += e.stageId -> e.taskMetrics.peakExecutionMemory)
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(tag, "1")
+    val out =
+      try body
+      finally {
+        sc.setLocalProperty(tag, null)
+        org.apache.spark.sql.graftbridge.CheckpointBridge.drainListenerBus(sc)
+        sc.removeSparkListener(listener)
+      }
+    val before = jobs.take(prelude).flatten.toSet
+    val rounds = jobs.drop(prelude).flatten.toSet -- before
+    assert(rounds.nonEmpty)
+    (out, peaks.collect { case (s, p) if rounds(s) => p }.toSeq)
+  }
+
   private def ssspMap(edges: Seq[(Long, Long, Double)], src: Long): Map[Long, Double] =
     GraphOps
       .sssp(edgesDf(edges), src)
@@ -256,49 +291,20 @@ class GraphOpsSpec extends SparkSpec {
   }
 
   test("sssp rounds run without execution memory: no combine map, cogroup or sort") {
-    // every task of every round job reports peakExecutionMemory = 0, so
-    // no round step goes through a Spark Aggregator, a cogroup or a
-    // sorting shuffle writer (each charges its map's estimated size)
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-    def roundTaskPeaks(edges: Seq[(Long, Long, Double)]): (Map[Long, Double], Seq[Long]) = {
-      val sc = spark.sparkContext
-      val tag = "graft.test.roundMemory"
-      val jobs = scala.collection.mutable.ArrayBuffer.empty[Seq[Int]]
-      val peaks = scala.collection.mutable.ArrayBuffer.empty[(Int, Long)]
-      val listener = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit =
-          if (e.properties != null && e.properties.getProperty(tag) != null)
-            jobs.synchronized(jobs += e.stageIds)
-        override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-          if (e.taskMetrics != null)
-            peaks.synchronized(peaks += e.stageId -> e.taskMetrics.peakExecutionMemory)
-      }
+    // the first three jobs are the prelude (edges.count and the index build)
+    def ssspPeaks(edges: Seq[(Long, Long, Double)]): (Map[Long, Double], Seq[Long]) = {
       val df = edgesDf(edges)
-      sc.addSparkListener(listener)
-      sc.setLocalProperty(tag, "1")
-      val out =
-        try GraphOps.sssp(df, 0L)
-        finally {
-          sc.setLocalProperty(tag, null)
-          org.apache.spark.sql.graftbridge.CheckpointBridge.drainListenerBus(sc)
-          sc.removeSparkListener(listener)
-        }
-      // a stage belongs to the first job that lists it; the first three
-      // jobs are the prelude (edges.count and the index build)
-      val prelude = jobs.take(3).flatten.toSet
-      val rounds = jobs.drop(3).flatten.toSet -- prelude
-      assert(rounds.nonEmpty)
-      val d = out.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      (d, peaks.collect { case (s, p) if rounds(s) => p }.toSeq)
+      val (out, peaks) = roundTaskPeaks(prelude = 3)(GraphOps.sssp(df, 0L))
+      (out.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap, peaks)
     }
-    val (chain, chainPeaks) = roundTaskPeaks((0 until 12).map(i => (i.toLong, i + 1L, 1.0)))
+    val (chain, chainPeaks) = ssspPeaks((0 until 12).map(i => (i.toLong, i + 1L, 1.0)))
     assert(chain === (0 to 12).map(i => i.toLong -> i.toDouble).toMap)
     assert(chainPeaks.nonEmpty && chainPeaks.forall(_ == 0L), chainPeaks)
     val rnd = new scala.util.Random(42)
     val random = Seq.fill(300) {
       (rnd.nextInt(60).toLong, rnd.nextInt(60).toLong, (rnd.nextInt(9) + 1).toDouble)
     }
-    val (_, randomPeaks) = roundTaskPeaks(random)
+    val (_, randomPeaks) = ssspPeaks(random)
     assert(randomPeaks.nonEmpty && randomPeaks.forall(_ == 0L), randomPeaks)
   }
 
@@ -780,54 +786,70 @@ class GraphOpsSpec extends SparkSpec {
     assert((r.getLong(0), r.getLong(1), r.getLong(2)) === ((3L, 2L, 666666L)))
   }
 
+  private def coreness(edges: Seq[(Long, Long)]): Map[Long, Long] =
+    GraphOps
+      .corenessHIndex(edgesDf(edges.map { case (a, b) => (a, b, 1.0) }))
+      .collect()
+      .map(r => r.getLong(0) -> r.getLong(1))
+      .toMap
+
   test("coreness: triangle with a tail, and K4 — exact core numbers") {
-    import spark.implicits._
     // triangle {1,2,3} + pendant 4–1: coreness 2,2,2,1
-    val tri = Seq((1L, 2L, 1.0), (2L, 3L, 1.0), (1L, 3L, 1.0), (1L, 4L, 1.0))
-      .toDF("src", "dst", "w")
-    val out = GraphOps.corenessTable(tri).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(out === Map(1L -> 2L, 2L -> 2L, 3L -> 2L, 4L -> 1L))
+    val tri = Seq((1L, 2L), (2L, 3L), (1L, 3L), (1L, 4L))
+    val expected = Map(1L -> 2L, 2L -> 2L, 3L -> 2L, 4L -> 1L)
+    assert(coreness(tri) === expected)
+    assert(GraphOpsSpec.matulaBeck(tri) === expected) // the specs' reference peel
     // K4: everyone coreness 3
-    val k4 = (for { a <- 1L to 4L; b <- (a + 1) to 4L } yield (a, b, 1.0))
-      .toDF("src", "dst", "w")
-    val out4 = GraphOps.corenessTable(k4).collect().map(_.getLong(1)).toSet
-    assert(out4 === Set(3L))
+    val k4 = for { a <- 1L to 4L; b <- (a + 1) to 4L } yield (a, b)
+    assert(coreness(k4) === (1L to 4L).map(_ -> 3L).toMap)
   }
 
   test("corenessHIndex: agrees with the peel decomposition exactly") {
-    import spark.implicits._
-    val tri = Seq((1L, 2L, 1.0), (2L, 3L, 1.0), (1L, 3L, 1.0), (1L, 4L, 1.0))
-      .toDF("src", "dst", "w")
-    val h = GraphOps.corenessHIndex(tri).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(h === Map(1L -> 2L, 2L -> 2L, 3L -> 2L, 4L -> 1L))
     // chain of pendants into a K4 — the h-relaxation needs several
     // rounds to walk the chain down (the peel's longest cascade)
-    val chain = (for { a <- 1L to 4L; b <- (a + 1) to 4L } yield (a, b, 1.0)) ++
-      Seq((4L, 5L, 1.0), (5L, 6L, 1.0), (6L, 7L, 1.0), (7L, 8L, 1.0))
-    val g = chain.toDF("src", "dst", "w")
-    val peel = GraphOps.corenessTable(g).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    val hIdx = GraphOps.corenessHIndex(g).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(hIdx === peel)
+    val chain = (for { a <- 1L to 4L; b <- (a + 1) to 4L } yield (a, b)) ++
+      Seq((4L, 5L), (5L, 6L), (6L, 7L), (7L, 8L))
+    val hIdx = coreness(chain)
+    assert(hIdx === GraphOpsSpec.matulaBeck(chain))
     assert(hIdx(5L) === 1L && hIdx(1L) === 3L)
   }
 
   test("corenessHIndex frontier rounds: a long path relaxes to all-ones through many tiny frontiers") {
-    import spark.implicits._
     // pure path: coreness 1 everywhere, but the h-relaxation must walk
-    // the 2→1 correction inward one hop per round — after round 1 the
-    // changed set is tiny, so almost every round runs in FRONTIER mode
-    // (changed·CorenessFrontierFrac ≤ n): exactly the delta-propagation
-    // semantics the frontier restriction must not break
+    // the 2→1 correction inward one hop per round — after round 1 only
+    // the two nodes next to the fallen ones send, so every later round's
+    // frontier is two nodes
     val n = 40L
-    val path = (1L until n).map(i => (i, i + 1, 1.0)).toDF("src", "dst", "w")
-    val out = GraphOps.corenessHIndex(path).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(out.size === n.toInt)
-    assert(out.values.forall(_ === 1L), s"path coreness must be all 1: $out")
+    val out = coreness((1L until n).map(i => (i, i + 1)))
+    assert(out === (1L to n).map(_ -> 1L).toMap)
+  }
+
+  test("corenessHIndex on a 2000-node path relaxes to coreness 1 in a 1000-round walk") {
+    // the correction enters at both ends and moves one hop per round
+    val n = 2000
+    assert(coreness(pathFromMiddle(n)) === (1 to n).map(_.toLong -> 1L).toMap)
+  }
+
+  test("corenessHIndex: K6 with a pendant tail of 3 — 5 on the clique, 1 on the tail") {
+    val k6 = for { a <- 1L to 6L; b <- (a + 1) to 6L } yield (a, b)
+    val tail = Seq((6L, 7L), (7L, 8L), (8L, 9L))
+    assert(coreness(k6 ++ tail) === (1L to 6L).map(_ -> 5L).toMap ++ (7L to 9L).map(_ -> 1L))
+  }
+
+  test("coreness round shape: four prelude jobs, then one job per round") {
+    // 11-node path 0..10: the seed holds every degree (1 at both ends),
+    // rounds 1-5 lower the next pair inward to 1 (node 5 last) and round
+    // 6 lowers nothing and stops the loop. The prelude is edges.count
+    // (two jobs under AQE), the simple-graph dedup's shuffle stage (AQE
+    // runs it when the edge RDD is built), and the one job that builds
+    // the blocks and reads |V| and the degree sum.
+    val path = edgesDf((0 until 10).map(i => (i.toLong, i + 1L, 1.0)))
+    val (out, jobs) = jobsOf(GraphOps.corenessHIndex(path))
+    assert(jobs === 4 + 6)
+    assert(out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ===
+      (0 to 10).map(_.toLong -> 1L).toMap)
+    val (_, peaks) = roundTaskPeaks(prelude = 4)(GraphOps.corenessHIndex(path))
+    assert(peaks.nonEmpty && peaks.forall(_ == 0L), peaks)
   }
 
   test("powerlawFit: hand-computed MLE on a 3-node path, hub graph skews alpha down") {
@@ -1093,5 +1115,40 @@ class GraphOpsSpec extends SparkSpec {
     val direct = GraphOps.triangleCount(edges).collect()(0)
     assert((viaUnd.getLong(0), viaUnd.getLong(1)) === ((direct.getLong(0), direct.getLong(1))))
     assert(viaUnd.getLong(1) === 2L)
+  }
+}
+
+object GraphOpsSpec {
+
+  /** Core numbers by the sequential bucket peel of Matula & Beck (1983)
+    * over the undirected simple graph of `edges` (self-loops and
+    * parallel edges dropped): repeatedly remove a node of least
+    * remaining degree; its core number is the largest such degree seen
+    * so far. */
+  def matulaBeck(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val adj = edges
+      .filter { case (a, b) => a != b }
+      .flatMap { case (a, b) => Seq(a -> b, b -> a) }
+      .groupBy(_._1)
+      .map { case (v, es) => v -> es.map(_._2).toSet }
+    val deg = scala.collection.mutable.Map(adj.map { case (v, ns) => v -> ns.size }.toSeq: _*)
+    val buckets = Array.fill(if (deg.isEmpty) 1 else deg.values.max + 1)(
+      scala.collection.mutable.Set.empty[Long])
+    deg.foreach { case (v, d) => buckets(d) += v }
+    val core = scala.collection.mutable.Map.empty[Long, Long]
+    var k = 0
+    while (core.size < adj.size) {
+      val d = buckets.indexWhere(_.nonEmpty)
+      val v = buckets(d).head
+      buckets(d) -= v
+      k = math.max(k, d)
+      core(v) = k.toLong
+      adj(v).filterNot(core.contains).foreach { u =>
+        buckets(deg(u)) -= u
+        deg(u) -= 1
+        buckets(deg(u)) += u
+      }
+    }
+    core.toMap
   }
 }

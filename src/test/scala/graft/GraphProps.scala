@@ -141,6 +141,24 @@ object GraphProps extends Properties("graph") {
     }
   }
 
+  property("corenessHIndex equals a Matula–Beck peel, self-loops and parallel edges included") =
+    forAll(genGraph) { edges =>
+      edges.isEmpty || {
+        import spark.implicits._
+        // every case also repeats its first edge reversed and loops its
+        // first node, on top of whatever repeats the generator drew
+        val (a, b, w) = edges.head
+        val all = edges ++ List((b, a, w), (a, a, 1.0))
+        val got = GraphOps
+          .corenessHIndex(all.toDF("src", "dst", "w"))
+          .collect()
+          .map(r => r.getLong(0) -> r.getLong(1))
+          .toMap
+        val expected = GraphOpsSpec.matulaBeck(all.map(e => (e._1, e._2)))
+        Prop(got == expected) :| s"got=$got expected=$expected"
+      }
+    }
+
   property("degree-ordered triangle count equals brute-force enumeration") =
     forAll(genGraph) { edges =>
       edges.isEmpty || {
