@@ -466,10 +466,7 @@ object SparkEntry {
       // one lineitem scan instead of two of each; the sampled side's
       // degrees/orientation are still computed on the SAMPLED subgraph,
       // exactly as before)
-      val und = operators.Phys.materialized(
-        e.filter(col("src") =!= col("dst"))
-          .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
-          .distinct())
+      val und = operators.Phys.materialized(GraphOps.simpleGraph(e))
       val exact = GraphOps
         .triangleCountUnd(und)
         .select(col("n_triangles").as("exact_triangles"))

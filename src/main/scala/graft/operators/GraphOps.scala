@@ -37,7 +37,7 @@ import Rounds.inLoop
   *
   * The loops' RDD bodies live in small objects, and the public methods
   * here delegate to them: [[Rounds]] (the round driver), [[SsspRounds]],
-  * [[ComponentRounds]], [[CorenessRounds]], [[MaskRounds]] and
+  * [[ComponentRounds]], [[PeelRounds]], [[MaskRounds]] and
   * [[RankRounds]]. Spark's closure cleaner parses the whole class file
   * that declares a closure, every time one is handed to an RDD op, so a
   * closure on a per-round path must not be declared in this object's
@@ -1528,10 +1528,7 @@ object GraphOps {
     */
   def labelPropagation(edges: DataFrame, rounds: Int): DataFrame =
     inLoop(edges) { part =>
-      val und = edges
-        .filter(col("src") =!= col("dst"))
-        .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
-        .distinct()
+      val und = simpleGraph(edges)
       val ud = und
         .select(col("a").as("src"), col("b").as("dst"))
         .unionAll(und.select(col("b").as("src"), col("a").as("dst")))
@@ -1584,6 +1581,16 @@ object GraphOps {
         when(aLow, col("db")).otherwise(col("da")).as("hdeg"))
   }
 
+  /** The undirected simple graph of `edges` as rows `(a, b)` with
+    * a < b: self-loops dropped, parallel and reversed edges collapsed by
+    * one `distinct`. The Catalyst-planned graph operators start here;
+    * each caller persists or materializes it as its plan needs. */
+  def simpleGraph(edges: DataFrame): DataFrame =
+    edges
+      .filter(col("src") =!= col("dst"))
+      .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
+      .distinct()
+
   /** Global triangle count over the undirected simple graph (dedup'd,
     * self-loops dropped), via degree-ordered orientation
     * ([[orientByDegree]]): every triangle {x≺y≺z} in the (degree, id)
@@ -1594,10 +1601,7 @@ object GraphOps {
     * Returns one row: (n_und_edges, n_triangles).
     */
   def triangleCount(edges: DataFrame): DataFrame = {
-    val und = edges
-      .filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
-      .distinct()
+    val und = simpleGraph(edges)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val out = triangleCountUnd(und)
     // triangleCountUnd's orientation materialization is eager, so und's
@@ -1684,11 +1688,7 @@ object GraphOps {
     */
   def modularity(edges: DataFrame, rounds: Int = 4): DataFrame = {
     val comm = labelPropagation(edges, rounds)
-    val und = Phys.materialized(
-      edges
-        .filter(col("src") =!= col("dst"))
-        .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
-        .distinct())
+    val und = Phys.materialized(simpleGraph(edges))
     val withC = und
       .join(comm.select(col("id").as("a"), col("community").as("ca")), Seq("a"))
       .join(comm.select(col("id").as("b"), col("community").as("cb")), Seq("b"))
@@ -1757,11 +1757,7 @@ object GraphOps {
     * Output: top `k` rows `(a, b, common)`, ties by (a, b).
     */
   def linkPrediction(edges: DataFrame, k: Int = 50): DataFrame = {
-    val simple = Phys.materialized(
-      edges
-        .filter(col("src") =!= col("dst"))
-        .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
-        .distinct())
+    val simple = Phys.materialized(simpleGraph(edges))
     val und = simple
       .select(col("a").as("id"), col("b").as("nb"))
       .unionAll(simple.select(col("b").as("id"), col("a").as("nb")))
@@ -1809,11 +1805,7 @@ object GraphOps {
     * endpoint count the sums run over).
     */
   def assortativity(edges: DataFrame): DataFrame = {
-    val simple = Phys.materialized(
-      edges
-        .filter(col("src") =!= col("dst"))
-        .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
-        .distinct())
+    val simple = Phys.materialized(simpleGraph(edges))
     val und = simple
       .select(col("a").as("src"), col("b").as("dst"))
       .unionAll(simple.select(col("b").as("src"), col("a").as("dst")))
@@ -1959,11 +1951,7 @@ object GraphOps {
     * emitted.
     */
   def clusteringCoefficient(edges: DataFrame): DataFrame = {
-    val simple = Phys.materialized(
-      edges
-        .filter(col("src") =!= col("dst"))
-        .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
-        .distinct())
+    val simple = Phys.materialized(simpleGraph(edges))
     val o = Phys.materializedHashedBy(orientByDegree(simple), Seq("lo"))
     val wedgeOrder =
       col("e1.hdeg") < col("e2.hdeg") ||
@@ -2031,11 +2019,7 @@ object GraphOps {
     */
   def kTruss(edges: DataFrame, k: Int = 3, maxRounds: Int = 30): DataFrame =
     inLoop(edges) { _ =>
-      var cur = Phys.materialized(
-        edges
-          .filter(col("src") =!= col("dst"))
-          .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
-          .distinct())
+      var cur = Phys.materialized(simpleGraph(edges))
       var nCur = cur.count()
       var out: DataFrame = null
       var round = 0
@@ -2093,12 +2077,14 @@ object GraphOps {
 
   /** k-core decomposition: iteratively peel nodes whose degree in the
     * surviving induced subgraph is below k, until a fixpoint — the
-    * deletion cascade of [[ComponentRounds.peel]] on the round driver shared with
-    * SSSP/CC. Returns every node of the undirected simple graph with
-    * its membership flag — the densest-region filter a graph pipeline
-    * runs before expensive per-node work.
+    * deletion cascade as [[corenessHIndex]]'s rounds with values clipped
+    * to {0, k} ([[PeelRounds.kCore]]): the seed kills every node of
+    * degree below k, and each round only the nodes that died last round
+    * tell their neighbours. Returns every node of the undirected simple
+    * graph with its membership flag — the densest-region filter a graph
+    * pipeline runs before expensive per-node work.
     */
-  def kCore(edges: DataFrame, k: Int): DataFrame = ComponentRounds.kCore(edges, k)
+  def kCore(edges: DataFrame, k: Int): DataFrame = PeelRounds.kCore(edges, k)
 
   /** Katz centrality (Katz 1953) in exact integer milli-units: the
     * path-counting centrality `x ← β + α·Aᵀx` — every incoming walk of
@@ -2170,13 +2156,6 @@ object GraphOps {
        |SELECT * FROM ($diffs) ORDER BY round""".stripMargin
   }
 
-  /** Broadcast-membership gate for [[densestSubgraph]]'s peel rounds:
-    * alive sets up to this many ids ride the round as a sorted long
-    * array (8 B/id ⇒ 64 MB at the cap); larger sets fall back to the
-    * shuffled membership join.
-    */
-  val DensestBroadcastMaxNodes = 8000000L
-
   /** Parallel densest-subgraph peel (Bahmani, Kumar & Vassilvitskii,
     * VLDB 2012, ε = 1/2): per round, ALL nodes whose degree in the
     * surviving induced subgraph is ≤ 3·ρ̄ (1.5× the average degree) are
@@ -2195,16 +2174,18 @@ object GraphOps {
     * densest region and how fast does the graph thin toward it" — the
     * community/fraud-mining read.
     *
-    * Scale shape: each round is one alive-set membership pass (a
-    * broadcast sorted id array up to [[DensestBroadcastMaxNodes]], two
-    * semi-joins above it) + one degree aggregate + one job for the
-    * round's (|V|, Σdeg) totals; the alive set geometrically shrinks,
-    * so total work is O(|E| · log |V|) with NO pair tables and no
-    * global sort. Output: one row per non-empty round `(round, n_nodes,
-    * n_edges, density_ppm, avg_deg_ppm)`.
+    * Scale shape: [[corenessHIndex]]'s CSR blocks with alive bits in
+    * the neighbour slots ([[PeelRounds.densestSubgraph]]). The prelude's
+    * one job reads row 0; each round kills in place, sends one message
+    * per edge of each killed node (one `partitionBy` of primitive
+    * arrays) and reads the next row's (|V|, Σdeg) in its one job. No
+    * alive set is collected or broadcast and no membership join runs;
+    * every edge carries one message over the whole peel. Output: one
+    * row per non-empty round `(round, n_nodes, n_edges, density_ppm,
+    * avg_deg_ppm)`.
     */
   def densestSubgraph(edges: DataFrame, maxRounds: Int = 12): DataFrame =
-    ComponentRounds.densestSubgraph(edges, maxRounds)
+    PeelRounds.densestSubgraph(edges, maxRounds)
 
   /** [[densestSubgraph]] mirrored: the same 12 bulk-peel rounds as a
     * materialized CTE chain (the Borůvka-oracle discipline — without
@@ -2549,7 +2530,7 @@ object GraphOps {
     * strongest cohesion measure cheaper than truss; [[kCore]] is
     * membership at one k).
     *
-    * Physical rounds ([[CorenessRounds]]): message-driven on the round
+    * Physical rounds ([[PeelRounds.coreness]]): message-driven on the round
     * driver — only the nodes whose value fell last round send it to
     * their neighbors, one `partitionBy` of primitive arrays, and only
     * the nodes that hear a message recompute, so a round costs the
@@ -2564,7 +2545,7 @@ object GraphOps {
     * Output: `(id, coreness)` for every node of the undirected simple
     * graph.
     */
-  def corenessHIndex(edges: DataFrame): DataFrame = CorenessRounds.coreness(edges)
+  def corenessHIndex(edges: DataFrame): DataFrame = PeelRounds.coreness(edges)
 
   /** Continuous-approximation power-law MLE over the undirected degree
     * sequence (Clauset, Shalizi & Newman 2009, eq. 3.1 with
@@ -2582,10 +2563,7 @@ object GraphOps {
     * Output: one row `(n_nodes, d_min, d_max, alpha_micro)`.
     */
   def powerlawFit(edges: DataFrame): DataFrame = {
-    val und = edges
-      .filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
-      .distinct()
+    val und = simpleGraph(edges)
     val deg = und
       .select(col("a").as("id"))
       .unionAll(und.select(col("b").as("id")))

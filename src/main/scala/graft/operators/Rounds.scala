@@ -13,7 +13,7 @@ import scala.reflect.ClassTag
   *
   * Design rule: an RDD closure on a per-round path is declared in a
   * small object — this one, [[SsspRounds]], [[ComponentRounds]],
-  * [[CorenessRounds]], [[MaskRounds]] or [[RankRounds]] — never in
+  * [[PeelRounds]], [[MaskRounds]] or [[RankRounds]] — never in
   * `GraphOps`. Spark's
   * closure cleaner re-reads and ASM-walks the whole class file that
   * declares a lambda, on every closure handed to an RDD op, and caches
@@ -59,16 +59,15 @@ private[operators] object Rounds {
   /** The one driver of the RDD fixpoint loops ([[SsspRounds.sssp]],
     * [[ComponentRounds.connectedComponents]],
     * [[ComponentRounds.connectedComponentsStars]],
-    * [[MaskRounds.maskLoopRdd]], the k-core [[ComponentRounds.peel]],
-    * the coreness rounds [[CorenessRounds.coreness]] and the residual
+    * [[MaskRounds.maskLoopRdd]], the peels of [[PeelRounds]] (coreness,
+    * the k-core and the densest-subgraph bulk peel) and the residual
     * rank forms), in the shape of the reference's driver loop
     * (`SingleSourceSP.java:439-519`): a fixed job per round, stopped by
     * a global counter. A loop state is an RDD under the loop's
     * `HashPartitioner` layout: either one row per node, keyed by node id
-    * (CC, star-CC, k-core, the mask loop, the rank forms), or one
-    * array-backed block per partition (SSSP's patch, the coreness
-    * block). The caller passes
-    * only its algorithm:
+    * (CC, star-CC, the mask loop, the rank forms), or one array-backed
+    * block per partition (SSSP's patch, the peels' [[PeelBlock]]). The
+    * caller passes only its algorithm:
     *
     *   round     = the next state, built LAZILY from the current one
     *               (relax, combine, merge), and the rounds it covers (a

@@ -108,6 +108,14 @@ class GraphOpsSpec extends SparkSpec {
     assert(prof.length === 2)
     assert(prof(0) === ((0L, 26L, 35L, 35L * 1000000 / 26)))
     assert(prof(1) === ((1L, 6L, 15L, 2500000L)))
+    // a node at exactly 1.5× the average degree dies: on the paths
+    // 3-1-4-6 and 2-5, v = 6 and Σdeg = 8, so nodes 1 and 4 have
+    // 2·2·6 = 3·8 and the graph drains after row 0
+    val tie = GraphOps
+      .densestSubgraph(edgesDf(Seq((1L, 3L, 1.0), (1L, 4L, 1.0), (4L, 6L, 1.0), (2L, 5L, 1.0))))
+      .collect()
+      .map(_.getLong(0))
+    assert(tie.toSeq === Seq(0L))
   }
 
   test("katz on a line graph: hand-computed milli-unit fixed point, sink included") {
@@ -331,18 +339,19 @@ class GraphOpsSpec extends SparkSpec {
     assert(out.values.forall(_ == false))
   }
 
-  test("kCore round shape: five prelude jobs, then one job per peel round") {
+  test("kCore round shape: three prelude jobs, then one job per peel round") {
     // 11-node path 0..10 at k = 2: the seed kills both ends, rounds 1-5
     // kill the next pair inward (node 5 last), round 6 kills nobody and
-    // stops the loop. The prelude is edges.count (two jobs under AQE),
-    // the simple-graph dedup's shuffle stage (AQE runs it when the edge
-    // RDD is built), the |V| count that builds the undirected graph and
-    // the degree seed, and the count of the seed's dead nodes.
+    // stops the loop. The prelude is edges.count (two jobs under AQE) and
+    // the one job that builds the blocks and reads |V|, the degree sum
+    // and the seed's dead nodes.
     val path = edgesDf((0 until 10).map(i => (i.toLong, i + 1L, 1.0)))
     val (out, jobs) = jobsOf(GraphOps.kCore(path, k = 2))
-    assert(jobs === 5 + 6)
+    assert(jobs === 3 + 6)
     assert(out.collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap ===
       (0 to 10).map(i => i.toLong -> false).toMap)
+    val (_, peaks) = roundTaskPeaks(prelude = 3)(GraphOps.kCore(path, k = 2))
+    assert(peaks.nonEmpty && peaks.forall(_ == 0L), peaks)
   }
 
   test("kCore on a 2000-node path peels through a 1000-round cascade") {
@@ -375,6 +384,47 @@ class GraphOpsSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getBoolean(1))
       .toMap
     assert(out === Map(1L -> false, 2L -> false))
+  }
+
+  test("peels on an empty and a self-loop-only edge list: empty frames, same schemas") {
+    import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
+    def schema(cols: (String, org.apache.spark.sql.types.DataType)*): StructType =
+      StructType(cols.map { case (n, t) => StructField(n, t, nullable = false) })
+    val loopsOnly = Seq((1L, 1L, 1.0), (2L, 2L, 1.0), (2L, 2L, 3.0))
+    Seq(Seq.empty[(Long, Long, Double)], loopsOnly).foreach { edges =>
+      val peels = Seq(
+        GraphOps.corenessHIndex(edgesDf(edges)) ->
+          schema("id" -> LongType, "coreness" -> LongType),
+        GraphOps.kCore(edgesDf(edges), k = 2) ->
+          schema("id" -> LongType, "in_core" -> BooleanType),
+        GraphOps.densestSubgraph(edgesDf(edges)) ->
+          schema(Seq("round", "n_nodes", "n_edges", "density_ppm", "avg_deg_ppm").map(_ -> LongType): _*))
+      peels.foreach { case (df, expected) =>
+        assert(df.schema === expected)
+        assert(df.collect().isEmpty)
+      }
+    }
+  }
+
+  test("kCore with k <= 1 keeps every node of the simple graph") {
+    // a path, a triangle, a parallel edge and a self-loop: every node of
+    // the simple graph has an edge, so the 1-core (and any lower k) is all
+    val edges = edgesDf(Seq(
+      (1L, 2L, 1.0), (2L, 3L, 1.0), (2L, 1L, 4.0), (3L, 3L, 1.0),
+      (10L, 11L, 1.0), (11L, 12L, 1.0), (12L, 10L, 1.0)))
+    val all = Seq(1L, 2L, 3L, 10L, 11L, 12L).map(_ -> true).toMap
+    Seq(0, 1, -1).foreach { k =>
+      val out = GraphOps.kCore(edges, k).collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
+      assert(out === all, s"k=$k")
+    }
+  }
+
+  test("densestSubgraph with maxRounds 0 has no rows, with 1 only row 0") {
+    val k6 = for { a <- 1L to 6L; b <- (a + 1) to 6L } yield (a, b, 1.0)
+    val g = edgesDf(k6 ++ (101L to 120L).map(l => (1L, l, 1.0)))
+    assert(GraphOps.densestSubgraph(g, maxRounds = 0).collect().isEmpty)
+    val one = GraphOps.densestSubgraph(g, maxRounds = 1).collect().map(r => Seq.tabulate(5)(r.getLong))
+    assert(one.toSeq === Seq(Seq(0L, 26L, 35L, 70L * 500000 / 26, 70L * 1000000 / 26)))
   }
 
   test("sssp on an empty edge list returns an empty result") {
@@ -836,19 +886,31 @@ class GraphOpsSpec extends SparkSpec {
     assert(coreness(k6 ++ tail) === (1L to 6L).map(_ -> 5L).toMap ++ (7L to 9L).map(_ -> 1L))
   }
 
-  test("coreness round shape: four prelude jobs, then one job per round") {
+  test("coreness round shape: three prelude jobs, then one job per round") {
     // 11-node path 0..10: the seed holds every degree (1 at both ends),
     // rounds 1-5 lower the next pair inward to 1 (node 5 last) and round
     // 6 lowers nothing and stops the loop. The prelude is edges.count
-    // (two jobs under AQE), the simple-graph dedup's shuffle stage (AQE
-    // runs it when the edge RDD is built), and the one job that builds
-    // the blocks and reads |V| and the degree sum.
+    // (two jobs under AQE) and the one job that builds the blocks from
+    // the one exchange of the edge pairs and reads |V| and the degree sum.
     val path = edgesDf((0 until 10).map(i => (i.toLong, i + 1L, 1.0)))
     val (out, jobs) = jobsOf(GraphOps.corenessHIndex(path))
-    assert(jobs === 4 + 6)
+    assert(jobs === 3 + 6)
     assert(out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ===
       (0 to 10).map(_.toLong -> 1L).toMap)
-    val (_, peaks) = roundTaskPeaks(prelude = 4)(GraphOps.corenessHIndex(path))
+    val (_, peaks) = roundTaskPeaks(prelude = 3)(GraphOps.corenessHIndex(path))
+    assert(peaks.nonEmpty && peaks.forall(_ == 0L), peaks)
+  }
+
+  test("densest round shape: three prelude jobs, then one job per round") {
+    // K6 + 20 leaves on node 1: the prelude's job reads row 0 (26 nodes),
+    // round 1 kills the leaves (row 1, the bare K6) and round 2 kills
+    // the regular K6, which leaves no edge and stops the loop.
+    val k6 = for { a <- 1L to 6L; b <- (a + 1) to 6L } yield (a, b, 1.0)
+    val g = edgesDf(k6 ++ (101L to 120L).map(l => (1L, l, 1.0)))
+    val (out, jobs) = jobsOf(GraphOps.densestSubgraph(g))
+    assert(jobs === 3 + 2)
+    assert(out.collect().map(_.getLong(0)).sorted.toSeq === Seq(0L, 1L))
+    val (_, peaks) = roundTaskPeaks(prelude = 3)(GraphOps.densestSubgraph(g))
     assert(peaks.nonEmpty && peaks.forall(_ == 0L), peaks)
   }
 

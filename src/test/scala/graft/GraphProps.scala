@@ -141,20 +141,77 @@ object GraphProps extends Properties("graph") {
     }
   }
 
+  /** `edges` plus its first edge reversed and a self-loop on its first
+    * node, on top of whatever repeats the generator drew. */
+  private def withRepeats(edges: List[(Long, Long, Double)]): List[(Long, Long, Double)] = {
+    val (a, b, w) = edges.head
+    edges ++ List((b, a, w), (a, a, 1.0))
+  }
+
   property("corenessHIndex equals a Matula–Beck peel, self-loops and parallel edges included") =
     forAll(genGraph) { edges =>
       edges.isEmpty || {
         import spark.implicits._
-        // every case also repeats its first edge reversed and loops its
-        // first node, on top of whatever repeats the generator drew
-        val (a, b, w) = edges.head
-        val all = edges ++ List((b, a, w), (a, a, 1.0))
+        val all = withRepeats(edges)
         val got = GraphOps
           .corenessHIndex(all.toDF("src", "dst", "w"))
           .collect()
           .map(r => r.getLong(0) -> r.getLong(1))
           .toMap
         val expected = GraphOpsSpec.matulaBeck(all.map(e => (e._1, e._2)))
+        Prop(got == expected) :| s"got=$got expected=$expected"
+      }
+    }
+
+  property("kCore(k) is the Matula–Beck core >= k, for k in 0..4") = forAll(genGraph) { edges =>
+    edges.isEmpty || {
+      import spark.implicits._
+      val all = withRepeats(edges)
+      val df = all.toDF("src", "dst", "w")
+      val core = GraphOpsSpec.matulaBeck(all.map(e => (e._1, e._2)))
+      Prop.all((0 to 4).map { k =>
+        val got = GraphOps.kCore(df, k).collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
+        val expected = core.map { case (v, c) => v -> (c >= k) }
+        Prop(got == expected) :| s"k=$k got=$got expected=$expected"
+      }: _*)
+    }
+  }
+
+  /** The densest-subgraph profile by the oracle's rule, run in the
+    * driver: over the undirected simple graph, round i records the alive
+    * set's (i, v, m2 / 2, density and average degree in ppm) while
+    * v > 0 and m2 > 0, where m2 is the alive nodes' degree sum in the
+    * alive-induced subgraph; a node survives into round i + 1 when
+    * 2·deg·v > 3·m2. */
+  private def densestProfile(edges: Seq[(Long, Long)], maxRounds: Int): Seq[Seq[Long]] = {
+    val adj = edges
+      .filter { case (a, b) => a != b }
+      .flatMap { case (a, b) => Seq(a -> b, b -> a) }
+      .groupBy(_._1)
+      .map { case (v, es) => v -> es.map(_._2).toSet }
+    var alive = adj.keySet
+    (0 until maxRounds).flatMap { i =>
+      val deg = alive.iterator.map(u => u -> adj(u).count(alive).toLong).toMap
+      val v = alive.size.toLong
+      val m2 = deg.values.sum
+      alive = alive.filter(u => 2L * deg(u) * v > 3L * m2)
+      if (v > 0 && m2 > 0) Some(Seq(i.toLong, v, m2 / 2, m2 * 500000L / v, m2 * 1000000L / v))
+      else None
+    }
+  }
+
+  property("densestSubgraph equals a driver run of the oracle's bulk-peel rule") =
+    forAll(genGraph, Gen.choose(0, 12)) { (edges, maxRounds) =>
+      edges.isEmpty || {
+        import spark.implicits._
+        val all = withRepeats(edges)
+        val got = GraphOps
+          .densestSubgraph(all.toDF("src", "dst", "w"), maxRounds)
+          .collect()
+          .map(r => Seq.tabulate(5)(r.getLong))
+          .sortBy(_.head)
+          .toSeq
+        val expected = densestProfile(all.map(e => (e._1, e._2)), maxRounds)
         Prop(got == expected) :| s"got=$got expected=$expected"
       }
     }

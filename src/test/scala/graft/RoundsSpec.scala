@@ -14,7 +14,7 @@ class RoundsSpec extends AnyFunSuite {
 
   private val roundObjects =
     Seq(
-      "Rounds$", "SsspRounds$", "ComponentRounds$", "CorenessRounds$", "MaskRounds$",
+      "Rounds$", "SsspRounds$", "ComponentRounds$", "PeelRounds$", "MaskRounds$",
       "RankRounds$", "PrefixJoin$")
 
   test("every round object's class file stays under 64 KB") {
