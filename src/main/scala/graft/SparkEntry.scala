@@ -434,10 +434,9 @@ object SparkEntry {
     "sssp_two_rounds" -> (ssspLineitemBounded _),
     "edge_parse" -> (edgeParse _),
     "connected_components" -> (connectedComponents _),
-    // same answer through the O(log d)-round star-contraction algorithm
-    // (Kiveris et al. SoCC'14) instead of O(d)-round label propagation
-    "cc_bigstar" -> ((s, d) =>
-      GraphOps.connectedComponentsStars(GraphSource.layeredEdges(s, d)).orderBy(col("id"))),
+    // kept for the inventory: it runs the same engine as
+    // connected_components (star contraction, Kiveris et al. SoCC'14)
+    "cc_bigstar" -> (connectedComponents _),
     // fixed-round synchronous label-propagation community detection
     "graph_communities" -> ((s, d) =>
       GraphOps.labelPropagation(GraphSource.layeredEdges(s, d), rounds = 4).orderBy(col("id"))),

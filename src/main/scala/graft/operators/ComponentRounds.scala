@@ -6,64 +6,12 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 
-import Rounds.{changedRows, countRows, inLoop, longSchema, loopPartitioner, roundLoop}
+import Rounds.{changedRows, longSchema, loopPartitioner, roundLoop}
 
-/** The RDD bodies of the component loops:
-  * [[GraphOps.connectedComponents]] and [[GraphOps.connectedComponentsStars]].
+/** The RDD body of the one connected-components engine,
+  * [[GraphOps.connectedComponents]]: large-star / small-star contraction.
   * The peel loops over the simple graph live in [[PeelRounds]]. */
 private[operators] object ComponentRounds {
-
-  /** Min-label propagation on [[Rounds.roundLoop]]: one co-partitioned join of
-    * last round's improved labels against the edges, one min-combine
-    * shuffle, one narrow merge and ONE job per round. The prelude is
-    * edges.count (two jobs under AQE) and the |V| count, which also
-    * caches the edges.
-    */
-  def connectedComponents(edges: DataFrame, maxRounds: Int): DataFrame =
-    inLoop(edges, copies = 2) { part =>
-      val eRdd = edges
-        .select(col("src"), col("dst"))
-        .rdd
-        .flatMap { r =>
-          val s = r.getLong(0); val d = r.getLong(1)
-          Iterator((s, d), (d, s))
-        }
-        .partitionBy(part)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      // state value: (label, improved last round); CC starts with EVERY
-      // node in the frontier (each proposes its own label to all
-      // neighbors). Both directions are keyed under `part`, so every
-      // node is a key of exactly one partition: a per-partition distinct
-      // is the global one, with no shuffle.
-      val seed = eRdd
-        .mapPartitions(
-          { it =>
-            val ids = it.map(_._1).toArray
-            java.util.Arrays.sort(ids)
-            Iterator
-              .range(0, ids.length)
-              .collect { case i if i == 0 || ids(i) != ids(i - 1) => (ids(i), (ids(i), true)) }
-          },
-          preservesPartitioning = true)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val nV = countRows(seed)
-      val state = roundLoop("connectedComponents", seed, nV, maxRounds, nV)(changedRows(_._2)) { (cur, _) =>
-        val msgs = cur
-          .filter(_._2._2)
-          .mapValues(_._1)
-          .join(eRdd)
-          .map { case (_, (lab, dst)) => (dst, lab) }
-          .reduceByKey(part, (a, b) => math.min(a, b))
-        (1L, cur.leftOuterJoin(msgs).mapValues {
-          case ((lab, _), Some(c)) if c < lab => (c, true)
-          case ((lab, _), _) => (lab, false)
-        })
-      }
-      eRdd.unpersist(false)
-      edges.sparkSession.createDataFrame(
-        state.map { case (id, (lab, _)) => Row(id, lab) },
-        longSchema("id", "component"))
-    }
 
   /** Alternating large-star / small-star rounds (Kiveris et al.) on
     * [[Rounds.roundLoop]]. The state is keyed by node: `u → (sorted
@@ -80,7 +28,7 @@ private[operators] object ComponentRounds {
     * the seed (both directions of every edge, a self-loop kept as its
     * node's key) is built inside round 1's job.
     */
-  def connectedComponentsStars(edges: DataFrame, maxRounds: Int): DataFrame = {
+  def connectedComponents(edges: DataFrame, maxRounds: Int): DataFrame = {
     val session = edges.sparkSession
     val part = loopPartitioner(edges, copies = 2)
     val seed = adjacency(
@@ -90,7 +38,7 @@ private[operators] object ComponentRounds {
       },
       part).mapValues(a => (a, true)).persist(StorageLevel.MEMORY_AND_DISK)
     var left = 1L
-    val state = roundLoop("connectedComponentsStars", seed, 1L, maxRounds, Long.MaxValue)(
+    val state = roundLoop("connectedComponents", seed, 1L, maxRounds)(
       changedRows(_._2),
       after = (_, changed, _, _) => left = changed) { (cur, _) =>
       val large = adjacency(star(cur.mapValues(_._1), large = true), part)
@@ -107,7 +55,7 @@ private[operators] object ComponentRounds {
     if (left > 0) {
       state.unpersist(false)
       throw new IllegalStateException(
-        s"connectedComponentsStars did not converge in $maxRounds rounds")
+        s"connectedComponents did not converge in $maxRounds rounds")
     }
     session.createDataFrame(
       state.map { case (u, (a, _)) => Row(u, if (a.isEmpty) u else math.min(a(0), u)) },

@@ -910,7 +910,7 @@ object Dedup {
     * the corpus" (what a training-data pipeline actually runs).
     *
     * The pair list is treated as an undirected graph and resolved with
-    * [[GraphOps.connectedComponentsStars]] (large-star/small-star
+    * [[GraphOps.connectedComponents]] (large-star/small-star
     * contraction — near-dup clusters can chain A~B~C where A and C
     * share no bucket, so transitive closure, not per-pair grouping, is
     * required). Every corpus doc appears in the output: docs with no
@@ -925,7 +925,7 @@ object Dedup {
     // re-evaluated per use
     val e = Phys.materialized(
       pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"), lit(1.0).as("w")))
-    val cc = GraphOps.connectedComponentsStars(e)
+    val cc = GraphOps.connectedComponents(e)
     docs
       .select(col("doc_id"))
       .join(cc, col("doc_id") === col("id"), "left_outer")
@@ -1198,7 +1198,7 @@ object Dedup {
     *
     * Scale shape: each family keeps its bucketed/cell-blocked
     * candidate generation; the union is a narrow distinct on the pair
-    * key; the closure is [[GraphOps.connectedComponentsStars]]'
+    * key; the closure is [[GraphOps.connectedComponents]]'
     * O(log d)-round large-star/small-star contraction.
     */
   def clustersMultimodal(
@@ -1687,7 +1687,7 @@ object Dedup {
     *
     * Scale shape: candidate pairs stay block-capped
     * ([[erBlockedPairs]]); the closure is the O(log d)-round star
-    * contraction ([[graft.operators.GraphOps.connectedComponentsStars]])
+    * contraction ([[graft.operators.GraphOps.connectedComponents]])
     * over the (typically tiny) match-pair graph; the annotate/size
     * steps are id- and entity-keyed joins. Nothing quadratic beyond
     * the capped blocks.
@@ -1703,7 +1703,7 @@ object Dedup {
       erBlockedPairs(customer, maxDist)
         .select(col("cust_a").as("src"), col("cust_b").as("dst")))
     val comp = graft.operators.GraphOps
-      .connectedComponentsStars(pairs)
+      .connectedComponents(pairs)
       .select(col("id"), col("component"))
     val ent = Phys.materialized(
       customer

@@ -198,39 +198,28 @@ object GraphOps {
   def finalResult(state: DataFrame, source: Long): DataFrame =
     state.select(lit(source).as("source"), col("id"), col("dist"))
 
-  /** Connected components over the UNDIRECTED closure of the edge list:
-    * iterative min-label propagation on [[Rounds.roundLoop]] — one
-    * co-partitioned join of last round's improved labels against the
-    * edges, one min-combine shuffle, one narrow merge and ONE job per
-    * round, zero Catalyst planning; converges in O(diameter) rounds.
-    * Labels are node ids; each node ends with the minimum id in its
-    * component.
+  /** Connected components over the UNDIRECTED closure of the edge list,
+    * by alternating large-star / small-star contraction (Kiveris et al.,
+    * "Connected Components in MapReduce and Beyond", SoCC'14 — public
+    * literature): each round every node hooks its neighbors onto its
+    * minimum neighbor, halving tree heights, so the edge set converges to
+    * a star per component in O(log d) rounds, where min-label propagation
+    * needs O(d). A round runs on the round driver over a node-keyed
+    * adjacency of the CURRENT edge set (which only shrinks toward |V|
+    * stars): one shuffle per star and ONE job, the exact stop test (did
+    * any node's neighbour array change?). Throws `IllegalStateException`
+    * if `maxRounds` rounds end with changed nodes left.
+    *
+    * Returns (id, component) for every node of the undirected closure:
+    * each node is labelled with the minimum id in its component. This is
+    * graft's one connected-components engine; every CC caller (the CC
+    * queries, [[msf]], the dedup and ER cluster tables) runs it.
     *
     * Not in the reference (its two programs are SSSP and transpose), but
     * the natural second consumer of the iterate-until-converged machinery.
     */
-  def connectedComponents(edges: DataFrame, maxRounds: Int = Int.MaxValue): DataFrame =
+  def connectedComponents(edges: DataFrame, maxRounds: Int = 64): DataFrame =
     ComponentRounds.connectedComponents(edges, maxRounds)
-
-  /** Connected components by alternating large-star / small-star
-    * contraction (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond", SoCC'14 — public literature): each round every node hooks
-    * its neighbors onto its minimum neighbor, halving tree heights, so
-    * the edge set converges to a star per component in O(log d) rounds —
-    * vs the O(d) rounds of min-label propagation
-    * ([[connectedComponents]]). A round runs on the round driver over a
-    * node-keyed adjacency of the CURRENT edge set (which only shrinks
-    * toward |V| stars): one shuffle per star and ONE job, the exact
-    * stop test (did any node's neighbour array change?) — the variant to
-    * reach for when the graph's diameter, not its size, is the
-    * bottleneck. Throws `IllegalStateException` if `maxRounds` rounds
-    * end with changed nodes left.
-    *
-    * Returns (id, component-min) for every node of the undirected
-    * closure, like [[connectedComponents]] (shared oracle).
-    */
-  def connectedComponentsStars(edges: DataFrame, maxRounds: Int = 64): DataFrame =
-    ComponentRounds.connectedComponentsStars(edges, maxRounds)
 
   /** Fixed-point (integer-scaled) PageRank, `iters` rounds, damping 0.85.
     *
@@ -2747,10 +2736,7 @@ object GraphOps {
           forest = Phys.materialized(if (forest == null) picked else forest.unionAll(picked))
           // Contract: the chosen pseudo-forest has ≤ one edge per LIVE
           // component, so this CC input is bounded by the (halving)
-          // component count, not by |E|. (Measured: min-label beats the
-          // star contraction here — propagating only last round's
-          // improved labels keeps its rounds cheap, while stars pay two
-          // full groupBy/join/distinct passes per round.)
+          // component count, not by |E|.
           val comp =
             connectedComponents(chosen.select(col("u").as("src"), col("v").as("dst")))
           // Every label still in `work` is incident to a chosen edge (its

@@ -144,7 +144,7 @@ private[operators] object MaskRounds {
       !((v._1 eq v._2) || java.util.Arrays.equals(v._1, v._2))
     val changed0 = countRows(state0.filter(r => changed(r._2))) // materializes the seed
     countRows(eRdd)
-    val last = roundLoop("maskLoop", state0, changed0, maxRounds, Long.MaxValue,
+    val last = roundLoop("maskLoop", state0, changed0, maxRounds,
       untilUnchanged = earlyExit, freeSuperseded = freeSuperseded)(
       changedRows(changed),
       sums = Seq(r => estOf(r._2._2)),

@@ -81,7 +81,7 @@ private[operators] object PeelRounds {
       def record(round: Long): Unit =
         if (v > 0 && m2 > 0) profile += Row(round, v, m2 / 2, m2 * 500000L / v, m2 * 1000000L / v)
       if (maxRounds > 0) record(0L)
-      roundLoop("densestSubgraph", seed, nV, maxRounds - 1L, Long.MaxValue)(
+      roundLoop("densestSubgraph", seed, nV, maxRounds - 1L)(
         _.aliveWithEdges,
         Seq(_.alive, _.aliveDegrees),
         (r, _, sums, _) => { v = sums(0); m2 = sums(1); record(r) }) { (cur, _) =>
@@ -131,7 +131,7 @@ private[operators] object PeelRounds {
     val (seed, _, degreeSum, seedChanged) = blocks(edges, part, k)
     val name = if (k == 0) "coreness" else "kCore"
     var left = seedChanged
-    val state = roundLoop(name, seed, seedChanged, degreeSum, Long.MaxValue)(
+    val state = roundLoop(name, seed, seedChanged, degreeSum)(
       _.changed,
       after = (_, changed, _, _) => left = changed) { (cur, _) =>
       val msgs = cur.mapPartitions(_.next().messages(part)).partitionBy(part)

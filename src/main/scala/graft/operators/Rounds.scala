@@ -57,15 +57,14 @@ private[operators] object Rounds {
   final case class RoundAt(done: Long, left: Long, changed: Long)
 
   /** The one driver of the RDD fixpoint loops ([[SsspRounds.sssp]],
-    * [[ComponentRounds.connectedComponents]],
-    * [[ComponentRounds.connectedComponentsStars]],
+    * star-contraction CC ([[ComponentRounds.connectedComponents]]),
     * [[MaskRounds.maskLoopRdd]], the peels of [[PeelRounds]] (coreness,
     * the k-core and the densest-subgraph bulk peel) and the residual
     * rank forms), in the shape of the reference's driver loop
     * (`SingleSourceSP.java:439-519`): a fixed job per round, stopped by
     * a global counter. A loop state is an RDD under the loop's
     * `HashPartitioner` layout: either one row per node, keyed by node id
-    * (CC, star-CC, the mask loop, the rank forms), or one array-backed
+    * (CC, the mask loop, the rank forms), or one array-backed
     * block per partition (SSSP's patch, the peels' [[PeelBlock]]). The
     * caller passes only its algorithm:
     *
@@ -78,11 +77,11 @@ private[operators] object Rounds {
     *
     * The driver owns the rest:
     *
-    *   - the round counter, bounded by min(maxRounds, |V| − 1) (the
-    *     Bellman-Ford bound; a fixed-round loop passes
-    *     `nV = Long.MaxValue`) and, when `untilUnchanged`, stopped after
-    *     a round that changes nothing — the reference's Hadoop counter
-    *     (`:473-479`);
+    *   - the round counter, bounded by `maxRounds` (a loop with a
+    *     tighter bound of its own, such as SSSP's Bellman-Ford |V| − 1,
+    *     passes the smaller one) and, when `untilUnchanged`, stopped
+    *     after a round that changes nothing — the reference's Hadoop
+    *     counter (`:473-479`);
     *   - [[checkpointedRound]] on every round's state;
     *   - the round's ONE job ([[perPartition]]): a pass over the new
     *     state summing its changed rows and, for each of the caller's
@@ -106,7 +105,6 @@ private[operators] object Rounds {
       seed: RDD[T],
       seedChanged: Long,
       maxRounds: Long,
-      nV: Long,
       untilUnchanged: Boolean = true,
       freeSuperseded: Boolean = true)(
       changedIn: T => Long,
@@ -114,16 +112,15 @@ private[operators] object Rounds {
       after: (Long, Long, Array[Long], RDD[T]) => Unit =
         (_: Long, _: Long, _: Array[Long], _: RDD[T]) => ())(
       round: (RDD[T], RoundAt) => (Long, RDD[T])): RDD[T] = {
-    val bound = math.min(maxRounds, math.max(1L, nV - 1L))
     val debug = sys.env.contains("GRAFT_LOOP_DEBUG")
     val fs = sums.toArray
     val k = fs.length
     var state = seed
     var changed = seedChanged
     var rounds = 0L
-    while (rounds < bound && (changed > 0 || !untilUnchanged)) {
+    while (rounds < maxRounds && (changed > 0 || !untilUnchanged)) {
       val tRound = System.nanoTime()
-      val (hops, next) = round(state, RoundAt(rounds, bound - rounds, changed))
+      val (hops, next) = round(state, RoundAt(rounds, maxRounds - rounds, changed))
       val superseded = state
       state = checkpointedRound(next)
       rounds += hops
@@ -239,7 +236,7 @@ private[operators] object Rounds {
       changed: (X, X) => Boolean,
       sums: ((X, X) => Long)*)(step: RDD[(Long, X)] => RDD[(Long, X)]): DataFrame = {
     val rows = scala.collection.mutable.ArrayBuffer.empty[Row]
-    roundLoop(name, seed.mapValues(x => (x, x)), 0L, iters, Long.MaxValue, untilUnchanged = false)(
+    roundLoop(name, seed.mapValues(x => (x, x)), 0L, iters, untilUnchanged = false)(
       changedRows((v: (X, X)) => changed(v._1, v._2)),
       sums.map(f => (r: (Long, (X, X))) => f(r._2._1, r._2._2)),
       (r, c, s, _) => rows += Row.fromSeq(r +: c +: s.toSeq)) { (cur, _) =>

@@ -78,7 +78,9 @@ private[operators] object SsspRounds {
       val hasSource = counts.exists(_._2)
       // the seed is a narrow map of base — no shuffle, no job
       val seed = base.mapPartitions(it => Iterator.single(it.next().seed(source)))
-      val patch = roundLoop("sssp", seed, if (hasSource) 1L else 0L, maxRounds, nV)(_.changed) {
+      // the Bellman-Ford bound: a shortest path has at most |V| - 1 hops
+      val bound = math.min(maxRounds, math.max(1L, nV - 1L))
+      val patch = roundLoop("sssp", seed, if (hasSource) 1L else 0L, bound)(_.changed) {
         (cur, at) =>
           // TINY-FRONTIER BATCHING (VERDICT r15 #1; guide §1/§2): below the
           // fuse bound, relax TWO Bellman-Ford hops in one job — hop 2

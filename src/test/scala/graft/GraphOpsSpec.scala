@@ -243,9 +243,9 @@ class GraphOpsSpec extends SparkSpec {
   }
 
   test("connectedComponents on a long path folds and still labels one component") {
-    // 2000 nodes: the min label 1 starts mid-path and moves one hop per
-    // round each way, 1000 rounds — far past the depth at which an uncut
-    // lineage overflows the stack when a task is serialized
+    // 2000 nodes numbered outward from the middle, so the min label 1
+    // sits mid-path: a diameter of 1999 that star contraction folds in
+    // O(log d) rounds
     val n = 2000
     val comps = GraphOps
       .connectedComponents(edgesDf(pathFromMiddle(n).map { case (a, b) => (a, b, 1.0) }))
@@ -253,6 +253,19 @@ class GraphOpsSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getLong(1))
       .toMap
     assert(comps === (1 to n).map(i => i.toLong -> 1L).toMap)
+  }
+
+  test("connectedComponents on a 2000-node path labels one component") {
+    // numbered in order, so the min label 0 sits at one end and every
+    // node's smaller neighbour is its predecessor: the other worst case
+    // beside the mid-path numbering above
+    val n = 2000
+    val comps = GraphOps
+      .connectedComponents(edgesDf((0 until n - 1).map(i => (i.toLong, i + 1L, 1.0))))
+      .collect()
+      .map(r => r.getLong(0) -> r.getLong(1))
+      .toMap
+    assert(comps === (0 until n).map(i => i.toLong -> 0L).toMap)
   }
 
   test("sssp round shape: three prelude jobs, then one job per fused round") {
@@ -314,18 +327,6 @@ class GraphOpsSpec extends SparkSpec {
     }
     val (_, randomPeaks) = ssspPeaks(random)
     assert(randomPeaks.nonEmpty && randomPeaks.forall(_ == 0L), randomPeaks)
-  }
-
-  test("connectedComponents round shape: three prelude jobs, then one job per round") {
-    // a 4-node path and one extra edge: label 0 reaches node 3 in round
-    // 3 and round 4 changes nothing, so the loop stops before its |V|-1
-    // = 5 bound. The prelude is edges.count (two jobs under AQE) and the
-    // |V| count, whose job also caches the edges.
-    val edges = edgesDf(Seq((0L, 1L, 1.0), (1L, 2L, 1.0), (2L, 3L, 1.0), (10L, 11L, 1.0)))
-    val (out, jobs) = jobsOf(GraphOps.connectedComponents(edges))
-    assert(jobs === 3 + 4)
-    assert(out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ===
-      Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 0L, 10L -> 10L, 11L -> 10L))
   }
 
   test("kCore: a path fully peels via a multi-round deletion cascade") {
@@ -445,37 +446,23 @@ class GraphOpsSpec extends SparkSpec {
     assert(out === Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 7L -> 7L, 9L -> 7L, 5L -> 5L))
   }
 
-  test("star-contraction CC agrees with label propagation on adversarial shapes") {
-    // long chain (worst case for label propagation, log-rounds for stars),
-    // a star with a large-id center, parallel edges, self-loops, and an
-    // isolated self-loop-only node
+  test("connectedComponents agrees with a union-find on adversarial shapes") {
+    // long chain, a star with a large-id center, parallel edges,
+    // self-loops, and an isolated self-loop-only node
     val edges =
       (0 until 30).map(i => (i.toLong, i + 1L, 1.0)) ++
         Seq((100L, 41L, 1.0), (100L, 42L, 1.0), (100L, 43L, 1.0), (100L, 41L, 1.0)) ++
         Seq((60L, 60L, 1.0), (70L, 71L, 1.0), (71L, 70L, 1.0))
-    val byProp = GraphOps
+    val comps = GraphOps
       .connectedComponents(edgesDf(edges))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val byStars = GraphOps
-      .connectedComponentsStars(edgesDf(edges))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(byStars === byProp)
-    assert(byStars(30L) === 0L) // chain collapsed to its min
-    assert(byStars(41L) === 41L && byStars(100L) === 41L)
-    assert(byStars(60L) === 60L) // self-loop-only node is its own component
+    assert(comps === GraphOpsSpec.unionFind(edges.map(e => (e._1, e._2))))
+    assert(comps(30L) === 0L) // chain collapsed to its min
+    assert(comps(41L) === 41L && comps(100L) === 41L)
+    assert(comps(60L) === 60L) // self-loop-only node is its own component
   }
 
-  test("connectedComponentsStars on a 2000-node path labels one component") {
-    val n = 2000
-    val comps = GraphOps
-      .connectedComponentsStars(edgesDf(pathFromMiddle(n).map { case (a, b) => (a, b, 1.0) }))
-      .collect()
-      .map(r => r.getLong(0) -> r.getLong(1))
-      .toMap
-    assert(comps === (1 to n).map(i => i.toLong -> 1L).toMap)
-  }
-
-  test("connectedComponentsStars round shape: prelude jobs, then one job per round") {
+  test("connectedComponents round shape: prelude jobs, then one job per round") {
     // a 4-node path and one extra edge: the path needs 3 large/small-star
     // rounds, the third changing nothing. The prelude is edges.count (two
     // jobs under AQE); the seed is built inside round 1's job, and each
@@ -483,19 +470,19 @@ class GraphOpsSpec extends SparkSpec {
     // the readout stage (round 1 also shuffles the seed), flat because
     // every round's state is cut from its lineage.
     val edges = edgesDf(Seq((0L, 1L, 1.0), (1L, 2L, 1.0), (2L, 3L, 1.0), (10L, 11L, 1.0)))
-    val (out, stages) = jobStages(GraphOps.connectedComponentsStars(edges))
+    val (out, stages) = jobStages(GraphOps.connectedComponents(edges))
     assert(stages.size === 2 + 3)
     assert(stages.drop(2) === Seq(4, 3, 3))
     assert(out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ===
       Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 0L, 10L -> 10L, 11L -> 10L))
   }
 
-  test("connectedComponentsStars on degenerate inputs") {
-    val empty = GraphOps.connectedComponentsStars(edgesDf(Seq.empty))
+  test("connectedComponents on degenerate inputs") {
+    val empty = GraphOps.connectedComponents(edgesDf(Seq.empty))
     assert(empty.columns.toSeq === Seq("id", "component"))
     assert(empty.count() === 0)
     val loops = GraphOps
-      .connectedComponentsStars(edgesDf(Seq((3L, 3L, 1.0), (7L, 7L, 1.0), (7L, 7L, 2.0))))
+      .connectedComponents(edgesDf(Seq((3L, 3L, 1.0), (7L, 7L, 1.0), (7L, 7L, 2.0))))
       .collect()
       .map(r => r.getLong(0) -> r.getLong(1))
       .toMap
@@ -503,7 +490,7 @@ class GraphOpsSpec extends SparkSpec {
     // the 31-node chain needs 6 rounds: a bound of 1 leaves changed rows
     val chain = edgesDf((0 until 30).map(i => (i.toLong, i + 1L, 1.0)))
     val e = intercept[IllegalStateException] {
-      GraphOps.connectedComponentsStars(chain, maxRounds = 1)
+      GraphOps.connectedComponents(chain, maxRounds = 1)
     }
     assert(e.getMessage.contains("did not converge"))
   }
@@ -1181,6 +1168,23 @@ class GraphOpsSpec extends SparkSpec {
 }
 
 object GraphOpsSpec {
+
+  /** Connected components of the undirected closure of `edges` by a
+    * sequential union-find: every endpoint (a self-loop's node included)
+    * labelled with the minimum id of its component. */
+  def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x
+      else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(v => v -> find(v)).toMap
+  }
 
   /** Core numbers by the sequential bucket peel of Matula & Beck (1983)
     * over the undirected simple graph of `edges` (self-loops and

@@ -129,24 +129,27 @@ object GraphProps extends Properties("graph") {
     }
   }
 
-  property("star-contraction CC equals label-propagation CC") = forAll(genGraph) { edges =>
-    edges.isEmpty || {
-      import spark.implicits._
-      val df = edges.toDF("src", "dst", "w")
-      val byProp = GraphOps.connectedComponents(df)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val byStars = GraphOps.connectedComponentsStars(df)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      Prop(byStars == byProp) :| s"stars=$byStars prop=$byProp"
-    }
-  }
-
   /** `edges` plus its first edge reversed and a self-loop on its first
     * node, on top of whatever repeats the generator drew. */
   private def withRepeats(edges: List[(Long, Long, Double)]): List[(Long, Long, Double)] = {
     val (a, b, w) = edges.head
     edges ++ List((b, a, w), (a, a, 1.0))
   }
+
+  property("connectedComponents equals a union-find, with parallel edges and self-loops") =
+    forAll(genGraph) { edges =>
+      edges.isEmpty || {
+        import spark.implicits._
+        val all = withRepeats(edges)
+        val got = GraphOps
+          .connectedComponents(all.toDF("src", "dst", "w"))
+          .collect()
+          .map(r => r.getLong(0) -> r.getLong(1))
+          .toMap
+        val expected = GraphOpsSpec.unionFind(all.map(e => (e._1, e._2)))
+        Prop(got == expected) :| s"got=$got expected=$expected"
+      }
+    }
 
   property("corenessHIndex equals a Matula–Beck peel, self-loops and parallel edges included") =
     forAll(genGraph) { edges =>
